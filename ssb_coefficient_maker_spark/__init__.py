@@ -26,13 +26,12 @@ Public API parity targets (reference coeff_maker.py:589-597, 885-896):
 from __future__ import annotations
 
 from ssb_coefficient_maker_spark.api import CoefficientCalculator, FormulaEvaluator
-from ssb_coefficient_maker_spark.catalog import MatrixCatalog, matrix_from_pandas, matrix_to_pandas
+from ssb_coefficient_maker_spark.catalog import matrix_from_pandas, matrix_to_pandas
 from ssb_coefficient_maker_spark.session import get_spark
 
 __all__ = [
     "CoefficientCalculator",
     "FormulaEvaluator",
-    "MatrixCatalog",
     "get_spark",
     "matrix_from_pandas",
     "matrix_to_pandas",

@@ -29,6 +29,7 @@ from typing import Any, Iterable, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ssb_coefficient_maker_spark.catalog import Matrix, Vector, _stringify
@@ -40,10 +41,16 @@ from ssb_coefficient_maker_spark.formula.parser import (
     Num,
     UnaryOp,
     Var,
-    extract_variables,
 )
-from ssb_coefficient_maker_spark.plans.alignment import _aligned_join
+from ssb_coefficient_maker_spark.plans.alignment import (
+    _aligned_join,
+    _check_vectors,
+    _operand_col,
+    _operands,
+    _union_cols,
+)
 from ssb_coefficient_maker_spark.session import ROW_ID
+from ssb_coefficient_maker_spark.validation import Carrier, validate
 
 ADP_ZERO_DIV_MSG = "ADP division by zero in formula evaluation"
 
@@ -239,28 +246,29 @@ def compile_adp_formula(
     dps: int,
 ) -> tuple[DataFrame, list[str]]:
     """Compile an ADP formula: aligned join + one mapInPandas stage."""
-    names = extract_variables(expr)
-    frames = {n: d for n in names if isinstance(d := datasets[n], Matrix)}
-    vectors = {n: d for n in names if isinstance(d := datasets[n], Vector)}
-    scalars = {n: float(d) for n in names if isinstance(d := datasets[n], (int, float))}
+    frames, vectors, scalars = _operands(expr, datasets)
     if not frames:
         raise FormulaError("ADP mode requires at least one matrix operand")
-
-    out_cols: list[str] = []
-    for m in frames.values():
-        for c in m.value_cols:
-            if c not in out_cols:
-                out_cols.append(c)
-    frame_cols = {n: set(m.value_cols) for n, m in frames.items()}
+    out_cols = _union_cols(frames)
+    _check_vectors(vectors, out_cols)
+    # per output column: the aligned-join column of each frame operand
+    # that has it (an absent one reads as NaN, like pandas alignment)
+    sources = [
+        {
+            name: _operand_col(i, pos)
+            for i, (name, m) in enumerate(frames.items())
+            if out_c in m.value_cols
+        }
+        for pos, out_c in enumerate(out_cols)
+    ]
     vec_values = {n: [str(v) for v in vec.values] for n, vec in vectors.items()}
+    frame_names = set(frames)  # the closure ships to workers: names only
 
-    joined = _aligned_join(frames)
+    joined = _aligned_join(frames, out_cols)
     out_schema = T.StructType(
         [T.StructField(ROW_ID, T.StringType(), False)]
         + [T.StructField(c, T.StringType(), True) for c in out_cols]
     )
-
-    frame_names = list(frames)
 
     def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import mpmath
@@ -275,18 +283,15 @@ def compile_adp_formula(
             for pdf in batches:
                 data = {ROW_ID: pdf[ROW_ID]}
                 for pos, out_c in enumerate(out_cols):
-                    resolved_cols = {}
-                    for fname in frame_names:
-                        if out_c in frame_cols[fname]:
-                            resolved_cols[fname] = [cell(v) for v in pdf[f"{fname}__{out_c}"]]
-                        else:
-                            resolved_cols[fname] = None
-                    n = len(pdf)
+                    resolved_cols = {
+                        name: [cell(v) for v in pdf[src]]
+                        for name, src in sources[pos].items()
+                    }
                     out_vals = []
-                    for i in range(n):
+                    for i in range(len(pdf)):
                         def resolve(name: str):
                             if name in frame_names:
-                                col = resolved_cols[name]
+                                col = resolved_cols.get(name)
                                 return col[i] if col is not None else mpmath.mpf("nan")
                             if name in vec_values:
                                 return mpmath.mpf(vec_values[name][pos])
@@ -327,74 +332,32 @@ def adp_to_pandas(df: DataFrame, value_cols: list[str], dps: int) -> pd.DataFram
 
 # ---------------------------------------------------------------- validation
 # ADP results travel as strings; mpmath.nstr renders invalids as
-# 'nan' / '+inf' / '-inf', so the audit is a plain isin() aggregate —
-# same single-pass shape as the float validator (validation.py), no
-# per-cell Python loop (the reference loops cell-by-cell in ADP fill,
-# reference coeff_maker.py:274-279).
+# 'nan' / '+inf' / '-inf', so the audit is a plain IN aggregate
+# through the shared validator (validation.py) — no per-cell Python
+# loop (the reference loops cell-by-cell in ADP fill, reference
+# coeff_maker.py:274-279). The predicates are SQL text: they are built
+# per column, and a Column-API ``isin`` costs a py4j round trip per
+# literal (~40 calls per predicate against ~3 for one parsed one).
+_INF_SQL = "'+inf', '-inf', 'inf'"
 
-from pyspark.sql import functions as F  # noqa: E402
 
-_INVALID_STRS = ["nan", "+inf", "-inf", "inf"]
+def _quoted(c: str) -> str:
+    return "`" + c.replace("`", "``") + "`"
 
 
 def adp_invalid_cond(c: str):
-    """Invalid predicate for one string-carried ADP column — the ONE
-    definition both the eager validator and the parquet sink use."""
-    return F.isnull(F.col(c)) | F.lower(F.col(c)).isin(_INVALID_STRS)
+    """Invalid predicate for one string-carried ADP column."""
+    q = _quoted(c)
+    return F.expr(f"{q} IS NULL OR lower({q}) IN ('nan', {_INF_SQL})")
 
 
-def adp_fill_select(df: DataFrame, value_cols: list[str]) -> DataFrame:
-    """Replace invalid ADP strings with the '0.0' sentinel (shared by
-    the eager fill path and the parquet sink's write projection)."""
-    from ssb_coefficient_maker_spark.session import ROW_ID
-
-    return df.select(
-        F.col(ROW_ID),
-        *[
-            F.when(adp_invalid_cond(c), F.lit("0.0")).otherwise(F.col(c)).alias(c)
-            for c in value_cols
-        ],
-    )
+def adp_inf_cond(c: str):
+    return F.expr(f"lower({_quoted(c)}) IN ({_INF_SQL})")
 
 
-def validate_adp(
-    df: DataFrame,
-    value_cols: list[str],
-    formula_str: str,
-    *,
-    fill: bool = False,
-    verbose: bool = False,
-):
+ADP = Carrier(adp_invalid_cond, adp_inf_cond, "0.0")
+
+
+def validate_adp(df: DataFrame, value_cols: list[str], formula_str: str, **kwargs):
     """Audit an ADP (string-carried) result; fill, warn, or raise."""
-    import warnings
-
-    aggs = [F.count(F.lit(1)).alias("__rows__")] + [
-        F.sum(adp_invalid_cond(c).cast("long")).alias(f"__inv__{c}") for c in value_cols
-    ]
-    row = df.agg(*aggs).collect()[0].asDict()
-    n_cells = row["__rows__"] * len(value_cols)
-    n_invalid = sum(row[f"__inv__{c}"] or 0 for c in value_cols)
-    if verbose:
-        print(f"[validate-adp] formula={formula_str!r} cells={n_cells} invalid={n_invalid}")
-    if n_invalid == 0:
-        return df, 0
-    if fill:
-        # match the float validator: fill notification only under
-        # verbose (print, like the reference's coeff_maker.py:104-112)
-        if verbose:
-            print(
-                f"Filled {n_invalid} invalid value(s) with 0 in result of "
-                f"formula '{formula_str}'"
-            )
-        return adp_fill_select(df, value_cols), n_invalid
-    if n_invalid == n_cells:
-        raise ValueError(
-            f"All values in the result of formula '{formula_str}' are invalid."
-        )
-    warnings.warn(
-        f"Result of formula '{formula_str}' contains {n_invalid} invalid "
-        f"value(s) ({100.0 * n_invalid / n_cells:.1f}% of {n_cells} cells).",
-        UserWarning,
-        stacklevel=3,
-    )
-    return df, n_invalid
+    return validate(df, value_cols, formula_str, carrier=ADP, **kwargs)

@@ -17,13 +17,15 @@ coeff_maker.py:589-597 and :885-896). Differences, by design:
 
 from __future__ import annotations
 
-from typing import Any, Mapping
+from dataclasses import dataclass, field
+from typing import Any, Iterator, Mapping
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from ssb_coefficient_maker_spark import adp as adp_mod
+from ssb_coefficient_maker_spark import catalog
 from ssb_coefficient_maker_spark.catalog import (
     Matrix,
     Vector,
@@ -35,12 +37,48 @@ from ssb_coefficient_maker_spark.catalog import (
 from ssb_coefficient_maker_spark.formula.parser import (
     FormulaError,
     FormulaExpr,
+    contains_matmul,
+    contains_transpose,
     extract_variables,
     parse_formula,
 )
-from ssb_coefficient_maker_spark.plans.alignment import compile_formula
-from ssb_coefficient_maker_spark.session import get_spark
+from ssb_coefficient_maker_spark.plans import triplet as triplet_plans
+from ssb_coefficient_maker_spark.plans.alignment import compile_formula, compile_formulas_fused
+from ssb_coefficient_maker_spark.plans.triplet import (
+    COL_ID,
+    VALUE,
+    TripletMatrix,
+    triplet_to_wide,
+    wide_to_triplet,
+)
+from ssb_coefficient_maker_spark.session import ROW_ID, get_spark
+from ssb_coefficient_maker_spark.validation import (
+    FLOAT,
+    Carrier,
+    audit_exprs,
+    check,
+    fill_invalid,
+    status_of,
+)
 from ssb_coefficient_maker_spark.validation import validate as _validate
+
+
+@dataclass
+class _Plan:
+    """One formula's route (``FormulaEvaluator._route``): ``kind`` is
+    scalar | vector | wide | triplet | adp. Matrix kinds carry the lazy
+    ``df`` and its ``value_cols``; driver kinds carry ``value``."""
+
+    kind: str
+    formula: str
+    df: DataFrame | None = None
+    value_cols: list[str] = field(default_factory=list)
+    value: Any = None
+    mixed: bool = False  # Series and DataFrame operands (audit message)
+
+    @property
+    def carrier(self) -> Carrier:
+        return adp_mod.ADP if self.kind == "adp" else FLOAT
 
 
 class FormulaEvaluator:
@@ -76,6 +114,7 @@ class FormulaEvaluator:
         self.fill_invalid = fill_invalid
         self.validation = validation
         self.verbose = verbose
+        self.last_invalid_count: int | None = None
         self.datasets: dict[str, Matrix | Vector | float] = {}
         for name, value in data_dict.items():
             self._register(name, value)
@@ -104,14 +143,6 @@ class FormulaEvaluator:
                     value, self.decimal_precision
                 )
                 return
-        from ssb_coefficient_maker_spark.catalog import WIDE_MATRIX_THRESHOLD
-        from ssb_coefficient_maker_spark.plans.triplet import (
-            COL_ID,
-            VALUE,
-            TripletMatrix,
-            wide_to_triplet,
-        )
-
         if isinstance(value, pd.DataFrame):
             self.datasets[name] = matrix_from_pandas(self.spark, value)
         elif isinstance(value, pd.Series):
@@ -119,7 +150,7 @@ class FormulaEvaluator:
         elif isinstance(value, DataFrame):
             if COL_ID in value.columns and VALUE in value.columns:
                 self.datasets[name] = TripletMatrix(value)
-            elif len(value.columns) - 1 > WIDE_MATRIX_THRESHOLD:
+            elif len(value.columns) - 1 > catalog.WIDE_MATRIX_THRESHOLD:
                 # wide matrices switch to the long/triplet form
                 # automatically (SURVEY.md §7 risk 3)
                 self.datasets[name] = wide_to_triplet(
@@ -178,7 +209,7 @@ class FormulaEvaluator:
                         else "trigger warnings or errors."
                     )
                 )
-        result = self._evaluate_formula(formula)
+        result = self._result(self._plan(formula))
         if self.verbose:
             if isinstance(result, DataFrame):
                 shape: Any = "lazy (Spark DataFrame)"
@@ -189,268 +220,131 @@ class FormulaEvaluator:
             print(f"Formula evaluation complete. Result shape: {shape}")
         return result
 
-    def _evaluate_formula(self, formula: str | FormulaExpr) -> Any:
+    def _plan(self, formula: str | FormulaExpr) -> _Plan:
         if isinstance(formula, FormulaExpr):
-            expr = formula
-            formula_str = "<parsed>"
-        else:
-            formula_str = formula
-            expr = self.parse_formula(formula)
+            return self._route(formula, "<parsed>")
+        return self._route(self.parse_formula(formula), formula)
+
+    def _route(self, expr: FormulaExpr, formula: str, *, fuse: bool = False) -> _Plan:
+        """Decide a formula's execution path and build its plan — the
+        one place the routing rules (README "Routing") live. With
+        ``fuse``, a wide formula comes back uncompiled (``df`` None):
+        the batch caller compiles it inside a fused group."""
         names = self.extract_variables(expr)
         missing = [n for n in names if n not in self.datasets]
         if missing:
             raise KeyError(
-                f"formula '{formula_str}' references unknown dataset(s): {missing}"
+                f"formula '{formula}' references unknown dataset(s): {missing}"
             )
-        mixed = any(isinstance(self.datasets[n], Vector) for n in names) and any(
-            isinstance(self.datasets[n], Matrix) for n in names
-        )
-
-        from ssb_coefficient_maker_spark.formula.parser import (
-            contains_matmul as _has_mm,
-        )
-        from ssb_coefficient_maker_spark.formula.parser import (
-            contains_transpose as _has_t2,
-        )
-
-        # ADP matrix-op guards: .T/@ evaluate on the float64 triplet
-        # path only, so they must refuse DRIVER-SIDE whenever a
-        # string-carried ADP Matrix operand is present (otherwise the
-        # ADP compiler's unknown-node error surfaces only inside the
-        # executor UDF). TripletMatrix-only formulas stay allowed —
-        # triplet inputs under ADP are the documented float64
-        # demotion (test_adp_triplet_operand_routes_to_triplet_path),
-        # so no precision is lost that wasn't already.
-        _adp_matrix = self.adp_enabled and any(
-            isinstance(self.datasets[n], Matrix) for n in names
-        )
-        if _adp_matrix and _has_mm(expr):
-            raise NotImplementedError(
-                "matmul ('@') / neumann() / leontief() is not supported in ADP "
-                "mode: the "
-                "contraction computes in float64, which would silently "
-                "demote the arbitrary-precision operands. Evaluate with "
-                "adp_enabled=False."
-            )
-        if _adp_matrix and _has_t2(expr):
-            raise NotImplementedError(
-                "transpose ('.T') is not supported in ADP mode: it "
-                "evaluates on the float64 triplet path, which would "
-                "silently demote the arbitrary-precision operands. "
-                "Transpose the input pandas frame before registering, "
-                "or evaluate with adp_enabled=False."
-            )
-
-        if self.adp_enabled and any(
-            isinstance(self.datasets[n], Matrix) for n in names
-        ):
-            df, cols = adp_mod.compile_adp_formula(
-                expr, self.datasets, self.decimal_precision
-            )
-            df, count = adp_mod.validate_adp(
-                df,
-                cols,
-                formula_str,
-                fill=self.fill_invalid,
-                verbose=self.verbose,
-            )
-            self._last_value_cols = cols
-            self.last_invalid_count = count
-            return df
-
-        if self.adp_enabled and all(
-            isinstance(self.datasets[n], (int, float)) for n in names
-        ):
-            # Literal/scalar-only ADP formula (every operand int/float;
-            # Matrix handled above). The guard must be "all scalars",
-            # not "no Vector": a TripletMatrix operand is neither
-            # Matrix nor Vector and must fall through to the triplet
-            # path below, not into the scalar resolver (which only
-            # holds int/float and would KeyError). The float
-            # fallthrough would silently produce inf for
-            # '(2 / (2 - 2))' (numpy errstate ignores the divide); the
-            # reference's ADP mode raises its zero-division diagnostic
-            # for ANY operand shape (coeff_maker.py ADP guard;
-            # reference tests/test_FormulaEvaluator_pt2.py:470-488),
-            # so route through _mp_eval which carries the guard. The
-            # mpf result is coerced to float AFTER the guard ran, to
-            # honour this method's "float for scalar-only" contract
-            # regardless of adp_enabled.
-            return float(
-                adp_mod.adp_eval_scalar(
-                    expr,
-                    {n: float(self.datasets[n]) for n in names},
-                    self.decimal_precision,
-                )
-            )
-
-        if (
-            self.adp_enabled
-            and any(isinstance(self.datasets[n], Vector) for n in names)
-            and all(
-                isinstance(self.datasets[n], (Vector, int, float))
-                for n in names
-            )
-        ):
-            # Series-only (or Series∘scalar) ADP formula: the operands
-            # were registered as string-carried ADP Vectors, so the
-            # numeric driver path would operate on strings. Evaluate
-            # through _mp_eval at full precision instead.
-            vectors = {
-                n: self.datasets[n]
-                for n in names
-                if isinstance(self.datasets[n], Vector)
-            }
-            scalars = {
-                n: float(self.datasets[n])
-                for n in names
-                if isinstance(self.datasets[n], (int, float))
-            }
-            return adp_mod.adp_eval_vectors(
-                expr, vectors, scalars, self.decimal_precision
-            )
-
-        from ssb_coefficient_maker_spark.plans.triplet import (
-            VALUE,
-            TripletMatrix,
-            compile_formula_triplet,
-        )
-
-        from ssb_coefficient_maker_spark.formula.parser import (
-            contains_transpose as _has_t,
-        )
-
-        # transpose and matmul route here even when every operand is
-        # wide: in triplet form m.T is a key-swap projection
-        # (plans/triplet.transpose_triplet) and a @ b is a contraction
-        # join + sum (matmul_triplet); in wide form the former would
-        # be an unpivot + re-pivot and the latter a width² expression
-        # explosion
-        if (_has_t(expr) or _has_mm(expr)) and not any(
-            isinstance(self.datasets[n], (Matrix, TripletMatrix)) for n in names
-        ):
+        operands = [self.datasets[n] for n in names]
+        matrices = any(isinstance(d, Matrix) for d in operands)
+        vectors = any(isinstance(d, Vector) for d in operands)
+        triplets = any(isinstance(d, TripletMatrix) for d in operands)
+        has_mm, has_t = contains_matmul(expr), contains_transpose(expr)
+        mixed = matrices and vectors
+        if (has_mm or has_t) and not (matrices or triplets):
             raise FormulaError(
                 "transpose ('.T'), matmul ('@'), and neumann() are only defined "
                 "for matrix operands"
             )
-        if _has_t(expr) or _has_mm(expr) or any(
-            isinstance(self.datasets[n], TripletMatrix) for n in names
-        ):
-            if self.adp_enabled and any(
-                isinstance(self.datasets[n], Vector) for n in names
-            ):
-                # The Vector was registered string-carried for ADP;
-                # feeding it into the float64 triplet plan would
-                # silently yield all-NaN. Same deliberate refusal as
-                # the ADP-fusion guard: never demote precision
-                # silently.
+        if self.adp_enabled:
+            if matrices and (has_mm or has_t):
+                op = "matmul ('@') / neumann() / leontief()" if has_mm else "transpose ('.T')"
                 raise NotImplementedError(
-                    "ADP formulas mixing a TripletMatrix with a Series "
-                    "operand are not supported: triplet plans compute "
-                    "in float64, which would silently demote the ADP "
-                    "Series. Re-register the Series with "
-                    "adp_enabled=False or convert the triplet operand "
-                    "to a pandas DataFrame."
+                    f"{op} is not supported in ADP mode: it evaluates on the "
+                    "float64 triplet path, which would silently demote the "
+                    "arbitrary-precision operands. Evaluate with "
+                    "adp_enabled=False."
                 )
-            tdf = compile_formula_triplet(expr, self.datasets)
-            if self.validation == "defer":
-                # same contract as the wide path below: no eager audit
-                # job; fill (if requested) fuses lazily into the plan
-                from ssb_coefficient_maker_spark.validation import (
-                    fill_invalid as _fill,
+            if triplets and (matrices or vectors):
+                other = "DataFrame" if matrices else "Series"
+                raise NotImplementedError(
+                    f"ADP formulas mixing a TripletMatrix with a {other} "
+                    "operand are not supported: triplet plans compute in "
+                    f"float64, which would silently demote the ADP {other}. "
+                    f"Register the {other} with adp_enabled=False or convert "
+                    "the triplet operand to a pandas DataFrame."
                 )
-
-                if self.fill_invalid:
-                    tdf = _fill(tdf, [VALUE])
-                self._last_value_cols = [VALUE]
-                self.last_invalid_count = None  # not audited in defer mode
-                self._last_is_triplet = True
-                return tdf
-            tdf, count = _validate(
-                tdf,
-                [VALUE],
-                formula_str,
-                fill=self.fill_invalid,
-                mixed_operands=mixed,
-                verbose=self.verbose,
-            )
-            self._last_value_cols = [VALUE]
-            self.last_invalid_count = count
-            self._last_is_triplet = True
-            return tdf
-        self._last_is_triplet = False
-
+            if matrices:
+                df, cols = adp_mod.compile_adp_formula(
+                    expr, self.datasets, self.decimal_precision
+                )
+                return _Plan("adp", formula, df, cols, mixed=mixed)
+            if not triplets:
+                # scalar- and Series-only ADP formulas evaluate at full
+                # precision on the driver
+                dps = self.decimal_precision
+                scalars = {
+                    n: float(d) for n, d in zip(names, operands) if isinstance(d, (int, float))
+                }
+                if vectors:
+                    vecs = {n: d for n, d in zip(names, operands) if isinstance(d, Vector)}
+                    value = adp_mod.adp_eval_vectors(expr, vecs, scalars, dps)
+                    return _Plan("vector", formula, value=value)
+                # a float, once the mpmath zero-division guard has run
+                value = float(adp_mod.adp_eval_scalar(expr, scalars, dps))
+                return _Plan("scalar", formula, value=value)
+        if has_mm or has_t or triplets:
+            tdf = triplet_plans.compile_formula_triplet(expr, self.datasets)
+            return _Plan("triplet", formula, tdf, [VALUE], mixed=mixed)
+        if fuse and matrices:
+            return _Plan("wide", formula)
         compiled = compile_formula(expr, self.datasets)
         if compiled.is_scalar:
-            return compiled.scalar
+            return _Plan("scalar", formula, value=compiled.scalar)
         if compiled.vector is not None:
-            return pd.Series(
-                compiled.vector.values, index=compiled.vector.labels, dtype=np.float64
-            )
-        if self.validation == "defer":
-            from ssb_coefficient_maker_spark.validation import fill_invalid as _fill
+            vec = compiled.vector
+            return _Plan("vector", formula, value=pd.Series(
+                vec.values, index=vec.labels, dtype=np.float64
+            ))
+        return _Plan("wide", formula, compiled.df, compiled.value_cols, mixed=mixed)
 
-            df = (
-                _fill(compiled.df, compiled.value_cols)
-                if self.fill_invalid
-                else compiled.df
-            )
-            self._last_value_cols = compiled.value_cols
+    def _result(self, plan: _Plan) -> Any:
+        """A plan's ``evaluate_formula`` result: the eager audit (fill,
+        warn, raise), or in defer mode just the lazy fill."""
+        if plan.df is None:
+            return plan.value
+        if self.validation == "defer":
             self.last_invalid_count = None  # not audited in defer mode
-            return df
-        df, count = _validate(
-            compiled.df,
-            compiled.value_cols,
-            formula_str,
+            if self.fill_invalid:
+                return fill_invalid(plan.df, plan.value_cols, plan.carrier)
+            return plan.df
+        audit = adp_mod.validate_adp if plan.kind == "adp" else _validate
+        df, self.last_invalid_count = audit(
+            plan.df,
+            plan.value_cols,
+            plan.formula,
             fill=self.fill_invalid,
-            mixed_operands=mixed,
+            mixed_operands=plan.mixed,
             verbose=self.verbose,
         )
-        self._last_value_cols = compiled.value_cols
-        self.last_invalid_count = count
         return df
 
-    def _adp_evaluate_to_parquet(self, expr: Any, formula: str, path: str) -> dict:
-        """ADP variant of the single-pass production sink: the
-        string-carried mpf result writes while the invalid metrics
-        (``'nan'/'±inf'`` strings, adp.py:291) ride the same action
-        via ``observe`` — one mapInPandas evaluation, one write, no
-        separate audit scan (the reference's ADP fill loops per cell,
-        coeff_maker.py:274-279)."""
-        import pyspark.sql.functions as F
-        from pyspark.sql import Observation
-
-        from ssb_coefficient_maker_spark.adp import adp_fill_select, adp_invalid_cond
-
-        df, cols = adp_mod.compile_adp_formula(
-            expr, self.datasets, self.decimal_precision
-        )
+    def _sink(self, plan: _Plan, path: str) -> dict:
+        """Write a plan's result to parquet in ONE action: the audit
+        metrics ride the write via ``observe`` and count the cells
+        BEFORE any fill, which is fused into the write projection.
+        Returns the observed ``validation.audit_exprs`` row."""
         obs = Observation()
-        metrics = [F.count(F.lit(1)).alias("rows")] + [
-            F.sum(adp_invalid_cond(c).cast("long")).alias(f"inv_{c}") for c in cols
-        ]
-        out = df.observe(obs, *metrics)
+        out = plan.df.observe(obs, *audit_exprs(plan.value_cols, plan.carrier))
         if self.fill_invalid:
-            out = adp_fill_select(out, cols)
+            out = fill_invalid(out, plan.value_cols, plan.carrier)
         out.write.mode("overwrite").parquet(path)
-        got = obs.get
-        n_invalid = sum(got[f"inv_{c}"] or 0 for c in cols)
-        n_cells = got["rows"] * len(cols)
-        if n_cells and n_invalid == n_cells:
-            raise ValueError(
-                f"All values in the result of formula '{formula}' are invalid "
-                f"(written to {path} before post-hoc validation)."
-            )
-        if n_invalid and not self.fill_invalid:
-            import warnings
+        return obs.get
 
-            warnings.warn(
-                f"Result of formula '{formula}' contains {n_invalid} invalid "
-                f"value(s) ({100.0 * n_invalid / n_cells:.1f}% of {n_cells} cells).",
-                UserWarning,
-                stacklevel=3,
-            )
-        return {"rows": got["rows"], "cells": n_cells, "invalid": n_invalid, "path": path}
+    def _to_pandas(self, result: Any) -> Any:
+        """Collect an ``evaluate_formula`` result: a triplet result
+        pivots to its wide matrix, an ADP result collects as mpf."""
+        if not isinstance(result, DataFrame):
+            return result
+        if COL_ID in result.columns:
+            wide = triplet_to_wide(TripletMatrix(result))
+            cols = [c for c in wide.columns if c != ROW_ID]
+            return matrix_to_pandas(Matrix(df=wide, value_cols=cols))
+        cols = [c for c in result.columns if c != ROW_ID]
+        if self.adp_enabled:
+            return adp_mod.adp_to_pandas(result, cols, self.decimal_precision)
+        return matrix_to_pandas(Matrix(df=result, value_cols=cols))
 
     def evaluate_to_parquet(self, formula: str, path: str) -> dict:
         """Production path: evaluate + validate + write in ONE pass.
@@ -461,129 +355,47 @@ class FormulaEvaluator:
         writes the result, via ``DataFrame.observe`` — each cell is
         touched exactly once (the reference re-scans results up to 3
         times, reference coeff_maker.py:93,101,106). Fill (when
-        enabled) is fused into the write projection. Raises after the
-        write if every cell was invalid; returns the metrics dict.
+        enabled) is fused into the write projection. Warns or raises
+        like ``evaluate_formula``, but after the write; returns the
+        metrics dict.
         """
-        from pyspark.sql import Observation
-
-        from ssb_coefficient_maker_spark.validation import fill_invalid as _fill
-        from ssb_coefficient_maker_spark.validation import invalid_cond
-
-        from ssb_coefficient_maker_spark.formula.parser import (
-            contains_matmul as _has_mm,
+        plan = self._plan(formula)
+        if plan.df is None:
+            raise ValueError("evaluate_to_parquet needs at least one matrix operand")
+        row = self._sink(plan, path)
+        status = status_of(row, plan.value_cols)
+        check(
+            status,
+            formula,
+            fill=self.fill_invalid,
+            mixed_operands=plan.mixed,
+            verbose=self.verbose,
         )
-        from ssb_coefficient_maker_spark.formula.parser import (
-            contains_transpose as _has_t,
-        )
-
-        expr = self.parse_formula(formula)
-        if self.adp_enabled:
-            if _has_mm(expr) or _has_t(expr):
-                # same driver-side refusal as evaluate_formula — without
-                # it the node would only fail inside the executor UDF,
-                # an opaque job error after the overwrite-mode write has
-                # already clobbered the destination
-                op = (
-                    "matmul ('@') / neumann() / leontief()"
-                    if _has_mm(expr)
-                    else "transpose ('.T')"
-                )
-                raise NotImplementedError(
-                    f"{op} is not supported in ADP mode: it evaluates in "
-                    "float64, which would silently demote the "
-                    "arbitrary-precision operands. Evaluate with "
-                    "adp_enabled=False."
-                )
-            return self._adp_evaluate_to_parquet(expr, formula, path)
-        from ssb_coefficient_maker_spark.plans.triplet import (
-            VALUE,
-            TripletMatrix,
-            compile_formula_triplet,
-        )
-
-        names = self.extract_variables(expr)
-        missing = [n for n in names if n not in self.datasets]
-        if missing:
-            raise KeyError(
-                f"formula '{formula}' references unknown dataset(s): {missing}"
-            )
-        # same routing as _evaluate_formula: .T / @ / triplet operands
-        # compile on the triplet path; the observe/fill/write tail is
-        # shared — the production path supports the full grammar
-        if (
-            _has_t(expr)
-            or _has_mm(expr)
-            or any(isinstance(self.datasets[n], TripletMatrix) for n in names)
-        ):
-            result_df = compile_formula_triplet(expr, self.datasets)
-            value_cols = [VALUE]
-        else:
-            compiled = compile_formula(expr, self.datasets)
-            if compiled.df is None:
-                raise ValueError(
-                    "evaluate_to_parquet needs at least one matrix operand"
-                )
-            result_df, value_cols = compiled.df, compiled.value_cols
-        import pyspark.sql.functions as F
-
-        obs = Observation()
-        metrics_exprs = [F.count(F.lit(1)).alias("rows")] + [
-            F.sum(invalid_cond(F.col(c)).cast("long")).alias(f"inv_{c}")
-            for c in value_cols
-        ]
-        observed = result_df.observe(obs, *metrics_exprs)
-        out = _fill(observed, value_cols) if self.fill_invalid else observed
-        out.write.mode("overwrite").parquet(path)
-        got = obs.get
-        n_invalid = sum(got[f"inv_{c}"] or 0 for c in value_cols)
-        n_cells = got["rows"] * len(value_cols)
-        if n_cells and n_invalid == n_cells:
-            raise ValueError(
-                f"All values in the result of formula '{formula}' are invalid "
-                f"(written to {path} before post-hoc validation)."
-            )
-        if n_invalid and not self.fill_invalid:
-            import warnings
-
-            warnings.warn(
-                f"Result of formula '{formula}' contains {n_invalid} invalid "
-                f"value(s) ({100.0 * n_invalid / n_cells:.1f}% of {n_cells} cells).",
-                UserWarning,
-                stacklevel=2,
-            )
-        return {"rows": got["rows"], "cells": n_cells, "invalid": n_invalid, "path": path}
+        return {
+            "rows": row["__rows__"],
+            "cells": status.n_cells,
+            "invalid": status.n_invalid,
+            "path": path,
+        }
 
     def evaluate_to_pandas(self, formula: str | FormulaExpr) -> Any:
         """Evaluate and collect to pandas (tests / small results)."""
-        result = self.evaluate_formula(formula)
-        if not isinstance(result, DataFrame):
-            return result
-        if self.adp_enabled:
-            return adp_mod.adp_to_pandas(
-                result, self._last_value_cols, self.decimal_precision
-            )
-        if getattr(self, "_last_is_triplet", False):
-            from ssb_coefficient_maker_spark.plans.triplet import (
-                TripletMatrix,
-                triplet_to_wide,
-            )
-            from ssb_coefficient_maker_spark.session import ROW_ID
-
-            wide = triplet_to_wide(TripletMatrix(result))
-            cols = [c for c in wide.columns if c != ROW_ID]
-            return matrix_to_pandas(Matrix(df=wide, value_cols=cols))
-        return matrix_to_pandas(Matrix(df=result, value_cols=self._last_value_cols))
+        return self._to_pandas(self.evaluate_formula(formula))
 
 
+@dataclass
 class FusedGroup:
     """One fused-evaluation plan: ``df`` holds ``__row_id__`` plus
     ``{result}_{col}`` columns for every formula in the group (one scan
     of each shared input); ``result_cols`` maps result name → its
     column list."""
 
-    def __init__(self, df: DataFrame, result_cols: dict[str, list[str]]):
-        self.df = df
-        self.result_cols = result_cols
+    df: DataFrame
+    result_cols: dict[str, list[str]]
+
+    @property
+    def value_cols(self) -> list[str]:
+        return [c for cols in self.result_cols.values() for c in cols]
 
 
 class CoefficientCalculator:
@@ -636,11 +448,10 @@ class CoefficientCalculator:
                 f"has {list(cmap.columns)}"
             )
 
-    def compute_coefficients(self) -> dict[str, Any]:
-        """Evaluate every mapped formula; skip empty formulas and
-        formulas with unknown variables (reference
-        coeff_maker.py:989-1012 fail-soft loop)."""
-        results: dict[str, Any] = {}
+    def _rows(self) -> Iterator[tuple[str, str, FormulaExpr]]:
+        """``(name, formula, parsed)`` per map row; skips empty
+        formulas, unparseable ones and ones with unknown variables
+        (reference coeff_maker.py:989-1012 fail-soft loop)."""
         for _, row in self.coefficient_map.iterrows():
             name = row[self.result_name_col]
             formula = row[self.formula_name_col]
@@ -668,11 +479,48 @@ class CoefficientCalculator:
                     # reference shape, coeff_maker.py:1005
                     print(f"Skipping coefficient {name}: Missing variables {unknown}")
                 continue
-            results[name] = self.evaluator.evaluate_formula(str(formula))
+            yield name, str(formula), expr
+
+    def compute_coefficients(self) -> dict[str, Any]:
+        """Evaluate every mapped formula; skip empty formulas and
+        formulas with unknown variables (reference
+        coeff_maker.py:989-1012 fail-soft loop)."""
+        results: dict[str, Any] = {}
+        for name, formula, _ in self._rows():
+            results[name] = self.evaluator.evaluate_formula(formula)
             if self.verbose:
                 # reference shape, coeff_maker.py:1014
                 print(f"Successfully computed coefficient: {name}")
         return results
+
+    def _fused_plans(self) -> tuple[list[FusedGroup], dict[str, _Plan]]:
+        """Route every map row: wide formulas fuse into one group per
+        frame-operand set (unfilled); every other row keeps its plan."""
+        if self.evaluator.adp_enabled:
+            # ADP matrices carry decimal STRINGS; the fused compiler
+            # emits double arithmetic and would silently destroy the
+            # precision the mode exists for
+            raise NotImplementedError(
+                "compute_coefficients_fused supports standard mode only; "
+                "ADP batches go through compute_coefficients"
+            )
+        datasets = self.evaluator.datasets
+        extras: dict[str, _Plan] = {}
+        by_frames: dict[frozenset, dict[str, FormulaExpr]] = {}
+        for name, formula, expr in self._rows():
+            plan = self.evaluator._route(expr, formula, fuse=True)
+            if plan.kind == "wide":
+                frames = frozenset(
+                    v for v in extract_variables(expr) if isinstance(datasets[v], Matrix)
+                )
+                by_frames.setdefault(frames, {})[name] = expr
+            else:
+                extras[name] = plan
+        groups = [
+            FusedGroup(*compile_formulas_fused(exprs, datasets))
+            for exprs in by_frames.values()
+        ]
+        return groups, extras
 
     def compute_coefficients_fused(
         self,
@@ -688,99 +536,19 @@ class CoefficientCalculator:
         divides the input-scan volume by N.
 
         Returns ``(groups, extras)``: each ``FusedGroup`` carries the
-        fused DataFrame (``__row_id__`` + ``{result}_{col}`` columns)
-        and the result→columns mapping; ``extras`` holds results
-        evaluated through the standard single-formula path instead:
-        vector/scalar-only formulas (driver-cheap), formulas with
-        non-fusable operands (TripletMatrix wide-form), and matrix-op
-        (``.T``/``@``) formulas — the latter two are LAZY Spark
-        DataFrames, which ``compute_coefficients_fused_to_parquet``
-        writes alongside the fused groups. Raises
-        NotImplementedError under ADP (fusing would silently demote
-        decimal strings to doubles). Skip rules (empty formula,
-        unknown variable, unparseable) match ``compute_coefficients``.
+        fused DataFrame (``__row_id__`` + ``{result}_{col}`` columns,
+        filled when ``fill_invalid``) and the result→columns mapping;
+        ``extras`` holds every other row's ``evaluate_formula`` result
+        (vector/scalar-only, TripletMatrix-operand and ``.T``/``@``
+        formulas). Raises NotImplementedError under ADP (fusing would
+        silently demote decimal strings to doubles). Skip rules (empty
+        formula, unknown variable, unparseable) match
+        ``compute_coefficients``.
         """
-        from ssb_coefficient_maker_spark.plans.alignment import (
-            compile_formulas_fused,
-        )
-        from ssb_coefficient_maker_spark.validation import fill_invalid as _fill
-
-        if self.evaluator.adp_enabled:
-            # ADP matrices carry decimal STRINGS; the fused compiler
-            # emits double arithmetic and would silently destroy the
-            # precision the mode exists for
-            raise NotImplementedError(
-                "compute_coefficients_fused supports standard mode only; "
-                "ADP batches go through compute_coefficients"
-            )
-
-        extras: dict[str, Any] = {}
-        by_frames: dict[frozenset, dict[str, Any]] = {}
-        for _, row in self.coefficient_map.iterrows():
-            name = row[self.result_name_col]
-            formula = row[self.formula_name_col]
-            if formula is None or (isinstance(formula, float) and np.isnan(formula)):
-                continue
-            if not str(formula).strip():
-                continue
-            try:
-                expr = self.evaluator.parse_formula(str(formula))
-            except Exception as exc:
-                if self.verbose:
-                    print(f"Skipping coefficient {name}: unparseable formula {formula!r}: {exc}")
-                continue
-            variables = self.evaluator.extract_variables(expr)
-            unknown = [v for v in variables if v not in self.evaluator.datasets]
-            if unknown:
-                if self.verbose:
-                    print(f"Skipping coefficient {name}: Missing variables {unknown}")
-                continue
-            from ssb_coefficient_maker_spark.formula.parser import (
-                contains_matmul as _has_mm,
-            )
-            from ssb_coefficient_maker_spark.formula.parser import (
-                contains_transpose as _has_t,
-            )
-
-            frame_names = frozenset(
-                v
-                for v in variables
-                if isinstance(self.evaluator.datasets[v], Matrix)
-            )
-            fusable = (
-                frame_names
-                and all(
-                    isinstance(
-                        self.evaluator.datasets[v], (Matrix, Vector, int, float)
-                    )
-                    for v in variables
-                )
-                # .T/@ compile on the triplet path only — the wide
-                # fused compiler would hard-fail the whole batch on
-                # the first such node; route them to the standard
-                # (auto-routing) path instead, like other non-fusable
-                # rows
-                and not _has_t(expr)
-                and not _has_mm(expr)
-            )
-            if not fusable:
-                # vector/scalar-only formulas (no scan to share),
-                # formulas touching non-fusable operands (TripletMatrix
-                # wide-form), and matrix-op (.T/@) formulas evaluate
-                # through the standard single-formula path and land in
-                # extras
-                extras[name] = self.evaluator.evaluate_formula(str(formula))
-                continue
-            by_frames.setdefault(frame_names, {})[name] = expr
-
-        groups: list[FusedGroup] = []
-        for _frames, exprs in by_frames.items():
-            df, result_cols = compile_formulas_fused(exprs, self.evaluator.datasets)
-            if self.evaluator.fill_invalid:
-                all_cols = [c for cols in result_cols.values() for c in cols]
-                df = _fill(df, all_cols)
-            groups.append(FusedGroup(df=df, result_cols=result_cols))
-        return groups, extras
+        groups, extras = self._fused_plans()
+        if self.evaluator.fill_invalid:
+            groups = [FusedGroup(fill_invalid(g.df, g.value_cols), g.result_cols) for g in groups]
+        return groups, {name: self.evaluator._result(p) for name, p in extras.items()}
 
     def compute_coefficients_fused_to_parquet(self, base_path: str) -> dict[str, Any]:
         """Batch production path: fused evaluation + parquet sink, ONE
@@ -790,68 +558,36 @@ class CoefficientCalculator:
         result separately, re-evaluating shared operands every time
         (coeff_maker.py:989-1016); here a group of N formulas over the
         same operands costs one scan of each input and one write.
-        Returns a manifest: result name → {"path", "columns"} (plus
-        driver-cheap vector/scalar results under "extras").
-        Invalid-count metrics ride each write via ``observe`` — no
-        post-hoc audit scan. Extras that are themselves Spark
-        DataFrames (matrix-op ``.T``/``@`` formulas and TripletMatrix
-        operands route through the standard path, not the wide fused
-        compiler) are WRITTEN too — one parquet sink per such result
-        at ``{base_path}/extra={name}`` with the same observed
-        metrics — so no coefficient in the map is silently dropped
-        from the batch sink.
+        Returns a manifest: result name → {"path", "columns", "rows",
+        "invalid"} (plus driver-cheap vector/scalar results under
+        "extras"). ``invalid`` counts the result's invalid cells before
+        any fill, observed on the write — no audit scan. Matrix
+        results outside the fused groups (``.T``/``@`` formulas,
+        TripletMatrix operands) are written too, one sink each at
+        ``{base_path}/extra={name}``, so no coefficient in the map is
+        silently dropped from the batch sink.
         """
-        import pyspark.sql.functions as F
-        from pyspark.sql import Observation
-
-        from ssb_coefficient_maker_spark.validation import invalid_cond as _invalid_cond
-
-        groups, extras = self.compute_coefficients_fused()
+        groups, extras = self._fused_plans()
         manifest: dict[str, Any] = {"extras": {}}
-        for name, value in extras.items():
-            if not isinstance(value, DataFrame):
-                manifest["extras"][name] = value  # driver-cheap Series/scalar
-                continue
-            path = f"{base_path}/extra={name}"
-            vcols = [c for c in value.columns if c not in ("__row_id__", "__col_id__")]
-            obs = Observation()
-            metrics = [F.count(F.lit(1)).alias("rows")] + [
-                F.sum(_invalid_cond(F.col(c)).cast("long")).alias(f"inv_{c}")
-                for c in vcols
-            ]
-            value.observe(obs, *metrics).write.mode("overwrite").parquet(path)
-            got = obs.get
-            manifest[name] = {
-                "path": path,
-                "columns": vcols,
-                "rows": got["rows"],
-                "invalid": sum(got[f"inv_{c}"] or 0 for c in vcols),
-            }
+
+        def sink(plan: _Plan, path: str, results: dict[str, list[str]]) -> None:
+            row = self.evaluator._sink(plan, path)
+            for rname, cols in results.items():
+                invalid = status_of(row, cols).n_invalid
+                manifest[rname] = {"path": path, "columns": cols, "rows": row["__rows__"],
+                                   "invalid": invalid}
+
+        for name, plan in extras.items():
+            if plan.df is None:
+                manifest["extras"][name] = plan.value  # driver-cheap Series/scalar
+            else:
+                sink(plan, f"{base_path}/extra={name}", {name: plan.value_cols})
         for gi, g in enumerate(groups):
-            path = f"{base_path}/group={gi}"
-            obs = Observation()
-            all_cols = [c for cols in g.result_cols.values() for c in cols]
-            metrics = [F.count(F.lit(1)).alias("rows")] + [
-                F.sum(_invalid_cond(F.col(c)).cast("long")).alias(f"inv_{c}")
-                for c in all_cols
-            ]
-            g.df.observe(obs, *metrics).write.mode("overwrite").parquet(path)
-            got = obs.get
-            for rname, cols in g.result_cols.items():
-                manifest[rname] = {
-                    "path": path,
-                    "columns": cols,
-                    "rows": got["rows"],
-                    "invalid": sum(got[f"inv_{c}"] or 0 for c in cols),
-                }
+            sink(_Plan("wide", "", g.df, g.value_cols), f"{base_path}/group={gi}", g.result_cols)
         return manifest
 
     def compute_coefficients_to_pandas(self) -> dict[str, Any]:
-        out = {}
-        for name, value in self.compute_coefficients().items():
-            if isinstance(value, DataFrame):
-                cols = [c for c in value.columns if c != "__row_id__"]
-                out[name] = matrix_to_pandas(Matrix(df=value, value_cols=cols))
-            else:
-                out[name] = value
-        return out
+        return {
+            name: self.evaluator._to_pandas(value)
+            for name, value in self.compute_coefficients().items()
+        }

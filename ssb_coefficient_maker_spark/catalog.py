@@ -21,7 +21,7 @@ this with an explicit error until the triplet path lands.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any, Iterable, Mapping
+from typing import Any, Iterable
 
 import numpy as np
 import pandas as pd
@@ -164,40 +164,3 @@ def matrix_to_pandas(m: Matrix, index_dtype: str | None = None) -> pd.DataFrame:
     except ValueError:
         out.columns = list(m.value_cols)
     return out
-
-
-class MatrixCatalog:
-    """The engine's ``data_dict`` analog: named matrices, vectors, scalars."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self._entries: dict[str, Matrix | Vector | float] = {}
-
-    def register(self, name: str, value: Any, row_id: str | None = None) -> None:
-        if not name.isidentifier():
-            raise ValueError(f"dataset name {name!r} is not a valid identifier")
-        if isinstance(value, pd.DataFrame):
-            self._entries[name] = matrix_from_pandas(self.spark, value)
-        elif isinstance(value, pd.Series):
-            self._entries[name] = vector_from_pandas(value)
-        elif isinstance(value, DataFrame):
-            self._entries[name] = matrix_from_spark(value, row_id=row_id)
-        elif isinstance(value, Matrix | Vector):
-            self._entries[name] = value
-        elif isinstance(value, (int, float)):
-            self._entries[name] = float(value)
-        else:
-            raise TypeError(f"cannot register {name!r}: unsupported type {type(value)}")
-
-    def register_all(self, data: Mapping[str, Any]) -> None:
-        for k, v in data.items():
-            self.register(k, v)
-
-    def get(self, name: str) -> Matrix | Vector | float:
-        return self._entries[name]
-
-    def __contains__(self, name: str) -> bool:
-        return name in self._entries
-
-    def names(self) -> list[str]:
-        return list(self._entries)

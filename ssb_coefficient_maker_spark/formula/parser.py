@@ -32,7 +32,7 @@ mpmath closure (ADP mode). One parser, two backends.
 from __future__ import annotations
 
 import ast
-from dataclasses import dataclass
+from dataclasses import dataclass, fields
 
 
 class FormulaError(ValueError):
@@ -294,6 +294,16 @@ def _convert_call(node: ast.Call, formula: str) -> FormulaExpr:
     raise FormulaError(f"unsupported call syntax in {formula!r}")
 
 
+def _nodes(expr: FormulaExpr):
+    """Every node of a parsed formula, depth-first, left to right."""
+    yield expr
+    for f in fields(expr):
+        value = getattr(expr, f.name)
+        for child in value if isinstance(value, tuple) else (value,):
+            if isinstance(child, FormulaExpr):
+                yield from _nodes(child)
+
+
 def extract_variables(expr: FormulaExpr | str) -> list[str]:
     """Free variable names of a parsed formula, in first-seen order.
 
@@ -303,49 +313,14 @@ def extract_variables(expr: FormulaExpr | str) -> list[str]:
     """
     if isinstance(expr, str):
         expr = parse_formula(expr)
-    seen: list[str] = []
-
-    def walk(node: FormulaExpr) -> None:
-        if isinstance(node, Var):
-            if node.name not in seen:
-                seen.append(node.name)
-        elif isinstance(node, BinOp):
-            walk(node.left)
-            walk(node.right)
-        elif isinstance(node, UnaryOp):
-            walk(node.operand)
-        elif isinstance(node, Call):
-            for a in node.args:
-                walk(a)
-        elif isinstance(node, Transpose):
-            walk(node.operand)
-        elif isinstance(node, MatMul):
-            walk(node.left)
-            walk(node.right)
-        elif isinstance(node, (Neumann, Leontief)):
-            walk(node.operand)
-
-    walk(expr)
-    return seen
+    return list(dict.fromkeys(n.name for n in _nodes(expr) if isinstance(n, Var)))
 
 
 def contains_transpose(expr: FormulaExpr) -> bool:
     """True iff the parsed formula has a ``.T`` anywhere — used by the
     evaluator to route such formulas onto the triplet path (the only
     form where transpose is a cheap key swap)."""
-    if isinstance(expr, Transpose):
-        return True
-    if isinstance(expr, BinOp):
-        return contains_transpose(expr.left) or contains_transpose(expr.right)
-    if isinstance(expr, MatMul):
-        return contains_transpose(expr.left) or contains_transpose(expr.right)
-    if isinstance(expr, (Neumann, Leontief)):
-        return contains_transpose(expr.operand)
-    if isinstance(expr, UnaryOp):
-        return contains_transpose(expr.operand)
-    if isinstance(expr, Call):
-        return any(contains_transpose(a) for a in expr.args)
-    return False
+    return any(isinstance(n, Transpose) for n in _nodes(expr))
 
 
 def contains_matmul(expr: FormulaExpr) -> bool:
@@ -355,14 +330,4 @@ def contains_matmul(expr: FormulaExpr) -> bool:
     (the only form where the product is a join + sum aggregate at any
     width), and all refuse identically under ADP (the contraction
     computes in float64)."""
-    if isinstance(expr, (MatMul, Neumann, Leontief)):
-        return True
-    if isinstance(expr, BinOp):
-        return contains_matmul(expr.left) or contains_matmul(expr.right)
-    if isinstance(expr, Transpose):
-        return contains_matmul(expr.operand)
-    if isinstance(expr, UnaryOp):
-        return contains_matmul(expr.operand)
-    if isinstance(expr, Call):
-        return any(contains_matmul(a) for a in expr.args)
-    return False
+    return any(isinstance(n, (MatMul, Neumann, Leontief)) for n in _nodes(expr))

@@ -39,7 +39,11 @@ from ssb_coefficient_maker_spark.formula.parser import (
     Call,
     FormulaError,
     FormulaExpr,
+    Leontief,
+    MatMul,
+    Neumann,
     Num,
+    Transpose,
     UnaryOp,
     Var,
     extract_variables,
@@ -102,37 +106,26 @@ class CompiledFormula:
         return self.df is None and self.vector is None
 
 
-def compile_formula(
-    expr: FormulaExpr,
-    datasets: dict[str, Matrix | Vector | float],
-) -> CompiledFormula:
-    """Compile a parsed formula into a single lazy Spark DataFrame.
-
-    Mirrors reference ``_perform_evaluation`` (coeff_maker.py:720-798)
-    but lazily and in one plan.
-    """
+def _operands(
+    expr: FormulaExpr, datasets: dict[str, Matrix | Vector | float]
+) -> tuple[dict[str, Matrix], dict[str, Vector], dict[str, float]]:
+    """A formula's frame, vector and scalar operands, in first-seen order."""
     names = extract_variables(expr)
     missing = [n for n in names if n not in datasets]
     if missing:
         raise KeyError(f"formula references unknown dataset(s): {missing}")
+    frames = {n: d for n in names if isinstance(d := datasets[n], Matrix)}
+    vectors = {n: d for n in names if isinstance(d := datasets[n], Vector)}
+    scalars = {n: float(d) for n in names if isinstance(d := datasets[n], (int, float))}
+    return frames, vectors, scalars
 
-    frames = {n: datasets[n] for n in names if isinstance(datasets[n], Matrix)}
-    vectors = {n: datasets[n] for n in names if isinstance(datasets[n], Vector)}
-    scalars = {n: float(datasets[n]) for n in names if isinstance(datasets[n], (int, float))}
 
-    if not frames and not vectors:
-        return CompiledFormula(None, [], scalar=_eval_scalar(expr, scalars))
+def _union_cols(frames: dict[str, Matrix]) -> list[str]:
+    """Union of the frame operands' value columns, first-seen order."""
+    return list(dict.fromkeys(c for m in frames.values() for c in m.value_cols))
 
-    if not frames:
-        return CompiledFormula(None, [], vector=_eval_vectors(expr, vectors, scalars))
 
-    # union of value columns across frame operands, first-seen order
-    out_cols: list[str] = []
-    for m in frames.values():
-        for c in m.value_cols:
-            if c not in out_cols:
-                out_cols.append(c)
-
+def _check_vectors(vectors: dict[str, Vector], out_cols: list[str]) -> None:
     for vname, vec in vectors.items():
         if vec.size != len(out_cols):
             raise FormulaError(
@@ -142,31 +135,31 @@ def compile_formula(
                 f"(reference README.md:76)"
             )
 
-    joined = _aligned_join(frames)
 
-    def col_ref(var: str, pos: int) -> Column:
-        entry = frames.get(var)
-        if entry is not None:
-            cname = f"{var}__{out_cols[pos]}"
-            if out_cols[pos] in entry.value_cols:
-                return F.coalesce(F.col(cname), NAN())
-            return NAN()  # column absent from this operand → NaN (pandas align)
-        vec = vectors.get(var)
-        if vec is not None:
-            return F.lit(float(vec.values[pos]))
-        return F.lit(scalars[var])
+def compile_formula(
+    expr: FormulaExpr,
+    datasets: dict[str, Matrix | Vector | float],
+) -> CompiledFormula:
+    """Compile a parsed formula into a single lazy Spark DataFrame —
+    the one-formula case of ``compile_formulas_fused``. Scalar- and
+    vector-only formulas evaluate driver-side instead.
 
-    projections = [F.col(ROW_ID)]
-    for pos, out_c in enumerate(out_cols):
-        col = _to_column(expr, lambda v: col_ref(v, pos))
-        projections.append(col.cast("double").alias(out_c))
-    return CompiledFormula(joined.select(projections), out_cols)
+    Mirrors reference ``_perform_evaluation`` (coeff_maker.py:720-798)
+    but lazily and in one plan.
+    """
+    frames, vectors, scalars = _operands(expr, datasets)
+    if not frames and not vectors:
+        return CompiledFormula(None, [], scalar=_eval_scalar(expr, scalars))
+    if not frames:
+        return CompiledFormula(None, [], vector=_eval_vectors(expr, vectors, scalars))
+    df, result_cols = compile_formulas_fused({None: expr}, datasets)
+    return CompiledFormula(df, result_cols[None])
 
 
 def compile_formulas_fused(
-    exprs: dict[str, FormulaExpr],
+    exprs: dict[str | None, FormulaExpr],
     datasets: dict[str, Matrix | Vector | float],
-) -> tuple[DataFrame, dict[str, list[str]]]:
+) -> tuple[DataFrame, dict[str | None, list[str]]]:
     """Compile SEVERAL formulas over one shared operand set into ONE
     plan: a single aligned join of the union of frame operands, then
     one projection per (formula × column).
@@ -174,10 +167,9 @@ def compile_formulas_fused(
     The reference's batch workload (coeff_maker.py:989-1012) loops N
     formulas over one ``data_dict``; evaluated independently, each
     formula re-scans (and re-pivots/re-aggregates) every shared input
-    N times. Fused, each input is scanned ONCE: same chained
-    full-outer join on ``__row_id__`` as ``compile_formula``, with all
-    N formulas' arithmetic landing in one whole-stage-codegen'd
-    ``Project`` on top.
+    N times. Fused, each input is scanned ONCE: one chained
+    full-outer join on ``__row_id__``, with all N formulas' arithmetic
+    landing in one whole-stage-codegen'd ``Project`` on top.
 
     Every formula must use the same FRAME-operand set (that is what
     makes the row universe — the outer-join key space — identical, so
@@ -188,109 +180,86 @@ def compile_formulas_fused(
     frame set before calling.
 
     Returns ``(df, result_cols)``: ``df`` has ``__row_id__`` plus
-    columns named ``{result}_{col}``; ``result_cols`` maps each result
-    name to its column list.
+    columns named ``{result}_{col}`` (plain ``{col}`` for a ``None``
+    result name, the single-formula case); ``result_cols`` maps each
+    result name to its column list.
     """
     if not exprs:
         raise FormulaError("compile_formulas_fused: no formulas given")
-    per_formula: dict[str, tuple[dict, dict, dict]] = {}
-    frame_sets = set()
-    for rname, expr in exprs.items():
-        names = extract_variables(expr)
-        missing = [n for n in names if n not in datasets]
-        if missing:
-            raise KeyError(f"formula {rname!r} references unknown dataset(s): {missing}")
-        frames = {n: datasets[n] for n in names if isinstance(datasets[n], Matrix)}
-        vectors = {n: datasets[n] for n in names if isinstance(datasets[n], Vector)}
-        scalars = {
-            n: float(datasets[n]) for n in names if isinstance(datasets[n], (int, float))
-        }
+    per_formula = {rname: _operands(expr, datasets) for rname, expr in exprs.items()}
+    for rname, (frames, _, _) in per_formula.items():
         if not frames:
             raise FormulaError(
                 f"formula {rname!r} has no frame operand; evaluate vector/"
                 f"scalar formulas directly (driver-side) instead of fusing"
             )
-        per_formula[rname] = (frames, vectors, scalars)
-        frame_sets.add(frozenset(frames))
+    frame_sets = {frozenset(frames) for frames, _, _ in per_formula.values()}
     if len(frame_sets) > 1:
         raise FormulaError(
             f"fused formulas must share one frame-operand set (the row "
             f"universe of the aligned join); got {sorted(map(sorted, frame_sets))}"
         )
 
-    frames = per_formula[next(iter(per_formula))][0]
-    out_cols: list[str] = []
-    for m in frames.values():
-        for c in m.value_cols:
-            if c not in out_cols:
-                out_cols.append(c)
-
-    joined = _aligned_join(frames)
+    frames = next(iter(per_formula.values()))[0]
+    out_cols = _union_cols(frames)
+    joined = _aligned_join(frames, out_cols)
+    slot = {name: (i, set(m.value_cols)) for i, (name, m) in enumerate(frames.items())}
     projections = [F.col(ROW_ID)]
-    result_cols: dict[str, list[str]] = {}
-    for rname, (fr, vectors, scalars) in per_formula.items():
-        for vname, vec in vectors.items():
-            if vec.size != len(out_cols):
-                raise FormulaError(
-                    f"vector {vname!r} has length {vec.size} but the frame "
-                    f"operands have {len(out_cols)} columns"
-                )
+    result_cols: dict[str | None, list[str]] = {}
+    for rname, (_, vectors, scalars) in per_formula.items():
+        _check_vectors(vectors, out_cols)
 
         def col_ref(var: str, pos: int, vectors=vectors, scalars=scalars) -> Column:
-            entry = frames.get(var)
-            if entry is not None:
-                cname = f"{var}__{out_cols[pos]}"
-                if out_cols[pos] in entry.value_cols:
-                    return F.coalesce(F.col(cname), NAN())
-                return NAN()
-            vec = vectors.get(var)
-            if vec is not None:
-                return F.lit(float(vec.values[pos]))
+            if var in slot:
+                i, present = slot[var]
+                if out_cols[pos] in present:
+                    return F.coalesce(F.col(_operand_col(i, pos)), NAN())
+                return NAN()  # column absent from this operand → NaN (pandas align)
+            if var in vectors:
+                return F.lit(float(vectors[var].values[pos]))
             return F.lit(scalars[var])
 
-        cols: list[str] = []
-        expr = exprs[rname]
-        for pos, out_c in enumerate(out_cols):
-            col = _to_column(expr, lambda v: col_ref(v, pos))
-            alias = f"{rname}_{out_c}"
+        cols = [out_c if rname is None else f"{rname}_{out_c}" for out_c in out_cols]
+        for pos, alias in enumerate(cols):
+            col = _to_column(exprs[rname], lambda v: col_ref(v, pos))
             projections.append(col.cast("double").alias(alias))
-            cols.append(alias)
         result_cols[rname] = cols
     return joined.select(projections), result_cols
 
 
-def _aligned_join(frames: dict[str, Matrix]) -> DataFrame:
+def _operand_col(i: int, pos: int) -> str:
+    """Aligned-join alias of frame operand ``i``'s value at output
+    column ``pos``. Positional, so no operand or column name can make
+    two aliases collide (``a`` with column ``_x`` and ``a_`` with
+    column ``x`` would both be ``a___x`` as ``name__col``)."""
+    return f"__op{i}_{pos}__"
+
+
+def _aligned_join(frames: dict[str, Matrix], out_cols: list[str]) -> DataFrame:
     """Chained full-outer join of all frame operands on ROW_ID.
 
-    Every operand's value columns are prefixed ``name__col`` before
-    joining so the projection can reference them unambiguously. The
-    join key is identical at every step → one exchange per input, one
-    sort-merge (or broadcast under AQE) cascade, no re-shuffle.
+    Every operand's value columns are renamed ``_operand_col(i, pos)``
+    before joining so the projection can reference them unambiguously.
+    The join key is identical at every step → one exchange per input,
+    one sort-merge (or broadcast under AQE) cascade, no re-shuffle.
     """
+    pos = {c: j for j, c in enumerate(out_cols)}
     # operands keep their native row-id type (so a long key can reuse
     # upstream partitioning); only heterogeneous key types force a
     # unifying cast to string
     key_types = {m.df.schema[ROW_ID].dataType.simpleString() for m in frames.values()}
     unify = len(key_types) > 1
     prefixed: list[DataFrame] = []
-    for name, m in frames.items():
+    for i, m in enumerate(frames.values()):
         rid = F.col(ROW_ID).cast("string") if unify else F.col(ROW_ID)
-        sel = [rid.alias(ROW_ID)] + [F.col(c).alias(f"{name}__{c}") for c in m.value_cols]
+        sel = [rid.alias(ROW_ID)] + [
+            F.col(c).alias(_operand_col(i, pos[c])) for c in m.value_cols
+        ]
         prefixed.append(m.df.select(sel))
-    if len(prefixed) == 1:
-        return prefixed[0]
     return reduce(lambda a, b: a.join(b, on=ROW_ID, how="full_outer"), prefixed)
 
 
 def _to_column(expr: FormulaExpr, resolve) -> Column:
-    from ssb_coefficient_maker_spark.formula.parser import (
-        FormulaError,
-        Leontief,
-        MatMul,
-        Neumann,
-        Transpose,
-    )
-
     if isinstance(expr, (Transpose, MatMul, Neumann, Leontief)):
         # the evaluator routes matrix-op formulas onto the triplet
         # path (api.py) before this wide-path projection is built;

@@ -28,7 +28,16 @@ from pyspark.sql import functions as F
 
 from ssb_coefficient_maker_spark.catalog import Matrix, Vector
 from ssb_coefficient_maker_spark.formula.parser import (
+    BinOp,
+    Call,
+    FormulaError,
     FormulaExpr,
+    Leontief,
+    MatMul,
+    Neumann,
+    Transpose,
+    UnaryOp,
+    Var,
     extract_variables,
 )
 from ssb_coefficient_maker_spark.plans.alignment import NAN, _to_column
@@ -172,14 +181,21 @@ def neumann_series(a: TripletMatrix, terms: int) -> TripletMatrix:
     parts = [identity_triplet(a).df]
     term = a
     for _ in range(terms):
-        parts.append(
-            term.df.select(
-                F.col(ROW_ID).cast("string").alias(ROW_ID),
-                COL_ID,
-                F.coalesce(F.col(VALUE), NAN()).alias(VALUE),
-            )
-        )
+        parts.append(_series_term(term))
         term = matmul_triplet(term, a)
+    return _series_sum(parts)
+
+
+def _series_term(t: TripletMatrix) -> DataFrame:
+    """One Neumann term, keyed by string labels with NULL read as NaN."""
+    return t.df.select(
+        F.col(ROW_ID).cast("string").alias(ROW_ID),
+        COL_ID,
+        F.coalesce(F.col(VALUE), NAN()).alias(VALUE),
+    )
+
+
+def _series_sum(parts: list[DataFrame]) -> TripletMatrix:
     total = (
         reduce(lambda x, y: x.unionByName(y), parts)
         .groupBy(ROW_ID, COL_ID)
@@ -222,11 +238,7 @@ def leontief_total_requirements(
     parts = [identity_triplet(a).df]
     term = a
     for _ in range(max_terms):
-        term_df = term.df.select(
-            F.col(ROW_ID).cast("string").alias(ROW_ID),
-            COL_ID,
-            F.coalesce(F.col(VALUE), NAN()).alias(VALUE),
-        ).localCheckpoint()
+        term_df = _series_term(term).localCheckpoint()
         peak = term_df.agg(F.max(F.abs(F.col(VALUE)))).first()[0]
         if peak is None or peak < tol:
             break
@@ -243,12 +255,7 @@ def leontief_total_requirements(
             f"{max_terms} terms (last term max |value| = {peak:.3g}) — "
             "is the spectral radius < 1 (column sums < 1)?"
         )
-    total = (
-        reduce(lambda x, y: x.unionByName(y), parts)
-        .groupBy(ROW_ID, COL_ID)
-        .agg(F.sum(VALUE).alias(VALUE))
-    )
-    return TripletMatrix(total)
+    return _series_sum(parts)
 
 
 def triplet_to_wide(t: TripletMatrix, columns: list[str] | None = None) -> DataFrame:
@@ -274,18 +281,6 @@ def _rewrite_matrix_ops(
     ``(a @ b).T``, ``a @ b @ c``); transpose/matmul of an ELEMENTWISE
     compound (e.g. ``(a + b).T``) refuses loudly — supporting that
     would mean materializing intermediate results mid-formula."""
-    from ssb_coefficient_maker_spark.formula.parser import (
-        BinOp,
-        Call,
-        FormulaError,
-        Leontief,
-        MatMul,
-        Neumann,
-        Transpose,
-        UnaryOp,
-        Var,
-    )
-
     extra: dict[str, TripletMatrix] = {}
     # structural memos: MatMul/Transpose are frozen dataclasses with
     # value equality, so '(a @ b) * 2 - a @ b' binds ONE synthetic
@@ -360,23 +355,14 @@ def _rewrite_matrix_ops(
 
     def rw(node: FormulaExpr) -> FormulaExpr:
         if isinstance(node, (Transpose, MatMul, Neumann, Leontief)):
-            if node in vmemo:
-                return vmemo[node]
-            if isinstance(node, Transpose):
-                base = (
-                    f"{node.operand.name}__T"
-                    if isinstance(node.operand, Var)
-                    else f"__T{len(extra)}__"
-                )
-                var = bind(as_matrix(node, "transpose ('.T')"), base)
-            elif isinstance(node, Neumann):
-                var = bind(as_matrix(node, "neumann()"), f"__neu{len(extra)}__")
-            elif isinstance(node, Leontief):
-                var = bind(as_matrix(node, "leontief()"), f"__leo{len(extra)}__")
-            else:
-                var = bind(as_matrix(node, "matmul ('@')"), f"__mm{len(extra)}__")
-            vmemo[node] = var
-            return var
+            if node not in vmemo:
+                if isinstance(node, Transpose) and isinstance(node.operand, Var):
+                    base = f"{node.operand.name}__T"
+                else:
+                    tag = {Transpose: "T", MatMul: "mm", Neumann: "neu", Leontief: "leo"}
+                    base = f"__{tag[type(node)]}{len(extra)}__"
+                vmemo[node] = bind(as_matrix(node, ""), base)
+            return vmemo[node]
         if isinstance(node, BinOp):
             return BinOp(node.op, rw(node.left), rw(node.right))
         if isinstance(node, UnaryOp):

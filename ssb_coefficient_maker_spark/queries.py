@@ -12233,66 +12233,16 @@ REGISTRY: dict[str, QuerySpec] = {
 }
 
 # MECHANICALLY DERIVED — regenerate with `python tools/driver_priority.py`
-# (round-12 rule: specificity-first within stale). Round-12 head: zero
-# never-sampled; then the queries marked stale by a SPECIFIC changed
-# symbol (fan-out < 50) — the round-11 literal_df / right-sized-matrix /
-# CC / LSH-share / quantizer-pin rewrites, whose latest driver verdicts
-# predate those changes (round-11 VERDICT item 1) — plus the two
-# VERDICT-pinned queries q57/q220 (see tools/driver_priority.py); the
-# remaining slots backfill the hub-only stale backlog oldest-verdict
-# first (all six r5 verdicts and 13 of the 29 r6 verdicts fit; the
-# other 16 r6-era queries are next round's rotation debt).
+# (round-12 rule: specificity-first within stale). Current head: zero
+# never-sampled; the 147 queries whose code changed since their latest
+# driver verdict lead, specificity first, then the rest oldest-verdict
+# first.
 _DRIVER_PRIORITY = (
-    "q214_weighted_jaccard_verify",
-    "q91_decontamination",
-    "q30_exact_dedup",
-    "q135_nation_pagerank",
-    "q223_anonymity_risk_audit",
-    "q224_dp_noised_release",
-    "q70_salted_join",
-    "q96_stratified_sample",
-    "q89_nullsafe_join",
-    "q233_lsh_recall_audit",
-    "q184_bfs_reach",
-    "q217_lsh_probe_append_cycle",
-    "q228_ann_recall_audit",
-    "q234_lsh_store_roundtrip",
-    "q236_ivf_store_roundtrip",
-    "q238_neardup_auto",
-    "q243_incremental_dedup_pipeline",
-    "q50_embedding_neardup",
-    "q237_header_decode",
-    "q115_celled_neardup",
-    "q31_minhash_neardup",
-    "q77_dedup_clusters",
-    "q156_market_basket",
-    "q158_triangle_count",
-    "q215_incremental_neardup_probe",
-    "q242_dedup_pipeline",
-    "q241_collapsed_wjaccard",
-    "q239_collapsed_neardup",
-    "q24_formula_coeffmap",
-    "q73_adp_precision",
-    "q58_fused_coeffmap",
-    "q216_formula_matmul",
-    "q114_triplet_wide_formula",
-    "q235_leontief_requirements",
-    "q220_neumann_flow_reach",
-    "q57_lsh_neardup",
-    "q140_top_paths",
-    "q141_chi_square",
-    "q142_benford_digits",
-    "q130_bm25_topk",
-    "q131_salted_skew_join",
-    "q132_last_touch_attribution",
-    "q186_pivot_matrix",
-    "q187_unpivot_metrics",
-    "q188_window_rank_family",
-    "q189_multiset_ops",
-    "q190_sessionization",
-    "q191_dau_wau_stickiness",
-    "q192_ewma_volume",
-    "q193_rolling_zscore_anomaly",
+    "q232_segment_dedup_ingest",
+    "q35_ivf_topk",
+    "q221_ivf_ingest_probe",
+    "q230_semantic_dedup",
+    "q81_pq_topk",
     "q195_partial_reaggregation",
     "q196_token_class_audit",
     "q197_sketch_accuracy_audit",
@@ -12407,12 +12357,7 @@ _DRIVER_PRIORITY = (
     "q60_csv_scan",
     "q61_json_scan",
     "q62_approx_percentile",
-    "q232_segment_dedup_ingest",
     "q174_embedding_norm_qa",
-    "q35_ivf_topk",
-    "q221_ivf_ingest_probe",
-    "q230_semantic_dedup",
-    "q81_pq_topk",
     "q74_frame_sampling",
     "q55_large_volume_orders",
     "q52_nation_volume",
@@ -12486,6 +12431,56 @@ _DRIVER_PRIORITY = (
     "q118_universal_quantification",
     "q119_having_global_share",
     "q120_rolling_features",
+    "q24_formula_coeffmap",
+    "q73_adp_precision",
+    "q58_fused_coeffmap",
+    "q70_salted_join",
+    "q96_stratified_sample",
+    "q89_nullsafe_join",
+    "q91_decontamination",
+    "q30_exact_dedup",
+    "q233_lsh_recall_audit",
+    "q31_minhash_neardup",
+    "q77_dedup_clusters",
+    "q156_market_basket",
+    "q158_triangle_count",
+    "q184_bfs_reach",
+    "q186_pivot_matrix",
+    "q187_unpivot_metrics",
+    "q188_window_rank_family",
+    "q189_multiset_ops",
+    "q190_sessionization",
+    "q191_dau_wau_stickiness",
+    "q192_ewma_volume",
+    "q193_rolling_zscore_anomaly",
+    "q214_weighted_jaccard_verify",
+    "q241_collapsed_wjaccard",
+    "q242_dedup_pipeline",
+    "q243_incremental_dedup_pipeline",
+    "q215_incremental_neardup_probe",
+    "q216_formula_matmul",
+    "q217_lsh_probe_append_cycle",
+    "q220_neumann_flow_reach",
+    "q223_anonymity_risk_audit",
+    "q224_dp_noised_release",
+    "q228_ann_recall_audit",
+    "q235_leontief_requirements",
+    "q234_lsh_store_roundtrip",
+    "q140_top_paths",
+    "q141_chi_square",
+    "q142_benford_digits",
+    "q130_bm25_topk",
+    "q131_salted_skew_join",
+    "q132_last_touch_attribution",
+    "q135_nation_pagerank",
+    "q236_ivf_store_roundtrip",
+    "q50_embedding_neardup",
+    "q57_lsh_neardup",
+    "q237_header_decode",
+    "q114_triplet_wide_formula",
+    "q115_celled_neardup",
+    "q238_neardup_auto",
+    "q239_collapsed_neardup",
 )
 
 

@@ -19,23 +19,48 @@ Here the audit is ONE distributed aggregate over all value columns
 (a single job, partial aggregation map-side), and the fill is a lazy
 ``when()`` projection fused into the result plan by Catalyst — at
 100 TB the audit is the only extra action and touches each cell once.
+
+One validator serves both value carriers: float64 columns and the
+decimal strings of ADP mode (adp.py). A ``Carrier`` names the carrier's
+invalid and ±Inf predicates and its fill literal; everything else —
+the audit aggregate, the fill projection and the warn/raise decision
+— is shared, and the parquet sinks (api.py) feed the same decision
+from metrics observed on their write.
 """
 
 from __future__ import annotations
 
 import warnings
 from dataclasses import dataclass
+from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ssb_coefficient_maker_spark.session import ROW_ID
-
 INF = float("inf")
 
 
-def invalid_cond(c: Column) -> Column:
-    return F.isnull(c) | F.isnan(c) | (F.abs(c) == INF)
+def invalid_cond(c: str) -> Column:
+    col = F.col(c)
+    return F.isnull(col) | F.isnan(col) | (F.abs(col) == INF)
+
+
+def inf_cond(c: str) -> Column:
+    return F.abs(F.col(c)) == INF
+
+
+@dataclass(frozen=True)
+class Carrier:
+    """How a result's value columns carry invalid cells: a predicate
+    for every invalid cell, one for the ±Inf subset (the rest are NaN
+    or missing — the classes are disjoint), and the fill literal."""
+
+    invalid: Callable[[str], Column]
+    inf: Callable[[str], Column]
+    fill: Any
+
+
+FLOAT = Carrier(invalid_cond, inf_cond, 0.0)
 
 
 @dataclass
@@ -44,8 +69,11 @@ class InvalidStatus:
 
     n_cells: int
     n_invalid: int
-    n_nan: int
     n_inf: int
+
+    @property
+    def n_nan(self) -> int:
+        return self.n_invalid - self.n_inf
 
     @property
     def all_invalid(self) -> bool:
@@ -64,32 +92,44 @@ class InvalidStatus:
         return self.n_inf > 0
 
 
-def invalid_status(df: DataFrame, value_cols: list[str]) -> InvalidStatus:
-    """One aggregate pass over all value columns: counts of cells,
-    invalid, NaN-or-null, ±Inf."""
-    if not value_cols:
-        return InvalidStatus(0, 0, 0, 0)
+def audit_exprs(value_cols: list[str], carrier: Carrier = FLOAT) -> list[Column]:
+    """The audit's aggregate: a row count plus two sums per column
+    (invalid, ±Inf). Run by ``invalid_status`` or observed on a write."""
     aggs = [F.count(F.lit(1)).alias("__rows__")]
     for c in value_cols:
-        col = F.col(c)
-        aggs.append(F.sum(invalid_cond(col).cast("long")).alias(f"__inv__{c}"))
-        aggs.append(F.sum((F.isnull(col) | F.isnan(col)).cast("long")).alias(f"__nan__{c}"))
-        aggs.append(F.sum((F.abs(col) == INF).cast("long")).alias(f"__inf__{c}"))
-    row = df.agg(*aggs).collect()[0].asDict()
-    rows = row["__rows__"]
-    n_inv = sum(row[f"__inv__{c}"] or 0 for c in value_cols)
-    n_nan = sum(row[f"__nan__{c}"] or 0 for c in value_cols)
-    n_inf = sum(row[f"__inf__{c}"] or 0 for c in value_cols)
-    return InvalidStatus(rows * len(value_cols), n_inv, n_nan, n_inf)
+        aggs.append(F.sum(carrier.invalid(c).cast("long")).alias(f"__inv__{c}"))
+        aggs.append(F.sum(carrier.inf(c).cast("long")).alias(f"__inf__{c}"))
+    return aggs
 
 
-def fill_invalid(df: DataFrame, value_cols: list[str], fill_value: float = 0.0) -> DataFrame:
+def status_of(row: dict, value_cols: list[str]) -> InvalidStatus:
+    """Read an ``audit_exprs`` result (any subset of its columns)."""
+    return InvalidStatus(
+        row["__rows__"] * len(value_cols),
+        sum(row[f"__inv__{c}"] or 0 for c in value_cols),
+        sum(row[f"__inf__{c}"] or 0 for c in value_cols),
+    )
+
+
+def invalid_status(
+    df: DataFrame, value_cols: list[str], carrier: Carrier = FLOAT
+) -> InvalidStatus:
+    """One aggregate pass over all value columns."""
+    if not value_cols:
+        return InvalidStatus(0, 0, 0)
+    row = df.agg(*audit_exprs(value_cols, carrier)).collect()[0].asDict()
+    return status_of(row, value_cols)
+
+
+def fill_invalid(
+    df: DataFrame, value_cols: list[str], carrier: Carrier = FLOAT
+) -> DataFrame:
     """Lazy fill of invalid cells (reference ``_fill_invalid_values``,
     coeff_maker.py:205-229 — but vectorized, no per-cell loop)."""
     # preserve every non-value column (wide: just ROW_ID; triplet:
     # ROW_ID + __col_id__)
     sel = [F.col(c) for c in df.columns if c not in value_cols] + [
-        F.when(invalid_cond(F.col(c)), F.lit(fill_value)).otherwise(F.col(c)).alias(c)
+        F.when(carrier.invalid(c), F.lit(carrier.fill)).otherwise(F.col(c)).alias(c)
         for c in value_cols
     ]
     return df.select(sel)
@@ -103,32 +143,22 @@ def _cause_fragment(status: InvalidStatus) -> str:
     return "NaN values (likely missing data or misaligned indexes)"
 
 
-def validate(
-    df: DataFrame,
-    value_cols: list[str],
+def check(
+    status: InvalidStatus,
     formula_str: str,
     *,
     fill: bool = False,
     mixed_operands: bool = False,
     verbose: bool = False,
-) -> tuple[DataFrame, int]:
-    """Audit a compiled result; fill, warn, or raise.
-
-    Returns ``(result_df, invalid_count)`` like reference
-    ``validate`` (coeff_maker.py:68-141).
-    """
-    status = invalid_status(df, value_cols)
+) -> None:
+    """The warn/raise decision on an audited result."""
     if verbose and status.n_invalid > 0:
         # reference trace shapes (_log_invalid_details,
         # coeff_maker.py:385-415)
         if status.all_invalid:
             print("WARNING: Result contains all invalid values")
         else:
-            pct_v = (
-                100.0 * status.n_invalid / status.n_cells
-                if status.n_cells
-                else 0.0
-            )
+            pct_v = 100.0 * status.n_invalid / status.n_cells
             print(
                 f"WARNING: Result contains {status.n_invalid}/"
                 f"{status.n_cells} ({pct_v:.2f}%) invalid values"
@@ -142,7 +172,7 @@ def validate(
         if fill:
             print("Invalid values will be replaced with zeros")
     if status.n_invalid == 0:
-        return df, 0
+        return
     if fill:
         # fill_invalid=True is the intended mode (e.g. diagonal-matrix
         # division) — the reference only prints the fill count under
@@ -153,18 +183,17 @@ def validate(
                 f"Replaced {status.n_invalid} invalid values (NaN/Inf) "
                 f"with zeros"
             )
-        return fill_invalid(df, value_cols), status.n_invalid
+        return
     if status.all_invalid:
-        if mixed_operands:
-            raise ValueError(
-                f"All values in the result of formula '{formula_str}' are "
-                f"invalid ({_cause_fragment(status)}). The formula mixes "
-                f"vector (Series) and matrix (DataFrame) operands, which "
-                f"commonly indicates misaligned shapes or labels."
-            )
+        mixed = (
+            " The formula mixes vector (Series) and matrix (DataFrame) "
+            "operands, which commonly indicates misaligned shapes or labels."
+            if mixed_operands
+            else ""
+        )
         raise ValueError(
             f"All values in the result of formula '{formula_str}' are "
-            f"invalid ({_cause_fragment(status)})."
+            f"invalid ({_cause_fragment(status)}).{mixed}"
         )
     pct = 100.0 * status.n_invalid / status.n_cells
     warnings.warn(
@@ -172,6 +201,27 @@ def validate(
         f"invalid value(s) ({pct:.1f}% of {status.n_cells} cells): "
         f"{_cause_fragment(status)}.",
         UserWarning,
-        stacklevel=2,
+        stacklevel=3,
     )
+
+
+def validate(
+    df: DataFrame,
+    value_cols: list[str],
+    formula_str: str,
+    *,
+    fill: bool = False,
+    mixed_operands: bool = False,
+    verbose: bool = False,
+    carrier: Carrier = FLOAT,
+) -> tuple[DataFrame, int]:
+    """Audit a compiled result; fill, warn, or raise.
+
+    Returns ``(result_df, invalid_count)`` like reference
+    ``validate`` (coeff_maker.py:68-141).
+    """
+    status = invalid_status(df, value_cols, carrier)
+    check(status, formula_str, fill=fill, mixed_operands=mixed_operands, verbose=verbose)
+    if fill and status.n_invalid:
+        df = fill_invalid(df, value_cols, carrier)
     return df, status.n_invalid

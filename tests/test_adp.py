@@ -399,3 +399,72 @@ def test_adp_complex_power_coerces_to_nan(spark):
     out = fe3.evaluate_to_pandas("a ** 0.5")
     assert float(out["x"].iloc[0]) == 2.0
     assert float(out["x"].iloc[1]) == 0.0  # NaN filled to 0
+
+
+# ------------------------------------------------------------------
+# One route for evaluate_formula and evaluate_to_parquet under ADP.
+
+
+def _triplet(spark):
+    from ssb_coefficient_maker_spark.plans.triplet import TripletMatrix
+
+    long = pd.DataFrame(
+        {
+            "__row_id__": ["0", "0", "1", "1"],
+            "__col_id__": ["x", "y", "x", "y"],
+            "value": [1.0, 2.0, 3.0, 4.0],
+        }
+    )
+    return TripletMatrix(spark.createDataFrame(long))
+
+
+def test_adp_triplet_only_parquet_takes_the_triplet_route(spark, tmp_path):
+    """With only a TripletMatrix operand, ADP evaluate_to_parquet writes
+    the same float64 triplet result evaluate_formula returns."""
+    fe = FormulaEvaluator({"T": _triplet(spark)}, adp_enabled=True, spark=spark)
+    meta = fe.evaluate_to_parquet("T * 2", str(tmp_path / "t"))
+    assert meta["rows"] == 4 and meta["invalid"] == 0
+    cols = ["__row_id__", "__col_id__", "value"]
+    written = spark.read.parquet(str(tmp_path / "t")).toPandas()[cols]
+    evaluated = fe.evaluate_formula("T * 2").toPandas()[cols]
+    pd.testing.assert_frame_equal(
+        written.sort_values(cols).reset_index(drop=True),
+        evaluated.sort_values(cols).reset_index(drop=True),
+    )
+
+
+def test_adp_matrix_times_triplet_refused_on_driver(spark, tmp_path):
+    fe = FormulaEvaluator(
+        {"a": pd.DataFrame({"x": [1.0, 2.0], "y": [3.0, 4.0]}), "T": _triplet(spark)},
+        adp_enabled=True,
+        spark=spark,
+    )
+    with pytest.raises(NotImplementedError, match="TripletMatrix.*float64"):
+        fe.evaluate_formula("a * T")
+    with pytest.raises(NotImplementedError, match="TripletMatrix.*float64"):
+        fe.evaluate_to_parquet("a * T", str(tmp_path / "mix"))
+
+
+def test_adp_parquet_unknown_dataset_named(spark, tmp_path):
+    fe = FormulaEvaluator({"a": pd.DataFrame({"x": [1.0]})}, adp_enabled=True, spark=spark)
+    for call in (
+        lambda: fe.evaluate_formula("a * nope"),
+        lambda: fe.evaluate_to_parquet("a * nope", str(tmp_path / "unknown")),
+    ):
+        with pytest.raises(KeyError, match="references unknown dataset"):
+            call()
+
+
+def test_adp_colliding_operand_column_names_align(spark):
+    """ADP reads the aligned join through the same positional aliases:
+    'a' with column '_x' and 'a_' with column 'x' do not collide."""
+    a = pd.DataFrame({"_x": [1.0, 2.0], "y": [3.0, 4.0]})
+    a_ = pd.DataFrame({"x": [10.0, 20.0], "y": [30.0, 40.0]})
+    fe = FormulaEvaluator(
+        {"a": a, "a_": a_}, adp_enabled=True, fill_invalid=True, spark=spark
+    )
+    got = fe.evaluate_to_pandas("a + a_")
+    expected = (a + a_).fillna(0.0)
+    assert [[float(v) for v in row] for row in got[expected.columns].to_numpy()] == (
+        expected.to_numpy().tolist()
+    )

@@ -519,3 +519,81 @@ def test_fused_compiler_fuzz(spark, cmap, fill):
             pd.testing.assert_series_equal(val, ref)
         else:
             assert val == ref
+
+
+def _triplet(spark, pdf):
+    from ssb_coefficient_maker_spark.plans.triplet import TripletMatrix
+
+    long = pdf.stack().rename_axis(["__row_id__", "__col_id__"]).reset_index(name="value")
+    return TripletMatrix(spark.createDataFrame(long))
+
+
+def test_to_pandas_collects_triplet_results_wide(spark):
+    """compute_coefficients_to_pandas collects a triplet result as the
+    same wide matrix evaluate_to_pandas gives, not the long frame."""
+    t = pd.DataFrame(
+        [[0.1, 0.2, 0.0], [0.0, 0.1, 0.3], [0.2, 0.0, 0.1]],
+        index=list("xyz"), columns=list("xyz"),
+    )
+    cmap = pd.DataFrame({"name": ["inv", "dbl"], "formula": ["leontief(T, 1e-6)", "T * 2"]})
+    calc = CoefficientCalculator({"T": _triplet(spark, t)}, cmap, "name", "formula", spark=spark)
+    got = calc.compute_coefficients_to_pandas()
+    for name, formula in zip(cmap["name"], cmap["formula"]):
+        assert got[name].shape == (3, 3)
+        pd.testing.assert_frame_equal(got[name], calc.evaluator.evaluate_to_pandas(formula))
+    np.testing.assert_allclose(
+        got["inv"].loc[list("xyz"), list("xyz")].to_numpy(),
+        np.linalg.inv(np.eye(3) - t.to_numpy()), atol=1e-5,
+    )
+    assert np.allclose(got["dbl"].loc[list("xyz"), list("xyz")].to_numpy(), 2 * t.to_numpy())
+
+
+def test_to_pandas_collects_adp_results_as_mpf(spark):
+    import mpmath
+
+    a = pd.DataFrame({"x": [1.0, 2.0], "y": [3.0, 4.0]})
+    cmap = pd.DataFrame({"name": ["third"], "formula": ["a / 3"]})
+    calc = CoefficientCalculator(
+        {"a": a}, cmap, "name", "formula", adp_enabled=True, decimal_precision=40, spark=spark
+    )
+    got = calc.compute_coefficients_to_pandas()["third"]
+    assert got.shape == (2, 2)
+    assert all(isinstance(v, mpmath.mpf) for v in got.to_numpy().ravel())
+    with mpmath.workdps(40):
+        assert mpmath.almosteq(got.loc[0, "x"], mpmath.mpf(1) / 3, rel_eps=mpmath.mpf("1e-35"))
+
+
+def test_fused_manifest_counts_invalid_before_fill(spark, tmp_path):
+    """The fused sink's manifest counts the invalid cells a fill then
+    replaces — the same count evaluate_to_parquet reports."""
+    a = pd.DataFrame({"x": [1.0, 2.0, 3.0], "y": [4.0, 5.0, 6.0]})
+    b = pd.DataFrame({"x": [0.0, 1.0, 0.0], "y": [1.0, 0.0, 2.0]})
+    cmap = pd.DataFrame({"name": ["ratio"], "formula": ["a / b"]})
+    calc = CoefficientCalculator(
+        {"a": a, "b": b}, cmap, "name", "formula",
+        fill_invalid=True, validation="defer", spark=spark,
+    )
+    manifest = calc.compute_coefficients_fused_to_parquet(str(tmp_path / "fused"))
+    single = calc.evaluator.evaluate_to_parquet("a / b", str(tmp_path / "single"))
+    assert manifest["ratio"]["invalid"] == single["invalid"] == 3
+    back = spark.read.parquet(manifest["ratio"]["path"]).toPandas()
+    assert np.isfinite(back[manifest["ratio"]["columns"]].to_numpy()).all()  # filled
+
+
+def test_colliding_operand_column_names_align(spark):
+    """'a' with column '_x' and 'a_' with column 'x' must not collide in
+    the aligned join (as 'name__col' both were 'a___x'): the wide and
+    fused paths give the pandas answer."""
+    a = pd.DataFrame({"_x": [1.0, 2.0], "y": [3.0, 4.0]})
+    a_ = pd.DataFrame({"x": [10.0, 20.0], "y": [30.0, 40.0]})
+    expected = (a + a_).fillna(0.0)
+    cmap = pd.DataFrame({"name": ["s"], "formula": ["a + a_"]})
+    calc = CoefficientCalculator(
+        {"a": a, "a_": a_}, cmap, "name", "formula", fill_invalid=True, spark=spark
+    )
+    wide = calc.evaluator.evaluate_to_pandas("a + a_")
+    pd.testing.assert_frame_equal(wide[expected.columns], expected)
+    (group,), _ = calc.compute_coefficients_fused()
+    fused = group.df.toPandas().sort_values("__row_id__")
+    for c in expected.columns:
+        np.testing.assert_array_equal(fused[f"s_{c}"].to_numpy(), expected[c].to_numpy())
