@@ -14,7 +14,8 @@ the Spark-native design is:
   only Arrow-safe lossless carrier for mpf).
 - The whole formula evaluates inside ONE Arrow-batched
   ``mapInPandas`` per result: strings → mpf at the requested
-  precision → formula tree evaluated per cell → strings out.
+  precision → formula evaluated over each batch column through
+  ``MP_OPS`` (object arrays of mpf) → strings out.
   One Python stage, vectorized per batch, distributed over rows;
   division WORKS (unlike the reference).
 
@@ -24,8 +25,10 @@ part of the benchmark surface.
 
 from __future__ import annotations
 
+import operator
 from typing import Any, Iterable, Iterator
 
+import mpmath
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -34,13 +37,10 @@ from pyspark.sql import types as T
 
 from ssb_coefficient_maker_spark.catalog import Matrix, Vector, _stringify
 from ssb_coefficient_maker_spark.formula.parser import (
-    BinOp,
-    Call,
+    COMPARISONS,
     FormulaError,
     FormulaExpr,
-    Num,
-    UnaryOp,
-    Var,
+    evaluate,
 )
 from ssb_coefficient_maker_spark.plans.alignment import (
     _aligned_join,
@@ -63,8 +63,6 @@ def _to_decimal_str(value: Any, dps: int) -> str:
     written literal rather than the float64 artifact); mpf values are
     serialized at full working precision.
     """
-    import mpmath
-
     if value is None:
         return "nan"
     if isinstance(value, str):
@@ -101,10 +99,21 @@ def adp_matrix_from_pandas(spark: SparkSession, pdf: pd.DataFrame, dps: int) -> 
 
 def adp_vector_from_pandas(series: pd.Series, dps: int) -> Vector:
     vals = np.array([_to_decimal_str(v, dps) for v in series], dtype=object)
-    return Vector(labels=_stringify(series.index), values=vals)
+    return Vector(labels=list(series.index), values=vals)
 
 
-def _real_pow(lhs, rhs, mp):
+def _to_mpf(value: Any) -> Any:
+    """A carried cell, a literal or a scalar operand as an mpf at the
+    working precision: strings are exact decimals, None and NaN are
+    NaN, and floats go through their shortest round-trip repr."""
+    if isinstance(value, str):
+        return mpmath.mpf(value)
+    if value is None or value != value:
+        return mpmath.mpf("nan")
+    return mpmath.mpf(repr(float(value)))
+
+
+def _real_pow(lhs, rhs):
     """``**`` restricted to the real domain: mpmath returns a COMPLEX
     mpc for a negative base with fractional exponent, but this engine
     is real-valued everywhere (the float path's numpy ``(-1)**0.5``
@@ -113,131 +122,48 @@ def _real_pow(lhs, rhs, mp):
     rejecting ``**`` under ADP entirely, coeff_maker.py:744-749; we
     support it, documented deviation.)"""
     res = lhs**rhs
-    if isinstance(res, mp.mpc):
-        return mp.mpf("nan")
-    return res
+    return mpmath.mpf("nan") if isinstance(res, mpmath.mpc) else res
 
 
-def _mp_eval(expr: FormulaExpr, resolve, mpmath_mod) -> Any:
-    mp = mpmath_mod
-    if isinstance(expr, Num):
-        return mp.mpf(repr(expr.value))
-    if isinstance(expr, Var):
-        return resolve(expr.name)
-    if isinstance(expr, UnaryOp):
-        val = _mp_eval(expr.operand, resolve, mp)
-        return -val if expr.op == "-" else val
-    if isinstance(expr, BinOp):
-        lhs = _mp_eval(expr.left, resolve, mp)
-        rhs = _mp_eval(expr.right, resolve, mp)
-        if expr.op == "+":
-            return lhs + rhs
-        if expr.op == "-":
-            return lhs - rhs
-        if expr.op == "*":
-            return lhs * rhs
-        if expr.op == "/":
-            if rhs == 0:
-                raise ZeroDivisionError(ADP_ZERO_DIV_MSG)
-            return lhs / rhs
-        if expr.op == "**":
-            return _real_pow(lhs, rhs, mp)
-        if expr.op == "%":
-            if rhs == 0:
-                raise ZeroDivisionError(ADP_ZERO_DIV_MSG)
-            return lhs % rhs
-        if expr.op == "//":
-            if rhs == 0:
-                raise ZeroDivisionError(ADP_ZERO_DIV_MSG)
-            return mp.floor(lhs / rhs)
-        cmps = {
-            "<": lhs < rhs,
-            "<=": lhs <= rhs,
-            ">": lhs > rhs,
-            ">=": lhs >= rhs,
-            "==": lhs == rhs,
-            "!=": lhs != rhs,
-        }
-        return mp.mpf(1) if cmps[expr.op] else mp.mpf(0)
-    if isinstance(expr, Call):
-        args = [_mp_eval(a, resolve, mp) for a in expr.args]
-        if expr.func == "abs":
-            return abs(args[0])
-        if expr.func == "pow":
-            return _real_pow(args[0], args[1], mp)
-        if expr.func == "fillna":
-            return args[1] if mp.isnan(args[0]) else args[0]
-        if expr.func == "where":
-            cond = args[0]
-            truthy = (not mp.isnan(cond)) and cond != 0
-            return args[1] if truthy else args[2]
-    raise FormulaError(f"ADP cannot evaluate node {expr!r}")
+def _guarded(fn):
+    """``fn`` with ADP's zero-division guard: a zero divisor raises."""
+
+    def op(lhs, rhs):
+        if rhs == 0:
+            raise ZeroDivisionError(ADP_ZERO_DIV_MSG)
+        return fn(lhs, rhs)
+
+    return op
 
 
-def adp_eval_vectors(
-    expr: FormulaExpr,
-    vectors: dict[str, Vector],
-    scalars: dict[str, float],
-    dps: int,
-) -> pd.Series:
-    """Vector-only ADP evaluation (reference supports Series under ADP,
-    coeff_maker.py:647-671): mpf per cell, driver-side (vectors are
-    small/driver-resident by construction), positional alignment with
-    equal-length check — same semantics as the float path's
-    ``_eval_vectors`` (plans/alignment.py) but at ``dps`` digits.
-
-    Returns an object-dtype pandas Series of mpf values labeled by the
-    first vector's labels.
-    """
-    import mpmath
-
-    sizes = {vec.size for vec in vectors.values()}
-    if len(sizes) > 1:
-        raise FormulaError(f"vector operands disagree on length: {sizes}")
-    first = next(iter(vectors.values()))
-    with mpmath.workdps(dps):
-        scalar_mpf = {n: mpmath.mpf(repr(v)) for n, v in scalars.items()}
-        out = []
-        for i in range(first.size):
-
-            def resolve(name: str):
-                if name in vectors:
-                    raw = vectors[name].values[i]
-                    if raw is None:
-                        return mpmath.mpf("nan")
-                    return mpmath.mpf(str(raw))
-                return scalar_mpf[name]
-
-            out.append(_mp_eval(expr, resolve, mpmath))
-    labels = list(first.labels)
-    try:
-        labels = [int(x) for x in labels]
-    except (TypeError, ValueError):
-        pass
-    return pd.Series(out, index=labels, dtype=object)
+def _ufunc(fn, nin: int = 2):
+    """``fn`` over mpf scalars and object arrays of them, broadcasting."""
+    return np.frompyfunc(fn, nin, 1)
 
 
-def adp_eval_scalar(
-    expr: FormulaExpr,
-    scalars: dict[str, float],
-    dps: int,
-):
-    """Scalar/literal-only ADP evaluation.
-
-    A formula like ``'(2 / (2 - 2))'`` has no Matrix or Vector
-    operand, so neither ADP driver path fires — but falling through
-    to the numpy float path silently yields ``inf`` where the
-    reference's ADP mode raises its zero-division diagnostic
-    (coeff_maker.py ADP zero-div guard; reference
-    tests/test_FormulaEvaluator_pt2.py:470-488). Evaluate through
-    ``_mp_eval`` at ``dps`` digits so the guard fires for every
-    operand shape. Returns an mpf (callers treat it as a float).
-    """
-    import mpmath
-
-    with mpmath.workdps(dps):
-        scalar_mpf = {n: mpmath.mpf(repr(v)) for n, v in scalars.items()}
-        return _mp_eval(expr, lambda n: scalar_mpf[n], mpmath)
+# The mpmath backend of ``formula.parser.evaluate``, over mpf scalars
+# and object arrays of mpf; precision is the caller's
+# ``mpmath.workdps``. Its ufuncs do not pickle: code shipped to
+# workers imports this table at run time.
+MP_OPS = {
+    "num": _ufunc(_to_mpf, 1),
+    "neg": operator.neg,
+    "+": operator.add,
+    "-": operator.sub,
+    "*": operator.mul,
+    "/": _ufunc(_guarded(operator.truediv)),
+    "%": _ufunc(_guarded(operator.mod)),
+    "//": _ufunc(_guarded(lambda lhs, rhs: mpmath.floor(lhs / rhs))),
+    "**": _ufunc(_real_pow),
+    **{
+        sym: _ufunc(lambda lhs, rhs, op=op: mpmath.mpf(int(op(lhs, rhs))))
+        for sym, op in COMPARISONS.items()
+    },
+    "abs": operator.abs,
+    "pow": _ufunc(_real_pow),
+    "where": _ufunc(lambda c, a, b: a if not mpmath.isnan(c) and c != 0 else b, 3),
+    "fillna": _ufunc(lambda x, v: v if mpmath.isnan(x) else x),
+}
 
 
 def compile_adp_formula(
@@ -252,7 +178,8 @@ def compile_adp_formula(
     out_cols = _union_cols(frames)
     _check_vectors(vectors, out_cols)
     # per output column: the aligned-join column of each frame operand
-    # that has it (an absent one reads as NaN, like pandas alignment)
+    # that has it, and every operand's carried value (a frame's is None,
+    # read as NaN where the column is absent, like pandas alignment)
     sources = [
         {
             name: _operand_col(i, pos)
@@ -261,8 +188,10 @@ def compile_adp_formula(
         }
         for pos, out_c in enumerate(out_cols)
     ]
-    vec_values = {n: [str(v) for v in vec.values] for n, vec in vectors.items()}
-    frame_names = set(frames)  # the closure ships to workers: names only
+    carried = [
+        {**dict.fromkeys(frames), **{n: v.values[pos] for n, v in vectors.items()}, **scalars}
+        for pos in range(len(out_cols))
+    ]
 
     joined = _aligned_join(frames, out_cols)
     out_schema = T.StructType(
@@ -271,34 +200,20 @@ def compile_adp_formula(
     )
 
     def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import mpmath
+        from ssb_coefficient_maker_spark.adp import MP_OPS
 
+        num = MP_OPS["num"]
         with mpmath.workdps(dps):
-
-            def cell(raw: Any) -> Any:
-                if raw is None or (isinstance(raw, float) and np.isnan(raw)):
-                    return mpmath.mpf("nan")
-                return mpmath.mpf(str(raw))
-
+            consts = [{n: num(v) for n, v in c.items()} for c in carried]
             for pdf in batches:
                 data = {ROW_ID: pdf[ROW_ID]}
                 for pos, out_c in enumerate(out_cols):
-                    resolved_cols = {
-                        name: [cell(v) for v in pdf[src]]
-                        for name, src in sources[pos].items()
+                    values = {
+                        **consts[pos],
+                        **{n: num(pdf[src].to_numpy()) for n, src in sources[pos].items()},
                     }
-                    out_vals = []
-                    for i in range(len(pdf)):
-                        def resolve(name: str):
-                            if name in frame_names:
-                                col = resolved_cols.get(name)
-                                return col[i] if col is not None else mpmath.mpf("nan")
-                            if name in vec_values:
-                                return mpmath.mpf(vec_values[name][pos])
-                            return mpmath.mpf(repr(scalars[name]))
-
-                        out_vals.append(mpmath.nstr(_mp_eval(expr, resolve, mpmath), dps))
-                    data[out_c] = out_vals
+                    out = evaluate(expr, values.__getitem__, MP_OPS)
+                    data[out_c] = [mpmath.nstr(v, dps) for v in out]
                 yield pd.DataFrame(data)
 
     return joined.mapInPandas(run, schema=out_schema), out_cols
@@ -306,8 +221,6 @@ def compile_adp_formula(
 
 def adp_to_pandas(df: DataFrame, value_cols: list[str], dps: int) -> pd.DataFrame:
     """Collect an ADP result back to pandas as mpf objects (sorted rows)."""
-    import mpmath
-
     pdf = df.toPandas()
     numeric = pd.to_numeric(pdf[ROW_ID], errors="coerce")
     if not numeric.isna().any():

@@ -20,6 +20,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any, Iterator, Mapping
 
+import mpmath
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -43,7 +44,12 @@ from ssb_coefficient_maker_spark.formula.parser import (
     parse_formula,
 )
 from ssb_coefficient_maker_spark.plans import triplet as triplet_plans
-from ssb_coefficient_maker_spark.plans.alignment import compile_formula, compile_formulas_fused
+from ssb_coefficient_maker_spark.plans.alignment import (
+    NUMPY_OPS,
+    compile_formula,
+    compile_formulas_fused,
+    eval_driver,
+)
 from ssb_coefficient_maker_spark.plans.triplet import (
     COL_ID,
     VALUE,
@@ -247,6 +253,14 @@ class FormulaEvaluator:
                 "transpose ('.T'), matmul ('@'), and neumann() are only defined "
                 "for matrix operands"
             )
+        if not (matrices or triplets):
+            # scalar- and Series-only formulas evaluate on the driver, at
+            # full precision under ADP (where mpmath's zero-division
+            # guard fires for every operand shape)
+            ops = adp_mod.MP_OPS if self.adp_enabled else NUMPY_OPS
+            with mpmath.workdps(self.decimal_precision):
+                value = eval_driver(expr, dict(zip(names, operands)), ops)
+            return _Plan("vector" if vectors else "scalar", formula, value=value)
         if self.adp_enabled:
             if matrices and (has_mm or has_t):
                 op = "matmul ('@') / neumann() / leontief()" if has_mm else "transpose ('.T')"
@@ -270,34 +284,13 @@ class FormulaEvaluator:
                     expr, self.datasets, self.decimal_precision
                 )
                 return _Plan("adp", formula, df, cols, mixed=mixed)
-            if not triplets:
-                # scalar- and Series-only ADP formulas evaluate at full
-                # precision on the driver
-                dps = self.decimal_precision
-                scalars = {
-                    n: float(d) for n, d in zip(names, operands) if isinstance(d, (int, float))
-                }
-                if vectors:
-                    vecs = {n: d for n, d in zip(names, operands) if isinstance(d, Vector)}
-                    value = adp_mod.adp_eval_vectors(expr, vecs, scalars, dps)
-                    return _Plan("vector", formula, value=value)
-                # a float, once the mpmath zero-division guard has run
-                value = float(adp_mod.adp_eval_scalar(expr, scalars, dps))
-                return _Plan("scalar", formula, value=value)
         if has_mm or has_t or triplets:
             tdf = triplet_plans.compile_formula_triplet(expr, self.datasets)
             return _Plan("triplet", formula, tdf, [VALUE], mixed=mixed)
-        if fuse and matrices:
+        if fuse:
             return _Plan("wide", formula)
-        compiled = compile_formula(expr, self.datasets)
-        if compiled.is_scalar:
-            return _Plan("scalar", formula, value=compiled.scalar)
-        if compiled.vector is not None:
-            vec = compiled.vector
-            return _Plan("vector", formula, value=pd.Series(
-                vec.values, index=vec.labels, dtype=np.float64
-            ))
-        return _Plan("wide", formula, compiled.df, compiled.value_cols, mixed=mixed)
+        m = compile_formula(expr, self.datasets)
+        return _Plan("wide", formula, m.df, m.value_cols, mixed=mixed)
 
     def _result(self, plan: _Plan) -> Any:
         """A plan's ``evaluate_formula`` result: the eager audit (fill,

@@ -40,11 +40,13 @@ class Vector:
 
     The reference strips a Series' index and broadcasts its values
     positionally across the DataFrame columns (reference
-    coeff_maker.py:761 ``val.T.to_numpy()``). We keep labels for
-    diagnostics but follow the same positional broadcast for parity.
+    coeff_maker.py:761 ``val.T.to_numpy()``). We keep the Series' index
+    labels (they label a Series-only result, and the triplet path
+    broadcasts by label) but follow the same positional broadcast for
+    parity.
     """
 
-    labels: list[str]
+    labels: list[Any]
     values: np.ndarray  # float64
 
     @property
@@ -136,7 +138,7 @@ def matrix_from_spark(
 
 def vector_from_pandas(series: pd.Series) -> Vector:
     vals = series.astype(np.float64, copy=True).to_numpy()
-    return Vector(labels=_stringify(series.index), values=vals)
+    return Vector(labels=list(series.index), values=vals)
 
 
 def matrix_to_pandas(m: Matrix, index_dtype: str | None = None) -> pd.DataFrame:

@@ -24,15 +24,19 @@ Here the language is explicit:
                python engine rejects '@' outright; all evaluate on
                the triplet path
 
-Parsing yields a small typed tree (``FormulaExpr``) that downstream
-compiles either to ``pyspark.sql.Column`` (standard mode) or to an
-mpmath closure (ADP mode). One parser, two backends.
+Parsing yields a small typed tree (``FormulaExpr``). ``evaluate`` is
+the one walk over its elementwise nodes; each backend is an op table
+that maps ``num``, ``neg``, every operator and every function to its
+implementation: Spark ``Column`` (``functions.math.COLUMN_OPS``),
+numpy (``plans.alignment.NUMPY_OPS``) and mpmath (``adp.MP_OPS``).
 """
 
 from __future__ import annotations
 
 import ast
+import operator
 from dataclasses import dataclass, fields
+from typing import Any, Callable, Mapping
 
 
 class FormulaError(ValueError):
@@ -151,6 +155,17 @@ _CMPOPS: dict[type[ast.cmpop], str] = {
     ast.GtE: ">=",
     ast.Eq: "==",
     ast.NotEq: "!=",
+}
+
+# the comparisons' Python operators: every backend wraps them to give
+# 1.0/0.0 with IEEE NaN semantics
+COMPARISONS: dict[str, Callable[[Any, Any], Any]] = {
+    "<": operator.lt,
+    "<=": operator.le,
+    ">": operator.gt,
+    ">=": operator.ge,
+    "==": operator.eq,
+    "!=": operator.ne,
 }
 
 _FUNC_WHITELIST = {"abs", "pow", "where", "neumann", "leontief"}
@@ -331,3 +346,37 @@ def contains_matmul(expr: FormulaExpr) -> bool:
     width), and all refuse identically under ADP (the contraction
     computes in float64)."""
     return any(isinstance(n, (MatMul, Neumann, Leontief)) for n in _nodes(expr))
+
+
+_MATRIX_OPS = {
+    Transpose: "transpose ('.T')",
+    MatMul: "matmul ('@')",
+    Neumann: "neumann()",
+    Leontief: "leontief()",
+}
+
+
+def evaluate(expr: FormulaExpr, var: Callable[[str], Any], ops: Mapping[str, Callable]) -> Any:
+    """Evaluate an elementwise formula tree with one backend's op table.
+
+    ``var`` resolves a variable name to a backend value; ``ops`` maps
+    ``num`` (a literal), ``neg``, each operator and each function name
+    to its implementation. Matrix nodes are rewritten away on the
+    triplet path before this walk, so meeting one here is a refusal.
+    """
+    if isinstance(expr, Num):
+        return ops["num"](expr.value)
+    if isinstance(expr, Var):
+        return var(expr.name)
+    if isinstance(expr, UnaryOp):
+        inner = evaluate(expr.operand, var, ops)
+        return ops["neg"](inner) if expr.op == "-" else inner
+    if isinstance(expr, BinOp):
+        return ops[expr.op](evaluate(expr.left, var, ops), evaluate(expr.right, var, ops))
+    if isinstance(expr, Call):
+        return ops[expr.func](*(evaluate(a, var, ops) for a in expr.args))
+    raise FormulaError(
+        f"{_MATRIX_OPS[type(expr)]} is supported on the triplet path only — "
+        "evaluate via FormulaEvaluator (which routes automatically) "
+        "or compile_formula_triplet"
+    )

@@ -782,7 +782,7 @@ def cosine_neardup_blocked(
     # the input rows are deterministic, so retry-safe under the
     # default sort-before-repartition.
     n_slots = max(2, emb.sparkSession.sparkContext.defaultParallelism)
-    pairs = pairs.repartition(int(min(n_pairs, 2 * n_slots)))
+    pairs = pairs.repartition(int(min(max(1, n_pairs), 2 * n_slots)))
 
     def block_product(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -29,92 +29,38 @@ is IEEE-754, identical to numpy's elementwise results).
 from __future__ import annotations
 
 from functools import reduce
+from typing import Any, Mapping
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ssb_coefficient_maker_spark.catalog import Matrix, Vector
 from ssb_coefficient_maker_spark.formula.parser import (
-    BinOp,
-    Call,
+    COMPARISONS,
     FormulaError,
     FormulaExpr,
-    Leontief,
-    MatMul,
-    Neumann,
-    Num,
-    Transpose,
-    UnaryOp,
-    Var,
+    evaluate,
     extract_variables,
 )
-from ssb_coefficient_maker_spark.functions.math import safe_div, safe_floordiv, safe_mod
+from ssb_coefficient_maker_spark.functions.math import COLUMN_OPS
 from ssb_coefficient_maker_spark.session import ROW_ID
-
-INF = float("inf")
 
 
 def NAN() -> Column:
     return F.lit(float("nan"))
 
 
-def _binop_column(op: str, left: Column, right: Column) -> Column:
-    if op == "+":
-        return left + right
-    if op == "-":
-        return left - right
-    if op == "*":
-        return left * right
-    if op == "/":
-        return safe_div(left, right)
-    if op == "%":
-        return safe_mod(left, right)
-    if op == "//":
-        return safe_floordiv(left, right)
-    if op == "**":
-        return F.pow(left, right)
-    if op in ("<", "<=", ">", ">=", "==", "!="):
-        cmp = {
-            "<": left < right,
-            "<=": left <= right,
-            ">": left > right,
-            ">=": left >= right,
-            "==": left == right,
-            "!=": left != right,
-        }[op]
-        # Spark SQL orders NaN above all values and NaN==NaN is true;
-        # numpy is IEEE (any NaN compare → False, except != → True).
-        nan_result = F.lit(1.0) if op == "!=" else F.lit(0.0)
-        return (
-            F.when(F.isnan(left) | F.isnan(right), nan_result)
-            .otherwise(cmp.cast("double"))
-        )
-    raise FormulaError(f"unknown operator {op!r}")
-
-
-class CompiledFormula:
-    """Result of compiling a formula against a catalog of datasets."""
-
-    def __init__(self, df: DataFrame | None, value_cols: list[str], scalar: float | None = None, vector: Vector | None = None):
-        self.df = df
-        self.value_cols = value_cols
-        self.scalar = scalar
-        self.vector = vector
-
-    @property
-    def is_scalar(self) -> bool:
-        return self.df is None and self.vector is None
-
-
 def _operands(
-    expr: FormulaExpr, datasets: dict[str, Matrix | Vector | float]
-) -> tuple[dict[str, Matrix], dict[str, Vector], dict[str, float]]:
+    expr: FormulaExpr, datasets: Mapping[str, Any], frame_types: tuple[type, ...] = (Matrix,)
+) -> tuple[dict[str, Any], dict[str, Vector], dict[str, float]]:
     """A formula's frame, vector and scalar operands, in first-seen order."""
     names = extract_variables(expr)
     missing = [n for n in names if n not in datasets]
     if missing:
         raise KeyError(f"formula references unknown dataset(s): {missing}")
-    frames = {n: d for n in names if isinstance(d := datasets[n], Matrix)}
+    frames = {n: d for n in names if isinstance(d := datasets[n], frame_types)}
     vectors = {n: d for n in names if isinstance(d := datasets[n], Vector)}
     scalars = {n: float(d) for n in names if isinstance(d := datasets[n], (int, float))}
     return frames, vectors, scalars
@@ -139,21 +85,17 @@ def _check_vectors(vectors: dict[str, Vector], out_cols: list[str]) -> None:
 def compile_formula(
     expr: FormulaExpr,
     datasets: dict[str, Matrix | Vector | float],
-) -> CompiledFormula:
-    """Compile a parsed formula into a single lazy Spark DataFrame —
-    the one-formula case of ``compile_formulas_fused``. Scalar- and
-    vector-only formulas evaluate driver-side instead.
+) -> Matrix:
+    """Compile a parsed formula with a frame operand into a single lazy
+    Spark DataFrame — the one-formula case of
+    ``compile_formulas_fused``. Scalar- and vector-only formulas
+    evaluate driver-side instead (``eval_driver``).
 
     Mirrors reference ``_perform_evaluation`` (coeff_maker.py:720-798)
     but lazily and in one plan.
     """
-    frames, vectors, scalars = _operands(expr, datasets)
-    if not frames and not vectors:
-        return CompiledFormula(None, [], scalar=_eval_scalar(expr, scalars))
-    if not frames:
-        return CompiledFormula(None, [], vector=_eval_vectors(expr, vectors, scalars))
     df, result_cols = compile_formulas_fused({None: expr}, datasets)
-    return CompiledFormula(df, result_cols[None])
+    return Matrix(df, result_cols[None])
 
 
 def compile_formulas_fused(
@@ -221,7 +163,7 @@ def compile_formulas_fused(
 
         cols = [out_c if rname is None else f"{rname}_{out_c}" for out_c in out_cols]
         for pos, alias in enumerate(cols):
-            col = _to_column(exprs[rname], lambda v: col_ref(v, pos))
+            col = evaluate(exprs[rname], lambda v: col_ref(v, pos), COLUMN_OPS)
             projections.append(col.cast("double").alias(alias))
         result_cols[rname] = cols
     return joined.select(projections), result_cols
@@ -235,8 +177,11 @@ def _operand_col(i: int, pos: int) -> str:
     return f"__op{i}_{pos}__"
 
 
-def _aligned_join(frames: dict[str, Matrix], out_cols: list[str]) -> DataFrame:
-    """Chained full-outer join of all frame operands on ROW_ID.
+def _aligned_join(
+    frames: dict[str, Matrix], out_cols: list[str], col_key: str | None = None
+) -> DataFrame:
+    """Chained full-outer join of all frame operands on ROW_ID, and on
+    ``col_key`` too when given (the triplet path's column label).
 
     Every operand's value columns are renamed ``_operand_col(i, pos)``
     before joining so the projection can reference them unambiguously.
@@ -244,135 +189,68 @@ def _aligned_join(frames: dict[str, Matrix], out_cols: list[str]) -> DataFrame:
     one sort-merge (or broadcast under AQE) cascade, no re-shuffle.
     """
     pos = {c: j for j, c in enumerate(out_cols)}
+    keys = [ROW_ID] if col_key is None else [ROW_ID, col_key]
     # operands keep their native row-id type (so a long key can reuse
     # upstream partitioning); only heterogeneous key types force a
-    # unifying cast to string
-    key_types = {m.df.schema[ROW_ID].dataType.simpleString() for m in frames.values()}
-    unify = len(key_types) > 1
+    # unifying cast to string, as do triplet keys (labels are strings)
+    unify = col_key is not None or len(
+        {m.df.schema[ROW_ID].dataType.simpleString() for m in frames.values()}
+    ) > 1
     prefixed: list[DataFrame] = []
     for i, m in enumerate(frames.values()):
         rid = F.col(ROW_ID).cast("string") if unify else F.col(ROW_ID)
-        sel = [rid.alias(ROW_ID)] + [
+        sel = [rid.alias(ROW_ID), *keys[1:]] + [
             F.col(c).alias(_operand_col(i, pos[c])) for c in m.value_cols
         ]
         prefixed.append(m.df.select(sel))
-    return reduce(lambda a, b: a.join(b, on=ROW_ID, how="full_outer"), prefixed)
-
-
-def _to_column(expr: FormulaExpr, resolve) -> Column:
-    if isinstance(expr, (Transpose, MatMul, Neumann, Leontief)):
-        # the evaluator routes matrix-op formulas onto the triplet
-        # path (api.py) before this wide-path projection is built;
-        # reaching here means a direct compile_formula call
-        op = {
-            Transpose: "transpose ('.T')",
-            MatMul: "matmul ('@')",
-            Neumann: "neumann()",
-            Leontief: "leontief()",
-        }[type(expr)]
-        raise FormulaError(
-            f"{op} is supported on the triplet path only — "
-            "evaluate via FormulaEvaluator (which routes automatically) "
-            "or compile_formula_triplet"
-        )
-    if isinstance(expr, Num):
-        return F.lit(expr.value)
-    if isinstance(expr, Var):
-        return resolve(expr.name)
-    if isinstance(expr, UnaryOp):
-        inner = _to_column(expr.operand, resolve)
-        return -inner if expr.op == "-" else inner
-    if isinstance(expr, BinOp):
-        return _binop_column(
-            expr.op, _to_column(expr.left, resolve), _to_column(expr.right, resolve)
-        )
-    if isinstance(expr, Call):
-        args = [_to_column(a, resolve) for a in expr.args]
-        if expr.func == "abs":
-            return F.abs(args[0])
-        if expr.func == "pow":
-            return F.pow(args[0], args[1])
-        if expr.func == "where":
-            cond, yes, no = args
-            # numpy.where: NaN condition is truthy-false; nonzero = true
-            return F.when(F.isnan(cond) | (cond == 0), no).otherwise(yes)
-        if expr.func == "fillna":
-            target, fill = args
-            return F.when(F.isnull(target) | F.isnan(target), fill).otherwise(target)
-        raise FormulaError(f"unknown function {expr.func!r}")
-    raise FormulaError(f"cannot compile node {expr!r}")
+    return reduce(lambda a, b: a.join(b, on=keys, how="full_outer"), prefixed)
 
 
 # ---------------------------------------------------------------- driver-side
 # Vector∘vector and scalar-only formulas never touch the cluster: the
 # operands are driver-resident by construction (vectors are small).
 # The reference leaks a raw ndarray in this case (SURVEY.md §1.3 wart);
-# we return a proper labeled Vector.
-
-import numpy as np  # noqa: E402
+# we return a Series with the first vector's labels.
 
 
-def _eval_scalar(expr: FormulaExpr, scalars: dict[str, float]) -> float:
-    return float(_np_eval(expr, lambda n: np.float64(scalars[n])))
+def _np_compare(op):
+    return lambda a, b: op(a, b).astype(np.float64)
 
 
-def _eval_vectors(
-    expr: FormulaExpr, vectors: dict[str, Vector], scalars: dict[str, float]
-) -> Vector:
-    sizes = {v.size for v in vectors.values()}
+NUMPY_OPS = {
+    "num": np.float64,
+    "neg": np.negative,
+    "+": np.add,
+    "-": np.subtract,
+    "*": np.multiply,
+    "/": np.divide,
+    "%": np.mod,
+    "//": np.floor_divide,
+    "**": np.power,
+    **{sym: _np_compare(op) for sym, op in COMPARISONS.items()},
+    "abs": np.abs,
+    "pow": np.power,
+    # numpy.where: a NaN condition is false, any other nonzero true
+    "where": lambda c, a, b: np.where(np.nan_to_num(c, nan=0.0) != 0, a, b),
+    "fillna": lambda x, v: np.where(np.isnan(x), v, x),
+}
+
+
+def eval_driver(
+    expr: FormulaExpr, operands: Mapping[str, Vector | float], ops: Mapping[str, Any]
+) -> float | pd.Series:
+    """Evaluate a formula over Series and scalar operands on the driver
+    with one backend's op table (``NUMPY_OPS`` or ``adp.MP_OPS``, whose
+    ``num`` also converts each operand). Vectors combine positionally;
+    a result with a vector operand is a Series with the first one's
+    labels, any other a float."""
+    vectors = [d for d in operands.values() if isinstance(d, Vector)]
+    sizes = {v.size for v in vectors}
     if len(sizes) > 1:
         raise FormulaError(f"vector operands disagree on length: {sizes}")
-    first = next(iter(vectors.values()))
-
-    def resolve(name: str):
-        if name in vectors:
-            return vectors[name].values
-        return np.float64(scalars[name])
-
+    values = {n: ops["num"](d.values if isinstance(d, Vector) else d) for n, d in operands.items()}
     with np.errstate(divide="ignore", invalid="ignore"):
-        out = np.asarray(_np_eval(expr, resolve), dtype=np.float64)
-    return Vector(labels=first.labels, values=out)
-
-
-def _np_eval(expr: FormulaExpr, resolve):
-    if isinstance(expr, Num):
-        return np.float64(expr.value)
-    if isinstance(expr, Var):
-        return resolve(expr.name)
-    if isinstance(expr, UnaryOp):
-        val = _np_eval(expr.operand, resolve)
-        return -val if expr.op == "-" else val
-    if isinstance(expr, BinOp):
-        left = _np_eval(expr.left, resolve)
-        right = _np_eval(expr.right, resolve)
-        ops = {
-            "+": np.add,
-            "-": np.subtract,
-            "*": np.multiply,
-            "/": np.divide,
-            "%": np.mod,
-            "//": np.floor_divide,
-            "**": np.power,
-            "<": np.less,
-            "<=": np.less_equal,
-            ">": np.greater,
-            ">=": np.greater_equal,
-            "==": np.equal,
-            "!=": np.not_equal,
-        }
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = ops[expr.op](left, right)
-        return out.astype(np.float64) if expr.op in ("<", "<=", ">", ">=", "==", "!=") else out
-    if isinstance(expr, Call):
-        args = [_np_eval(a, resolve) for a in expr.args]
-        if expr.func == "abs":
-            return np.abs(args[0])
-        if expr.func == "pow":
-            return np.power(args[0], args[1])
-        if expr.func == "fillna":
-            return np.where(np.isnan(args[0]), args[1], args[0])
-        if expr.func == "where":
-            with np.errstate(invalid="ignore"):
-                cond = np.nan_to_num(np.asarray(args[0], dtype=np.float64), nan=0.0)
-            return np.where(cond != 0, args[1], args[2])
-    raise FormulaError(f"cannot evaluate node {expr!r}")
+        out = evaluate(expr, values.__getitem__, ops)
+    if not vectors:
+        return float(out)
+    return pd.Series(out, index=vectors[0].labels)

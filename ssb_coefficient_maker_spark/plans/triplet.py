@@ -22,7 +22,6 @@ from __future__ import annotations
 
 from functools import reduce
 
-import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -38,9 +37,15 @@ from ssb_coefficient_maker_spark.formula.parser import (
     Transpose,
     UnaryOp,
     Var,
-    extract_variables,
+    evaluate,
 )
-from ssb_coefficient_maker_spark.plans.alignment import NAN, _to_column
+from ssb_coefficient_maker_spark.functions.math import COLUMN_OPS
+from ssb_coefficient_maker_spark.plans.alignment import (
+    NAN,
+    _aligned_join,
+    _operand_col,
+    _operands,
+)
 from ssb_coefficient_maker_spark.session import ROW_ID
 
 COL_ID = "__col_id__"
@@ -380,10 +385,12 @@ def compile_formula_triplet(
 ) -> DataFrame:
     """Compile a formula over triplet matrices into one lazy plan.
 
-    Same construction as the wide path (plans/alignment.py): all frame
-    operands meet in a chained full-outer join — here on the composite
-    (row, col) key — and the whole arithmetic lands in one projection
-    over the single value column.
+    Same construction as the wide path, through its operand split and
+    aligned join (plans/alignment.py): all frame operands meet in a
+    chained full-outer join — here on the composite (row, col) key,
+    with string row labels — and the whole arithmetic lands in one
+    projection over the single value column. Only the vector
+    broadcast differs: it is keyed by column label, not position.
 
     ``m.T`` and ``a @ b`` are rewritten FIRST: each matrix-op subtree
     becomes a synthetic operand bound to its triplet result
@@ -395,52 +402,28 @@ def compile_formula_triplet(
     union alignment.
     """
     expr, rewritten = _rewrite_matrix_ops(expr, datasets)
-    if rewritten:
-        datasets = {**datasets, **rewritten}
-    names = extract_variables(expr)
-    frames: dict[str, TripletMatrix] = {}
-    vectors: dict[str, Vector] = {}
-    scalars: dict[str, float] = {}
-    for n in names:
-        d = datasets[n]
-        if isinstance(d, Matrix):
-            frames[n] = wide_to_triplet(d)
-        elif isinstance(d, TripletMatrix):
-            frames[n] = d
-        elif isinstance(d, Vector):
-            vectors[n] = d
-        elif isinstance(d, (int, float)):
-            scalars[n] = float(d)
-        else:
-            raise TypeError(f"unsupported operand {n!r}: {type(d)}")
+    frames, vectors, scalars = _operands(
+        expr, {**datasets, **rewritten}, (Matrix, TripletMatrix)
+    )
     if not frames:
         raise ValueError("triplet compilation needs at least one matrix operand")
-
-    prefixed = []
-    for name, t in frames.items():
-        prefixed.append(
-            t.df.select(
-                F.col(ROW_ID).cast("string").alias(ROW_ID),
-                COL_ID,
-                F.col(VALUE).alias(f"{name}__v"),
-            )
-        )
-    joined = reduce(
-        lambda a, b: a.join(b, on=[ROW_ID, COL_ID], how="full_outer"), prefixed
-    )
+    slot = {name: i for i, name in enumerate(frames)}
+    long = {
+        name: Matrix((wide_to_triplet(d) if isinstance(d, Matrix) else d).df, [VALUE])
+        for name, d in frames.items()
+    }
+    joined = _aligned_join(long, [VALUE], col_key=COL_ID)
 
     def resolve(var: str) -> Column:
-        if var in frames:
-            return F.coalesce(F.col(f"{var}__v"), NAN())
+        if var in slot:
+            return F.coalesce(F.col(_operand_col(slot[var], 0)), NAN())
         if var in vectors:
-            vec = vectors[var]
             # label-based broadcast: map literal keyed by column label
             kv = []
-            for label, value in zip(vec.labels, vec.values):
-                kv.append(F.lit(str(label)))
-                kv.append(F.lit(float(value)))
+            for label, value in zip(vectors[var].labels, vectors[var].values):
+                kv += [F.lit(str(label)), F.lit(float(value))]
             return F.coalesce(F.create_map(*kv)[F.col(COL_ID)], NAN())
         return F.lit(scalars[var])
 
-    out = _to_column(expr, resolve).cast("double").alias(VALUE)
+    out = evaluate(expr, resolve, COLUMN_OPS).cast("double").alias(VALUE)
     return joined.select(ROW_ID, COL_ID, out)

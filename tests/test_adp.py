@@ -146,8 +146,8 @@ def test_adp_partial_invalid_warns(spark):
 
 
 def test_adp_series_only_formula(adp_eval):
-    # Series-only ADP formulas route through _mp_eval, not the numeric
-    # path (which would operate on the string carrier): 'u + v' must be
+    # Series-only ADP formulas evaluate with adp.MP_OPS, not the numpy
+    # ops (which would operate on the string carrier): 'u + v' must be
     # high-precision addition, not string concatenation.
     u = pd.Series([1.5, 2.0])
     v = pd.Series([2.0, 1e-30])
@@ -232,11 +232,12 @@ def test_adp_evaluate_to_parquet_single_pass(spark, tmp_path):
 
 
 # ------------------------------------------------------------------
-# Property fuzz of the Series-only ADP route (api.py adp_eval_vectors)
+# Property fuzz of the Series-only ADP route (plans.alignment.eval_driver
+# with adp.MP_OPS)
 # — round-2 VERDICT item 7: the vector path gets the same treatment as
 # the matrix path in test_property_formula.py. Random formulas ×
 # random precisions vs an INDEPENDENT mpmath oracle (plain Python eval
-# over mpf operands, not _mp_eval).
+# over mpf operands, not formula.parser.evaluate).
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -322,7 +323,7 @@ def test_adp_vector_fuzz_vs_mpmath(spark, formula, dps):
 
     if not any(n in formula for n in _VEC_NAMES):
         # all-literal formula: scalar result by design (matches the
-        # float path's compiled.is_scalar route)
+        # float path's scalar route)
         with mpmath.workdps(dps):
             expected = realize(eval(mp_formula, oracle_env(0)))  # noqa: S307
             if mpmath.isnan(expected):

@@ -127,6 +127,17 @@ def test_vector_vector_returns_labeled_series(spark):
     assert list(res.index) == ["x", "y", "z"]
 
 
+def test_series_result_keeps_pandas_labels(spark):
+    # pandas keeps a Series' index labels and their type; so does the
+    # ADP mode, and the float mode must not turn them into strings
+    u = pd.Series([1.0, 2.0], index=[10, 20])
+    exp = u * 2
+    for adp in (False, True):
+        res = FormulaEvaluator({"u": u}, adp_enabled=adp, spark=spark).evaluate_formula("u * 2")
+        assert list(res.index) == list(exp.index) == [10, 20]
+        np.testing.assert_allclose(res.astype(float).values, exp.values)
+
+
 def test_scalar_formula(spark):
     fe = FormulaEvaluator({}, spark=spark)
     assert fe.evaluate_formula("1 + 2 * 3") == 7.0

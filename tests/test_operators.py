@@ -215,6 +215,15 @@ def test_lsh_neardup_recall_on_planted_dups(spark, sf_dir):
     assert len(approx_pairs) / len(exact_pairs) >= 0.9
 
 
+def test_blocked_neardup_empty_input(spark):
+    """An empty corpus has no pairs: the blocked tier returns an empty
+    frame instead of asking Spark for zero partitions."""
+    from ssb_coefficient_maker_spark.operators.similarity import cosine_neardup_blocked
+
+    emb = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    assert cosine_neardup_blocked(emb).count() == 0
+
+
 def test_queries_run_on_vanilla_session(spark, sf_dir):
     """The driver hands us ITS session (no engine confs): the loader
     must self-provision the runtime-settable SQL confs (nanos

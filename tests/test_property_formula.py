@@ -86,3 +86,75 @@ def test_random_formula_matches_pandas(shared_evaluator, matrices, formula):
         return
     exp = exp.replace([np.inf, -np.inf, np.nan], 0)
     np.testing.assert_allclose(got.values, exp.values, rtol=1e-9, atol=1e-12)
+
+
+# ------------------------------------------------------------------
+# Every binary operator over a grid of special values: the wide,
+# triplet and Series-only paths must all give numpy's answer, NaN-aware
+# and signed-zero-aware. ``**`` may differ by one ulp: Java's
+# StrictMath.pow and C's pow round the last bit differently.
+
+GRID = [-5.0, -1e-20, -0.0, 0.0, 0.1, 0.7, 1.0, 3.0, np.inf, -np.inf, np.nan]
+GRID_OPS = {
+    "x + y": np.add,
+    "x - y": np.subtract,
+    "x * y": np.multiply,
+    "x / y": np.divide,
+    "x % y": np.mod,
+    "x // y": np.floor_divide,
+    "x ** y": np.power,
+    "pow(x, y)": np.power,
+    "x < y": np.less,
+    "x <= y": np.less_equal,
+    "x > y": np.greater,
+    "x >= y": np.greater_equal,
+    "x == y": np.equal,
+    "x != y": np.not_equal,
+}
+
+
+@pytest.fixture(scope="module")
+def grid(spark):
+    """``x[i, j] = GRID[i]`` and ``y[i, j] = GRID[j]``: every pair once,
+    as wide frames (x, y), triplet matrices (tx, ty) and Series (u, v)."""
+    from ssb_coefficient_maker_spark.plans.triplet import TripletMatrix
+
+    n = len(GRID)
+    cols = [f"c{j}" for j in range(n)]
+    x = pd.DataFrame(np.repeat(GRID, n).reshape(n, n), columns=cols)
+    y = pd.DataFrame(np.tile(GRID, n).reshape(n, n), columns=cols)
+
+    def triplet(m: pd.DataFrame) -> TripletMatrix:
+        long = pd.DataFrame({
+            "__row_id__": np.repeat([str(i) for i in range(n)], n),
+            "__col_id__": np.tile(cols, n),
+            "value": m.to_numpy().ravel(),
+        })
+        return TripletMatrix(spark.createDataFrame(long))
+
+    data = {"x": x, "y": y, "tx": triplet(x), "ty": triplet(y),
+            "u": pd.Series(x.to_numpy().ravel()), "v": pd.Series(y.to_numpy().ravel())}
+    return FormulaEvaluator(data, validation="defer", spark=spark), x, y
+
+
+@pytest.mark.parametrize("formula", list(GRID_OPS))
+def test_operator_grid_matches_numpy(grid, formula):
+    fe, x, y = grid
+    n = len(GRID)
+    with np.errstate(all="ignore"):
+        exp = GRID_OPS[formula](x.to_numpy(), y.to_numpy()).astype(np.float64)
+    got = {
+        "wide": fe.evaluate_to_pandas(formula).loc[range(n), list(x.columns)],
+        "triplet": fe.evaluate_to_pandas(formula.replace("x", "tx").replace("y", "ty"))
+        .loc[range(n), list(x.columns)],
+        "series": fe.evaluate_to_pandas(formula.replace("x", "u").replace("y", "v")),
+    }
+    rtol = 1e-15 if "pow" in formula or "**" in formula else 0.0
+    for path, res in got.items():
+        res = np.asarray(res, dtype=np.float64).reshape(n, n)
+        nan = np.isnan(exp)
+        with np.errstate(invalid="ignore"):
+            close = np.isclose(res, exp, rtol=rtol, atol=0.0) & (np.signbit(res) == np.signbit(exp))
+        same = np.where(nan, np.isnan(res), close)
+        bad = [(GRID[i], GRID[j], res[i, j], exp[i, j]) for i, j in zip(*np.nonzero(~same))]
+        assert not bad, f"{path} {formula}: (x, y, got, numpy) {bad}"

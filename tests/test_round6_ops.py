@@ -2,7 +2,7 @@
 
 1. (medium) ADP scalar-branch routing: a TripletMatrix operand is
    neither Matrix nor Vector, so the old 'no Vector operand' guard
-   routed it into adp_eval_scalar's int/float-only resolver
+   routed it into the ADP scalar evaluator's int/float-only resolver
    (KeyError). It must fall through to the triplet path.
 2. (low) evaluate_formula returns a native float for scalar-only
    formulas in BOTH modes (the ADP path used to leak an mpmath.mpf).
@@ -32,7 +32,7 @@ def _triplet_df(spark):
 def test_adp_triplet_operand_routes_to_triplet_path(spark):
     """adp_enabled=True + TripletMatrix operand: must evaluate via the
     triplet plan (documented float64 demotion for triplet inputs), not
-    KeyError inside adp_eval_scalar (round-5 ADVICE, api.py:179)."""
+    KeyError inside the ADP scalar evaluator (round-5 ADVICE)."""
     fe = FormulaEvaluator(
         {"t": _triplet_df(spark), "k": 2.0},
         adp_enabled=True,
@@ -47,7 +47,7 @@ def test_adp_triplet_operand_routes_to_triplet_path(spark):
 
 def test_adp_triplet_plus_vector_refused_loudly(spark):
     """Same hazard in the Vector branch: TripletMatrix + Vector under
-    ADP must not reach adp_eval_vectors' Vector-only resolver
+    ADP must not reach the ADP Series evaluator's Vector-only resolver
     (KeyError) nor the float64 triplet plan (silent all-NaN from the
     string-carried ADP Series) — it is refused with a clear error,
     the same pattern as the ADP-fusion guard."""

@@ -446,12 +446,13 @@ class TestLeontiefFormula:
 
         from ssb_coefficient_maker_spark.formula.parser import (
             FormulaError,
+            evaluate,
             parse_formula,
         )
-        from ssb_coefficient_maker_spark.plans.alignment import _to_column
+        from ssb_coefficient_maker_spark.functions.math import COLUMN_OPS
 
         with pytest.raises(FormulaError, match="triplet"):
-            _to_column(parse_formula("leontief(a)"), lambda n: None)
+            evaluate(parse_formula("leontief(a)"), lambda n: None, COLUMN_OPS)
 
     def test_variables_and_routing_predicates(self, spark):
         from ssb_coefficient_maker_spark.formula.parser import (
