@@ -12234,15 +12234,57 @@ REGISTRY: dict[str, QuerySpec] = {
 
 # MECHANICALLY DERIVED — regenerate with `python tools/driver_priority.py`
 # (round-12 rule: specificity-first within stale). Current head: zero
-# never-sampled; the 147 queries whose code changed since their latest
-# driver verdict lead, specificity first, then the rest oldest-verdict
-# first.
+# never-sampled; all 243 queries are stale (code they reference changed
+# since their latest driver verdict), ordered specificity first, then
+# oldest verdict.
 _DRIVER_PRIORITY = (
+    "q58_fused_coeffmap",
+    "q50_embedding_neardup",
+    "q238_neardup_auto",
+    "q24_formula_coeffmap",
+    "q73_adp_precision",
+    "q216_formula_matmul",
+    "q235_leontief_requirements",
+    "q114_triplet_wide_formula",
+    "q64_bucketed_join",
+    "q220_neumann_flow_reach",
+    "q240_pixel_decode",
+    "q57_lsh_neardup",
+    "q237_header_decode",
+    "q115_celled_neardup",
+    "q60_csv_scan",
+    "q61_json_scan",
+    "q70_salted_join",
+    "q96_stratified_sample",
+    "q89_nullsafe_join",
+    "q184_bfs_reach",
+    "q223_anonymity_risk_audit",
+    "q224_dp_noised_release",
+    "q228_ann_recall_audit",
+    "q135_nation_pagerank",
+    "q236_ivf_store_roundtrip",
+    "q33_simhash",
+    "q56_kmeans_ivf",
     "q232_segment_dedup_ingest",
     "q35_ivf_topk",
     "q221_ivf_ingest_probe",
     "q230_semantic_dedup",
     "q81_pq_topk",
+    "q108_grouped_agg_udaf",
+    "q233_lsh_recall_audit",
+    "q31_minhash_neardup",
+    "q77_dedup_clusters",
+    "q156_market_basket",
+    "q158_triangle_count",
+    "q241_collapsed_wjaccard",
+    "q242_dedup_pipeline",
+    "q243_incremental_dedup_pipeline",
+    "q215_incremental_neardup_probe",
+    "q217_lsh_probe_append_cycle",
+    "q234_lsh_store_roundtrip",
+    "q239_collapsed_neardup",
+    "q34_cosine_topk",
+    "q185_cdc_chunking",
     "q195_partial_reaggregation",
     "q196_token_class_audit",
     "q197_sketch_accuracy_audit",
@@ -12270,8 +12312,6 @@ _DRIVER_PRIORITY = (
     "q29_fingerprint",
     "q90_repetition_filter",
     "q32_ngram_jaccard",
-    "q33_simhash",
-    "q34_cosine_topk",
     "q166_heaps_law",
     "q194_fuzzy_name_join",
     "q211_quality_length_calibration",
@@ -12318,20 +12358,17 @@ _DRIVER_PRIORITY = (
     "q20_window_tumbling",
     "q04_priority_exists",
     "q231_segment_dedup",
-    "q185_cdc_chunking",
     "q218_heavy_hitters_audit",
     "q219_theta_set_algebra_audit",
     "q222_bloom_membership_audit",
     "q225_bottomk_sample_audit",
     "q226_bpe_merge_rounds",
     "q229_tokenizer_fertility",
-    "q56_kmeans_ivf",
     "q21_window_sliding",
     "q69_interval_join",
     "q22_range_join",
     "q23_case_when",
     "q59_partition_pruning",
-    "q64_bucketed_join",
     "q65_partition_backfill",
     "q71_schema_evolution",
     "q72_batch_topk",
@@ -12354,8 +12391,6 @@ _DRIVER_PRIORITY = (
     "q66_tfidf_top_terms",
     "q67_doc_chunking",
     "q68_sequence_packing",
-    "q60_csv_scan",
-    "q61_json_scan",
     "q62_approx_percentile",
     "q174_embedding_norm_qa",
     "q74_frame_sampling",
@@ -12372,7 +12407,6 @@ _DRIVER_PRIORITY = (
     "q103_int8_quantization",
     "q104_dpp_prune_join",
     "q106_runtime_filter_join",
-    "q108_grouped_agg_udaf",
     "q109_compact_small_files",
     "q113_word_entropy",
     "q112_snapshot_diff",
@@ -12423,7 +12457,6 @@ _DRIVER_PRIORITY = (
     "q144_group_impute",
     "q138_weighted_sample",
     "q139_range_bucketize",
-    "q240_pixel_decode",
     "q128_hierarchy_shares",
     "q127_point_in_time_join",
     "q116_correlated_scalar_subquery",
@@ -12431,20 +12464,8 @@ _DRIVER_PRIORITY = (
     "q118_universal_quantification",
     "q119_having_global_share",
     "q120_rolling_features",
-    "q24_formula_coeffmap",
-    "q73_adp_precision",
-    "q58_fused_coeffmap",
-    "q70_salted_join",
-    "q96_stratified_sample",
-    "q89_nullsafe_join",
     "q91_decontamination",
     "q30_exact_dedup",
-    "q233_lsh_recall_audit",
-    "q31_minhash_neardup",
-    "q77_dedup_clusters",
-    "q156_market_basket",
-    "q158_triangle_count",
-    "q184_bfs_reach",
     "q186_pivot_matrix",
     "q187_unpivot_metrics",
     "q188_window_rank_family",
@@ -12454,33 +12475,12 @@ _DRIVER_PRIORITY = (
     "q192_ewma_volume",
     "q193_rolling_zscore_anomaly",
     "q214_weighted_jaccard_verify",
-    "q241_collapsed_wjaccard",
-    "q242_dedup_pipeline",
-    "q243_incremental_dedup_pipeline",
-    "q215_incremental_neardup_probe",
-    "q216_formula_matmul",
-    "q217_lsh_probe_append_cycle",
-    "q220_neumann_flow_reach",
-    "q223_anonymity_risk_audit",
-    "q224_dp_noised_release",
-    "q228_ann_recall_audit",
-    "q235_leontief_requirements",
-    "q234_lsh_store_roundtrip",
     "q140_top_paths",
     "q141_chi_square",
     "q142_benford_digits",
     "q130_bm25_topk",
     "q131_salted_skew_join",
     "q132_last_touch_attribution",
-    "q135_nation_pagerank",
-    "q236_ivf_store_roundtrip",
-    "q50_embedding_neardup",
-    "q57_lsh_neardup",
-    "q237_header_decode",
-    "q114_triplet_wide_formula",
-    "q115_celled_neardup",
-    "q238_neardup_auto",
-    "q239_collapsed_neardup",
 )
 
 
