@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ssb_coefficient_maker_spark.catalog import Matrix, Vector, _stringify
+from ssb_coefficient_maker_spark.catalog import Matrix, Vector, _stringify, labelled
 from ssb_coefficient_maker_spark.formula.parser import (
     COMPARISONS,
     FormulaError,
@@ -222,25 +222,10 @@ def compile_adp_formula(
 def adp_to_pandas(df: DataFrame, value_cols: list[str], dps: int) -> pd.DataFrame:
     """Collect an ADP result back to pandas as mpf objects (sorted rows)."""
     pdf = df.toPandas()
-    numeric = pd.to_numeric(pdf[ROW_ID], errors="coerce")
-    if not numeric.isna().any():
-        pdf = pdf.assign(__sort__=numeric).sort_values("__sort__").drop(columns="__sort__")
-        idx = pd.Index(pd.to_numeric(pdf[ROW_ID]).values)
-    else:
-        pdf = pdf.sort_values(ROW_ID)
-        idx = pd.Index(pdf[ROW_ID].values)
     with mpmath.workdps(dps):
-        out = pd.DataFrame(
-            {c: [mpmath.mpf(v) for v in pdf[c]] for c in value_cols},
-            index=idx,
-            dtype=object,
-        )
-    try:
-        out.columns = [int(c) for c in value_cols]
-    except ValueError:
-        pass
-    out.index.name = None
-    return out
+        for c in value_cols:
+            pdf[c] = pd.Series([mpmath.mpf(v) for v in pdf[c]], index=pdf.index, dtype=object)
+    return labelled(pdf, value_cols)
 
 
 # ---------------------------------------------------------------- validation

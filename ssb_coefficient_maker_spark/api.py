@@ -54,7 +54,6 @@ from ssb_coefficient_maker_spark.plans.triplet import (
     COL_ID,
     VALUE,
     TripletMatrix,
-    triplet_to_wide,
     wide_to_triplet,
 )
 from ssb_coefficient_maker_spark.session import ROW_ID, get_spark
@@ -103,13 +102,15 @@ class FormulaEvaluator:
         spark: SparkSession | None = None,
         validation: str = "eager",
     ):
-        """``validation='eager'`` (default) reproduces the reference's
-        behavior: every evaluation immediately audits the result (one
-        aggregate job) and warns/raises. ``validation='defer'`` skips
-        that action: with ``fill_invalid`` the fill is fused lazily
-        into the plan and the result computes exactly once at the
-        consumer's action — the scale-friendly mode (pair with
-        ``evaluate_to_parquet`` for audited writes)."""
+        """``validation`` governs what ``evaluate_formula`` returns.
+        ``'eager'`` (default) reproduces the reference's behavior: the
+        evaluation immediately audits the result (one aggregate job)
+        and warns/raises. ``'defer'`` skips that action: with
+        ``fill_invalid`` the fill is fused lazily into the plan and the
+        result computes exactly once at the consumer's action. The
+        materializing calls (``evaluate_to_pandas``,
+        ``evaluate_to_parquet``, ``compute_coefficients_to_pandas``)
+        audit on their own collect or write in either mode."""
         if decimal_precision <= 0:
             raise ValueError("decimal_precision must be positive")
         if validation not in ("eager", "defer"):
@@ -203,19 +204,18 @@ class FormulaEvaluator:
         reference prints the pandas shape — forcing a count() to
         report a shape would defeat the lazy contract.
         """
+        return self._evaluated(formula, self._result)
+
+    def _evaluated(self, formula: str | FormulaExpr, materialize) -> Any:
+        """Route ``formula`` and hand its plan to ``materialize``,
+        between the verbose banner and completion lines."""
         if self.verbose:
             shown = formula if isinstance(formula, str) else "<parsed>"
             print(f"Evaluating formula: {shown}")
             if "/" in str(shown):
-                print(
-                    "Note: Formula contains division. Invalid values will "
-                    + (
-                        "be replaced with zeros."
-                        if self.fill_invalid
-                        else "trigger warnings or errors."
-                    )
-                )
-        result = self._result(self._plan(formula))
+                fate = "be replaced with zeros" if self.fill_invalid else "trigger warnings or errors"
+                print(f"Note: Formula contains division. Invalid values will {fate}.")
+        result = materialize(self._plan(formula))
         if self.verbose:
             if isinstance(result, DataFrame):
                 shape: Any = "lazy (Spark DataFrame)"
@@ -227,6 +227,7 @@ class FormulaEvaluator:
         return result
 
     def _plan(self, formula: str | FormulaExpr) -> _Plan:
+        self.last_invalid_count = None  # set again by this formula's audit
         if isinstance(formula, FormulaExpr):
             return self._route(formula, "<parsed>")
         return self._route(self.parse_formula(formula), formula)
@@ -298,46 +299,53 @@ class FormulaEvaluator:
         if plan.df is None:
             return plan.value
         if self.validation == "defer":
-            self.last_invalid_count = None  # not audited in defer mode
             if self.fill_invalid:
                 return fill_invalid(plan.df, plan.value_cols, plan.carrier)
             return plan.df
         audit = adp_mod.validate_adp if plan.kind == "adp" else _validate
-        df, self.last_invalid_count = audit(
-            plan.df,
-            plan.value_cols,
-            plan.formula,
-            fill=self.fill_invalid,
-            mixed_operands=plan.mixed,
-            verbose=self.verbose,
-        )
+        df, self.last_invalid_count = audit(plan.df, plan.value_cols, plan.formula,
+                                            fill=self.fill_invalid, mixed_operands=plan.mixed,
+                                            verbose=self.verbose)
         return df
 
-    def _sink(self, plan: _Plan, path: str) -> dict:
-        """Write a plan's result to parquet in ONE action: the audit
-        metrics ride the write via ``observe`` and count the cells
-        BEFORE any fill, which is fused into the write projection.
-        Returns the observed ``validation.audit_exprs`` row."""
+    def _sink(self, plan: _Plan, path: str | None = None) -> tuple[dict, Any]:
+        """Materialize a plan's result in ONE action — a parquet write
+        to ``path``, else a pandas collect (``_collect``). The audit
+        metrics ride that action via ``observe`` and count the cells
+        BEFORE any fill, which is fused into the projection. Returns
+        the observed ``validation.audit_exprs`` row and the collected
+        frame (None for a write)."""
         obs = Observation()
         out = plan.df.observe(obs, *audit_exprs(plan.value_cols, plan.carrier))
         if self.fill_invalid:
             out = fill_invalid(out, plan.value_cols, plan.carrier)
-        out.write.mode("overwrite").parquet(path)
-        return obs.get
+        if path is None:
+            pdf = self._collect(plan, out)
+        else:
+            out.write.mode("overwrite").parquet(path)
+            pdf = None
+        return obs.get, pdf
 
-    def _to_pandas(self, result: Any) -> Any:
-        """Collect an ``evaluate_formula`` result: a triplet result
-        pivots to its wide matrix, an ADP result collects as mpf."""
-        if not isinstance(result, DataFrame):
-            return result
-        if COL_ID in result.columns:
-            wide = triplet_to_wide(TripletMatrix(result))
-            cols = [c for c in wide.columns if c != ROW_ID]
-            return matrix_to_pandas(Matrix(df=wide, value_cols=cols))
-        cols = [c for c in result.columns if c != ROW_ID]
-        if self.adp_enabled:
-            return adp_mod.adp_to_pandas(result, cols, self.decimal_precision)
-        return matrix_to_pandas(Matrix(df=result, value_cols=cols))
+    def _collect(self, plan: _Plan, df: DataFrame) -> pd.DataFrame:
+        """Collect a plan's result as its pandas matrix: a triplet
+        result pivots on the driver, an ADP result collects as mpf."""
+        if plan.kind == "adp":
+            return adp_mod.adp_to_pandas(df, plan.value_cols, self.decimal_precision)
+        if plan.kind == "triplet":
+            wide = df.toPandas().pivot(index=ROW_ID, columns=COL_ID, values=VALUE)
+            order, _ = catalog.label_order(wide.columns)
+            return catalog.labelled(wide.reset_index(), list(wide.columns[order]))
+        return matrix_to_pandas(Matrix(df, plan.value_cols))
+
+    def _audited(self, plan: _Plan, path: str | None = None) -> tuple[dict, Any]:
+        """``_sink``, then warn or raise like ``evaluate_formula`` on
+        the observed counts; sets ``last_invalid_count``."""
+        row, pdf = self._sink(plan, path)
+        status = status_of(row, plan.value_cols)
+        check(status, plan.formula, fill=self.fill_invalid, mixed_operands=plan.mixed,
+              verbose=self.verbose)
+        self.last_invalid_count = status.n_invalid
+        return row, pdf
 
     def evaluate_to_parquet(self, formula: str, path: str) -> dict:
         """Production path: evaluate + validate + write in ONE pass.
@@ -349,31 +357,25 @@ class FormulaEvaluator:
         touched exactly once (the reference re-scans results up to 3
         times, reference coeff_maker.py:93,101,106). Fill (when
         enabled) is fused into the write projection. Warns or raises
-        like ``evaluate_formula``, but after the write; returns the
-        metrics dict.
+        like ``evaluate_formula``, but after the write, in either
+        validation mode; returns the metrics dict.
         """
         plan = self._plan(formula)
         if plan.df is None:
             raise ValueError("evaluate_to_parquet needs at least one matrix operand")
-        row = self._sink(plan, path)
+        row, _ = self._audited(plan, path)
         status = status_of(row, plan.value_cols)
-        check(
-            status,
-            formula,
-            fill=self.fill_invalid,
-            mixed_operands=plan.mixed,
-            verbose=self.verbose,
-        )
-        return {
-            "rows": row["__rows__"],
-            "cells": status.n_cells,
-            "invalid": status.n_invalid,
-            "path": path,
-        }
+        return {"rows": row["__rows__"], "cells": status.n_cells, "invalid": status.n_invalid,
+                "path": path}
 
     def evaluate_to_pandas(self, formula: str | FormulaExpr) -> Any:
-        """Evaluate and collect to pandas (tests / small results)."""
-        return self._to_pandas(self.evaluate_formula(formula))
+        """Evaluate and collect to pandas (tests / small results). Like
+        ``evaluate_to_parquet``, the audit rides the collect in either
+        validation mode; warns or raises like ``evaluate_formula``,
+        after the collect."""
+        return self._evaluated(
+            formula, lambda plan: plan.value if plan.df is None else self._audited(plan)[1]
+        )
 
 
 @dataclass
@@ -478,9 +480,12 @@ class CoefficientCalculator:
         """Evaluate every mapped formula; skip empty formulas and
         formulas with unknown variables (reference
         coeff_maker.py:989-1012 fail-soft loop)."""
+        return self._computed(self.evaluator.evaluate_formula)
+
+    def _computed(self, evaluate) -> dict[str, Any]:
         results: dict[str, Any] = {}
         for name, formula, _ in self._rows():
-            results[name] = self.evaluator.evaluate_formula(formula)
+            results[name] = evaluate(formula)
             if self.verbose:
                 # reference shape, coeff_maker.py:1014
                 print(f"Successfully computed coefficient: {name}")
@@ -564,7 +569,7 @@ class CoefficientCalculator:
         manifest: dict[str, Any] = {"extras": {}}
 
         def sink(plan: _Plan, path: str, results: dict[str, list[str]]) -> None:
-            row = self.evaluator._sink(plan, path)
+            row, _ = self.evaluator._sink(plan, path)
             for rname, cols in results.items():
                 invalid = status_of(row, cols).n_invalid
                 manifest[rname] = {"path": path, "columns": cols, "rows": row["__rows__"],
@@ -580,7 +585,4 @@ class CoefficientCalculator:
         return manifest
 
     def compute_coefficients_to_pandas(self) -> dict[str, Any]:
-        return {
-            name: self.evaluator._to_pandas(value)
-            for name, value in self.compute_coefficients().items()
-        }
+        return self._computed(self.evaluator.evaluate_to_pandas)

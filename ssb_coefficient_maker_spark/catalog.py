@@ -141,28 +141,32 @@ def vector_from_pandas(series: pd.Series) -> Vector:
     return Vector(labels=list(series.index), values=vals)
 
 
-def matrix_to_pandas(m: Matrix, index_dtype: str | None = None) -> pd.DataFrame:
-    """Collect a Matrix back to pandas, restoring the row index.
+def label_order(labels: pd.Index) -> tuple[np.ndarray, pd.Index]:
+    """Positions that sort ``labels`` — numerically when every label is
+    numeric — and the labels, as numbers when they all are."""
+    numeric = pd.to_numeric(labels, errors="coerce")
+    if not pd.isna(numeric).any():
+        labels = pd.Index(numeric)
+    return np.argsort(labels.to_numpy(), kind="stable"), labels
 
-    Sorts by ``__row_id__`` (numerically when all labels are numeric)
-    since Spark output order is nondeterministic. Collect is for tests
-    and small results only — production results go to parquet sinks.
-    """
-    pdf = m.df.toPandas()
-    idx = pdf[ROW_ID]
-    numeric = pd.to_numeric(idx, errors="coerce")
-    if not numeric.isna().any():
-        order = numeric.sort_values(kind="mergesort").index
-        idx = numeric
-    else:
-        order = idx.sort_values(kind="mergesort").index
-    pdf = pdf.loc[order]
-    out = pdf[m.value_cols].copy()
-    out.index = pd.Index(idx.loc[order].values)
-    out.index.name = None
-    # restore numeric column labels when possible (pandas parity)
+
+def labelled(pdf: pd.DataFrame, value_cols: list[str]) -> pd.DataFrame:
+    """A collected result (``__row_id__`` plus ``value_cols``) as the
+    pandas matrix: rows indexed by their label and sorted by
+    ``label_order`` (Spark output order is nondeterministic), column
+    labels restored as ints when they all are (pandas parity)."""
+    order, idx = label_order(pd.Index(pdf[ROW_ID].to_numpy()))
+    out = pdf[value_cols].iloc[order]
+    out.index = idx[order]
     try:
-        out.columns = [int(c) for c in m.value_cols]
+        out.columns = [int(c) for c in value_cols]
     except ValueError:
-        out.columns = list(m.value_cols)
+        pass
     return out
+
+
+def matrix_to_pandas(m: Matrix) -> pd.DataFrame:
+    """Collect a Matrix back to pandas, restoring the row index
+    (``labelled``). Collect is for tests and small results only —
+    production results go to parquet sinks."""
+    return labelled(m.df.toPandas(), m.value_cols)

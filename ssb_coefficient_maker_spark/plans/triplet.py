@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ssb_coefficient_maker_spark.catalog import Matrix, Vector
@@ -229,22 +229,24 @@ def leontief_total_requirements(
     next contraction, and checkpointing CUTS THE LINEAGE, without
     which the k-deep join chain's logical plan grows until the driver
     chokes on it (a tol of 1e-12 on a 0.55-spectral-radius matrix is
-    ~46 terms). One scalar ``max(abs(value))`` action runs per
-    iteration — the driver sees k scalars, never a matrix. Terms
-    shrink geometrically, so the checkpoint footprint is a small
-    multiple of nnz(A), reclaimed by the context cleaner when the
-    result is dropped. (localCheckpoint blocks are executor-local and
-    non-replicated; a long-lived production run on a real cluster
-    would checkpoint terms to a reliable store / materialized table
-    instead — same plan shape.)
+    ~46 terms). The term's ``max(abs(value))`` is observed on that
+    checkpoint, so each iteration is one action and the driver sees k
+    scalars, never a matrix. Terms shrink geometrically, so the
+    checkpoint footprint is a small multiple of nnz(A), reclaimed by
+    the context cleaner when the result is dropped. (localCheckpoint
+    blocks are executor-local and non-replicated; a long-lived
+    production run on a real cluster would checkpoint terms to a
+    reliable store / materialized table instead — same plan shape.)
     """
     if max_terms < 1:
         raise ValueError(f"max_terms must be >= 1, got {max_terms}")
     parts = [identity_triplet(a).df]
     term = a
     for _ in range(max_terms):
-        term_df = _series_term(term).localCheckpoint()
-        peak = term_df.agg(F.max(F.abs(F.col(VALUE)))).first()[0]
+        obs = Observation()
+        term_df = _series_term(term).observe(obs, F.max(F.abs(VALUE)).alias("peak"))
+        term_df = term_df.localCheckpoint()
+        peak = obs.get["peak"]
         if peak is None or peak < tol:
             break
         if peak != peak:  # NaN peak: an invalid cell reached this term

@@ -15,17 +15,19 @@ coeff_maker.py:39-569):
 
 Execution shape: the reference scans the full result 1-3 times on the
 driver (status, count, fill — reference coeff_maker.py:93,101,106).
-Here the audit is ONE distributed aggregate over all value columns
-(a single job, partial aggregation map-side), and the fill is a lazy
-``when()`` projection fused into the result plan by Catalyst — at
-100 TB the audit is the only extra action and touches each cell once.
+Here the audit is ONE aggregate over all value columns
+(``audit_exprs``: partial aggregation map-side), and the fill is a
+lazy ``when()`` projection fused into the result plan by Catalyst.
+When a result is materialized — collected to pandas or written to
+parquet — the aggregate is observed on that action (api.py's sink), so
+the audit adds no job. ``validate`` runs it as a job of its own only
+for ``evaluate_formula``, whose result stays lazy.
 
 One validator serves both value carriers: float64 columns and the
 decimal strings of ADP mode (adp.py). A ``Carrier`` names the carrier's
 invalid and ±Inf predicates and its fill literal; everything else —
 the audit aggregate, the fill projection and the warn/raise decision
-— is shared, and the parquet sinks (api.py) feed the same decision
-from metrics observed on their write.
+(``check``) — is shared by the standalone audit and the sink.
 """
 
 from __future__ import annotations
@@ -94,7 +96,8 @@ class InvalidStatus:
 
 def audit_exprs(value_cols: list[str], carrier: Carrier = FLOAT) -> list[Column]:
     """The audit's aggregate: a row count plus two sums per column
-    (invalid, ±Inf). Run by ``invalid_status`` or observed on a write."""
+    (invalid, ±Inf). Run by ``invalid_status`` or observed on a collect
+    or write."""
     aggs = [F.count(F.lit(1)).alias("__rows__")]
     for c in value_cols:
         aggs.append(F.sum(carrier.invalid(c).cast("long")).alias(f"__inv__{c}"))

@@ -153,3 +153,12 @@ def test_triplet_defer_validation_matches_eager(spark):
     assert eager_count == 0
     assert defer_count is None
     assert eager_vals == defer_vals == [0.5, 0.5, 0.5, 0.5]
+
+
+def test_collected_triplet_orders_numeric_column_labels(spark):
+    """A collected triplet result orders int column labels numerically,
+    like pandas (they were in string order: 0, 1, 10, 11, 2, ...)."""
+    a = pd.DataFrame(np.arange(144.0).reshape(12, 12))
+    got = FormulaEvaluator({"a": a}, spark=spark).evaluate_to_pandas("a.T")
+    assert list(got.columns) == list(range(12))
+    pd.testing.assert_frame_equal(got, a.T)
