@@ -12285,11 +12285,45 @@ _DRIVER_PRIORITY = (
     "q239_collapsed_neardup",
     "q34_cosine_topk",
     "q185_cdc_chunking",
+    "q199_jl_projection_audit",
+    "q25_text_stats",
+    "q26_quality_score",
+    "q27_token_count",
+    "q28_lang_id",
+    "q90_repetition_filter",
+    "q32_ngram_jaccard",
+    "q211_quality_length_calibration",
+    "q36_embedding_stats",
+    "q03_top_revenue_orders",
+    "q20_window_tumbling",
+    "q222_bloom_membership_audit",
+    "q225_bottomk_sample_audit",
+    "q226_bpe_merge_rounds",
+    "q229_tokenizer_fertility",
+    "q21_window_sliding",
+    "q72_batch_topk",
+    "q78_train_test_split",
+    "q83_llm_pipeline",
+    "q79_lang_centroid_distance",
+    "q66_tfidf_top_terms",
+    "q67_doc_chunking",
+    "q68_sequence_packing",
+    "q174_embedding_norm_qa",
+    "q113_word_entropy",
+    "q159_setsim_prefix_join",
+    "q161_rrf_fusion",
+    "q170_langid_confusion",
+    "q176_packing_efficiency_curve",
+    "q178_token_budget_fill",
+    "q181_spearman_length_bias",
+    "q151_top_decile_curation",
+    "q148_containment_dedup",
+    "q91_decontamination",
+    "q30_exact_dedup",
     "q195_partial_reaggregation",
     "q196_token_class_audit",
     "q197_sketch_accuracy_audit",
     "q198_bigram_xent",
-    "q199_jl_projection_audit",
     "q200_group_minmax_scaling",
     "q201_dedup_survivorship",
     "q202_cluster_size_distribution",
@@ -12305,19 +12339,11 @@ _DRIVER_PRIORITY = (
     "q213_conjunctive_retrieval",
     "q137_grouped_ols",
     "q44_approx_distinct",
-    "q25_text_stats",
-    "q26_quality_score",
-    "q27_token_count",
-    "q28_lang_id",
     "q29_fingerprint",
-    "q90_repetition_filter",
-    "q32_ngram_jaccard",
     "q166_heaps_law",
     "q194_fuzzy_name_join",
-    "q211_quality_length_calibration",
     "q133_equal_freq_binning",
     "q134_mad_outliers",
-    "q36_embedding_stats",
     "q37_media_bytes",
     "q38_asof_join",
     "q39_percentiles",
@@ -12339,7 +12365,6 @@ _DRIVER_PRIORITY = (
     "q129_cumulative_distinct_users",
     "q01_pricing_summary",
     "q02_filter_project",
-    "q03_top_revenue_orders",
     "q05_regional_revenue",
     "q06_revenue_change",
     "q07_semi_join",
@@ -12355,26 +12380,17 @@ _DRIVER_PRIORITY = (
     "q17_date_functions",
     "q18_json_extract",
     "q19_array_functions",
-    "q20_window_tumbling",
     "q04_priority_exists",
     "q231_segment_dedup",
     "q218_heavy_hitters_audit",
     "q219_theta_set_algebra_audit",
-    "q222_bloom_membership_audit",
-    "q225_bottomk_sample_audit",
-    "q226_bpe_merge_rounds",
-    "q229_tokenizer_fertility",
-    "q21_window_sliding",
     "q69_interval_join",
     "q22_range_join",
     "q23_case_when",
     "q59_partition_pruning",
     "q65_partition_backfill",
     "q71_schema_evolution",
-    "q72_batch_topk",
-    "q78_train_test_split",
     "q82_profile",
-    "q83_llm_pipeline",
     "q84_rolling_range_window",
     "q92_gap_fill",
     "q93_argmax_agg",
@@ -12384,15 +12400,10 @@ _DRIVER_PRIORITY = (
     "q86_batch_sessions",
     "q87_array_predicates",
     "q88_correlation",
-    "q79_lang_centroid_distance",
     "q154_dup_ngram_coverage",
     "q124_bigram_pmi",
     "q75_udtf_rle",
-    "q66_tfidf_top_terms",
-    "q67_doc_chunking",
-    "q68_sequence_packing",
     "q62_approx_percentile",
-    "q174_embedding_norm_qa",
     "q74_frame_sampling",
     "q55_large_volume_orders",
     "q52_nation_volume",
@@ -12408,7 +12419,6 @@ _DRIVER_PRIORITY = (
     "q104_dpp_prune_join",
     "q106_runtime_filter_join",
     "q109_compact_small_files",
-    "q113_word_entropy",
     "q112_snapshot_diff",
     "q121_zorder_clustering",
     "q125_record_linkage",
@@ -12423,9 +12433,7 @@ _DRIVER_PRIORITY = (
     "q153_mix_rebalance",
     "q155_unigram_xent",
     "q157_seasonality_index",
-    "q159_setsim_prefix_join",
     "q160_skyline",
-    "q161_rrf_fusion",
     "q162_mutual_information",
     "q163_cusum_changepoint",
     "q164_weighted_median",
@@ -12433,26 +12441,20 @@ _DRIVER_PRIORITY = (
     "q167_bot_rate_audit",
     "q168_max_concurrency",
     "q169_diverse_topk",
-    "q170_langid_confusion",
     "q171_cross_source_overlap",
     "q172_blob_chunk_digests",
     "q173_qq_drift",
     "q175_dim_variance_profile",
-    "q176_packing_efficiency_curve",
     "q177_top_gram_coverage",
-    "q178_token_budget_fill",
     "q179_orc_scan",
     "q180_abc_analysis",
-    "q181_spearman_length_bias",
     "q182_nearest_event_join",
     "q183_symspell_join",
     "q150_media_dedup",
-    "q151_top_decile_curation",
     "q149_incremental_dedup",
     "q145_rolling_corr",
     "q146_kl_drift",
     "q147_time_to_convert",
-    "q148_containment_dedup",
     "q143_linear_interp",
     "q144_group_impute",
     "q138_weighted_sample",
@@ -12464,8 +12466,6 @@ _DRIVER_PRIORITY = (
     "q118_universal_quantification",
     "q119_having_global_share",
     "q120_rolling_features",
-    "q91_decontamination",
-    "q30_exact_dedup",
     "q186_pivot_matrix",
     "q187_unpivot_metrics",
     "q188_window_rank_family",
