@@ -32,7 +32,6 @@ import mpmath
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ssb_coefficient_maker_spark.catalog import Matrix, Vector, _stringify, labelled
@@ -42,6 +41,7 @@ from ssb_coefficient_maker_spark.formula.parser import (
     FormulaExpr,
     evaluate,
 )
+from ssb_coefficient_maker_spark.functions.math import ident, string
 from ssb_coefficient_maker_spark.plans.alignment import (
     _aligned_join,
     _check_vectors,
@@ -233,27 +233,21 @@ def adp_to_pandas(df: DataFrame, value_cols: list[str], dps: int) -> pd.DataFram
 # 'nan' / '+inf' / '-inf', so the audit is a plain IN aggregate
 # through the shared validator (validation.py) — no per-cell Python
 # loop (the reference loops cell-by-cell in ADP fill, reference
-# coeff_maker.py:274-279). The predicates are SQL text: they are built
-# per column, and a Column-API ``isin`` costs a py4j round trip per
-# literal (~40 calls per predicate against ~3 for one parsed one).
+# coeff_maker.py:274-279).
 _INF_SQL = "'+inf', '-inf', 'inf'"
 
 
-def _quoted(c: str) -> str:
-    return "`" + c.replace("`", "``") + "`"
-
-
-def adp_invalid_cond(c: str):
+def adp_invalid_cond(c: str) -> str:
     """Invalid predicate for one string-carried ADP column."""
-    q = _quoted(c)
-    return F.expr(f"{q} IS NULL OR lower({q}) IN ('nan', {_INF_SQL})")
+    q = ident(c)
+    return f"({q} IS NULL OR lower({q}) IN ('nan', {_INF_SQL}))"
 
 
-def adp_inf_cond(c: str):
-    return F.expr(f"lower({_quoted(c)}) IN ({_INF_SQL})")
+def adp_inf_cond(c: str) -> str:
+    return f"(lower({ident(c)}) IN ({_INF_SQL}))"
 
 
-ADP = Carrier(adp_invalid_cond, adp_inf_cond, "0.0")
+ADP = Carrier(adp_invalid_cond, adp_inf_cond, string("0.0"))
 
 
 def validate_adp(df: DataFrame, value_cols: list[str], formula_str: str, **kwargs):

@@ -26,9 +26,9 @@ from typing import Any, Iterable
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ssb_coefficient_maker_spark.functions.math import ident
 from ssb_coefficient_maker_spark.session import ROW_ID
 
 WIDE_MATRIX_THRESHOLD = 4000
@@ -132,8 +132,8 @@ def matrix_from_spark(
     # reuse upstream hash-partitioning, e.g. a groupBy that produced
     # this matrix); the alignment join only falls back to string when
     # operands disagree on the key type
-    sel = [F.col(rid).alias(ROW_ID)] + [F.col(c).cast("double").alias(c) for c in value_cols]
-    return Matrix(df=df.select(sel), value_cols=value_cols)
+    cols = [f"CAST({ident(c)} AS DOUBLE) AS {ident(c)}" for c in value_cols]
+    return Matrix(df=df.selectExpr(f"{ident(rid)} AS {ROW_ID}", *cols), value_cols=value_cols)
 
 
 def vector_from_pandas(series: pd.Series) -> Vector:

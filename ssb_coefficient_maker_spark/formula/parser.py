@@ -27,8 +27,10 @@ Here the language is explicit:
 Parsing yields a small typed tree (``FormulaExpr``). ``evaluate`` is
 the one walk over its elementwise nodes; each backend is an op table
 that maps ``num``, ``neg``, every operator and every function to its
-implementation: Spark ``Column`` (``functions.math.COLUMN_OPS``),
-numpy (``plans.alignment.NUMPY_OPS``) and mpmath (``adp.MP_OPS``).
+implementation: Spark SQL text (``functions.math.SQL_OPS``: one
+expression string per output column, built in pure Python and applied
+in one ``selectExpr``), numpy (``plans.alignment.NUMPY_OPS``) and
+mpmath (``adp.MP_OPS``).
 """
 
 from __future__ import annotations

@@ -1,20 +1,25 @@
-"""Scalar math functions with numpy/pandas semantics, and ``COLUMN_OPS``,
-the Spark ``Column`` backend of ``formula.parser.evaluate``.
+"""Spark SQL text with numpy/pandas semantics: ``SQL_OPS``, the Spark
+backend of ``formula.parser.evaluate``, and the quoting helpers every
+label goes through on its way into SQL text.
 
-Spark's arithmetic differs from numpy exactly where the reference's
-formulas rely on IEEE behavior (SURVEY.md §7 risk 1): division by
-zero is NULL in Spark but ±Inf/NaN in numpy; ``%`` follows the
-dividend's sign in Spark but the divisor's in numpy; ``floor`` returns
-a bigint; Java's ``pow`` gives NaN for ``1 ** nan`` and ``(±1) ** ±inf``
-where C's gives 1. These shims follow numpy's double loops. They are
-plain ``when()`` expression trees — they stay inside whole-stage
-codegen, no UDFs. One deviation remains: Java's ``StrictMath.pow`` and
-C's ``pow`` may differ in the last ulp.
+A formula evaluates to one SQL expression string per output column in
+pure Python; each plan step then crosses the py4j gateway once, as one
+``selectExpr``. Spark's arithmetic differs from numpy exactly where the
+reference's formulas rely on IEEE behavior (SURVEY.md §7 risk 1):
+division by zero is NULL in Spark but ±Inf/NaN in numpy; ``%`` follows
+the dividend's sign in Spark but the divisor's in numpy; ``floor``
+returns a bigint; Java's ``pow`` gives NaN for ``1 ** nan`` and
+``(±1) ** ±inf`` where C's gives 1. These shims follow numpy's double
+loops. They are plain ``CASE`` expressions — they stay inside
+whole-stage codegen, no UDFs. One deviation remains: Java's
+``StrictMath.pow`` and C's ``pow`` may differ in the last ulp.
+
+Every emitted sub-expression is atomic — parenthesised, a call, a
+``CASE`` or a non-negative literal — so a template can splice it
+anywhere: ``- -x`` can never become a ``--`` comment.
 """
 
 from __future__ import annotations
-
-import operator
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -24,84 +29,128 @@ from ssb_coefficient_maker_spark.formula.parser import COMPARISONS
 INF = float("inf")
 
 
-def _nan() -> Column:
-    return F.lit(float("nan"))
+def ident(name: str) -> str:
+    """A label as a Spark SQL identifier: backtick-quoted, so ``C10.1``
+    or ``x`y`` names exactly one column."""
+    return "`" + str(name).replace("`", "``") + "`"
 
 
-def _over_zero(n: Column, d: Column) -> Column:
+def string(text: str) -> str:
+    """A label as a Spark SQL string literal (backslashes escape)."""
+    return "'" + str(text).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def num(value: float) -> str:
+    """A double literal. A bare ``1.0`` is a DECIMAL in Spark SQL, and
+    NaN and ±Inf have no literal syntax: they are a string cast, inside
+    a ``coalesce`` that keeps them non-nullable like a literal (a
+    nullable operand would leave ``IS NULL`` tests in the audit)."""
+    v = float(value)
+    if v != v or v in (INF, -INF):
+        text = "NaN" if v != v else f"{'-' if v < 0 else ''}Infinity"
+        return f"coalesce(CAST('{text}' AS DOUBLE), 0.0D)"
+    text = f"{v!r}D"
+    return f"({text})" if text[0] == "-" else text
+
+
+NAN = num(float("nan"))
+
+
+def _over_zero(n: str, d: str) -> str:
     """``n / d`` for a zero ``d``: ``pow(±0, -1)`` is ±Inf, so the
     product carries the signs of both operands (0/0 and NaN give NaN)."""
-    return n * F.pow(d, F.lit(-1.0))
+    return f"({n} * pow({d}, {num(-1.0)}))"
 
 
-def safe_div(n: Column, d: Column) -> Column:
+def _div(n: str, d: str) -> str:
     """Division with numpy semantics: x/±0 → ±Inf, 0/0 → NaN.
 
     (Verified against the reference's all-zero-denominator fixture,
     reference tests/test_FormulaEvaluator_pt1.py:140-156.)
     """
-    return F.when(d != 0, n / d).otherwise(_over_zero(n, d))
+    return f"CASE WHEN {d} != 0 THEN {n} / {d} ELSE {_over_zero(n, d)} END"
 
 
-def _floor(x: Column) -> Column:
+def _floor(x: str) -> str:
     """``floor`` in double: Spark's returns a bigint (NaN → 0, ±Inf →
     ±9.2e18); a double of magnitude ≥ 2**52 is already integral."""
-    return F.when(F.abs(x) < 2.0**52, F.floor(x).cast("double")).otherwise(x)
+    return f"CASE WHEN abs({x}) < {num(2.0**52)} THEN CAST(floor({x}) AS DOUBLE) ELSE {x} END"
 
 
-def _divmod(n: Column, d: Column) -> tuple[Column, Column]:
+def _divmod(n: str, d: str) -> tuple[str, str]:
     """numpy's ``npy_divmod`` for a nonzero divisor: ``(n // d, n % d)``."""
-    fmod = n % d  # Java's remainder: the dividend's sign, like C fmod
-    adjust = (fmod != 0) & ((d < 0) != (fmod < 0))
+    fmod = f"({n} % {d})"  # Java's remainder: the dividend's sign, like C fmod
+    adjust = f"({fmod} != 0 AND (({d} < 0) != ({fmod} < 0)))"
     # a zero remainder takes the sign of d (a literal -0.0 in a CASE
     # would fold into 0.0: Catalyst compares the branches with ==)
-    mod = F.when(adjust, fmod + d).when(fmod == 0, F.signum(d) * 0.0).otherwise(fmod)
-    div = (n - fmod) / d - F.when(adjust, F.lit(1.0)).otherwise(F.lit(0.0))
+    zero = num(0.0)
+    mod = (f"CASE WHEN {adjust} THEN {fmod} + {d} "
+           f"WHEN {fmod} = 0 THEN signum({d}) * {zero} ELSE {fmod} END")
+    div = f"(({n} - {fmod}) / {d} - CASE WHEN {adjust} THEN {num(1.0)} ELSE {zero} END)"
     floor = _floor(div)
-    snapped = F.when(div - floor > 0.5, floor + 1.0).otherwise(floor)
+    snapped = f"CASE WHEN {div} - {floor} > {num(0.5)} THEN {floor} + {num(1.0)} ELSE {floor} END"
     # a zero quotient takes the sign of n / d
-    return F.when(div != 0, snapped).otherwise((n / d) * 0.0), mod
+    return f"CASE WHEN {div} != 0 THEN {snapped} ELSE ({n} / {d}) * {zero} END", mod
 
 
-def safe_mod(n: Column, d: Column) -> Column:
+def _mod(n: str, d: str) -> str:
     """numpy mod: result takes the divisor's sign; x % ±0 → NaN."""
-    return F.when(d == 0, _nan()).otherwise(_divmod(n, d)[1])
+    return f"CASE WHEN {d} = 0 THEN {NAN} ELSE {_divmod(n, d)[1]} END"
 
 
-def safe_floordiv(n: Column, d: Column) -> Column:
+def _floordiv(n: str, d: str) -> str:
     """numpy floor_divide: n // ±0 is n / ±0 (±Inf or NaN)."""
-    return F.when(d == 0, _over_zero(n, d)).otherwise(_divmod(n, d)[0])
+    return f"CASE WHEN {d} = 0 THEN {_over_zero(n, d)} ELSE {_divmod(n, d)[0]} END"
 
 
-def safe_pow(x: Column, y: Column) -> Column:
+def _pow(x: str, y: str) -> str:
     """C ``pow``: ``1 ** y`` and ``(±1) ** ±inf`` are 1, where Java's is NaN."""
-    one = (x == 1) | ((F.abs(x) == 1) & (F.abs(y) == INF))
-    return F.when(one, F.lit(1.0)).otherwise(F.pow(x, y))
+    one = f"({x} = 1 OR (abs({x}) = 1 AND abs({y}) = {num(INF)}))"
+    return f"CASE WHEN {one} THEN {num(1.0)} ELSE pow({x}, {y}) END"
 
 
-def _compare(op):
+def _compare(sym: str):
     """IEEE comparison as 1.0/0.0: any NaN operand compares false (``!=``
     true), where Spark SQL orders NaN above every value and NaN == NaN."""
-    nan_result = 1.0 if op is operator.ne else 0.0
+    nan_result = num(1.0 if sym == "!=" else 0.0)
     return lambda a, b: (
-        F.when(F.isnan(a) | F.isnan(b), F.lit(nan_result)).otherwise(op(a, b).cast("double"))
+        f"CASE WHEN isnan({a}) OR isnan({b}) THEN {nan_result} "
+        f"ELSE CAST({a} {sym} {b} AS DOUBLE) END"
     )
 
 
-COLUMN_OPS = {
-    "num": F.lit,
-    "neg": operator.neg,
-    "+": operator.add,
-    "-": operator.sub,
-    "*": operator.mul,
-    "/": safe_div,
-    "%": safe_mod,
-    "//": safe_floordiv,
-    "**": safe_pow,
-    **{sym: _compare(op) for sym, op in COMPARISONS.items()},
-    "abs": F.abs,
-    "pow": safe_pow,
+SQL_OPS = {
+    "num": num,
+    "neg": lambda a: f"(-{a})",
+    **{sym: lambda a, b, sym=sym: f"({a} {sym} {b})" for sym in "+-*"},
+    "/": _div,
+    "%": _mod,
+    "//": _floordiv,
+    "**": _pow,
+    **{sym: _compare(sym) for sym in COMPARISONS},
+    "abs": lambda x: f"abs({x})",
+    "pow": _pow,
     # numpy.where: a NaN condition is false, any other nonzero true
-    "where": lambda c, a, b: F.when(F.isnan(c) | (c == 0), b).otherwise(a),
-    "fillna": lambda x, v: F.when(F.isnull(x) | F.isnan(x), v).otherwise(x),
+    "where": lambda c, a, b: f"CASE WHEN isnan({c}) OR {c} = 0 THEN {b} ELSE {a} END",
+    "fillna": lambda x, v: f"CASE WHEN {x} IS NULL OR isnan({x}) THEN {v} ELSE {x} END",
 }
+
+
+def _shim(op: str, *args: str) -> Column:
+    return F.expr(SQL_OPS[op](*(f"({a})" for a in args)))
+
+
+def safe_div(n: str, d: str) -> Column:
+    """``n / d`` with numpy semantics over SQL text operands (such as
+    column names): x/±0 → ±Inf, 0/0 → NaN."""
+    return _shim("/", n, d)
+
+
+def safe_mod(n: str, d: str) -> Column:
+    """numpy ``n % d`` over SQL text operands: the divisor's sign; x % ±0 → NaN."""
+    return _shim("%", n, d)
+
+
+def safe_floordiv(n: str, d: str) -> Column:
+    """numpy ``n // d`` over SQL text operands: n // ±0 is n / ±0."""
+    return _shim("//", n, d)

@@ -21,7 +21,9 @@ materializes every intermediate eagerly (pandas), which at 100 TB
 would mean N-1 full materializations; here there are zero.
 
 NULL handling: after the outer join, absent cells are NULL; each
-column reference is wrapped ``coalesce(col, NaN)`` so downstream
+column reference in the formula's SQL text reads ``coalesce(col,
+NaN)`` (``functions.math.NAN``, a non-nullable NaN), and an operand
+without the output column reads the NaN itself, so downstream
 arithmetic propagates NaN exactly like numpy (Java double arithmetic
 is IEEE-754, identical to numpy's elementwise results).
 """
@@ -33,8 +35,7 @@ from typing import Any, Mapping
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ssb_coefficient_maker_spark.catalog import Matrix, Vector
 from ssb_coefficient_maker_spark.formula.parser import (
@@ -44,12 +45,8 @@ from ssb_coefficient_maker_spark.formula.parser import (
     evaluate,
     extract_variables,
 )
-from ssb_coefficient_maker_spark.functions.math import COLUMN_OPS
+from ssb_coefficient_maker_spark.functions.math import NAN, SQL_OPS, ident, num
 from ssb_coefficient_maker_spark.session import ROW_ID
-
-
-def NAN() -> Column:
-    return F.lit(float("nan"))
 
 
 def _operands(
@@ -146,27 +143,27 @@ def compile_formulas_fused(
     out_cols = _union_cols(frames)
     joined = _aligned_join(frames, out_cols)
     slot = {name: (i, set(m.value_cols)) for i, (name, m) in enumerate(frames.items())}
-    projections = [F.col(ROW_ID)]
+    projections = [ROW_ID]
     result_cols: dict[str | None, list[str]] = {}
     for rname, (_, vectors, scalars) in per_formula.items():
         _check_vectors(vectors, out_cols)
 
-        def col_ref(var: str, pos: int, vectors=vectors, scalars=scalars) -> Column:
+        def col_ref(var: str, pos: int, vectors=vectors, scalars=scalars) -> str:
             if var in slot:
                 i, present = slot[var]
                 if out_cols[pos] in present:
-                    return F.coalesce(F.col(_operand_col(i, pos)), NAN())
-                return NAN()  # column absent from this operand → NaN (pandas align)
+                    return f"coalesce({_operand_col(i, pos)}, {NAN})"
+                return NAN  # column absent from this operand → NaN (pandas align)
             if var in vectors:
-                return F.lit(float(vectors[var].values[pos]))
-            return F.lit(scalars[var])
+                return num(vectors[var].values[pos])
+            return num(scalars[var])
 
         cols = [out_c if rname is None else f"{rname}_{out_c}" for out_c in out_cols]
         for pos, alias in enumerate(cols):
-            col = evaluate(exprs[rname], lambda v: col_ref(v, pos), COLUMN_OPS)
-            projections.append(col.cast("double").alias(alias))
+            sql = evaluate(exprs[rname], lambda v: col_ref(v, pos), SQL_OPS)
+            projections.append(f"{sql} AS {ident(alias)}")
         result_cols[rname] = cols
-    return joined.select(projections), result_cols
+    return joined.selectExpr(*projections), result_cols
 
 
 def _operand_col(i: int, pos: int) -> str:
@@ -196,13 +193,12 @@ def _aligned_join(
     unify = col_key is not None or len(
         {m.df.schema[ROW_ID].dataType.simpleString() for m in frames.values()}
     ) > 1
-    prefixed: list[DataFrame] = []
-    for i, m in enumerate(frames.values()):
-        rid = F.col(ROW_ID).cast("string") if unify else F.col(ROW_ID)
-        sel = [rid.alias(ROW_ID), *keys[1:]] + [
-            F.col(c).alias(_operand_col(i, pos[c])) for c in m.value_cols
-        ]
-        prefixed.append(m.df.select(sel))
+    rid = f"CAST({ROW_ID} AS STRING) AS {ROW_ID}" if unify else ROW_ID
+    prefixed = [
+        m.df.selectExpr(rid, *keys[1:], *(f"{ident(c)} AS {_operand_col(i, pos[c])}"
+                                          for c in m.value_cols))
+        for i, m in enumerate(frames.values())
+    ]
     return reduce(lambda a, b: a.join(b, on=keys, how="full_outer"), prefixed)
 
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ssb_coefficient_maker_spark.catalog import Matrix, Vector
@@ -39,13 +39,8 @@ from ssb_coefficient_maker_spark.formula.parser import (
     Var,
     evaluate,
 )
-from ssb_coefficient_maker_spark.functions.math import COLUMN_OPS
-from ssb_coefficient_maker_spark.plans.alignment import (
-    NAN,
-    _aligned_join,
-    _operand_col,
-    _operands,
-)
+from ssb_coefficient_maker_spark.functions.math import NAN, SQL_OPS, ident, num, string
+from ssb_coefficient_maker_spark.plans.alignment import _aligned_join, _operand_col, _operands
 from ssb_coefficient_maker_spark.session import ROW_ID
 
 COL_ID = "__col_id__"
@@ -59,10 +54,8 @@ class TripletMatrix:
         missing = {ROW_ID, COL_ID, VALUE} - set(df.columns)
         if missing:
             raise ValueError(f"triplet matrix missing column(s) {missing}")
-        self.df = df.select(
-            F.col(ROW_ID),
-            F.col(COL_ID).cast("string").alias(COL_ID),
-            F.col(VALUE).cast("double").alias(VALUE),
+        self.df = df.selectExpr(
+            ROW_ID, f"CAST({COL_ID} AS STRING) AS {COL_ID}", f"CAST({VALUE} AS DOUBLE) AS {VALUE}"
         )
 
 
@@ -70,7 +63,7 @@ def wide_to_triplet(m: Matrix) -> TripletMatrix:
     """Unpivot a wide Matrix via stack() — a narrow, shuffle-free
     transform (each input row yields `width` output rows)."""
     width = len(m.value_cols)
-    pairs = ", ".join(f"'{c}', `{c}`" for c in m.value_cols)
+    pairs = ", ".join(f"{string(c)}, {ident(c)}" for c in m.value_cols)
     df = m.df.selectExpr(
         ROW_ID, f"stack({width}, {pairs}) AS ({COL_ID}, {VALUE})"
     )
@@ -83,11 +76,7 @@ def transpose_triplet(t: TripletMatrix) -> TripletMatrix:
     re-pivot; this is why transpose routes formulas onto the triplet
     path.)"""
     return TripletMatrix(
-        t.df.select(
-            F.col(COL_ID).alias(ROW_ID),
-            F.col(ROW_ID).cast("string").alias(COL_ID),
-            F.col(VALUE),
-        )
+        t.df.selectExpr(f"{COL_ID} AS {ROW_ID}", f"CAST({ROW_ID} AS STRING) AS {COL_ID}", VALUE)
     )
 
 
@@ -114,22 +103,12 @@ def matmul_triplet(a: TripletMatrix, b: TripletMatrix) -> TripletMatrix:
     # a NULL value in a present triplet row is an invalid/NaN cell
     # (the elementwise compiler coalesces identically) — it must
     # poison its sums, not be silently skipped by SUM's null-skipping
-    left = a.df.select(
-        F.col(ROW_ID),
-        F.col(COL_ID).alias(kl),
-        F.coalesce(F.col(VALUE), NAN()).alias("__mm_a__"),
+    left = a.df.selectExpr(ROW_ID, f"{COL_ID} AS {kl}", f"coalesce({VALUE}, {NAN}) AS __mm_a__")
+    right = b.df.selectExpr(
+        f"CAST({ROW_ID} AS STRING) AS {kl}", COL_ID, f"coalesce({VALUE}, {NAN}) AS __mm_b__"
     )
-    right = b.df.select(
-        F.col(ROW_ID).cast("string").alias(kl),
-        F.col(COL_ID),
-        F.coalesce(F.col(VALUE), NAN()).alias("__mm_b__"),
-    )
-    prod = left.join(right, kl).select(
-        ROW_ID,
-        COL_ID,
-        (F.col("__mm_a__") * F.col("__mm_b__")).alias("__mm_p__"),
-    )
-    out = prod.groupBy(ROW_ID, COL_ID).agg(F.sum("__mm_p__").alias(VALUE))
+    prod = left.join(right, kl).selectExpr(ROW_ID, COL_ID, "__mm_a__ * __mm_b__ AS __mm_p__")
+    out = prod.groupBy(ROW_ID, COL_ID).agg(F.expr(f"sum(__mm_p__) AS {VALUE}"))
     return TripletMatrix(out)
 
 
@@ -143,16 +122,12 @@ def identity_triplet(a: TripletMatrix) -> TripletMatrix:
     the result unions cleanly with matmul outputs."""
     lbl = "__lbl__"
     labels = (
-        a.df.select(F.col(ROW_ID).cast("string").alias(lbl))
-        .union(a.df.select(F.col(COL_ID).alias(lbl)))
+        a.df.selectExpr(f"CAST({ROW_ID} AS STRING) AS {lbl}")
+        .union(a.df.selectExpr(f"{COL_ID} AS {lbl}"))
         .distinct()
     )
     return TripletMatrix(
-        labels.select(
-            F.col(lbl).alias(ROW_ID),
-            F.col(lbl).alias(COL_ID),
-            F.lit(1.0).alias(VALUE),
-        )
+        labels.selectExpr(f"{lbl} AS {ROW_ID}", f"{lbl} AS {COL_ID}", f"{num(1.0)} AS {VALUE}")
     )
 
 
@@ -173,7 +148,7 @@ def neumann_series(a: TripletMatrix, terms: int) -> TripletMatrix:
     add, not poison), unlike the elementwise formula path where
     absence is NaN under pd.eval union alignment. A present-but-NaN
     cell still poisons every sum it touches (matmul_triplet coalesces
-    NULL→NaN, and the final F.sum propagates NaN). Row ids are
+    NULL→NaN, and the final sum propagates NaN). Row ids are
     returned as STRING labels — the series mixes matmul outputs with
     the identity's label column, so the common label type wins.
 
@@ -193,10 +168,8 @@ def neumann_series(a: TripletMatrix, terms: int) -> TripletMatrix:
 
 def _series_term(t: TripletMatrix) -> DataFrame:
     """One Neumann term, keyed by string labels with NULL read as NaN."""
-    return t.df.select(
-        F.col(ROW_ID).cast("string").alias(ROW_ID),
-        COL_ID,
-        F.coalesce(F.col(VALUE), NAN()).alias(VALUE),
+    return t.df.selectExpr(
+        f"CAST({ROW_ID} AS STRING) AS {ROW_ID}", COL_ID, f"coalesce({VALUE}, {NAN}) AS {VALUE}"
     )
 
 
@@ -204,7 +177,7 @@ def _series_sum(parts: list[DataFrame]) -> TripletMatrix:
     total = (
         reduce(lambda x, y: x.unionByName(y), parts)
         .groupBy(ROW_ID, COL_ID)
-        .agg(F.sum(VALUE).alias(VALUE))
+        .agg(F.expr(f"sum({VALUE}) AS {VALUE}"))
     )
     return TripletMatrix(total)
 
@@ -244,7 +217,7 @@ def leontief_total_requirements(
     term = a
     for _ in range(max_terms):
         obs = Observation()
-        term_df = _series_term(term).observe(obs, F.max(F.abs(VALUE)).alias("peak"))
+        term_df = _series_term(term).observe(obs, F.expr(f"max(abs({VALUE})) AS peak"))
         term_df = term_df.localCheckpoint()
         peak = obs.get["peak"]
         if peak is None or peak < tol:
@@ -416,16 +389,16 @@ def compile_formula_triplet(
     }
     joined = _aligned_join(long, [VALUE], col_key=COL_ID)
 
-    def resolve(var: str) -> Column:
+    def resolve(var: str) -> str:
         if var in slot:
-            return F.coalesce(F.col(_operand_col(slot[var], 0)), NAN())
+            return f"coalesce({_operand_col(slot[var], 0)}, {NAN})"
         if var in vectors:
             # label-based broadcast: map literal keyed by column label
-            kv = []
-            for label, value in zip(vectors[var].labels, vectors[var].values):
-                kv += [F.lit(str(label)), F.lit(float(value))]
-            return F.coalesce(F.create_map(*kv)[F.col(COL_ID)], NAN())
-        return F.lit(scalars[var])
+            kv = ", ".join(
+                f"{string(label)}, {num(value)}"
+                for label, value in zip(vectors[var].labels, vectors[var].values)
+            )
+            return f"coalesce(map({kv})[{COL_ID}], {NAN})"
+        return num(scalars[var])
 
-    out = evaluate(expr, resolve, COLUMN_OPS).cast("double").alias(VALUE)
-    return joined.select(ROW_ID, COL_ID, out)
+    return joined.selectExpr(ROW_ID, COL_ID, f"{evaluate(expr, resolve, SQL_OPS)} AS {VALUE}")

@@ -17,7 +17,9 @@ Execution shape: the reference scans the full result 1-3 times on the
 driver (status, count, fill — reference coeff_maker.py:93,101,106).
 Here the audit is ONE aggregate over all value columns
 (``audit_exprs``: partial aggregation map-side), and the fill is a
-lazy ``when()`` projection fused into the result plan by Catalyst.
+lazy ``CASE`` projection fused into the result plan by Catalyst. Both
+are built as SQL text — one parsed expression per aggregate, one
+``selectExpr`` for the fill — not as a py4j ``Column`` tree per column.
 When a result is materialized — collected to pandas or written to
 parquet — the aggregate is observed on that action (api.py's sink), so
 the audit adds no job. ``validate`` runs it as a job of its own only
@@ -25,44 +27,46 @@ for ``evaluate_formula``, whose result stays lazy.
 
 One validator serves both value carriers: float64 columns and the
 decimal strings of ADP mode (adp.py). A ``Carrier`` names the carrier's
-invalid and ±Inf predicates and its fill literal; everything else —
-the audit aggregate, the fill projection and the warn/raise decision
-(``check``) — is shared by the standalone audit and the sink.
+invalid and ±Inf predicates and its fill literal, as SQL text;
+everything else — the audit aggregate, the fill projection and the
+warn/raise decision (``check``) — is shared by the standalone audit and
+the sink.
 """
 
 from __future__ import annotations
 
 import warnings
 from dataclasses import dataclass
-from typing import Any, Callable
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-INF = float("inf")
+from ssb_coefficient_maker_spark.functions.math import INF, ident, num
 
 
-def invalid_cond(c: str) -> Column:
-    col = F.col(c)
-    return F.isnull(col) | F.isnan(col) | (F.abs(col) == INF)
+def invalid_cond(c: str) -> str:
+    q = ident(c)
+    return f"({q} IS NULL OR isnan({q}) OR abs({q}) = {num(INF)})"
 
 
-def inf_cond(c: str) -> Column:
-    return F.abs(F.col(c)) == INF
+def inf_cond(c: str) -> str:
+    return f"(abs({ident(c)}) = {num(INF)})"
 
 
 @dataclass(frozen=True)
 class Carrier:
-    """How a result's value columns carry invalid cells: a predicate
-    for every invalid cell, one for the ±Inf subset (the rest are NaN
-    or missing — the classes are disjoint), and the fill literal."""
+    """How a result's value columns carry invalid cells, as SQL text
+    over a column name: a predicate for every invalid cell, one for the
+    ±Inf subset (the rest are NaN or missing — the classes are
+    disjoint), and the fill literal."""
 
-    invalid: Callable[[str], Column]
-    inf: Callable[[str], Column]
-    fill: Any
+    invalid: Callable[[str], str]
+    inf: Callable[[str], str]
+    fill: str
 
 
-FLOAT = Carrier(invalid_cond, inf_cond, 0.0)
+FLOAT = Carrier(invalid_cond, inf_cond, num(0.0))
 
 
 @dataclass
@@ -98,11 +102,11 @@ def audit_exprs(value_cols: list[str], carrier: Carrier = FLOAT) -> list[Column]
     """The audit's aggregate: a row count plus two sums per column
     (invalid, ±Inf). Run by ``invalid_status`` or observed on a collect
     or write."""
-    aggs = [F.count(F.lit(1)).alias("__rows__")]
+    aggs = ["count(1) AS __rows__"]
     for c in value_cols:
-        aggs.append(F.sum(carrier.invalid(c).cast("long")).alias(f"__inv__{c}"))
-        aggs.append(F.sum(carrier.inf(c).cast("long")).alias(f"__inf__{c}"))
-    return aggs
+        aggs.append(f"sum(CAST({carrier.invalid(c)} AS BIGINT)) AS {ident(f'__inv__{c}')}")
+        aggs.append(f"sum(CAST({carrier.inf(c)} AS BIGINT)) AS {ident(f'__inf__{c}')}")
+    return [F.expr(a) for a in aggs]
 
 
 def status_of(row: dict, value_cols: list[str]) -> InvalidStatus:
@@ -131,11 +135,11 @@ def fill_invalid(
     coeff_maker.py:205-229 — but vectorized, no per-cell loop)."""
     # preserve every non-value column (wide: just ROW_ID; triplet:
     # ROW_ID + __col_id__)
-    sel = [F.col(c) for c in df.columns if c not in value_cols] + [
-        F.when(carrier.invalid(c), F.lit(carrier.fill)).otherwise(F.col(c)).alias(c)
+    keep = [ident(c) for c in df.columns if c not in value_cols]
+    return df.selectExpr(*keep, *(
+        f"CASE WHEN {carrier.invalid(c)} THEN {carrier.fill} ELSE {ident(c)} END AS {ident(c)}"
         for c in value_cols
-    ]
-    return df.select(sel)
+    ))
 
 
 def _cause_fragment(status: InvalidStatus) -> str:

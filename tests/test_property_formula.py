@@ -13,6 +13,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from ssb_coefficient_maker_spark.api import FormulaEvaluator
+from ssb_coefficient_maker_spark.functions import safe_div, safe_floordiv, safe_mod
 
 NAMES = ["a", "b", "c"]
 
@@ -90,8 +91,8 @@ def test_random_formula_matches_pandas(shared_evaluator, matrices, formula):
 
 # ------------------------------------------------------------------
 # Every binary operator over a grid of special values: the wide,
-# triplet and Series-only paths must all give numpy's answer, NaN-aware
-# and signed-zero-aware. ``**`` may differ by one ulp: Java's
+# triplet and Series-only paths (and, for / % //, the exported shims)
+# must all give numpy's answer, NaN-aware and signed-zero-aware. ``**`` may differ by one ulp: Java's
 # StrictMath.pow and C's pow round the last bit differently.
 
 GRID = [-5.0, -1e-20, -0.0, 0.0, 0.1, 0.7, 1.0, 3.0, np.inf, -np.inf, np.nan]
@@ -137,8 +138,24 @@ def grid(spark):
     return FormulaEvaluator(data, validation="defer", spark=spark), x, y
 
 
+def _assert_numpy_exact(path: str, formula: str, res, exp, rtol: float = 0.0) -> None:
+    """``res`` equals numpy's ``exp`` cell for cell: NaN where numpy has
+    NaN, otherwise within ``rtol`` and with numpy's sign bit."""
+    res = np.asarray(res, dtype=np.float64).reshape(exp.shape)
+    nan = np.isnan(exp)
+    with np.errstate(invalid="ignore"):
+        close = np.isclose(res, exp, rtol=rtol, atol=0.0) & (np.signbit(res) == np.signbit(exp))
+    same = np.where(nan, np.isnan(res), close)
+    bad = [(idx, res[idx], exp[idx]) for idx in zip(*np.nonzero(~same))]
+    assert not bad, f"{path} {formula}: (cell, got, numpy) {bad}"
+
+
+# the exported shims, over SQL text operands (here column names)
+SHIMS = {"x / y": safe_div, "x % y": safe_mod, "x // y": safe_floordiv}
+
+
 @pytest.mark.parametrize("formula", list(GRID_OPS))
-def test_operator_grid_matches_numpy(grid, formula):
+def test_operator_grid_matches_numpy(spark, grid, formula):
     fe, x, y = grid
     n = len(GRID)
     with np.errstate(all="ignore"):
@@ -149,12 +166,41 @@ def test_operator_grid_matches_numpy(grid, formula):
         .loc[range(n), list(x.columns)],
         "series": fe.evaluate_to_pandas(formula.replace("x", "u").replace("y", "v")),
     }
+    if formula in SHIMS:
+        pairs = spark.createDataFrame(pd.DataFrame(
+            {"i": range(n * n), "x": x.to_numpy().ravel(), "y": y.to_numpy().ravel()}))
+        shim = pairs.select("i", SHIMS[formula]("x", "y")).toPandas().sort_values("i")
+        got["shim"] = shim.iloc[:, 1]
     rtol = 1e-15 if "pow" in formula or "**" in formula else 0.0
     for path, res in got.items():
-        res = np.asarray(res, dtype=np.float64).reshape(n, n)
-        nan = np.isnan(exp)
-        with np.errstate(invalid="ignore"):
-            close = np.isclose(res, exp, rtol=rtol, atol=0.0) & (np.signbit(res) == np.signbit(exp))
-        same = np.where(nan, np.isnan(res), close)
-        bad = [(GRID[i], GRID[j], res[i, j], exp[i, j]) for i, j in zip(*np.nonzero(~same))]
-        assert not bad, f"{path} {formula}: (x, y, got, numpy) {bad}"
+        _assert_numpy_exact(path, formula, res, exp, rtol)
+
+
+# Literals as written in a formula: signed zero, a decimal fraction that
+# must stay a double (0.1 + 0.2 is 0.30000000000000004, not DECIMAL
+# 0.3), a subnormal, the largest finite magnitudes and an overflow to
+# inf. Each result keeps a finite cell: an all-invalid one raises.
+LITERAL_FORMULAS = [
+    "x * -0.0",
+    "-x - -0.0",
+    "where(x, x / -0.0, -0.0)",
+    "0.1 + 0.2 + x",
+    "x * 3",
+    "x * 1e-320",
+    "1e-320 / x",
+    "x * 1e308",
+    "abs(x) < 1e400",
+    "where(x, x * -1e400, x)",
+]
+NUMPY_FUNCS = {"abs": np.abs, "where": lambda c, a, b: np.where(np.nan_to_num(c) != 0, a, b)}
+
+
+@pytest.mark.parametrize("formula", LITERAL_FORMULAS)
+def test_literals_match_numpy(grid, formula):
+    fe, x, _ = grid
+    n = len(GRID)
+    with np.errstate(all="ignore"):
+        exp = np.asarray(eval(formula, NUMPY_FUNCS, {"x": x.to_numpy()}), dtype=np.float64)
+    for path, name in (("wide", "x"), ("triplet", "tx")):
+        res = fe.evaluate_to_pandas(formula.replace("x", name)).loc[range(n), list(x.columns)]
+        _assert_numpy_exact(path, formula, res, exp)

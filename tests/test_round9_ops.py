@@ -449,10 +449,10 @@ class TestLeontiefFormula:
             evaluate,
             parse_formula,
         )
-        from ssb_coefficient_maker_spark.functions.math import COLUMN_OPS
+        from ssb_coefficient_maker_spark.functions.math import SQL_OPS
 
         with pytest.raises(FormulaError, match="triplet"):
-            evaluate(parse_formula("leontief(a)"), lambda n: None, COLUMN_OPS)
+            evaluate(parse_formula("leontief(a)"), lambda n: None, SQL_OPS)
 
     def test_variables_and_routing_predicates(self, spark):
         from ssb_coefficient_maker_spark.formula.parser import (
