@@ -22,8 +22,8 @@ would mean N-1 full materializations; here there are zero.
 
 NULL handling: after the outer join, absent cells are NULL; each
 column reference in the formula's SQL text reads ``coalesce(col,
-NaN)`` (``functions.math.NAN``, a non-nullable NaN), and an operand
-without the output column reads the NaN itself, so downstream
+NaN)`` (``functions.math.or_nan``, non-nullable), and an operand
+without the output column reads NaN itself, so downstream
 arithmetic propagates NaN exactly like numpy (Java double arithmetic
 is IEEE-754, identical to numpy's elementwise results).
 """
@@ -45,7 +45,7 @@ from ssb_coefficient_maker_spark.formula.parser import (
     evaluate,
     extract_variables,
 )
-from ssb_coefficient_maker_spark.functions.math import NAN, SQL_OPS, ident, num
+from ssb_coefficient_maker_spark.functions.math import NAN, SQL_OPS, ident, num, or_nan
 from ssb_coefficient_maker_spark.session import ROW_ID
 
 
@@ -152,7 +152,7 @@ def compile_formulas_fused(
             if var in slot:
                 i, present = slot[var]
                 if out_cols[pos] in present:
-                    return f"coalesce({_operand_col(i, pos)}, {NAN})"
+                    return or_nan(_operand_col(i, pos))
                 return NAN  # column absent from this operand → NaN (pandas align)
             if var in vectors:
                 return num(vectors[var].values[pos])

@@ -39,7 +39,7 @@ from ssb_coefficient_maker_spark.formula.parser import (
     Var,
     evaluate,
 )
-from ssb_coefficient_maker_spark.functions.math import NAN, SQL_OPS, ident, num, string
+from ssb_coefficient_maker_spark.functions.math import SQL_OPS, ident, num, or_nan, string
 from ssb_coefficient_maker_spark.plans.alignment import _aligned_join, _operand_col, _operands
 from ssb_coefficient_maker_spark.session import ROW_ID
 
@@ -103,9 +103,9 @@ def matmul_triplet(a: TripletMatrix, b: TripletMatrix) -> TripletMatrix:
     # a NULL value in a present triplet row is an invalid/NaN cell
     # (the elementwise compiler coalesces identically) — it must
     # poison its sums, not be silently skipped by SUM's null-skipping
-    left = a.df.selectExpr(ROW_ID, f"{COL_ID} AS {kl}", f"coalesce({VALUE}, {NAN}) AS __mm_a__")
+    left = a.df.selectExpr(ROW_ID, f"{COL_ID} AS {kl}", f"{or_nan(VALUE)} AS __mm_a__")
     right = b.df.selectExpr(
-        f"CAST({ROW_ID} AS STRING) AS {kl}", COL_ID, f"coalesce({VALUE}, {NAN}) AS __mm_b__"
+        f"CAST({ROW_ID} AS STRING) AS {kl}", COL_ID, f"{or_nan(VALUE)} AS __mm_b__"
     )
     prod = left.join(right, kl).selectExpr(ROW_ID, COL_ID, "__mm_a__ * __mm_b__ AS __mm_p__")
     out = prod.groupBy(ROW_ID, COL_ID).agg(F.expr(f"sum(__mm_p__) AS {VALUE}"))
@@ -169,7 +169,7 @@ def neumann_series(a: TripletMatrix, terms: int) -> TripletMatrix:
 def _series_term(t: TripletMatrix) -> DataFrame:
     """One Neumann term, keyed by string labels with NULL read as NaN."""
     return t.df.selectExpr(
-        f"CAST({ROW_ID} AS STRING) AS {ROW_ID}", COL_ID, f"coalesce({VALUE}, {NAN}) AS {VALUE}"
+        f"CAST({ROW_ID} AS STRING) AS {ROW_ID}", COL_ID, f"{or_nan(VALUE)} AS {VALUE}"
     )
 
 
@@ -391,14 +391,14 @@ def compile_formula_triplet(
 
     def resolve(var: str) -> str:
         if var in slot:
-            return f"coalesce({_operand_col(slot[var], 0)}, {NAN})"
+            return or_nan(_operand_col(slot[var], 0))
         if var in vectors:
             # label-based broadcast: map literal keyed by column label
             kv = ", ".join(
                 f"{string(label)}, {num(value)}"
                 for label, value in zip(vectors[var].labels, vectors[var].values)
             )
-            return f"coalesce(map({kv})[{COL_ID}], {NAN})"
+            return or_nan(f"map({kv})[{COL_ID}]")
         return num(scalars[var])
 
     return joined.selectExpr(ROW_ID, COL_ID, f"{evaluate(expr, resolve, SQL_OPS)} AS {VALUE}")
