@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ssb_coefficient_maker_spark.catalog import Matrix, Vector, _stringify, labelled
+from ssb_coefficient_maker_spark.catalog import Matrix, _stringify, labelled
 from ssb_coefficient_maker_spark.formula.parser import (
     COMPARISONS,
     FormulaError,
@@ -97,9 +97,9 @@ def adp_matrix_from_pandas(spark: SparkSession, pdf: pd.DataFrame, dps: int) -> 
     )
 
 
-def adp_vector_from_pandas(series: pd.Series, dps: int) -> Vector:
-    vals = np.array([_to_decimal_str(v, dps) for v in series], dtype=object)
-    return Vector(labels=list(series.index), values=vals)
+def adp_vector_from_pandas(series: pd.Series, dps: int) -> pd.Series:
+    """A pandas Series as decimal strings, keeping its index."""
+    return series.map(lambda v: _to_decimal_str(v, dps))
 
 
 def _to_mpf(value: Any) -> Any:
@@ -168,7 +168,7 @@ MP_OPS = {
 
 def compile_adp_formula(
     expr: FormulaExpr,
-    datasets: dict[str, Matrix | Vector | float],
+    datasets: dict[str, Matrix | pd.Series | float],
     dps: int,
 ) -> tuple[DataFrame, list[str]]:
     """Compile an ADP formula: aligned join + one mapInPandas stage."""

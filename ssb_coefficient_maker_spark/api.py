@@ -29,11 +29,9 @@ from ssb_coefficient_maker_spark import adp as adp_mod
 from ssb_coefficient_maker_spark import catalog
 from ssb_coefficient_maker_spark.catalog import (
     Matrix,
-    Vector,
     matrix_from_pandas,
     matrix_from_spark,
     matrix_to_pandas,
-    vector_from_pandas,
 )
 from ssb_coefficient_maker_spark.formula.parser import (
     FormulaError,
@@ -122,7 +120,7 @@ class FormulaEvaluator:
         self.validation = validation
         self.verbose = verbose
         self.last_invalid_count: int | None = None
-        self.datasets: dict[str, Matrix | Vector | float] = {}
+        self.datasets: dict[str, Matrix | TripletMatrix | pd.Series | float] = {}
         for name, value in data_dict.items():
             self._register(name, value)
         if self.verbose:
@@ -146,14 +144,12 @@ class FormulaEvaluator:
                 )
                 return
             if isinstance(value, pd.Series):
-                self.datasets[name] = adp_mod.adp_vector_from_pandas(
-                    value, self.decimal_precision
-                )
+                self.datasets[name] = adp_mod.adp_vector_from_pandas(value, self.decimal_precision)
                 return
         if isinstance(value, pd.DataFrame):
             self.datasets[name] = matrix_from_pandas(self.spark, value)
         elif isinstance(value, pd.Series):
-            self.datasets[name] = vector_from_pandas(value)
+            self.datasets[name] = value.astype(np.float64)
         elif isinstance(value, DataFrame):
             if COL_ID in value.columns and VALUE in value.columns:
                 self.datasets[name] = TripletMatrix(value)
@@ -165,7 +161,7 @@ class FormulaEvaluator:
                 )
             else:
                 self.datasets[name] = matrix_from_spark(value)
-        elif isinstance(value, (Matrix, Vector, TripletMatrix)):
+        elif isinstance(value, (Matrix, TripletMatrix)):
             self.datasets[name] = value
         elif isinstance(value, (int, float)):
             self.datasets[name] = float(value)
@@ -245,7 +241,7 @@ class FormulaEvaluator:
             )
         operands = [self.datasets[n] for n in names]
         matrices = any(isinstance(d, Matrix) for d in operands)
-        vectors = any(isinstance(d, Vector) for d in operands)
+        vectors = any(isinstance(d, pd.Series) for d in operands)
         triplets = any(isinstance(d, TripletMatrix) for d in operands)
         has_mm, has_t = contains_matmul(expr), contains_transpose(expr)
         mixed = matrices and vectors

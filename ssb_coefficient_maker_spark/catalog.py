@@ -1,15 +1,14 @@
-"""Named-dataset registry and matrix <-> pandas conversion.
+"""Named-dataset matrix form and matrix <-> pandas conversion.
 
 The reference holds its datasets in a plain ``data_dict: dict[str,
 pd.DataFrame | pd.Series]`` (reference coeff_maker.py:592) and relies
 on the pandas row index for alignment. Spark has no row order, so a
 matrix here is a DataFrame with an explicit ``__row_id__`` column
 (string-typed row label) plus one double column per matrix column
-(SURVEY.md §1.1).  Vectors (pandas Series) are small by construction —
-they broadcast across matrix *columns* in the reference semantics
-(reference coeff_maker.py:757-763) — so they are kept driver-side as
-an ordered label->value mapping and inlined as literals at compile
-time (zero shuffle).
+(SURVEY.md §1.1).  Vectors stay pandas Series, as in the reference:
+they are small by construction — they broadcast across matrix
+*columns* (reference coeff_maker.py:757-763) — so they stay on the
+driver and are inlined as literals at compile time (zero shuffle).
 
 Scale notes (100 TB): matrices are arbitrarily long (rows are
 distributed, hash-partitioned by ``__row_id__`` at the alignment
@@ -32,26 +31,6 @@ from ssb_coefficient_maker_spark.functions.math import ident
 from ssb_coefficient_maker_spark.session import ROW_ID
 
 WIDE_MATRIX_THRESHOLD = 4000
-
-
-@dataclass
-class Vector:
-    """Driver-side named vector (pandas Series analog).
-
-    The reference strips a Series' index and broadcasts its values
-    positionally across the DataFrame columns (reference
-    coeff_maker.py:761 ``val.T.to_numpy()``). We keep the Series' index
-    labels (they label a Series-only result, and the triplet path
-    broadcasts by label) but follow the same positional broadcast for
-    parity.
-    """
-
-    labels: list[Any]
-    values: np.ndarray  # float64
-
-    @property
-    def size(self) -> int:
-        return len(self.values)
 
 
 @dataclass
@@ -134,11 +113,6 @@ def matrix_from_spark(
     # operands disagree on the key type
     cols = [f"CAST({ident(c)} AS DOUBLE) AS {ident(c)}" for c in value_cols]
     return Matrix(df=df.selectExpr(f"{ident(rid)} AS {ROW_ID}", *cols), value_cols=value_cols)
-
-
-def vector_from_pandas(series: pd.Series) -> Vector:
-    vals = series.astype(np.float64, copy=True).to_numpy()
-    return Vector(labels=list(series.index), values=vals)
 
 
 def label_order(labels: pd.Index) -> tuple[np.ndarray, pd.Index]:

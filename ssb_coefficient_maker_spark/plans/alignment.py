@@ -37,7 +37,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ssb_coefficient_maker_spark.catalog import Matrix, Vector
+from ssb_coefficient_maker_spark.catalog import Matrix
 from ssb_coefficient_maker_spark.formula.parser import (
     COMPARISONS,
     FormulaError,
@@ -51,14 +51,14 @@ from ssb_coefficient_maker_spark.session import ROW_ID
 
 def _operands(
     expr: FormulaExpr, datasets: Mapping[str, Any], frame_types: tuple[type, ...] = (Matrix,)
-) -> tuple[dict[str, Any], dict[str, Vector], dict[str, float]]:
+) -> tuple[dict[str, Any], dict[str, pd.Series], dict[str, float]]:
     """A formula's frame, vector and scalar operands, in first-seen order."""
     names = extract_variables(expr)
     missing = [n for n in names if n not in datasets]
     if missing:
         raise KeyError(f"formula references unknown dataset(s): {missing}")
     frames = {n: d for n in names if isinstance(d := datasets[n], frame_types)}
-    vectors = {n: d for n in names if isinstance(d := datasets[n], Vector)}
+    vectors = {n: d for n in names if isinstance(d := datasets[n], pd.Series)}
     scalars = {n: float(d) for n in names if isinstance(d := datasets[n], (int, float))}
     return frames, vectors, scalars
 
@@ -68,7 +68,7 @@ def _union_cols(frames: dict[str, Matrix]) -> list[str]:
     return list(dict.fromkeys(c for m in frames.values() for c in m.value_cols))
 
 
-def _check_vectors(vectors: dict[str, Vector], out_cols: list[str]) -> None:
+def _check_vectors(vectors: dict[str, pd.Series], out_cols: list[str]) -> None:
     for vname, vec in vectors.items():
         if vec.size != len(out_cols):
             raise FormulaError(
@@ -81,7 +81,7 @@ def _check_vectors(vectors: dict[str, Vector], out_cols: list[str]) -> None:
 
 def compile_formula(
     expr: FormulaExpr,
-    datasets: dict[str, Matrix | Vector | float],
+    datasets: dict[str, Matrix | pd.Series | float],
 ) -> Matrix:
     """Compile a parsed formula with a frame operand into a single lazy
     Spark DataFrame — the one-formula case of
@@ -97,7 +97,7 @@ def compile_formula(
 
 def compile_formulas_fused(
     exprs: dict[str | None, FormulaExpr],
-    datasets: dict[str, Matrix | Vector | float],
+    datasets: dict[str, Matrix | pd.Series | float],
 ) -> tuple[DataFrame, dict[str | None, list[str]]]:
     """Compile SEVERAL formulas over one shared operand set into ONE
     plan: a single aligned join of the union of frame operands, then
@@ -189,10 +189,8 @@ def _aligned_join(
     keys = [ROW_ID] if col_key is None else [ROW_ID, col_key]
     # operands keep their native row-id type (so a long key can reuse
     # upstream partitioning); only heterogeneous key types force a
-    # unifying cast to string, as do triplet keys (labels are strings)
-    unify = col_key is not None or len(
-        {m.df.schema[ROW_ID].dataType.simpleString() for m in frames.values()}
-    ) > 1
+    # unifying cast to string (triplet keys are already strings)
+    unify = len({m.df.schema[ROW_ID].dataType.simpleString() for m in frames.values()}) > 1
     rid = f"CAST({ROW_ID} AS STRING) AS {ROW_ID}" if unify else ROW_ID
     prefixed = [
         m.df.selectExpr(rid, *keys[1:], *(f"{ident(c)} AS {_operand_col(i, pos[c])}"
@@ -233,20 +231,21 @@ NUMPY_OPS = {
 
 
 def eval_driver(
-    expr: FormulaExpr, operands: Mapping[str, Vector | float], ops: Mapping[str, Any]
+    expr: FormulaExpr, operands: Mapping[str, pd.Series | float], ops: Mapping[str, Any]
 ) -> float | pd.Series:
     """Evaluate a formula over Series and scalar operands on the driver
     with one backend's op table (``NUMPY_OPS`` or ``adp.MP_OPS``, whose
     ``num`` also converts each operand). Vectors combine positionally;
     a result with a vector operand is a Series with the first one's
     labels, any other a float."""
-    vectors = [d for d in operands.values() if isinstance(d, Vector)]
+    vectors = [d for d in operands.values() if isinstance(d, pd.Series)]
     sizes = {v.size for v in vectors}
     if len(sizes) > 1:
         raise FormulaError(f"vector operands disagree on length: {sizes}")
-    values = {n: ops["num"](d.values if isinstance(d, Vector) else d) for n, d in operands.items()}
+    values = {n: ops["num"](d.values if isinstance(d, pd.Series) else d)
+              for n, d in operands.items()}
     with np.errstate(divide="ignore", invalid="ignore"):
         out = evaluate(expr, values.__getitem__, ops)
     if not vectors:
         return float(out)
-    return pd.Series(out, index=vectors[0].labels)
+    return pd.Series(out, index=vectors[0].index)

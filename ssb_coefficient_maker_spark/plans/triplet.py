@@ -5,7 +5,10 @@ beyond a few thousand columns — every formula projection is O(width)
 expressions (SURVEY.md §7 risk 3). The triplet form makes width a
 ROW dimension: a matrix of any width is three columns, formulas
 become joins on ``(__row_id__, __col_id__)``, and the same numpy
-semantics shims apply to the single ``value`` column.
+semantics shims apply to the single ``value`` column. A triplet is
+normalized once, when a ``TripletMatrix`` is made: STRING labels, and
+a NULL value read as NaN; the ops below take their operands as they
+are.
 
 Trade-offs, by design:
 - frame∘frame: full-outer join on the composite key — one shuffle per
@@ -22,10 +25,11 @@ from __future__ import annotations
 
 from functools import reduce
 
+import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ssb_coefficient_maker_spark.catalog import Matrix, Vector
+from ssb_coefficient_maker_spark.catalog import Matrix
 from ssb_coefficient_maker_spark.formula.parser import (
     BinOp,
     Call,
@@ -48,15 +52,20 @@ VALUE = "value"
 
 
 class TripletMatrix:
-    """A matrix in long form: DataFrame (__row_id__, __col_id__, value)."""
+    """A matrix in long form: DataFrame (__row_id__, __col_id__, value).
+
+    The one place a triplet is normalized: both labels are STRING and
+    a NULL value is read as NaN, so every triplet op can take its
+    operands as they are — a NULL cell poisons the sums it enters
+    instead of being skipped by SUM."""
 
     def __init__(self, df: DataFrame):
         missing = {ROW_ID, COL_ID, VALUE} - set(df.columns)
         if missing:
             raise ValueError(f"triplet matrix missing column(s) {missing}")
-        self.df = df.selectExpr(
-            ROW_ID, f"CAST({COL_ID} AS STRING) AS {COL_ID}", f"CAST({VALUE} AS DOUBLE) AS {VALUE}"
-        )
+        self.df = df.selectExpr(f"CAST({ROW_ID} AS STRING) AS {ROW_ID}",
+                                f"CAST({COL_ID} AS STRING) AS {COL_ID}",
+                                f"{or_nan(f'CAST({VALUE} AS DOUBLE)')} AS {VALUE}")
 
 
 def wide_to_triplet(m: Matrix) -> TripletMatrix:
@@ -75,9 +84,7 @@ def transpose_triplet(t: TripletMatrix) -> TripletMatrix:
     no shuffle, any width. (The wide form would need a full unpivot +
     re-pivot; this is why transpose routes formulas onto the triplet
     path.)"""
-    return TripletMatrix(
-        t.df.selectExpr(f"{COL_ID} AS {ROW_ID}", f"CAST({ROW_ID} AS STRING) AS {COL_ID}", VALUE)
-    )
+    return TripletMatrix(t.df.selectExpr(f"{COL_ID} AS {ROW_ID}", f"{ROW_ID} AS {COL_ID}", VALUE))
 
 
 def matmul_triplet(a: TripletMatrix, b: TripletMatrix) -> TripletMatrix:
@@ -100,13 +107,8 @@ def matmul_triplet(a: TripletMatrix, b: TripletMatrix) -> TripletMatrix:
     the sum exactly as in pandas: any NaN term poisons its cell.
     """
     kl = "__mm_k__"
-    # a NULL value in a present triplet row is an invalid/NaN cell
-    # (the elementwise compiler coalesces identically) — it must
-    # poison its sums, not be silently skipped by SUM's null-skipping
-    left = a.df.selectExpr(ROW_ID, f"{COL_ID} AS {kl}", f"{or_nan(VALUE)} AS __mm_a__")
-    right = b.df.selectExpr(
-        f"CAST({ROW_ID} AS STRING) AS {kl}", COL_ID, f"{or_nan(VALUE)} AS __mm_b__"
-    )
+    left = a.df.selectExpr(ROW_ID, f"{COL_ID} AS {kl}", f"{VALUE} AS __mm_a__")
+    right = b.df.selectExpr(f"{ROW_ID} AS {kl}", COL_ID, f"{VALUE} AS __mm_b__")
     prod = left.join(right, kl).selectExpr(ROW_ID, COL_ID, "__mm_a__ * __mm_b__ AS __mm_p__")
     out = prod.groupBy(ROW_ID, COL_ID).agg(F.expr(f"sum(__mm_p__) AS {VALUE}"))
     return TripletMatrix(out)
@@ -118,14 +120,10 @@ def identity_triplet(a: TripletMatrix) -> TripletMatrix:
     Leontief construction ``(I - A)^-1``. One map-side-combined
     distinct over two narrow projections; for a coefficient matrix
     the label set is the sector vocabulary, small by construction at
-    any data scale. Row ids come back as STRING (the label type) so
-    the result unions cleanly with matmul outputs."""
+    any data scale."""
     lbl = "__lbl__"
-    labels = (
-        a.df.selectExpr(f"CAST({ROW_ID} AS STRING) AS {lbl}")
-        .union(a.df.selectExpr(f"{COL_ID} AS {lbl}"))
-        .distinct()
-    )
+    labels = a.df.selectExpr(f"{ROW_ID} AS {lbl}").union(a.df.selectExpr(f"{COL_ID} AS {lbl}"))
+    labels = labels.distinct()
     return TripletMatrix(
         labels.selectExpr(f"{lbl} AS {ROW_ID}", f"{lbl} AS {COL_ID}", f"{num(1.0)} AS {VALUE}")
     )
@@ -147,10 +145,8 @@ def neumann_series(a: TripletMatrix, terms: int) -> TripletMatrix:
     absent triplet cell is ZERO here (so terms with disjoint support
     add, not poison), unlike the elementwise formula path where
     absence is NaN under pd.eval union alignment. A present-but-NaN
-    cell still poisons every sum it touches (matmul_triplet coalesces
-    NULL→NaN, and the final sum propagates NaN). Row ids are
-    returned as STRING labels — the series mixes matmul outputs with
-    the identity's label column, so the common label type wins.
+    cell still poisons every sum it touches (``TripletMatrix`` reads a
+    NULL cell as NaN, and the final sum propagates NaN).
 
     Fixed ``terms`` keeps the whole series ONE lazy plan (no driver
     actions); for the convergence-checked variant see
@@ -161,16 +157,9 @@ def neumann_series(a: TripletMatrix, terms: int) -> TripletMatrix:
     parts = [identity_triplet(a).df]
     term = a
     for _ in range(terms):
-        parts.append(_series_term(term))
+        parts.append(term.df)
         term = matmul_triplet(term, a)
     return _series_sum(parts)
-
-
-def _series_term(t: TripletMatrix) -> DataFrame:
-    """One Neumann term, keyed by string labels with NULL read as NaN."""
-    return t.df.selectExpr(
-        f"CAST({ROW_ID} AS STRING) AS {ROW_ID}", COL_ID, f"{or_nan(VALUE)} AS {VALUE}"
-    )
 
 
 def _series_sum(parts: list[DataFrame]) -> TripletMatrix:
@@ -217,8 +206,7 @@ def leontief_total_requirements(
     term = a
     for _ in range(max_terms):
         obs = Observation()
-        term_df = _series_term(term).observe(obs, F.expr(f"max(abs({VALUE})) AS peak"))
-        term_df = term_df.localCheckpoint()
+        term_df = term.df.observe(obs, F.expr(f"max(abs({VALUE})) AS peak")).localCheckpoint()
         peak = obs.get["peak"]
         if peak is None or peak < tol:
             break
@@ -251,7 +239,7 @@ def triplet_to_wide(t: TripletMatrix, columns: list[str] | None = None) -> DataF
 
 def _rewrite_matrix_ops(
     expr: FormulaExpr,
-    datasets: dict[str, TripletMatrix | Matrix | Vector | float],
+    datasets: dict[str, TripletMatrix | Matrix | pd.Series | float],
 ) -> tuple[FormulaExpr, dict[str, TripletMatrix]]:
     """Replace every matrix-shaped subtree — ``Transpose``,
     ``MatMul``, and ``Neumann`` over matrix operands — with a synthetic variable bound
@@ -261,88 +249,65 @@ def _rewrite_matrix_ops(
     ``(a @ b).T``, ``a @ b @ c``); transpose/matmul of an ELEMENTWISE
     compound (e.g. ``(a + b).T``) refuses loudly — supporting that
     would mean materializing intermediate results mid-formula."""
-    extra: dict[str, TripletMatrix] = {}
-    # structural memos: MatMul/Transpose are frozen dataclasses with
-    # value equality, so '(a @ b) * 2 - a @ b' binds ONE synthetic
-    # operand for both '@' subtrees — one contraction join instead of
-    # two, and no extra alignment join between identical results.
-    # tmemo dedupes at the TripletMatrix level so NESTED repeats
-    # ('(a @ b).T - a @ b') reuse the contraction too; vmemo dedupes
-    # the synthetic variable binding at elementwise positions.
-    tmemo: dict[FormulaExpr, TripletMatrix] = {}
-    vmemo: dict[FormulaExpr, FormulaExpr] = {}
+    # MatMul/Transpose are frozen dataclasses with value equality, so
+    # the memo resolves '(a @ b) * 2 - a @ b' and '(a @ b).T - a @ b'
+    # to ONE contraction join, and ``names`` binds each distinct
+    # subtree at an elementwise position to one synthetic operand
+    # (no alignment join between identical results). Synthetic names
+    # are not identifiers, so they cannot collide with a dataset name.
+    memo: dict[FormulaExpr, TripletMatrix] = {}
+    names: dict[FormulaExpr, Var] = {}
 
     def as_matrix(node: FormulaExpr, ctx: str) -> TripletMatrix:
-        """Resolve a matrix-shaped subtree to a TripletMatrix."""
-        if node in tmemo:
-            return tmemo[node]
-        t = _as_matrix_uncached(node, ctx)
-        tmemo[node] = t
-        return t
-
-    def _as_matrix_uncached(node: FormulaExpr, ctx: str) -> TripletMatrix:
+        """Resolve a matrix-shaped subtree to a TripletMatrix, once."""
+        if node in memo:
+            return memo[node]
         if isinstance(node, Var):
             d = datasets[node.name]  # KeyError parity with unknown variables
             if isinstance(d, Matrix):
-                return wide_to_triplet(d)
-            if isinstance(d, TripletMatrix):
-                return d
-            hint = (
-                " — for a matrix-vector product, register the Series "
-                "as a single-COLUMN DataFrame when it is the right "
-                "operand (m @ v) or a single-ROW DataFrame when it is "
-                "the left (v @ m); the contraction joins the left's "
-                "column labels against the right's row labels"
-                if isinstance(d, Vector)
-                else ""
-            )
-            raise FormulaError(
-                f"{ctx} of non-matrix operand {node.name!r} "
-                f"({type(d).__name__}) is not defined{hint}"
-            )
-        if isinstance(node, Transpose):
-            return transpose_triplet(as_matrix(node.operand, "transpose ('.T')"))
-        if isinstance(node, MatMul):
-            return matmul_triplet(
-                as_matrix(node.left, "matmul ('@')"),
-                as_matrix(node.right, "matmul ('@')"),
-            )
-        if isinstance(node, Neumann):
-            return neumann_series(
-                as_matrix(node.operand, "neumann()"), node.terms
-            )
-        if isinstance(node, Leontief):
+                t = wide_to_triplet(d)
+            elif isinstance(d, TripletMatrix):
+                t = d
+            else:
+                hint = (
+                    " — for a matrix-vector product, register the Series "
+                    "as a single-COLUMN DataFrame when it is the right "
+                    "operand (m @ v) or a single-ROW DataFrame when it is "
+                    "the left (v @ m); the contraction joins the left's "
+                    "column labels against the right's row labels"
+                    if isinstance(d, pd.Series)
+                    else ""
+                )
+                raise FormulaError(
+                    f"{ctx} of non-matrix operand {node.name!r} "
+                    f"({type(d).__name__}) is not defined{hint}"
+                )
+        elif isinstance(node, Transpose):
+            t = transpose_triplet(as_matrix(node.operand, "transpose ('.T')"))
+        elif isinstance(node, MatMul):
+            t = matmul_triplet(as_matrix(node.left, "matmul ('@')"),
+                               as_matrix(node.right, "matmul ('@')"))
+        elif isinstance(node, Neumann):
+            t = neumann_series(as_matrix(node.operand, "neumann()"), node.terms)
+        elif isinstance(node, Leontief):
             # NOTE: unlike every other matrix op this runs DRIVER-SIDE
             # actions at compile time (one scalar max per term + a
             # localCheckpoint lineage cut) — the convergence depth is
             # data-dependent by definition; see
             # leontief_total_requirements's execution contract.
-            return leontief_total_requirements(
-                as_matrix(node.operand, "leontief()"), tol=node.tol
+            t = leontief_total_requirements(as_matrix(node.operand, "leontief()"), tol=node.tol)
+        else:
+            raise FormulaError(
+                f"{ctx} is supported on matrix variables and compositions of "
+                ".T/@/neumann()/leontief() over them, not on elementwise "
+                "compound expressions — bind the subexpression to a name first"
             )
-        raise FormulaError(
-            f"{ctx} is supported on matrix variables and compositions of "
-            ".T/@/neumann()/leontief() over them, not on elementwise "
-            "compound expressions — bind the subexpression to a name first"
-        )
-
-    def bind(t: TripletMatrix, base: str) -> FormulaExpr:
-        tname = base
-        while tname in datasets or tname in extra:  # avoid name collisions
-            tname += "_"
-        extra[tname] = t
-        return Var(tname)
+        memo[node] = t
+        return t
 
     def rw(node: FormulaExpr) -> FormulaExpr:
         if isinstance(node, (Transpose, MatMul, Neumann, Leontief)):
-            if node not in vmemo:
-                if isinstance(node, Transpose) and isinstance(node.operand, Var):
-                    base = f"{node.operand.name}__T"
-                else:
-                    tag = {Transpose: "T", MatMul: "mm", Neumann: "neu", Leontief: "leo"}
-                    base = f"__{tag[type(node)]}{len(extra)}__"
-                vmemo[node] = bind(as_matrix(node, ""), base)
-            return vmemo[node]
+            return names.setdefault(node, Var(f"@{len(names)}"))
         if isinstance(node, BinOp):
             return BinOp(node.op, rw(node.left), rw(node.right))
         if isinstance(node, UnaryOp):
@@ -351,12 +316,12 @@ def _rewrite_matrix_ops(
             return Call(node.func, tuple(rw(a) for a in node.args))
         return node
 
-    return rw(expr), extra
+    return rw(expr), {v.name: as_matrix(node, "") for node, v in names.items()}
 
 
 def compile_formula_triplet(
     expr: FormulaExpr,
-    datasets: dict[str, TripletMatrix | Matrix | Vector | float],
+    datasets: dict[str, TripletMatrix | Matrix | pd.Series | float],
 ) -> DataFrame:
     """Compile a formula over triplet matrices into one lazy plan.
 
@@ -394,10 +359,7 @@ def compile_formula_triplet(
             return or_nan(_operand_col(slot[var], 0))
         if var in vectors:
             # label-based broadcast: map literal keyed by column label
-            kv = ", ".join(
-                f"{string(label)}, {num(value)}"
-                for label, value in zip(vectors[var].labels, vectors[var].values)
-            )
+            kv = ", ".join(f"{string(k)}, {num(v)}" for k, v in vectors[var].items())
             return or_nan(f"map({kv})[{COL_ID}]")
         return num(scalars[var])
 
