@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ssb_coefficient_maker_spark.catalog import Matrix, _stringify, labelled
+from ssb_coefficient_maker_spark.catalog import Matrix, labelled, unique_labels
 from ssb_coefficient_maker_spark.formula.parser import (
     COMPARISONS,
     FormulaError,
@@ -77,8 +77,8 @@ def _to_decimal_str(value: Any, dps: int) -> str:
 
 def adp_matrix_from_pandas(spark: SparkSession, pdf: pd.DataFrame, dps: int) -> Matrix:
     """Ingest a pandas frame (floats or mpf objects) as string columns."""
-    cols = _stringify(pdf.columns)
-    out = pd.DataFrame({ROW_ID: _stringify(pdf.index)})
+    cols = unique_labels(pdf.columns, "column")
+    out = pd.DataFrame({ROW_ID: unique_labels(pdf.index, "row")})
     for src, dst in zip(pdf.columns, cols):
         out[dst] = [_to_decimal_str(v, dps) for v in pdf[src]]
     schema = T.StructType(

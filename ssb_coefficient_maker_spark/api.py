@@ -156,9 +156,7 @@ class FormulaEvaluator:
             elif len(value.columns) - 1 > catalog.WIDE_MATRIX_THRESHOLD:
                 # wide matrices switch to the long/triplet form
                 # automatically (SURVEY.md §7 risk 3)
-                self.datasets[name] = wide_to_triplet(
-                    matrix_from_spark(value, on_wide="allow")
-                )
+                self.datasets[name] = wide_to_triplet(matrix_from_spark(value))
             else:
                 self.datasets[name] = matrix_from_spark(value)
         elif isinstance(value, (Matrix, TripletMatrix)):

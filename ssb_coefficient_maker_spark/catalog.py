@@ -12,15 +12,14 @@ driver and are inlined as literals at compile time (zero shuffle).
 
 Scale notes (100 TB): matrices are arbitrarily long (rows are
 distributed, hash-partitioned by ``__row_id__`` at the alignment
-join); widths beyond a few thousand columns should switch to the
-long/triplet form (SURVEY.md §7 risk 3) — ``wide_threshold`` guards
-this with an explicit error until the triplet path lands.
+join); a registered Spark frame wider than ``WIDE_MATRIX_THRESHOLD``
+columns is converted to the long/triplet form (SURVEY.md §7 risk 3,
+plans/triplet.py), where width is a row dimension.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any, Iterable
 
 import numpy as np
 import pandas as pd
@@ -45,8 +44,21 @@ class Matrix:
         return list(self.value_cols)
 
 
-def _stringify(labels: Iterable[Any]) -> list[str]:
-    return [str(x) for x in labels]
+def unique_labels(axis: pd.Index, kind: str) -> list[str]:
+    """A pandas axis' labels as the strings Spark carries them in.
+
+    Refuses repeated labels — also ones that only repeat as strings,
+    such as ``1`` and ``"1"``: operands align by label through an outer
+    join, which would pair every copy of a label with every other."""
+    labels = pd.Index([str(x) for x in axis])
+    repeated = labels[labels.duplicated()].unique()
+    if len(repeated):
+        raise ValueError(
+            f"{kind} labels repeat (as strings): {list(repeated)}; every row "
+            "and column label of a DataFrame operand must be unique, because "
+            "operands align by label"
+        )
+    return list(labels)
 
 
 def matrix_from_pandas(spark: SparkSession, pdf: pd.DataFrame) -> Matrix:
@@ -55,9 +67,9 @@ def matrix_from_pandas(spark: SparkSession, pdf: pd.DataFrame) -> Matrix:
     Mirrors the reference's float64 ingestion cast (reference
     coeff_maker.py:634-638): non-castable input raises.
     """
+    rows, cols = unique_labels(pdf.index, "row"), unique_labels(pdf.columns, "column")
     cast = pdf.astype(np.float64, copy=True, errors="raise")
-    cols = _stringify(cast.columns)
-    out = pd.DataFrame({ROW_ID: _stringify(cast.index)})
+    out = pd.DataFrame({ROW_ID: rows})
     for src, dst in zip(cast.columns, cols):
         out[dst] = cast[src].to_numpy()
     schema = T.StructType(
@@ -84,16 +96,13 @@ def _rightsized(df: DataFrame, n_rows: int) -> DataFrame:
     return df.coalesce(max(1, -(-n_rows // 10_000)))
 
 
-def matrix_from_spark(
-    df: DataFrame, row_id: str | None = None, on_wide: str = "error"
-) -> Matrix:
+def matrix_from_spark(df: DataFrame, row_id: str | None = None) -> Matrix:
     """Wrap an existing Spark DataFrame as a Matrix.
 
     ``row_id`` names the row-label column (default: ``__row_id__`` if
     present, else error — Spark rows are unordered, an explicit key is
     required; never synthesize one after a shuffle, SURVEY.md §7 risk 2).
-    ``on_wide="allow"`` skips the width guard (the caller is converting
-    to the long/triplet form, plans/triplet.py).
+    Its labels are not checked for repeats: that would cost a job.
     """
     rid = row_id or ROW_ID
     if rid not in df.columns:
@@ -102,11 +111,6 @@ def matrix_from_spark(
             f"got columns {df.columns}"
         )
     value_cols = [c for c in df.columns if c != rid]
-    if on_wide == "error" and len(value_cols) > WIDE_MATRIX_THRESHOLD:
-        raise ValueError(
-            f"matrix has {len(value_cols)} columns; wide matrices beyond "
-            f"{WIDE_MATRIX_THRESHOLD} should use the long/triplet form"
-        )
     # keep the row-id's NATIVE type: a long key joins on long (and can
     # reuse upstream hash-partitioning, e.g. a groupBy that produced
     # this matrix); the alignment join only falls back to string when
@@ -115,27 +119,32 @@ def matrix_from_spark(
     return Matrix(df=df.selectExpr(f"{ident(rid)} AS {ROW_ID}", *cols), value_cols=value_cols)
 
 
-def label_order(labels: pd.Index) -> tuple[np.ndarray, pd.Index]:
-    """Positions that sort ``labels`` — numerically when every label is
-    numeric — and the labels, as numbers when they all are."""
-    numeric = pd.to_numeric(labels, errors="coerce")
-    if not pd.isna(numeric).any():
-        labels = pd.Index(numeric)
+def as_labels(text: pd.Index) -> pd.Index:
+    """Collected label text as pandas labels: numbers when every label
+    is a number's canonical text (``"1"``, ``"2.5"``, not ``"01"``),
+    else the text as it is."""
+    numeric = pd.to_numeric(text, errors="coerce")
+    if pd.isna(numeric).any() or not (pd.Index(numeric).astype(str) == text).all():
+        return pd.Index(text)
+    return pd.Index(numeric)
+
+
+def label_order(text: pd.Index) -> tuple[np.ndarray, pd.Index]:
+    """Positions that sort collected label text — numerically when it
+    reads as numbers (``as_labels``) — and the labels."""
+    labels = as_labels(text)
     return np.argsort(labels.to_numpy(), kind="stable"), labels
 
 
 def labelled(pdf: pd.DataFrame, value_cols: list[str]) -> pd.DataFrame:
     """A collected result (``__row_id__`` plus ``value_cols``) as the
     pandas matrix: rows indexed by their label and sorted by
-    ``label_order`` (Spark output order is nondeterministic), column
-    labels restored as ints when they all are (pandas parity)."""
+    ``label_order`` (Spark output order is nondeterministic), row and
+    column labels as ``as_labels`` reads them (pandas parity)."""
     order, idx = label_order(pd.Index(pdf[ROW_ID].to_numpy()))
     out = pdf[value_cols].iloc[order]
     out.index = idx[order]
-    try:
-        out.columns = [int(c) for c in value_cols]
-    except ValueError:
-        pass
+    out.columns = as_labels(pd.Index(value_cols))
     return out
 
 
