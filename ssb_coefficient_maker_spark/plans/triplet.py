@@ -122,8 +122,11 @@ def identity_triplet(a: TripletMatrix) -> TripletMatrix:
     the label set is the sector vocabulary, small by construction at
     any data scale."""
     lbl = "__lbl__"
-    labels = a.df.selectExpr(f"{ROW_ID} AS {lbl}").union(a.df.selectExpr(f"{COL_ID} AS {lbl}"))
-    labels = labels.distinct()
+    labels = (
+        a.df.selectExpr(f"{ROW_ID} AS {lbl}")
+        .union(a.df.selectExpr(f"{COL_ID} AS {lbl}"))
+        .distinct()
+    )
     return TripletMatrix(
         labels.selectExpr(f"{lbl} AS {ROW_ID}", f"{lbl} AS {COL_ID}", f"{num(1.0)} AS {VALUE}")
     )
