@@ -8,19 +8,21 @@ SURVEY.md §2 Part A warts) and loops per-cell for fills.
 
 Spark's ``DecimalType(38, s)`` cannot host the reference's own ADP
 test values (1e±30 in one column needs floating, not fixed, point), so
-the Spark-native design is:
+ADP differs from float mode in three places only:
 
-- ADP matrices travel as **string columns** (exact decimal repr — the
-  only Arrow-safe lossless carrier for mpf).
-- The whole formula evaluates inside ONE Arrow-batched
-  ``mapInPandas`` per result: strings → mpf at the requested
-  precision → formula evaluated over each batch column through
-  ``MP_OPS`` (object arrays of mpf) → strings out.
-  One Python stage, vectorized per batch, distributed over rows;
-  division WORKS (unlike the reference).
+- its cell codec (``decimal_codec``): registered cells travel as
+  **decimal strings** (exact decimal repr — the only Arrow-safe
+  lossless carrier for mpf) through the same ingestion as float
+  cells (``catalog._matrix_from_pandas``);
+- its op table, ``MP_OPS`` (object arrays of mpf);
+- its executor: after the same aligned join as the float routes
+  (``plans.alignment.align``), the whole formula evaluates inside ONE
+  Arrow-batched ``mapInPandas`` per result: strings → mpf at the
+  requested precision → formula evaluated over each batch column
+  through ``MP_OPS`` → strings out. One Python stage, vectorized per
+  batch, distributed over rows; division WORKS (unlike the reference).
 
-This is explicitly the slow path (SURVEY.md §7 risk 5): opt-in, not
-part of the benchmark surface.
+This is explicitly the slow path (SURVEY.md §7 risk 5): opt-in.
 """
 
 from __future__ import annotations
@@ -31,10 +33,10 @@ from typing import Any, Iterable, Iterator
 import mpmath
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ssb_coefficient_maker_spark.catalog import Matrix, labelled, unique_labels
+from ssb_coefficient_maker_spark.catalog import Codec, Matrix, labelled
 from ssb_coefficient_maker_spark.formula.parser import (
     COMPARISONS,
     FormulaError,
@@ -42,13 +44,7 @@ from ssb_coefficient_maker_spark.formula.parser import (
     evaluate,
 )
 from ssb_coefficient_maker_spark.functions.math import ident, string
-from ssb_coefficient_maker_spark.plans.alignment import (
-    _aligned_join,
-    _check_vectors,
-    _operand_col,
-    _operands,
-    _union_cols,
-)
+from ssb_coefficient_maker_spark.plans.alignment import align
 from ssb_coefficient_maker_spark.session import ROW_ID
 from ssb_coefficient_maker_spark.validation import Carrier, validate
 
@@ -75,31 +71,11 @@ def _to_decimal_str(value: Any, dps: int) -> str:
     return repr(float(value))
 
 
-def adp_matrix_from_pandas(spark: SparkSession, pdf: pd.DataFrame, dps: int) -> Matrix:
-    """Ingest a pandas frame (floats or mpf objects) as string columns."""
-    cols = unique_labels(pdf.columns, "column")
-    out = pd.DataFrame({ROW_ID: unique_labels(pdf.index, "row")})
-    for src, dst in zip(pdf.columns, cols):
-        out[dst] = [_to_decimal_str(v, dps) for v in pdf[src]]
-    schema = T.StructType(
-        [T.StructField(ROW_ID, T.StringType(), False)]
-        + [T.StructField(c, T.StringType(), True) for c in cols]
-    )
-    # coalesce to the partition count the ROW COUNT warrants: Arrow
-    # conversion slices into defaultParallelism chunks regardless of
-    # size, and the ADP mapInPandas then pays one python worker per
-    # ~10-row chunk (catalog._rightsized has the measurement)
-    from ssb_coefficient_maker_spark.catalog import _rightsized
-
-    return Matrix(
-        df=_rightsized(spark.createDataFrame(out, schema=schema), len(out)),
-        value_cols=cols,
-    )
-
-
-def adp_vector_from_pandas(series: pd.Series, dps: int) -> pd.Series:
-    """A pandas Series as decimal strings, keeping its index."""
-    return series.map(lambda v: _to_decimal_str(v, dps))
+def decimal_codec(dps: int) -> Codec:
+    """ADP's cell codec: every cell of a registered DataFrame or Series
+    travels as the exact decimal string ``_to_decimal_str`` writes at
+    ``dps`` digits."""
+    return Codec(lambda s: s.map(lambda v: _to_decimal_str(v, dps)), T.StringType())
 
 
 def _to_mpf(value: Any) -> Any:
@@ -171,29 +147,11 @@ def compile_adp_formula(
     datasets: dict[str, Matrix | pd.Series | float],
     dps: int,
 ) -> tuple[DataFrame, list[str]]:
-    """Compile an ADP formula: aligned join + one mapInPandas stage."""
-    frames, vectors, scalars = _operands(expr, datasets)
-    if not frames:
-        raise FormulaError("ADP mode requires at least one matrix operand")
-    out_cols = _union_cols(frames)
-    _check_vectors(vectors, out_cols)
-    # per output column: the aligned-join column of each frame operand
-    # that has it, and every operand's carried value (a frame's is None,
-    # read as NaN where the column is absent, like pandas alignment)
-    sources = [
-        {
-            name: _operand_col(i, pos)
-            for i, (name, m) in enumerate(frames.items())
-            if out_c in m.value_cols
-        }
-        for pos, out_c in enumerate(out_cols)
-    ]
-    carried = [
-        {**dict.fromkeys(frames), **{n: v.values[pos] for n, v in vectors.items()}, **scalars}
-        for pos in range(len(out_cols))
-    ]
-
-    joined = _aligned_join(frames, out_cols)
+    """Compile an ADP formula: the aligned join (``align``) + one
+    mapInPandas stage. The stage captures plain data only: the joined
+    column names and the carried values of each output column."""
+    joined, out_cols, bindings = align({None: expr}, datasets)
+    operands = bindings[None]
     out_schema = T.StructType(
         [T.StructField(ROW_ID, T.StringType(), False)]
         + [T.StructField(c, T.StringType(), True) for c in out_cols]
@@ -204,14 +162,11 @@ def compile_adp_formula(
 
         num = MP_OPS["num"]
         with mpmath.workdps(dps):
-            consts = [{n: num(v) for n, v in c.items()} for c in carried]
+            consts = [{n: num(v) for n, v in values.items()} for _, values in operands]
             for pdf in batches:
                 data = {ROW_ID: pdf[ROW_ID]}
-                for pos, out_c in enumerate(out_cols):
-                    values = {
-                        **consts[pos],
-                        **{n: num(pdf[src].to_numpy()) for n, src in sources[pos].items()},
-                    }
+                for out_c, (columns, _), const in zip(out_cols, operands, consts):
+                    values = {**const, **{n: num(pdf[c].to_numpy()) for n, c in columns.items()}}
                     out = evaluate(expr, values.__getitem__, MP_OPS)
                     data[out_c] = [mpmath.nstr(v, dps) for v in out]
                 yield pd.DataFrame(data)

@@ -28,17 +28,16 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from ssb_coefficient_maker_spark import adp as adp_mod
 from ssb_coefficient_maker_spark import catalog
 from ssb_coefficient_maker_spark.catalog import (
+    FLOAT64,
     Matrix,
-    matrix_from_pandas,
     matrix_from_spark,
     matrix_to_pandas,
 )
 from ssb_coefficient_maker_spark.formula.parser import (
     FormulaError,
     FormulaExpr,
-    contains_matmul,
-    contains_transpose,
     extract_variables,
+    matrix_ops,
     parse_formula,
 )
 from ssb_coefficient_maker_spark.plans import triplet as triplet_plans
@@ -137,19 +136,11 @@ class FormulaEvaluator:
     def _register(self, name: str, value: Any) -> None:
         if not str(name).isidentifier():
             raise ValueError(f"dataset name {name!r} is not a valid identifier")
-        if self.adp_enabled:
-            if isinstance(value, pd.DataFrame):
-                self.datasets[name] = adp_mod.adp_matrix_from_pandas(
-                    self.spark, value, self.decimal_precision
-                )
-                return
-            if isinstance(value, pd.Series):
-                self.datasets[name] = adp_mod.adp_vector_from_pandas(value, self.decimal_precision)
-                return
+        codec = adp_mod.decimal_codec(self.decimal_precision) if self.adp_enabled else FLOAT64
         if isinstance(value, pd.DataFrame):
-            self.datasets[name] = matrix_from_pandas(self.spark, value)
+            self.datasets[name] = catalog._matrix_from_pandas(self.spark, value, codec)
         elif isinstance(value, pd.Series):
-            self.datasets[name] = value.astype(np.float64)
+            self.datasets[name] = codec.cast(value)
         elif isinstance(value, DataFrame):
             if COL_ID in value.columns and VALUE in value.columns:
                 self.datasets[name] = TripletMatrix(value)
@@ -240,48 +231,34 @@ class FormulaEvaluator:
         operands = [self.datasets[n] for n in names]
         matrices = any(isinstance(d, Matrix) for d in operands)
         vectors = any(isinstance(d, pd.Series) for d in operands)
-        triplets = any(isinstance(d, TripletMatrix) for d in operands)
-        has_mm, has_t = contains_matmul(expr), contains_transpose(expr)
+        triplets = [n for n, d in zip(names, operands) if isinstance(d, TripletMatrix)]
+        ops = matrix_ops(expr)
         mixed = matrices and vectors
-        if (has_mm or has_t) and not (matrices or triplets):
-            raise FormulaError(
-                "transpose ('.T'), matmul ('@'), and neumann() are only defined "
-                "for matrix operands"
-            )
+        if ops and not (matrices or triplets):
+            raise FormulaError(f"{' and '.join(ops)}: defined for matrix operands only")
         if not (matrices or triplets):
             # scalar- and Series-only formulas evaluate on the driver, at
             # full precision under ADP (where mpmath's zero-division
             # guard fires for every operand shape)
-            ops = adp_mod.MP_OPS if self.adp_enabled else NUMPY_OPS
+            table = adp_mod.MP_OPS if self.adp_enabled else NUMPY_OPS
             with mpmath.workdps(self.decimal_precision):
-                value = eval_driver(expr, dict(zip(names, operands)), ops)
+                value = eval_driver(expr, dict(zip(names, operands)), table)
             return _Plan("vector" if vectors else "scalar", formula, value=value)
-        if self.adp_enabled:
-            if matrices and (has_mm or has_t):
-                op = "matmul ('@') / neumann() / leontief()" if has_mm else "transpose ('.T')"
-                raise NotImplementedError(
-                    f"{op} is not supported in ADP mode: it evaluates on the "
-                    "float64 triplet path, which would silently demote the "
-                    "arbitrary-precision operands. Evaluate with "
-                    "adp_enabled=False."
-                )
-            if triplets and (matrices or vectors):
-                other = "DataFrame" if matrices else "Series"
-                raise NotImplementedError(
-                    f"ADP formulas mixing a TripletMatrix with a {other} "
-                    "operand are not supported: triplet plans compute in "
-                    f"float64, which would silently demote the ADP {other}. "
-                    f"Register the {other} with adp_enabled=False or convert "
-                    "the triplet operand to a pandas DataFrame."
-                )
-            if matrices:
-                df, cols = adp_mod.compile_adp_formula(
-                    expr, self.datasets, self.decimal_precision
-                )
-                return _Plan("adp", formula, df, cols, mixed=mixed)
-        if has_mm or has_t or triplets:
+        if self.adp_enabled and (ops or triplets) and (matrices or vectors):
+            demoted = [n for n, d in zip(names, operands) if isinstance(d, (Matrix, pd.Series))]
+            causes = ops + [f"TripletMatrix operand {n!r}" for n in triplets]
+            raise NotImplementedError(
+                f"ADP formula refused: {' and '.join(causes)} send it to the float64 "
+                f"triplet route, which would silently demote its ADP operand(s) {demoted}. "
+                "Evaluate with adp_enabled=False, or convert the TripletMatrix operand "
+                "to a pandas DataFrame."
+            )
+        if ops or triplets:
             tdf = triplet_plans.compile_formula_triplet(expr, self.datasets)
             return _Plan("triplet", formula, tdf, [VALUE], mixed=mixed)
+        if self.adp_enabled:
+            df, cols = adp_mod.compile_adp_formula(expr, self.datasets, self.decimal_precision)
+            return _Plan("adp", formula, df, cols, mixed=mixed)
         if fuse:
             return _Plan("wide", formula)
         m = compile_formula(expr, self.datasets)

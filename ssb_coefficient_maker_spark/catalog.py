@@ -4,22 +4,31 @@ The reference holds its datasets in a plain ``data_dict: dict[str,
 pd.DataFrame | pd.Series]`` (reference coeff_maker.py:592) and relies
 on the pandas row index for alignment. Spark has no row order, so a
 matrix here is a DataFrame with an explicit ``__row_id__`` column
-(string-typed row label) plus one double column per matrix column
-(SURVEY.md §1.1).  Vectors stay pandas Series, as in the reference:
-they are small by construction — they broadcast across matrix
-*columns* (reference coeff_maker.py:757-763) — so they stay on the
-driver and are inlined as literals at compile time (zero shuffle).
+(string-typed row label) plus one column per matrix column (SURVEY.md
+§1.1). Vectors stay pandas Series, as in the reference: they are
+small by construction — they broadcast across matrix *columns*
+(reference coeff_maker.py:757-763) — so they stay on the driver and
+are inlined as literals at compile time (zero shuffle).
+
+A pandas operand enters through one path, ``_matrix_from_pandas``
+(a Series through its codec's ``cast``), and a ``Codec`` decides how
+its cells travel: ``FLOAT64`` as doubles, or under ADP
+``adp.decimal_codec`` as exact decimal strings. As in the reference,
+where ADP only casts every cell to ``mpf`` at registration (reference
+coeff_maker.py:647-671), precision is a cell type, not a second
+ingestion.
 
 Scale notes (100 TB): matrices are arbitrarily long (rows are
-distributed, hash-partitioned by ``__row_id__`` at the alignment
-join); a registered Spark frame wider than ``WIDE_MATRIX_THRESHOLD``
-columns is converted to the long/triplet form (SURVEY.md §7 risk 3,
+distributed and meet at the alignment join on ``__row_id__``); a
+registered Spark frame wider than ``WIDE_MATRIX_THRESHOLD`` columns is
+converted to the long/triplet form (SURVEY.md §7 risk 3,
 plans/triplet.py), where width is a row dimension.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -61,20 +70,37 @@ def unique_labels(axis: pd.Index, kind: str) -> list[str]:
     return list(labels)
 
 
-def matrix_from_pandas(spark: SparkSession, pdf: pd.DataFrame) -> Matrix:
-    """Ingest a pandas DataFrame as a Matrix (index -> __row_id__ strings).
+@dataclass(frozen=True)
+class Codec:
+    """How a pandas cell is carried in Spark: ``cast`` maps a pandas
+    column or Series to its carried values (same index), and
+    ``spark_type`` is the Spark type of a carried column."""
 
-    Mirrors the reference's float64 ingestion cast (reference
-    coeff_maker.py:634-638): non-castable input raises.
-    """
+    cast: Callable[[pd.Series], pd.Series]
+    spark_type: T.DataType
+
+
+# the reference's float64 ingestion cast (reference coeff_maker.py:634-638):
+# non-castable input raises; ADP's codec is ``adp.decimal_codec``
+FLOAT64 = Codec(lambda s: s.astype(np.float64), T.DoubleType())
+
+
+def matrix_from_pandas(spark: SparkSession, pdf: pd.DataFrame) -> Matrix:
+    """Ingest a pandas DataFrame as a float64 Matrix (index ->
+    ``__row_id__`` strings); non-castable input raises."""
+    return _matrix_from_pandas(spark, pdf, FLOAT64)
+
+
+def _matrix_from_pandas(spark: SparkSession, pdf: pd.DataFrame, codec: Codec) -> Matrix:
+    """The one path from a pandas frame to a Matrix: unique string
+    labels, and every column carried through ``codec``."""
     rows, cols = unique_labels(pdf.index, "row"), unique_labels(pdf.columns, "column")
-    cast = pdf.astype(np.float64, copy=True, errors="raise")
     out = pd.DataFrame({ROW_ID: rows})
-    for src, dst in zip(cast.columns, cols):
-        out[dst] = cast[src].to_numpy()
+    for (_, values), dst in zip(pdf.items(), cols):
+        out[dst] = codec.cast(values).to_numpy()
     schema = T.StructType(
         [T.StructField(ROW_ID, T.StringType(), False)]
-        + [T.StructField(c, T.DoubleType(), True) for c in cols]
+        + [T.StructField(c, codec.spark_type, True) for c in cols]
     )
     return Matrix(
         df=_rightsized(spark.createDataFrame(out, schema=schema), len(out)),

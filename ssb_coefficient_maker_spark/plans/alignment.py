@@ -12,13 +12,21 @@ reference by execution):
 - x / 0 → ±Inf, 0 / 0 → NaN (numpy), whereas Spark yields NULL —
   every division is wrapped in an IEEE-semantics shim.
 
-Plan shape (the scale-critical design, SURVEY.md §4): all N frame
-variables of a formula are combined with a single chained full-outer
-join on ``__row_id__`` — same join key throughout, so Catalyst plans
-one hash-partitioning of each input and the arithmetic lands in one
-whole-stage-codegen'd ``Project`` on top. The reference instead
-materializes every intermediate eagerly (pandas), which at 100 TB
-would mean N-1 full materializations; here there are zero.
+Plan shape: all N frame operands of a formula meet in a chain of
+full-outer joins on ``__row_id__`` (``_aligned_join``), and the
+arithmetic lands in one whole-stage-codegen'd ``Project`` on top. A
+full-outer ``USING`` join outputs ``coalesce(l.key, r.key)``, which
+carries no partitioning, so every join after the first re-shuffles the
+joined side built so far: an N-operand formula shuffles its
+intermediate result N-1 times (ROADMAP item 2). The reference instead
+materializes every intermediate eagerly (pandas); here nothing is
+materialized before the action that consumes the result.
+
+``align`` is the one front end of every compiler — wide, fused,
+triplet (``plans/triplet.py``) and ADP (``adp.py``): it splits the
+operands, joins the frames and says, for each output column, which
+joined column holds each frame operand's value. The compilers only
+evaluate the formula over that.
 
 NULL handling: after the outer join, absent cells are NULL; each
 column reference in the formula's SQL text reads ``coalesce(col,
@@ -45,12 +53,77 @@ from ssb_coefficient_maker_spark.formula.parser import (
     evaluate,
     extract_variables,
 )
-from ssb_coefficient_maker_spark.functions.math import NAN, SQL_OPS, ident, num, or_nan
+from ssb_coefficient_maker_spark.functions.math import SQL_OPS, ident, num, or_nan
 from ssb_coefficient_maker_spark.session import ROW_ID
 
 
+Bindings = list[tuple[dict[str, str], dict[str, Any]]]
+
+
+def align(
+    exprs: Mapping[Any, FormulaExpr],
+    datasets: Mapping[str, Any],
+    frame_types: tuple[type, ...] = (Matrix,),
+    col_key: str | None = None,
+) -> tuple[DataFrame, list[str], dict[Any, Bindings]]:
+    """Align the operands of formulas that share one frame-operand set.
+
+    Each formula's operands split into frames (``frame_types``, each
+    with ``df`` and ``value_cols``), pandas Series and scalars; every
+    formula must read the same frames (they fix the row universe of the
+    join). The frames meet in one aligned join (``_aligned_join``) on
+    ``__row_id__``, and on ``col_key`` too when given (the triplet
+    route's column label). The output columns are the union of the
+    frames' value columns, in first-seen order.
+
+    Returns ``(joined, out_cols, bindings)``: ``bindings[name][pos]``
+    is ``(columns, values)`` for formula ``name`` at output column
+    ``pos``. ``columns`` maps each frame operand that has the column to
+    its joined column; ``values`` maps every other operand to a plain
+    value: NaN for a frame without the column (pandas alignment), a
+    scalar's float, a Series' value at ``pos`` (positional broadcast,
+    reference coeff_maker.py:757-763), or with ``col_key`` the whole
+    Series (the triplet route broadcasts by label, so its width is not
+    checked).
+    """
+    split = {name: _operands(expr, datasets, frame_types) for name, expr in exprs.items()}
+    for name, (frames, _, _) in split.items():
+        if not frames:
+            raise FormulaError(
+                f"formula {name!r} has no matrix operand; evaluate vector/"
+                "scalar formulas on the driver (eval_driver)"
+            )
+    frame_sets = {frozenset(frames) for frames, _, _ in split.values()}
+    if len(frame_sets) > 1:
+        raise FormulaError(
+            f"fused formulas must share one frame-operand set (the row "
+            f"universe of the aligned join); got {sorted(map(sorted, frame_sets))}"
+        )
+    frames = next(iter(split.values()))[0]
+    out_cols = list(dict.fromkeys(c for m in frames.values() for c in m.value_cols))
+    have = {n: set(m.value_cols) for n, m in frames.items()}
+    columns = [{n: _operand_col(i, pos) for i, n in enumerate(frames) if out_c in have[n]}
+               for pos, out_c in enumerate(out_cols)]
+    bindings = {}
+    for name, (_, vectors, scalars) in split.items():
+        for vname, vec in vectors.items():
+            if col_key is None and vec.size != len(out_cols):
+                raise FormulaError(
+                    f"vector {vname!r} has length {vec.size} but the frame "
+                    f"operands have {len(out_cols)} columns; the reference "
+                    f"broadcasts vectors positionally across columns "
+                    f"(reference README.md:76)"
+                )
+        bindings[name] = [
+            (cols, {**dict.fromkeys(frames, np.nan), **scalars,
+                    **{n: v if col_key else v.values[pos] for n, v in vectors.items()}})
+            for pos, cols in enumerate(columns)
+        ]
+    return _aligned_join(frames, out_cols, col_key), out_cols, bindings
+
+
 def _operands(
-    expr: FormulaExpr, datasets: Mapping[str, Any], frame_types: tuple[type, ...] = (Matrix,)
+    expr: FormulaExpr, datasets: Mapping[str, Any], frame_types: tuple[type, ...]
 ) -> tuple[dict[str, Any], dict[str, pd.Series], dict[str, float]]:
     """A formula's frame, vector and scalar operands, in first-seen order."""
     names = extract_variables(expr)
@@ -61,22 +134,6 @@ def _operands(
     vectors = {n: d for n in names if isinstance(d := datasets[n], pd.Series)}
     scalars = {n: float(d) for n in names if isinstance(d := datasets[n], (int, float))}
     return frames, vectors, scalars
-
-
-def _union_cols(frames: dict[str, Matrix]) -> list[str]:
-    """Union of the frame operands' value columns, first-seen order."""
-    return list(dict.fromkeys(c for m in frames.values() for c in m.value_cols))
-
-
-def _check_vectors(vectors: dict[str, pd.Series], out_cols: list[str]) -> None:
-    for vname, vec in vectors.items():
-        if vec.size != len(out_cols):
-            raise FormulaError(
-                f"vector {vname!r} has length {vec.size} but the frame "
-                f"operands have {len(out_cols)} columns; the reference "
-                f"broadcasts vectors positionally across columns "
-                f"(reference README.md:76)"
-            )
 
 
 def compile_formula(
@@ -100,15 +157,15 @@ def compile_formulas_fused(
     datasets: dict[str, Matrix | pd.Series | float],
 ) -> tuple[DataFrame, dict[str | None, list[str]]]:
     """Compile SEVERAL formulas over one shared operand set into ONE
-    plan: a single aligned join of the union of frame operands, then
-    one projection per (formula × column).
+    plan: a single aligned join of the union of frame operands
+    (``align``), then one projection per (formula × column).
 
     The reference's batch workload (coeff_maker.py:989-1012) loops N
     formulas over one ``data_dict``; evaluated independently, each
     formula re-scans (and re-pivots/re-aggregates) every shared input
-    N times. Fused, each input is scanned ONCE: one chained
-    full-outer join on ``__row_id__``, with all N formulas' arithmetic
-    landing in one whole-stage-codegen'd ``Project`` on top.
+    N times. Fused, each input is scanned ONCE, with all N formulas'
+    arithmetic landing in one whole-stage-codegen'd ``Project`` on top
+    of the aligned join.
 
     Every formula must use the same FRAME-operand set (that is what
     makes the row universe — the outer-join key space — identical, so
@@ -125,42 +182,15 @@ def compile_formulas_fused(
     """
     if not exprs:
         raise FormulaError("compile_formulas_fused: no formulas given")
-    per_formula = {rname: _operands(expr, datasets) for rname, expr in exprs.items()}
-    for rname, (frames, _, _) in per_formula.items():
-        if not frames:
-            raise FormulaError(
-                f"formula {rname!r} has no frame operand; evaluate vector/"
-                f"scalar formulas directly (driver-side) instead of fusing"
-            )
-    frame_sets = {frozenset(frames) for frames, _, _ in per_formula.values()}
-    if len(frame_sets) > 1:
-        raise FormulaError(
-            f"fused formulas must share one frame-operand set (the row "
-            f"universe of the aligned join); got {sorted(map(sorted, frame_sets))}"
-        )
-
-    frames = next(iter(per_formula.values()))[0]
-    out_cols = _union_cols(frames)
-    joined = _aligned_join(frames, out_cols)
-    slot = {name: (i, set(m.value_cols)) for i, (name, m) in enumerate(frames.items())}
+    joined, out_cols, bindings = align(exprs, datasets)
     projections = [ROW_ID]
     result_cols: dict[str | None, list[str]] = {}
-    for rname, (_, vectors, scalars) in per_formula.items():
-        _check_vectors(vectors, out_cols)
-
-        def col_ref(var: str, pos: int, vectors=vectors, scalars=scalars) -> str:
-            if var in slot:
-                i, present = slot[var]
-                if out_cols[pos] in present:
-                    return or_nan(_operand_col(i, pos))
-                return NAN  # column absent from this operand → NaN (pandas align)
-            if var in vectors:
-                return num(vectors[var].values[pos])
-            return num(scalars[var])
-
+    for rname, expr in exprs.items():
         cols = [out_c if rname is None else f"{rname}_{out_c}" for out_c in out_cols]
-        for pos, alias in enumerate(cols):
-            sql = evaluate(exprs[rname], lambda v: col_ref(v, pos), SQL_OPS)
+        for alias, (columns, values) in zip(cols, bindings[rname]):
+            sql = evaluate(
+                expr, lambda v: or_nan(columns[v]) if v in columns else num(values[v]), SQL_OPS
+            )
             projections.append(f"{sql} AS {ident(alias)}")
         result_cols[rname] = cols
     return joined.selectExpr(*projections), result_cols
@@ -182,8 +212,10 @@ def _aligned_join(
 
     Every operand's value columns are renamed ``_operand_col(i, pos)``
     before joining so the projection can reference them unambiguously.
-    The join key is identical at every step → one exchange per input,
-    one sort-merge (or broadcast under AQE) cascade, no re-shuffle.
+    Each operand is shuffled once on the join key, but a full-outer
+    ``USING`` join outputs ``coalesce(l.key, r.key)``, which carries no
+    partitioning: every join after the first re-shuffles the joined
+    side built so far (N-1 shuffles of it for N operands).
     """
     pos = {c: j for j, c in enumerate(out_cols)}
     keys = [ROW_ID] if col_key is None else [ROW_ID, col_key]

@@ -42,9 +42,10 @@ from ssb_coefficient_maker_spark.formula.parser import (
     UnaryOp,
     Var,
     evaluate,
+    extract_variables,
 )
 from ssb_coefficient_maker_spark.functions.math import SQL_OPS, ident, num, or_nan, string
-from ssb_coefficient_maker_spark.plans.alignment import _aligned_join, _operand_col, _operands
+from ssb_coefficient_maker_spark.plans.alignment import align
 from ssb_coefficient_maker_spark.session import ROW_ID
 
 COL_ID = "__col_id__"
@@ -57,7 +58,10 @@ class TripletMatrix:
     The one place a triplet is normalized: both labels are STRING and
     a NULL value is read as NaN, so every triplet op can take its
     operands as they are — a NULL cell poisons the sums it enters
-    instead of being skipped by SUM."""
+    instead of being skipped by SUM. Its one value column makes it a
+    frame operand of the aligned join (``plans.alignment.align``)."""
+
+    value_cols = (VALUE,)
 
     def __init__(self, df: DataFrame):
         missing = {ROW_ID, COL_ID, VALUE} - set(df.columns)
@@ -328,42 +332,39 @@ def compile_formula_triplet(
 ) -> DataFrame:
     """Compile a formula over triplet matrices into one lazy plan.
 
-    Same construction as the wide path, through its operand split and
-    aligned join (plans/alignment.py): all frame operands meet in a
-    chained full-outer join — here on the composite (row, col) key,
-    with string row labels — and the whole arithmetic lands in one
+    Same construction as the wide path, through the same front end
+    (``plans.alignment.align``): all frame operands meet in a chained
+    full-outer join — here on the composite (row, col) key, with
+    string row labels — and the whole arithmetic lands in one
     projection over the single value column. Only the vector
     broadcast differs: it is keyed by column label, not position.
 
-    ``m.T`` and ``a @ b`` are rewritten FIRST: each matrix-op subtree
-    becomes a synthetic operand bound to its triplet result
-    (transpose_triplet — a projection; matmul_triplet — a
-    contraction join + sum), after which the join/project machinery
-    below needs no matrix-op awareness. Pandas-parity alignment falls
-    out of the full-outer join: ``a + b.T`` aligns a(r,c) with b(c,r)
-    on labels, NaN where either side is absent — exactly pd.eval's
-    union alignment.
+    The formula's own wide operands are unpivoted first, once each,
+    and then ``m.T`` and ``a @ b`` are rewritten: each matrix-op
+    subtree becomes a synthetic operand bound to its triplet result
+    (transpose_triplet — a projection; matmul_triplet — a contraction
+    join + sum), after which the join/project machinery below needs
+    no matrix-op awareness. Pandas-parity alignment falls out of the
+    full-outer join: ``a + b.T`` aligns a(r,c) with b(c,r) on labels,
+    NaN where either side is absent — exactly pd.eval's union
+    alignment.
     """
-    expr, rewritten = _rewrite_matrix_ops(expr, datasets)
-    frames, vectors, scalars = _operands(
-        expr, {**datasets, **rewritten}, (Matrix, TripletMatrix)
-    )
-    if not frames:
-        raise ValueError("triplet compilation needs at least one matrix operand")
-    slot = {name: i for i, name in enumerate(frames)}
-    long = {
-        name: Matrix((wide_to_triplet(d) if isinstance(d, Matrix) else d).df, [VALUE])
-        for name, d in frames.items()
-    }
-    joined = _aligned_join(long, [VALUE], col_key=COL_ID)
+    operands = dict(datasets)
+    for name in extract_variables(expr):
+        d = datasets.get(name)
+        if isinstance(d, Matrix):
+            operands[name] = wide_to_triplet(d)
+    expr, rewritten = _rewrite_matrix_ops(expr, operands)
+    joined, _, bindings = align({None: expr}, {**operands, **rewritten}, (TripletMatrix,), COL_ID)
+    [(columns, values)] = bindings[None]
 
     def resolve(var: str) -> str:
-        if var in slot:
-            return or_nan(_operand_col(slot[var], 0))
-        if var in vectors:
+        if var in columns:
+            return or_nan(columns[var])
+        if isinstance(v := values[var], pd.Series):
             # label-based broadcast: map literal keyed by column label
-            kv = ", ".join(f"{string(k)}, {num(v)}" for k, v in vectors[var].items())
+            kv = ", ".join(f"{string(k)}, {num(x)}" for k, x in v.items())
             return or_nan(f"map({kv})[{COL_ID}]")
-        return num(scalars[var])
+        return num(v)
 
     return joined.selectExpr(ROW_ID, COL_ID, f"{evaluate(expr, resolve, SQL_OPS)} AS {VALUE}")
