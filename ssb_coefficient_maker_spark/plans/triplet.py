@@ -16,7 +16,9 @@ Trade-offs, by design:
 - vector broadcast is **label-based** here (map-literal lookup on
   ``__col_id__``, zero shuffle) — positional order doesn't exist in
   an unordered long form. The wide path keeps the reference's
-  positional semantics; the triplet path documents this deviation.
+  positional semantics; the triplet path documents this deviation,
+  and refuses a Series whose index labels repeat (the map literal
+  would keep one value per label).
 - results stay in triplet form; ``triplet_to_wide`` pivots back for
   moderate widths (it must enumerate columns).
 """
@@ -337,7 +339,8 @@ def compile_formula_triplet(
     full-outer join — here on the composite (row, col) key, with
     string row labels — and the whole arithmetic lands in one
     projection over the single value column. Only the vector
-    broadcast differs: it is keyed by column label, not position.
+    broadcast differs: it is keyed by column label, not position, so
+    a Series whose index labels repeat (as strings) is refused.
 
     The formula's own wide operands are unpivoted first, once each,
     and then ``m.T`` and ``a @ b`` are rewritten: each matrix-op
@@ -354,6 +357,12 @@ def compile_formula_triplet(
         d = datasets.get(name)
         if isinstance(d, Matrix):
             operands[name] = wide_to_triplet(d)
+        elif isinstance(d, pd.Series) and (labels := pd.Index(d.index.map(str))).has_duplicates:
+            raise FormulaError(
+                f"Series {name!r} repeats index labels (as strings) "
+                f"{list(labels[labels.duplicated()].unique())}: the triplet route "
+                "broadcasts a Series by column label, so each label must be unique"
+            )
     expr, rewritten = _rewrite_matrix_ops(expr, operands)
     joined, _, bindings = align({None: expr}, {**operands, **rewritten}, (TripletMatrix,), COL_ID)
     [(columns, values)] = bindings[None]

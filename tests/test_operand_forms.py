@@ -88,3 +88,21 @@ def test_triplet_series_broadcast_is_label_keyed(spark):
     pd.testing.assert_frame_equal(fe.evaluate_to_pandas("a.T.T + s"), by_label)
     t = FormulaEvaluator({"t": wide_to_triplet(fe.datasets["a"]), "s": s}, spark=spark)
     pd.testing.assert_frame_equal(t.evaluate_to_pandas("t + s"), by_label)
+
+
+@pytest.mark.parametrize("index, repeated", [(["x", "x"], "'x'"), ([1, "1"], "'1'")])
+def test_triplet_refuses_repeated_series_labels(spark, index, repeated):
+    """The triplet route broadcasts a Series by label, so a Series whose
+    labels repeat (also only as strings) is refused by name on the
+    driver; the wide and ADP routes broadcast positionally and keep
+    working."""
+    a = pd.DataFrame([[1.0, 2.0], [3.0, 4.0]], index=["r1", "r2"], columns=["x", "y"])
+    s = pd.Series([1.0, 2.0], index=index)
+    positional = pd.DataFrame([[2.0, 4.0], [4.0, 6.0]], index=a.index, columns=a.columns)
+    for adp in (False, True):
+        fe = FormulaEvaluator({"a": a, "s": s}, spark=spark, adp_enabled=adp)
+        got = fe.evaluate_to_pandas("a + s")
+        pd.testing.assert_frame_equal(got.astype(np.float64), positional)
+    fe = FormulaEvaluator({"a": a, "s": s}, spark=spark)
+    with pytest.raises(FormulaError, match=rf"Series 's' repeats index labels.*\[{repeated}\]"):
+        fe.evaluate_to_pandas("a.T.T + s")
