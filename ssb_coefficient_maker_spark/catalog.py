@@ -122,27 +122,26 @@ def _rightsized(df: DataFrame, n_rows: int) -> DataFrame:
     return df.coalesce(max(1, -(-n_rows // 10_000)))
 
 
-def matrix_from_spark(df: DataFrame, row_id: str | None = None) -> Matrix:
-    """Wrap an existing Spark DataFrame as a Matrix.
-
-    ``row_id`` names the row-label column (default: ``__row_id__`` if
-    present, else error — Spark rows are unordered, an explicit key is
-    required; never synthesize one after a shuffle, SURVEY.md §7 risk 2).
-    Its labels are not checked for repeats: that would cost a job.
+def matrix_from_spark(df: DataFrame) -> Matrix:
+    """Wrap an existing Spark DataFrame as a Matrix: its ``__row_id__``
+    column holds the row labels, every other column is a value column.
+    The row-id column is required — Spark rows are unordered, so an
+    explicit key is needed; never synthesize one after a shuffle
+    (SURVEY.md §7 risk 2). Its labels are not checked for repeats:
+    that would cost a job.
     """
-    rid = row_id or ROW_ID
-    if rid not in df.columns:
+    if ROW_ID not in df.columns:
         raise ValueError(
-            f"matrix DataFrame needs an explicit row-id column {rid!r}; "
+            f"matrix DataFrame needs an explicit row-id column {ROW_ID!r}; "
             f"got columns {df.columns}"
         )
-    value_cols = [c for c in df.columns if c != rid]
+    value_cols = [c for c in df.columns if c != ROW_ID]
     # keep the row-id's NATIVE type: a long key joins on long (and can
     # reuse upstream hash-partitioning, e.g. a groupBy that produced
     # this matrix); the alignment join only falls back to string when
     # operands disagree on the key type
     cols = [f"CAST({ident(c)} AS DOUBLE) AS {ident(c)}" for c in value_cols]
-    return Matrix(df=df.selectExpr(f"{ident(rid)} AS {ROW_ID}", *cols), value_cols=value_cols)
+    return Matrix(df=df.selectExpr(ROW_ID, *cols), value_cols=value_cols)
 
 
 def as_labels(text: pd.Index) -> pd.Index:
