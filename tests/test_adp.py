@@ -469,3 +469,84 @@ def test_adp_colliding_operand_column_names_align(spark):
     assert [[float(v) for v in row] for row in got[expected.columns].to_numpy()] == (
         expected.to_numpy().tolist()
     )
+
+
+# ------------------------------------------------------------ routing table
+# README "Routing" under ADP: a formula with a matrix op or a
+# TripletMatrix operand takes the float64 triplet route, so it is refused
+# when an ADP DataFrame or Series operand would be demoted on it.
+_ROUTING_OPS = {
+    "none": "{m}",
+    ".T": "{m}.T",
+    "@": "{m} @ {m}",
+    "neumann": "neumann({m}, 2)",
+    "leontief": "leontief({m})",
+}
+_ROUTING_MIXES = ["a", "s", "t", "as", "at", "st", "ast"]
+
+
+def _routing_outcome(mix: str, op: str) -> str:
+    matrix_op = op != "none"
+    if "a" not in mix and "t" not in mix:
+        return "formula_error" if matrix_op else "driver"
+    if (matrix_op or "t" in mix) and ("a" in mix or "s" in mix):
+        return "refused"
+    return "triplet" if matrix_op or "t" in mix else "adp"
+
+
+@pytest.mark.parametrize("op", list(_ROUTING_OPS))
+@pytest.mark.parametrize("mix", _ROUTING_MIXES)
+def test_adp_routing_table(spark, mix, op):
+    """Every ADP operand mix × matrix op is refused with one
+    NotImplementedError naming the demoted operands, or routed: ADP
+    frames to mpf, TripletMatrix-only formulas to float64, Series-only
+    formulas to the driver."""
+    from ssb_coefficient_maker_spark.formula.parser import FormulaError
+    from ssb_coefficient_maker_spark.plans.triplet import TripletMatrix
+
+    labels = ["x", "y"]
+    a = pd.DataFrame([[0.1, 0.2], [0.3, 0.1]], index=labels, columns=labels)
+    long = pd.DataFrame({"__row_id__": ["x", "x", "y", "y"], "__col_id__": labels * 2,
+                         "value": [0.1, 0.2, 0.3, 0.1]})
+    data = {"a": a, "s": pd.Series([1.0, 2.0], index=labels),
+            "t": TripletMatrix(spark.createDataFrame(long))}
+    m = "a" if "a" in mix else "t" if "t" in mix else "s"
+    formula = " + ".join([_ROUTING_OPS[op].format(m=m), *(n for n in mix if n != m)])
+    fe = FormulaEvaluator({n: data[n] for n in mix}, adp_enabled=True, spark=spark)
+    outcome = _routing_outcome(mix, op)
+    if outcome == "refused":
+        with pytest.raises(NotImplementedError, match="float64") as err:
+            fe.evaluate_to_pandas(formula)
+        assert all(f"'{n}'" in str(err.value) for n in mix)  # names the operands
+    elif outcome == "formula_error":
+        with pytest.raises(FormulaError, match="matrix operand"):
+            fe.evaluate_to_pandas(formula)
+    else:
+        res = fe.evaluate_to_pandas(formula)
+        if outcome == "driver":
+            assert isinstance(res, pd.Series) and isinstance(res.iloc[0], mpmath.mpf)
+        elif outcome == "adp":
+            assert isinstance(res.iloc[0, 0], mpmath.mpf)
+        else:
+            assert (res.dtypes == np.float64).all()
+
+
+# -------------------------------------------------------- ingestion contract
+def test_float_ingestion_refuses_text_cells(spark):
+    with pytest.raises(ValueError, match="could not convert string to float"):
+        FormulaEvaluator({"a": pd.DataFrame({"x": [1.0, "abc"]})}, spark=spark)
+
+
+def test_adp_ingestion_carries_cells_exactly(spark):
+    """Under ADP a registered cell collects as the mpf it stands for: an
+    mpf at full precision, an int, a float as its shortest decimal
+    (``0.1`` is the exact decimal 0.1), NaN and None as NaN."""
+    with mpmath.workdps(35):
+        digits = mpmath.mpf("1.2345678901234567890123456789012345")
+        a = pd.DataFrame({"x": [digits, 7, 0.1, np.nan, None]}, dtype=object)
+        fe = FormulaEvaluator({"a": a}, adp_enabled=True, decimal_precision=35, spark=spark)
+        with pytest.warns(UserWarning, match="2 invalid value"):
+            got = fe.evaluate_to_pandas("a")["x"].tolist()
+        assert got[:3] == [digits, mpmath.mpf(7), mpmath.mpf("0.1")]
+        assert got[2] != mpmath.mpf(0.1)  # not the float64 artifact
+        assert all(isinstance(v, mpmath.mpf) and mpmath.isnan(v) for v in got[3:])
