@@ -36,8 +36,9 @@ from ssb_coefficient_maker_spark.catalog import (
 from ssb_coefficient_maker_spark.formula.parser import (
     FormulaError,
     FormulaExpr,
+    contains_matmul,
+    contains_transpose,
     extract_variables,
-    matrix_ops,
     parse_formula,
 )
 from ssb_coefficient_maker_spark.plans import triplet as triplet_plans
@@ -232,32 +233,40 @@ class FormulaEvaluator:
         matrices = any(isinstance(d, Matrix) for d in operands)
         vectors = any(isinstance(d, pd.Series) for d in operands)
         triplets = [n for n, d in zip(names, operands) if isinstance(d, TripletMatrix)]
-        ops = matrix_ops(expr)
+        has_mm, has_t = contains_matmul(expr), contains_transpose(expr)
         mixed = matrices and vectors
-        if ops and not (matrices or triplets):
-            raise FormulaError(f"{' and '.join(ops)}: defined for matrix operands only")
+        if (has_mm or has_t) and not (matrices or triplets):
+            raise FormulaError(
+                "transpose ('.T'), matmul ('@'), and neumann() are only defined "
+                "for matrix operands"
+            )
         if not (matrices or triplets):
             # scalar- and Series-only formulas evaluate on the driver, at
             # full precision under ADP (where mpmath's zero-division
             # guard fires for every operand shape)
-            table = adp_mod.MP_OPS if self.adp_enabled else NUMPY_OPS
+            ops = adp_mod.MP_OPS if self.adp_enabled else NUMPY_OPS
             with mpmath.workdps(self.decimal_precision):
-                value = eval_driver(expr, dict(zip(names, operands)), table)
+                value = eval_driver(expr, dict(zip(names, operands)), ops)
             return _Plan("vector" if vectors else "scalar", formula, value=value)
-        if self.adp_enabled and (ops or triplets) and (matrices or vectors):
+        to_triplet = has_mm or has_t or bool(triplets)
+        if self.adp_enabled and to_triplet and (matrices or vectors):
             demoted = [n for n, d in zip(names, operands) if isinstance(d, (Matrix, pd.Series))]
-            causes = ops + [f"TripletMatrix operand {n!r}" for n in triplets]
+            causes = [op for op, used in (("transpose ('.T')", has_t),
+                                          ("matmul ('@'), neumann() or leontief()", has_mm)) if used]
+            causes += [f"TripletMatrix operand {n!r}" for n in triplets]
             raise NotImplementedError(
                 f"ADP formula refused: {' and '.join(causes)} send it to the float64 "
                 f"triplet route, which would silently demote its ADP operand(s) {demoted}. "
-                "Evaluate with adp_enabled=False, or convert the TripletMatrix operand "
-                "to a pandas DataFrame."
+                "Evaluate with adp_enabled=False, or register any TripletMatrix "
+                "operand as a pandas DataFrame."
             )
-        if ops or triplets:
+        if to_triplet:
             tdf = triplet_plans.compile_formula_triplet(expr, self.datasets)
             return _Plan("triplet", formula, tdf, [VALUE], mixed=mixed)
         if self.adp_enabled:
-            df, cols = adp_mod.compile_adp_formula(expr, self.datasets, self.decimal_precision)
+            df, cols = adp_mod.compile_adp_formula(
+                expr, self.datasets, self.decimal_precision
+            )
             return _Plan("adp", formula, df, cols, mixed=mixed)
         if fuse:
             return _Plan("wide", formula)

@@ -358,13 +358,6 @@ _MATRIX_OPS = {
 }
 
 
-def matrix_ops(expr: FormulaExpr) -> list[str]:
-    """The matrix ops of a parsed formula (``.T``, ``@``, ``neumann()``,
-    ``leontief()``), named, in first-seen order: any of them sends the
-    formula to the triplet route."""
-    return list(dict.fromkeys(_MATRIX_OPS[type(n)] for n in _nodes(expr) if type(n) in _MATRIX_OPS))
-
-
 def evaluate(expr: FormulaExpr, var: Callable[[str], Any], ops: Mapping[str, Callable]) -> Any:
     """Evaluate an elementwise formula tree with one backend's op table.
 
