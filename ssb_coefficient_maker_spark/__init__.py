@@ -6,12 +6,14 @@ formula-over-named-matrices library, ``src/ssb_coefficient_maker/
 coeff_maker.py`` in the reference repo) as an idiomatic Spark engine:
 
 - Formulas are parsed once with Python ``ast`` into a small typed
-  expression tree and compiled to ``pyspark.sql.Column`` trees —
-  Catalyst optimizes and codegens them (the reference re-parses every
-  formula twice, with sympy and pandas-eval; see reference
-  coeff_maker.py:693 and :766).
-- Frame-vs-frame label alignment is ONE multi-way full-outer join on
-  ``__row_id__`` (not a chain of eager pandas aligns).
+  expression tree and compiled, in pure Python, to Spark SQL
+  expression text: one string per output column, applied in one
+  ``selectExpr`` per plan step, which Catalyst optimizes and codegens
+  (the reference re-parses every formula twice, with sympy and
+  pandas-eval; see reference coeff_maker.py:693 and :766).
+- Frame-vs-frame label alignment is a chain of lazy full-outer joins
+  on ``__row_id__`` inside the formula's one plan (not a chain of
+  eager pandas aligns).
 - Validation (NaN/Inf audit) is a single aggregate pass, not the
   reference's 1-3 full re-scans per formula.
 - Beyond the reference surface, the package carries a full relational
