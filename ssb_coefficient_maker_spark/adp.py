@@ -166,7 +166,10 @@ def compile_adp_formula(
             for pdf in batches:
                 data = {ROW_ID: pdf[ROW_ID]}
                 for out_c, (columns, _), const in zip(out_cols, operands, consts):
-                    values = {**const, **{n: num(pdf[c].to_numpy()) for n, c in columns.items()}}
+                    values = {
+                        **const,
+                        **{n: num(pdf[c].to_numpy()) for n, c in columns.items()},
+                    }
                     out = evaluate(expr, values.__getitem__, MP_OPS)
                     data[out_c] = [mpmath.nstr(v, dps) for v in out]
                 yield pd.DataFrame(data)
