@@ -36,9 +36,8 @@ from ssb_coefficient_maker_spark.catalog import (
 from ssb_coefficient_maker_spark.formula.parser import (
     FormulaError,
     FormulaExpr,
-    contains_matmul,
-    contains_transpose,
     extract_variables,
+    matrix_ops,
     parse_formula,
 )
 from ssb_coefficient_maker_spark.plans import triplet as triplet_plans
@@ -233,13 +232,10 @@ class FormulaEvaluator:
         matrices = any(isinstance(d, Matrix) for d in operands)
         vectors = any(isinstance(d, pd.Series) for d in operands)
         triplets = [n for n, d in zip(names, operands) if isinstance(d, TripletMatrix)]
-        has_mm, has_t = contains_matmul(expr), contains_transpose(expr)
+        used = matrix_ops(expr)
         mixed = matrices and vectors
-        if (has_mm or has_t) and not (matrices or triplets):
-            raise FormulaError(
-                "transpose ('.T'), matmul ('@'), and neumann() are only defined "
-                "for matrix operands"
-            )
+        if used and not (matrices or triplets):
+            raise FormulaError(f"{' and '.join(used)}: defined for matrix operands only")
         if not (matrices or triplets):
             # scalar- and Series-only formulas evaluate on the driver, at
             # full precision under ADP (where mpmath's zero-division
@@ -248,12 +244,10 @@ class FormulaEvaluator:
             with mpmath.workdps(self.decimal_precision):
                 value = eval_driver(expr, dict(zip(names, operands)), ops)
             return _Plan("vector" if vectors else "scalar", formula, value=value)
-        to_triplet = has_mm or has_t or bool(triplets)
+        to_triplet = bool(used or triplets)
         if self.adp_enabled and to_triplet and (matrices or vectors):
             demoted = [n for n, d in zip(names, operands) if isinstance(d, (Matrix, pd.Series))]
-            causes = [op for op, used in (("transpose ('.T')", has_t),
-                                          ("matmul ('@'), neumann() or leontief()", has_mm)) if used]
-            causes += [f"TripletMatrix operand {n!r}" for n in triplets]
+            causes = used + [f"TripletMatrix operand {n!r}" for n in triplets]
             raise NotImplementedError(
                 f"ADP formula refused: {' and '.join(causes)} send it to the float64 "
                 f"triplet route, which would silently demote its ADP operand(s) {demoted}. "

@@ -24,13 +24,22 @@ Here the language is explicit:
                python engine rejects '@' outright; all evaluate on
                the triplet path
 
+Each construct is declared once, in this module:
+
+- every operator in ``OPERATORS`` (keyed by its ``ast`` node type);
+- every call in ``CALLS``: its parameters, its node, and whether it is
+  the method form; a matrix op's literal parameters share one check
+  (``_literal``);
+- every matrix op as a ``MatrixOp`` subclass, whose ``name`` is how
+  messages name it; ``matrix_ops`` lists the ones a formula uses.
+
 Parsing yields a small typed tree (``FormulaExpr``). ``evaluate`` is
 the one walk over its elementwise nodes; each backend is an op table
-that maps ``num``, ``neg``, every operator and every function to its
-implementation: Spark SQL text (``functions.math.SQL_OPS``: one
-expression string per output column, built in pure Python and applied
-in one ``selectExpr``), numpy (``plans.alignment.NUMPY_OPS``) and
-mpmath (``adp.MP_OPS``).
+that maps ``num``, ``neg``, every operator symbol and every elementwise
+call to its implementation: Spark SQL text (``functions.math.SQL_OPS``:
+one expression string per output column, built in pure Python and
+applied in one ``selectExpr``), numpy (``plans.alignment.NUMPY_OPS``)
+and mpmath (``adp.MP_OPS``).
 """
 
 from __future__ import annotations
@@ -38,7 +47,7 @@ from __future__ import annotations
 import ast
 import operator
 from dataclasses import dataclass, fields
-from typing import Any, Callable, Mapping
+from typing import Any, Callable, ClassVar, Mapping, NamedTuple
 
 
 class FormulaError(ValueError):
@@ -75,22 +84,31 @@ class UnaryOp(FormulaExpr):
 
 @dataclass(frozen=True)
 class Call(FormulaExpr):
-    func: str  # 'abs' | 'pow' | 'fillna'
+    func: str  # an elementwise name in CALLS
     args: tuple[FormulaExpr, ...]
 
 
 @dataclass(frozen=True)
-class Transpose(FormulaExpr):
+class MatrixOp(FormulaExpr):
+    """A matrix-shaped node: it evaluates on the triplet path only.
+    ``name`` is how messages name the op."""
+
+    name: ClassVar[str]
+
+
+@dataclass(frozen=True)
+class Transpose(MatrixOp):
     """``m.T`` — matrix transpose (the one pd.eval attribute the
     reference surface reaches, coeff_maker.py:766). Evaluated on the
     triplet path as a (row, col) key swap — a pure projection; the
     wide path refuses it with a pointer there (plans/alignment.py)."""
 
+    name: ClassVar[str] = "transpose ('.T')"
     operand: FormulaExpr
 
 
 @dataclass(frozen=True)
-class MatMul(FormulaExpr):
+class MatMul(MatrixOp):
     """``a @ b`` — matrix product. An EXTENSION beyond the reference:
     its pd.eval python engine rejects '@' outright (SURVEY.md §2
     Part B, verified), yet the domain is input-output coefficient
@@ -100,12 +118,13 @@ class MatMul(FormulaExpr):
     ``matmul_triplet``) — one shuffle, any width; the wide path and
     ADP mode refuse it loudly."""
 
+    name: ClassVar[str] = "matmul ('@')"
     left: FormulaExpr
     right: FormulaExpr
 
 
 @dataclass(frozen=True)
-class Leontief(FormulaExpr):
+class Leontief(MatrixOp):
     """``leontief(a[, tol])`` — the Leontief total-requirements matrix
     ``(I - a)^-1`` via the CONVERGENCE-CHECKED Neumann iteration
     (plans/triplet.leontief_total_requirements): terms accumulate
@@ -118,12 +137,13 @@ class Leontief(FormulaExpr):
     cuts), so it cannot be column-valued. Same sparse semantics and
     ADP/wide refusals as ``neumann``."""
 
+    name: ClassVar[str] = "leontief()"
     operand: FormulaExpr
-    tol: float
+    tol: float = 1e-10
 
 
 @dataclass(frozen=True)
-class Neumann(FormulaExpr):
+class Neumann(MatrixOp):
     """``neumann(a, k)`` — the truncated Neumann series
     ``I + a + a@a + ... + a^k``, i.e. the Leontief total-requirements
     construction ``(I - a)^-1`` at fixed depth (the reference's
@@ -136,42 +156,71 @@ class Neumann(FormulaExpr):
     sparse semantics — the identity term is built over the operand's
     label universe, and absent cells are 0, not NaN."""
 
+    name: ClassVar[str] = "neumann()"
     operand: FormulaExpr
     terms: int
 
 
-_BINOPS: dict[type[ast.operator], str] = {
-    ast.Add: "+",
-    ast.Sub: "-",
-    ast.Mult: "*",
-    ast.Div: "/",
-    ast.Mod: "%",
-    ast.FloorDiv: "//",
-    ast.Pow: "**",
+# Every elementwise operator, by its ast node type: its symbol, which
+# each backend's op table implements, and its Python operator, which the
+# backends wrap for a comparison to give 1.0/0.0 with IEEE NaN semantics.
+# '@' is not here: it parses to ``MatMul``, a matrix op.
+OPERATORS: dict[type[ast.AST], tuple[str, Callable[[Any, Any], Any]]] = {
+    ast.Add: ("+", operator.add),
+    ast.Sub: ("-", operator.sub),
+    ast.Mult: ("*", operator.mul),
+    ast.Div: ("/", operator.truediv),
+    ast.Mod: ("%", operator.mod),
+    ast.FloorDiv: ("//", operator.floordiv),
+    ast.Pow: ("**", operator.pow),
+    ast.Lt: ("<", operator.lt),
+    ast.LtE: ("<=", operator.le),
+    ast.Gt: (">", operator.gt),
+    ast.GtE: (">=", operator.ge),
+    ast.Eq: ("==", operator.eq),
+    ast.NotEq: ("!=", operator.ne),
+}
+COMPARISONS = {sym: fn for t, (sym, fn) in OPERATORS.items() if issubclass(t, ast.cmpop)}
+
+
+class Signature(NamedTuple):
+    """One call of the grammar: its parameter names, the node it builds
+    (an elementwise ``Call``, or a ``MatrixOp`` whose parameters after
+    its operand are literals), how many trailing parameters are
+    optional (the node's field defaults fill them), and whether it is
+    the method form ``x.name(...)``, whose receiver is its first
+    argument."""
+
+    params: tuple[str, ...]
+    node: type[FormulaExpr] = Call
+    optional: int = 0
+    method: bool = False
+
+    def form(self, name: str) -> str:
+        required = len(self.params) - self.optional
+        shown = ", ".join(self.params[1 if self.method else 0:required])
+        shown += "".join(f"[, {p}]" for p in self.params[required:])
+        return f"{self.params[0]}.{name}({shown})" if self.method else f"{name}({shown})"
+
+
+CALLS: dict[str, Signature] = {
+    "abs": Signature(("x",)),
+    "pow": Signature(("x", "y")),
+    "where": Signature(("cond", "a", "b")),
+    "fillna": Signature(("x", "value"), method=True),
+    "neumann": Signature(("matrix", "terms"), Neumann),
+    "leontief": Signature(("matrix", "tol"), Leontief, optional=1),
 }
 
-_CMPOPS: dict[type[ast.cmpop], str] = {
-    ast.Lt: "<",
-    ast.LtE: "<=",
-    ast.Gt: ">",
-    ast.GtE: ">=",
-    ast.Eq: "==",
-    ast.NotEq: "!=",
+# A matrix op's literal parameters: what each accepts, its type, and the
+# rule a refusal states. Each shapes the plan or drives a driver-side
+# loop, so none can be data-dependent.
+_LITERALS: dict[str, tuple[Callable[[Any], bool], type, str]] = {
+    "terms": (lambda v: isinstance(v, int) and v >= 0, int,
+              "a literal non-negative integer — the depth shapes the plan (k contraction joins)"),
+    "tol": (lambda v: v > 0, float, "a literal positive number — it drives the driver-side "
+            "convergence loop (one scalar action per term)"),
 }
-
-# the comparisons' Python operators: every backend wraps them to give
-# 1.0/0.0 with IEEE NaN semantics
-COMPARISONS: dict[str, Callable[[Any, Any], Any]] = {
-    "<": operator.lt,
-    "<=": operator.le,
-    ">": operator.gt,
-    ">=": operator.ge,
-    "==": operator.eq,
-    "!=": operator.ne,
-}
-
-_FUNC_WHITELIST = {"abs", "pow", "where", "neumann", "leontief"}
-_METHOD_WHITELIST = {"fillna"}
 
 
 def parse_formula(formula: str) -> FormulaExpr:
@@ -201,14 +250,19 @@ def _convert(node: ast.expr, formula: str) -> FormulaExpr:
         return Num(float(node.value))
     if isinstance(node, ast.Name):
         return Var(node.id)
+    if isinstance(node, ast.BinOp) and isinstance(node.op, ast.MatMult):
+        # matrix product, NOT an elementwise BinOp: it changes
+        # shape and must never reach the scalar column compiler
+        return MatMul(_convert(node.left, formula), _convert(node.right, formula))
+    if isinstance(node, ast.Compare):
+        # one comparison is a binary operator of the table
+        if len(node.ops) != 1:
+            raise FormulaError(f"chained comparisons not supported: {formula!r}")
+        node = ast.BinOp(node.left, node.ops[0], node.comparators[0])
     if isinstance(node, ast.BinOp):
-        if isinstance(node.op, ast.MatMult):
-            # matrix product, NOT an elementwise BinOp: it changes
-            # shape and must never reach the scalar column compiler
-            return MatMul(_convert(node.left, formula), _convert(node.right, formula))
-        op = _BINOPS.get(type(node.op))
-        if op is None:
+        if type(node.op) not in OPERATORS:
             raise FormulaError(f"unsupported operator in {formula!r}: {ast.dump(node.op)}")
+        op = OPERATORS[type(node.op)][0]
         return BinOp(op, _convert(node.left, formula), _convert(node.right, formula))
     if isinstance(node, ast.UnaryOp):
         if isinstance(node.op, ast.USub):
@@ -216,13 +270,6 @@ def _convert(node: ast.expr, formula: str) -> FormulaExpr:
         if isinstance(node.op, ast.UAdd):
             return UnaryOp("+", _convert(node.operand, formula))
         raise FormulaError(f"unsupported unary operator in {formula!r}")
-    if isinstance(node, ast.Compare):
-        if len(node.ops) != 1 or len(node.comparators) != 1:
-            raise FormulaError(f"chained comparisons not supported: {formula!r}")
-        op = _CMPOPS.get(type(node.ops[0]))
-        if op is None:
-            raise FormulaError(f"unsupported comparison in {formula!r}")
-        return BinOp(op, _convert(node.left, formula), _convert(node.comparators[0], formula))
     if isinstance(node, ast.Call):
         return _convert_call(node, formula)
     if isinstance(node, ast.Attribute):
@@ -245,70 +292,31 @@ def _convert(node: ast.expr, formula: str) -> FormulaExpr:
 def _convert_call(node: ast.Call, formula: str) -> FormulaExpr:
     if node.keywords:
         raise FormulaError(f"keyword arguments not supported in {formula!r}")
-    if isinstance(node.func, ast.Name):
-        name = node.func.id
-        if name not in _FUNC_WHITELIST:
-            raise FormulaError(f"function {name!r} not in whitelist {_FUNC_WHITELIST}")
-        if name == "neumann":
-            if len(node.args) != 2:
-                raise FormulaError(
-                    "neumann() takes exactly two arguments (matrix, terms)"
-                )
-            operand = _convert(node.args[0], formula)
-            terms_node = node.args[1]
-            if not (
-                isinstance(terms_node, ast.Constant)
-                and isinstance(terms_node.value, int)
-                and not isinstance(terms_node.value, bool)
-                and terms_node.value >= 0
-            ):
-                raise FormulaError(
-                    "neumann() terms must be a literal non-negative integer "
-                    "— the depth shapes the plan (k contraction joins) and "
-                    "cannot be data-dependent"
-                )
-            return Neumann(operand, terms_node.value)
-        if name == "leontief":
-            if len(node.args) not in (1, 2):
-                raise FormulaError(
-                    "leontief() takes one or two arguments (matrix[, tol])"
-                )
-            operand = _convert(node.args[0], formula)
-            tol = 1e-10
-            if len(node.args) == 2:
-                tol_node = node.args[1]
-                if not (
-                    isinstance(tol_node, ast.Constant)
-                    and isinstance(tol_node.value, (int, float))
-                    and not isinstance(tol_node.value, bool)
-                    and tol_node.value > 0
-                ):
-                    raise FormulaError(
-                        "leontief() tol must be a literal positive number "
-                        "— it drives the driver-side convergence loop "
-                        "(one scalar action per term) and cannot be "
-                        "data-dependent"
-                    )
-                tol = float(tol_node.value)
-            return Leontief(operand, tol)
-        args = tuple(_convert(a, formula) for a in node.args)
-        if name == "abs" and len(args) != 1:
-            raise FormulaError("abs() takes exactly one argument")
-        if name == "pow" and len(args) != 2:
-            raise FormulaError("pow() takes exactly two arguments")
-        if name == "where" and len(args) != 3:
-            raise FormulaError("where() takes exactly three arguments (cond, a, b)")
-        return Call(name, args)
-    if isinstance(node.func, ast.Attribute):
-        method = node.func.attr
-        if method not in _METHOD_WHITELIST:
-            raise FormulaError(f"method {method!r} not in whitelist {_METHOD_WHITELIST}")
-        target = _convert(node.func.value, formula)
-        args = (target,) + tuple(_convert(a, formula) for a in node.args)
-        if len(args) != 2:
-            raise FormulaError("fillna() takes exactly one argument")
-        return Call(method, args)
-    raise FormulaError(f"unsupported call syntax in {formula!r}")
+    method = isinstance(node.func, ast.Attribute)
+    if not (method or isinstance(node.func, ast.Name)):
+        raise FormulaError(f"unsupported call syntax in {formula!r}")
+    name = node.func.attr if method else node.func.id
+    sig = CALLS.get(name)
+    if sig is None or sig.method != method:
+        kind = "method" if method else "function"
+        raise FormulaError(f"{kind} {name!r} not in whitelist "
+                           f"{[n for n, s in CALLS.items() if s.method == method]}")
+    args = ([node.func.value] if method else []) + node.args
+    if not len(sig.params) - sig.optional <= len(args) <= len(sig.params):
+        raise FormulaError(f"wrong number of arguments: the form is {sig.form(name)}")
+    if sig.node is Call:
+        return Call(name, tuple(_convert(a, formula) for a in args))
+    literals = [_literal(a, name, p) for a, p in zip(args[1:], sig.params[1:])]
+    return sig.node(_convert(args[0], formula), *literals)
+
+
+def _literal(node: ast.expr, call: str, param: str) -> Any:
+    """A matrix op's literal argument, checked against its rule."""
+    accepts, kind, rule = _LITERALS[param]
+    value = node.value if isinstance(node, ast.Constant) else None
+    if isinstance(value, bool) or not isinstance(value, (int, float)) or not accepts(value):
+        raise FormulaError(f"{call}() {param} must be {rule} and cannot be data-dependent")
+    return kind(value)
 
 
 def _nodes(expr: FormulaExpr):
@@ -333,29 +341,13 @@ def extract_variables(expr: FormulaExpr | str) -> list[str]:
     return list(dict.fromkeys(n.name for n in _nodes(expr) if isinstance(n, Var)))
 
 
-def contains_transpose(expr: FormulaExpr) -> bool:
-    """True iff the parsed formula has a ``.T`` anywhere — used by the
-    evaluator to route such formulas onto the triplet path (the only
-    form where transpose is a cheap key swap)."""
-    return any(isinstance(n, Transpose) for n in _nodes(expr))
-
-
-def contains_matmul(expr: FormulaExpr) -> bool:
-    """True iff the parsed formula has an ``@`` anywhere — or a
-    ``neumann()`` / ``leontief()`` call, which desugar to chains of
-    ``@`` contractions — such formulas route onto the triplet path
-    (the only form where the product is a join + sum aggregate at any
-    width), and all refuse identically under ADP (the contraction
-    computes in float64)."""
-    return any(isinstance(n, (MatMul, Neumann, Leontief)) for n in _nodes(expr))
-
-
-_MATRIX_OPS = {
-    Transpose: "transpose ('.T')",
-    MatMul: "matmul ('@')",
-    Neumann: "neumann()",
-    Leontief: "leontief()",
-}
+def matrix_ops(expr: FormulaExpr) -> list[str]:
+    """The names of the matrix ops a parsed formula uses, in first-seen
+    order. A formula that uses any routes onto the triplet path (the
+    only form where transpose is a key swap and a product a join + sum
+    aggregate at any width), and under ADP it is refused (the triplet
+    path computes in float64)."""
+    return list(dict.fromkeys(n.name for n in _nodes(expr) if isinstance(n, MatrixOp)))
 
 
 def evaluate(expr: FormulaExpr, var: Callable[[str], Any], ops: Mapping[str, Callable]) -> Any:
@@ -378,7 +370,7 @@ def evaluate(expr: FormulaExpr, var: Callable[[str], Any], ops: Mapping[str, Cal
     if isinstance(expr, Call):
         return ops[expr.func](*(evaluate(a, var, ops) for a in expr.args))
     raise FormulaError(
-        f"{_MATRIX_OPS[type(expr)]} is supported on the triplet path only — "
+        f"{expr.name} is supported on the triplet path only — "
         "evaluate via FormulaEvaluator (which routes automatically) "
         "or compile_formula_triplet"
     )

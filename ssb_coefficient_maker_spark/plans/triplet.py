@@ -39,6 +39,7 @@ from ssb_coefficient_maker_spark.formula.parser import (
     FormulaExpr,
     Leontief,
     MatMul,
+    MatrixOp,
     Neumann,
     Transpose,
     UnaryOp,
@@ -250,15 +251,15 @@ def _rewrite_matrix_ops(
     expr: FormulaExpr,
     datasets: dict[str, TripletMatrix | Matrix | pd.Series | float],
 ) -> tuple[FormulaExpr, dict[str, TripletMatrix]]:
-    """Replace every matrix-shaped subtree — ``Transpose``,
-    ``MatMul``, and ``Neumann`` over matrix operands — with a synthetic variable bound
+    """Replace every matrix-shaped subtree — a ``MatrixOp`` over matrix
+    operands — with a synthetic variable bound
     to its triplet result, after which the elementwise join/project
     machinery needs no matrix-op awareness. Compositions of the
     matrix ops among themselves are supported (``a.T @ b``,
     ``(a @ b).T``, ``a @ b @ c``); transpose/matmul of an ELEMENTWISE
     compound (e.g. ``(a + b).T``) refuses loudly — supporting that
     would mean materializing intermediate results mid-formula."""
-    # MatMul/Transpose are frozen dataclasses with value equality, so
+    # Matrix ops are frozen dataclasses with value equality, so
     # the memo resolves '(a @ b) * 2 - a @ b' and '(a @ b).T - a @ b'
     # to ONE contraction join, and ``names`` binds each distinct
     # subtree at an elementwise position to one synthetic operand
@@ -292,30 +293,30 @@ def _rewrite_matrix_ops(
                     f"({type(d).__name__}) is not defined{hint}"
                 )
         elif isinstance(node, Transpose):
-            t = transpose_triplet(as_matrix(node.operand, "transpose ('.T')"))
+            t = transpose_triplet(as_matrix(node.operand, node.name))
         elif isinstance(node, MatMul):
-            t = matmul_triplet(as_matrix(node.left, "matmul ('@')"),
-                               as_matrix(node.right, "matmul ('@')"))
+            t = matmul_triplet(as_matrix(node.left, node.name),
+                               as_matrix(node.right, node.name))
         elif isinstance(node, Neumann):
-            t = neumann_series(as_matrix(node.operand, "neumann()"), node.terms)
+            t = neumann_series(as_matrix(node.operand, node.name), node.terms)
         elif isinstance(node, Leontief):
             # NOTE: unlike every other matrix op this runs DRIVER-SIDE
             # actions at compile time (one scalar max per term + a
             # localCheckpoint lineage cut) — the convergence depth is
             # data-dependent by definition; see
             # leontief_total_requirements's execution contract.
-            t = leontief_total_requirements(as_matrix(node.operand, "leontief()"), tol=node.tol)
+            t = leontief_total_requirements(as_matrix(node.operand, node.name), tol=node.tol)
         else:
             raise FormulaError(
                 f"{ctx} is supported on matrix variables and compositions of "
-                ".T/@/neumann()/leontief() over them, not on elementwise "
+                "matrix ops over them, not on elementwise "
                 "compound expressions — bind the subexpression to a name first"
             )
         memo[node] = t
         return t
 
     def rw(node: FormulaExpr) -> FormulaExpr:
-        if isinstance(node, (Transpose, MatMul, Neumann, Leontief)):
+        if isinstance(node, MatrixOp):
             return names.setdefault(node, Var(f"@{len(names)}"))
         if isinstance(node, BinOp):
             return BinOp(node.op, rw(node.left), rw(node.right))

@@ -482,6 +482,8 @@ _ROUTING_OPS = {
     "neumann": "neumann({m}, 2)",
     "leontief": "leontief({m})",
 }
+_ROUTING_NAMES = {".T": "transpose ('.T')", "@": "matmul ('@')", "neumann": "neumann()",
+                  "leontief": "leontief()"}
 _ROUTING_MIXES = ["a", "s", "t", "as", "at", "st", "ast"]
 
 
@@ -500,7 +502,8 @@ def test_adp_routing_table(spark, mix, op):
     """Every ADP operand mix × matrix op is refused with one
     NotImplementedError naming the demoted operands, or routed: ADP
     frames to mpf, TripletMatrix-only formulas to float64, Series-only
-    formulas to the driver."""
+    formulas to the driver. A refusal names the matrix op the formula
+    uses, and no other."""
     from ssb_coefficient_maker_spark.formula.parser import FormulaError
     from ssb_coefficient_maker_spark.plans.triplet import TripletMatrix
 
@@ -514,13 +517,16 @@ def test_adp_routing_table(spark, mix, op):
     formula = " + ".join([_ROUTING_OPS[op].format(m=m), *(n for n in mix if n != m)])
     fe = FormulaEvaluator({n: data[n] for n in mix}, adp_enabled=True, spark=spark)
     outcome = _routing_outcome(mix, op)
+    named = [_ROUTING_NAMES[op]] if op in _ROUTING_NAMES else []
     if outcome == "refused":
         with pytest.raises(NotImplementedError, match="float64") as err:
             fe.evaluate_to_pandas(formula)
         assert all(f"'{n}'" in str(err.value) for n in mix)  # names the operands
+        assert [n for n in _ROUTING_NAMES.values() if n in str(err.value)] == named
     elif outcome == "formula_error":
-        with pytest.raises(FormulaError, match="matrix operand"):
+        with pytest.raises(FormulaError, match="matrix operand") as err:
             fe.evaluate_to_pandas(formula)
+        assert [n for n in _ROUTING_NAMES.values() if n in str(err.value)] == named
     else:
         res = fe.evaluate_to_pandas(formula)
         if outcome == "driver":

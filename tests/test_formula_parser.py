@@ -146,3 +146,25 @@ def test_transpose_parses_other_attributes_refused():
     assert isinstance(expr.left, Transpose)
     with pytest.raises(FormulaError, match=r"(?s)'values'.*SURVEY.*deviation"):
         parse_formula("m.values + 1")
+
+
+def test_every_backend_implements_the_grammar():
+    """Each op table holds ``num``, ``neg``, every operator symbol and
+    every elementwise call of the parser's tables, and nothing else: a
+    construct the grammar gains fails here until every backend has it."""
+    from ssb_coefficient_maker_spark.adp import MP_OPS
+    from ssb_coefficient_maker_spark.formula.parser import CALLS, OPERATORS
+    from ssb_coefficient_maker_spark.functions.math import SQL_OPS
+    from ssb_coefficient_maker_spark.plans.alignment import NUMPY_OPS
+
+    grammar = ({"num", "neg"} | {sym for sym, _ in OPERATORS.values()}
+               | {name for name, sig in CALLS.items() if sig.node is Call})
+    for table in (SQL_OPS, NUMPY_OPS, MP_OPS):
+        assert set(table) == grammar
+
+
+def test_whitelist_message_lists_names_in_a_fixed_order():
+    with pytest.raises(FormulaError, match=r"\['abs', 'pow', 'where', 'neumann', 'leontief'\]"):
+        parse_formula("exp(a)")
+    with pytest.raises(FormulaError, match=r"\['fillna'\]"):
+        parse_formula("a.round(2)")

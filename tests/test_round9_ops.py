@@ -456,17 +456,15 @@ class TestLeontiefFormula:
 
     def test_variables_and_routing_predicates(self, spark):
         from ssb_coefficient_maker_spark.formula.parser import (
-            contains_matmul,
-            contains_transpose,
             extract_variables,
+            matrix_ops,
             parse_formula,
         )
 
         e = parse_formula("leontief(a, 1e-8) @ d + b")
         assert extract_variables(e) == ["a", "d", "b"]
-        assert contains_matmul(e)
-        assert contains_transpose(parse_formula("leontief(a.T)"))
-        assert not contains_transpose(e)
+        assert matrix_ops(e) == ["matmul ('@')", "leontief()"]  # no transpose
+        assert "transpose ('.T')" in matrix_ops(parse_formula("leontief(a.T)"))
 
 
 # ----------------------------------- driver-priority derivation gate
