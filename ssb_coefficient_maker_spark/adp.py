@@ -57,11 +57,14 @@ def _to_decimal_str(value: Any, dps: int) -> str:
     Floats use ``repr`` (shortest round-trip decimal — '1e-20' stays
     the exact decimal 1e-20 at high precision, matching the user's
     written literal rather than the float64 artifact); mpf values are
-    serialized at full working precision.
+    serialized at full working precision; text is carried as given,
+    once ``mpmath.mpf`` has parsed it, so text that is not a number is
+    refused here, when it is registered.
     """
     if value is None:
         return "nan"
     if isinstance(value, str):
+        mpmath.mpf(value)
         return value
     if hasattr(value, "_mpf_"):
         with mpmath.workdps(dps):

@@ -539,8 +539,12 @@ def test_adp_routing_table(spark, mix, op):
 
 # -------------------------------------------------------- ingestion contract
 def test_float_ingestion_refuses_text_cells(spark):
-    with pytest.raises(ValueError, match="could not convert string to float"):
-        FormulaEvaluator({"a": pd.DataFrame({"x": [1.0, "abc"]})}, spark=spark)
+    """Both cell codecs refuse a text cell that is not a number when the
+    frame is registered, on the driver."""
+    for adp_enabled in (False, True):
+        with pytest.raises(ValueError, match="could not convert string to float: 'abc'"):
+            FormulaEvaluator({"a": pd.DataFrame({"x": [1.0, "abc"]})}, adp_enabled=adp_enabled,
+                             spark=spark)
 
 
 def test_adp_ingestion_carries_cells_exactly(spark):
