@@ -191,16 +191,18 @@ class FormulaEvaluator:
         """
         return self._evaluated(formula, self._result)
 
-    def _evaluated(self, formula: str | FormulaExpr, materialize) -> Any:
+    def _evaluated(self, formula: str | FormulaExpr, materialize,
+                   expr: FormulaExpr | None = None) -> Any:
         """Route ``formula`` and hand its plan to ``materialize``,
-        between the verbose banner and completion lines."""
+        between the verbose banner and completion lines. ``expr`` is
+        the formula text's parsed tree when the caller has it."""
         if self.verbose:
             shown = formula if isinstance(formula, str) else "<parsed>"
             print(f"Evaluating formula: {shown}")
             if "/" in str(shown):
                 fate = "be replaced with zeros" if self.fill_invalid else "trigger warnings or errors"
                 print(f"Note: Formula contains division. Invalid values will {fate}.")
-        result = materialize(self._plan(formula))
+        result = materialize(self._plan(formula, expr))
         if self.verbose:
             if isinstance(result, DataFrame):
                 shape: Any = "lazy (Spark DataFrame)"
@@ -211,11 +213,11 @@ class FormulaEvaluator:
             print(f"Formula evaluation complete. Result shape: {shape}")
         return result
 
-    def _plan(self, formula: str | FormulaExpr) -> _Plan:
+    def _plan(self, formula: str | FormulaExpr, expr: FormulaExpr | None = None) -> _Plan:
         self.last_invalid_count = None  # set again by this formula's audit
         if isinstance(formula, FormulaExpr):
             return self._route(formula, "<parsed>")
-        return self._route(self.parse_formula(formula), formula)
+        return self._route(expr if expr is not None else self.parse_formula(formula), formula)
 
     def _route(self, expr: FormulaExpr, formula: str, *, fuse: bool = False) -> _Plan:
         """Decide a formula's execution path and build its plan — the
@@ -347,9 +349,11 @@ class FormulaEvaluator:
         ``evaluate_to_parquet``, the audit rides the collect in either
         validation mode; warns or raises like ``evaluate_formula``,
         after the collect."""
-        return self._evaluated(
-            formula, lambda plan: plan.value if plan.df is None else self._audited(plan)[1]
-        )
+        return self._evaluated(formula, self._collected)
+
+    def _collected(self, plan: _Plan) -> Any:
+        """A plan's ``evaluate_to_pandas`` result."""
+        return plan.value if plan.df is None else self._audited(plan)[1]
 
 
 @dataclass
@@ -441,8 +445,8 @@ class CoefficientCalculator:
                 if self.verbose:
                     print(f"Skipping coefficient {name}: unparseable formula {formula!r}: {exc}")
                 continue
-            variables = self.evaluator.extract_variables(expr)
-            unknown = [v for v in variables if v not in self.evaluator.datasets]
+            # _route prints the variables once the row is evaluated
+            unknown = [v for v in extract_variables(expr) if v not in self.evaluator.datasets]
             if unknown:
                 if self.verbose:
                     # reference shape, coeff_maker.py:1005
@@ -454,12 +458,15 @@ class CoefficientCalculator:
         """Evaluate every mapped formula; skip empty formulas and
         formulas with unknown variables (reference
         coeff_maker.py:989-1012 fail-soft loop)."""
-        return self._computed(self.evaluator.evaluate_formula)
+        return self._computed(self.evaluator._result)
 
-    def _computed(self, evaluate) -> dict[str, Any]:
+    def _computed(self, materialize) -> dict[str, Any]:
+        """Evaluate each row's parsed formula, materialized like
+        ``FormulaEvaluator.evaluate_formula`` (``_result``) or
+        ``evaluate_to_pandas`` (``_collected``)."""
         results: dict[str, Any] = {}
-        for name, formula, _ in self._rows():
-            results[name] = evaluate(formula)
+        for name, formula, expr in self._rows():
+            results[name] = self.evaluator._evaluated(formula, materialize, expr)
             if self.verbose:
                 # reference shape, coeff_maker.py:1014
                 print(f"Successfully computed coefficient: {name}")
@@ -559,4 +566,4 @@ class CoefficientCalculator:
         return manifest
 
     def compute_coefficients_to_pandas(self) -> dict[str, Any]:
-        return self._computed(self.evaluator.evaluate_to_pandas)
+        return self._computed(self.evaluator._collected)

@@ -597,3 +597,21 @@ def test_colliding_operand_column_names_align(spark):
     fused = group.df.toPandas().sort_values("__row_id__")
     for c in expected.columns:
         np.testing.assert_array_equal(fused[f"s_{c}"].to_numpy(), expected[c].to_numpy())
+
+
+@pytest.mark.parametrize("method", ["compute_coefficients", "compute_coefficients_to_pandas"])
+def test_verbose_batch_parses_each_row_once(spark, capsys, method):
+    """A map row is parsed, and its names extracted, once: the batch
+    evaluates the tree its skip rules parsed, and its messages keep the
+    formula text."""
+    data = {"a": pd.DataFrame({"x": [1.0, 2.0]}), "b": pd.DataFrame({"x": [3.0, 4.0]})}
+    cmap = pd.DataFrame({"result": ["sum", "share"], "formula": ["a + b", "a / b"]})
+    calc = CoefficientCalculator(data, cmap, "result", "formula", verbose=True, spark=spark)
+    capsys.readouterr()
+    getattr(calc, method)()
+    lines = capsys.readouterr().out.splitlines()
+    for prefix in ("Parsing formula:", "Parsed expression:", "Variables in expression:",
+                   "Evaluating formula:"):
+        assert sum(line.startswith(prefix) for line in lines) == 2, prefix
+    assert "Evaluating formula: a / b" in lines
+    assert sum(line.startswith("Note: Formula contains division") for line in lines) == 1
