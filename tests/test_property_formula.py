@@ -13,33 +13,81 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from ssb_coefficient_maker_spark.api import FormulaEvaluator
+from ssb_coefficient_maker_spark.formula.parser import CALLS, OPERATORS, Call
 from ssb_coefficient_maker_spark.functions import safe_div, safe_floordiv, safe_mod
 
 NAMES = ["a", "b", "c"]
+LEAVES = NAMES + ["0", "2", "0.5"]
+
+def _compare(f):
+    """A numpy comparison as 1.0 or 0.0, as the engine gives it."""
+    return lambda a, b: f(a, b).astype(np.float64)
+
+
+# The oracle: numpy, written here, for every operator symbol and every
+# elementwise call in the parser's tables. A construct the tables gain
+# fails the draw below until it has an oracle here.
+ORACLE_OPS = {
+    "+": np.add,
+    "-": np.subtract,
+    "*": np.multiply,
+    "/": np.divide,
+    "%": np.mod,
+    "//": np.floor_divide,
+    "**": np.power,
+    "<": _compare(np.less),
+    "<=": _compare(np.less_equal),
+    ">": _compare(np.greater),
+    ">=": _compare(np.greater_equal),
+    "==": _compare(np.equal),
+    "!=": _compare(np.not_equal),
+}
+ORACLE_CALLS = {
+    "abs": np.abs,
+    "pow": np.power,
+    "where": lambda c, a, b: np.where(np.nan_to_num(c) != 0, a, b),
+    "fillna": lambda x, v: np.where(np.isnan(x), v, x),
+}
+SYMBOLS = sorted(sym for sym, _ in OPERATORS.values())
+ELEMENTWISE = sorted(name for name, sig in CALLS.items() if sig.node is Call)
 
 
 @st.composite
 def formulas(draw, depth: int = 0):
-    """Random arithmetic formulas over a/b/c with literals."""
-    if depth >= 2:
-        return draw(st.sampled_from(NAMES + ["2", "0.5", "3.0"]))
-    kind = draw(st.integers(0, 3))
-    if kind == 0:
-        return draw(st.sampled_from(NAMES))
-    if kind == 1:
-        return draw(st.sampled_from(["1", "2", "0.5"]))
-    op = draw(st.sampled_from(["+", "-", "*", "/"]))
-    left = draw(formulas(depth=depth + 1))
-    right = draw(formulas(depth=depth + 1))
-    return f"({left} {op} {right})"
+    """A random formula over a/b/c and literals, drawn from the parser's
+    tables (every operator and comparison, unary minus, every
+    elementwise call), with its numpy oracle: ``(text, oracle)``, where
+    ``oracle`` maps the operands' arrays to the expected result."""
+    kind = "leaf" if depth >= 3 else draw(st.sampled_from(["leaf", "op", "op", "neg", "call"]))
+    if kind == "leaf":
+        text = draw(st.sampled_from(LEAVES))
+        if text in NAMES:
+            return text, lambda env: env[text]
+        return text, lambda env: np.float64(text)
+    if kind == "neg":
+        text, inner = draw(formulas(depth=depth + 1))
+        return f"(-{text})", lambda env: np.negative(inner(env))
+    if kind == "op":
+        sym = draw(st.sampled_from(SYMBOLS))
+        (left, lf), (right, rf) = draw(formulas(depth=depth + 1)), draw(formulas(depth=depth + 1))
+        return f"({left} {sym} {right})", lambda env: ORACLE_OPS[sym](lf(env), rf(env))
+    name = draw(st.sampled_from(ELEMENTWISE))
+    args = [draw(formulas(depth=depth + 1)) for _ in CALLS[name].params]
+    texts = [t for t, _ in args]
+    if CALLS[name].method:  # the receiver is the first argument
+        text = f"({texts[0]}).{name}({', '.join(texts[1:])})"
+    else:
+        text = f"{name}({', '.join(texts)})"
+    return text, lambda env: ORACLE_CALLS[name](*(f(env) for _, f in args))
 
 
 @pytest.fixture(scope="module")
 def matrices():
     rng = np.random.default_rng(seed=123)
-    return {
-        n: pd.DataFrame(rng.integers(-5, 6, (4, 3))).astype(float) for n in NAMES
-    }
+    out = {n: pd.DataFrame(rng.integers(-5, 6, (4, 3))).astype(float) for n in NAMES}
+    # NaN and infinite cells, for fillna, where and the comparisons
+    out["a"].iloc[0, 0], out["b"].iloc[1, 1], out["c"].iloc[2, 2] = np.nan, np.inf, -np.inf
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -47,46 +95,59 @@ def shared_evaluator(spark, matrices):
     return FormulaEvaluator(matrices, fill_invalid=True, spark=spark)
 
 
+@pytest.fixture(scope="module")
+def triplet_evaluator(spark, matrices):
+    """The same operands as ``TripletMatrix`` copies: every formula
+    over them takes the triplet route."""
+    from ssb_coefficient_maker_spark.plans.triplet import TripletMatrix
+
+    def triplet(m: pd.DataFrame) -> TripletMatrix:
+        rows, cols = m.shape
+        return TripletMatrix(spark.createDataFrame(pd.DataFrame({
+            "__row_id__": np.repeat([str(i) for i in range(rows)], cols),
+            "__col_id__": np.tile([str(j) for j in range(cols)], rows),
+            "value": m.to_numpy().ravel(),
+        })))
+
+    return FormulaEvaluator({n: triplet(m) for n, m in matrices.items()}, fill_invalid=True,
+                            spark=spark)
+
+
+def _assert_matches(evaluator, formula: str, exp: np.ndarray) -> None:
+    """``formula``'s result equals ``exp``, with the evaluator's fill:
+    NaN and ±Inf cells read 0, and an all-invalid result raises."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        try:
+            got = evaluator.evaluate_to_pandas(formula)
+        except ValueError:
+            assert not np.isfinite(exp).any(), formula
+            return
+    if exp.ndim == 0:  # a formula over literals only
+        assert float(got) == pytest.approx(float(exp), nan_ok=True), formula
+        return
+    rows, cols = exp.shape
+    got = got.loc[range(rows), range(cols)].to_numpy(dtype=np.float64)
+    np.testing.assert_allclose(got, np.where(np.isfinite(exp), exp, 0.0), rtol=1e-9,
+                               atol=1e-12, err_msg=formula)
+
+
 @settings(
     max_examples=25,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(formula=formulas())
-def test_random_formula_matches_pandas(shared_evaluator, matrices, formula):
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        try:
-            got = shared_evaluator.evaluate_to_pandas(formula)
-        except ValueError:
-            # all-invalid result raises by policy when every cell is
-            # invalid; pandas oracle must agree it is all-invalid
-            import re as _re
-
-            env = {k: v for k, v in matrices.items()}
-            env["__builtins__"] = {}
-            np_f = _re.sub(r"(?<![\w.])(\d+(?:\.\d+)?)", r"np.float64(\1)", formula)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                exp = eval(np_f, {"np": np}, env)
-            if np.isscalar(exp):
-                return
-            assert (~np.isfinite(exp.to_numpy())).all()
-            return
-    env = {k: v for k, v in matrices.items()}
-    # literals in the oracle must be numpy scalars: the engine is IEEE
-    # everywhere (scalar 1/0 -> inf, like the matrix path), while plain
-    # Python int division raises
-    env["__builtins__"] = {}
-    import re as _re
-
-    np_formula = _re.sub(r"(?<![\w.])(\d+(?:\.\d+)?)", r"np.float64(\1)", formula)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        exp = eval(np_formula, {"np": np}, env)
-    if np.isscalar(exp) or not hasattr(exp, "replace"):
-        assert got == pytest.approx(float(exp), nan_ok=True)
-        return
-    exp = exp.replace([np.inf, -np.inf, np.nan], 0)
-    np.testing.assert_allclose(got.values, exp.values, rtol=1e-9, atol=1e-12)
+@given(drawn=formulas())
+def test_random_formula_matches_pandas(shared_evaluator, triplet_evaluator, matrices, drawn):
+    """Each drawn formula gives numpy's answer on the wide route and on
+    the triplet route (``TripletMatrix`` copies of the same operands).
+    Series are left out: the triplet route broadcasts them by label,
+    not by position (README "Label deviations")."""
+    formula, oracle = drawn
+    with np.errstate(all="ignore"):
+        exp = np.asarray(oracle({n: m.to_numpy() for n, m in matrices.items()}), dtype=np.float64)
+    for evaluator in (shared_evaluator, triplet_evaluator):
+        _assert_matches(evaluator, formula, exp)
 
 
 # ------------------------------------------------------------------
