@@ -473,33 +473,20 @@ class CoefficientCalculator:
         return results
 
     def _fused_plans(self) -> tuple[list[FusedGroup], dict[str, _Plan]]:
-        """Route every map row: wide formulas fuse into one group per
-        frame-operand set (unfilled); every other row keeps its plan."""
-        if self.evaluator.adp_enabled:
-            # ADP matrices carry decimal STRINGS; the fused compiler
-            # emits double arithmetic and would silently destroy the
-            # precision the mode exists for
-            raise NotImplementedError(
-                "compute_coefficients_fused supports standard mode only; "
-                "ADP batches go through compute_coefficients"
-            )
-        datasets = self.evaluator.datasets
+        """Route every map row: the wide rows go to the fused compiler
+        (``compile_formulas_fused``), which gives one unfilled group
+        per frame-operand set; every other row keeps its plan. Under
+        ADP no row is wide, so every row keeps its own plan."""
         extras: dict[str, _Plan] = {}
-        by_frames: dict[frozenset, dict[str, FormulaExpr]] = {}
+        wide: dict[str, FormulaExpr] = {}
         for name, formula, expr in self._rows():
             plan = self.evaluator._route(expr, formula, fuse=True)
             if plan.kind == "wide":
-                frames = frozenset(
-                    v for v in extract_variables(expr) if isinstance(datasets[v], Matrix)
-                )
-                by_frames.setdefault(frames, {})[name] = expr
+                wide[name] = expr
             else:
                 extras[name] = plan
-        groups = [
-            FusedGroup(*compile_formulas_fused(exprs, datasets))
-            for exprs in by_frames.values()
-        ]
-        return groups, extras
+        groups = compile_formulas_fused(wide, self.evaluator.datasets)
+        return [FusedGroup(*g) for g in groups], extras
 
     def compute_coefficients_fused(
         self,
@@ -519,9 +506,9 @@ class CoefficientCalculator:
         filled when ``fill_invalid``) and the result→columns mapping;
         ``extras`` holds every other row's ``evaluate_formula`` result
         (vector/scalar-only, TripletMatrix-operand and ``.T``/``@``
-        formulas). Raises NotImplementedError under ADP (fusing would
-        silently demote decimal strings to doubles). Skip rules (empty
-        formula, unknown variable, unparseable) match
+        formulas). Under ADP every row is an extra, evaluated as
+        ``compute_coefficients`` evaluates it, so ``groups`` is empty.
+        Skip rules (empty formula, unknown variable, unparseable) match
         ``compute_coefficients``.
         """
         groups, extras = self._fused_plans()

@@ -63,18 +63,18 @@ Bindings = list[tuple[dict[str, str], dict[str, Any]]]
 def align(
     exprs: Mapping[Any, FormulaExpr],
     datasets: Mapping[str, Any],
-    frame_types: tuple[type, ...] = (Matrix,),
     col_key: str | None = None,
 ) -> tuple[DataFrame, list[str], dict[Any, Bindings]]:
     """Align the operands of formulas that share one frame-operand set.
 
-    Each formula's operands split into frames (``frame_types``, each
-    with ``df`` and ``value_cols``), pandas Series and scalars; every
-    formula must read the same frames (they fix the row universe of the
-    join). The frames meet in one aligned join (``_aligned_join``) on
-    ``__row_id__``, and on ``col_key`` too when given (the triplet
-    route's column label). The output columns are the union of the
-    frames' value columns, in first-seen order.
+    Each formula's operands split into frames, pandas Series and
+    scalars (``_operands``). The frames fix the row universe of the
+    join, so the caller passes formulas that read the same frames:
+    ``compile_formulas_fused`` groups them so, and every other compiler
+    passes one formula. The frames meet in one aligned join
+    (``_aligned_join``) on ``__row_id__``, and on ``col_key`` too when
+    given (the triplet route's column label). The output columns are
+    the union of the frames' value columns, in first-seen order.
 
     Returns ``(joined, out_cols, bindings)``: ``bindings[name][pos]``
     is ``(columns, values)`` for formula ``name`` at output column
@@ -86,19 +86,13 @@ def align(
     Series (the triplet route broadcasts by label, so its width is not
     checked).
     """
-    split = {name: _operands(expr, datasets, frame_types) for name, expr in exprs.items()}
+    split = {name: _operands(expr, datasets) for name, expr in exprs.items()}
     for name, (frames, _, _) in split.items():
         if not frames:
             raise FormulaError(
                 f"formula {name!r} has no matrix operand; evaluate vector/"
                 "scalar formulas on the driver (eval_driver)"
             )
-    frame_sets = {frozenset(frames) for frames, _, _ in split.values()}
-    if len(frame_sets) > 1:
-        raise FormulaError(
-            f"fused formulas must share one frame-operand set (the row "
-            f"universe of the aligned join); got {sorted(map(sorted, frame_sets))}"
-        )
     frames = next(iter(split.values()))[0]
     out_cols = list(dict.fromkeys(c for m in frames.values() for c in m.value_cols))
     have = {n: set(m.value_cols) for n, m in frames.items()}
@@ -123,14 +117,18 @@ def align(
 
 
 def _operands(
-    expr: FormulaExpr, datasets: Mapping[str, Any], frame_types: tuple[type, ...]
+    expr: FormulaExpr, datasets: Mapping[str, Any]
 ) -> tuple[dict[str, Any], dict[str, pd.Series], dict[str, float]]:
-    """A formula's frame, vector and scalar operands, in first-seen order."""
+    """A formula's frame, vector and scalar operands, in first-seen
+    order. A frame is any operand that is neither a Series nor a
+    scalar: a ``Matrix`` on the wide and ADP routes, a
+    ``TripletMatrix`` on the triplet route (the router keeps the two
+    apart)."""
     names = extract_variables(expr)
     missing = [n for n in names if n not in datasets]
     if missing:
         raise KeyError(f"formula references unknown dataset(s): {missing}")
-    frames = {n: d for n in names if isinstance(d := datasets[n], frame_types)}
+    frames = {n: d for n in names if not isinstance(d := datasets[n], (pd.Series, int, float))}
     vectors = {n: d for n in names if isinstance(d := datasets[n], pd.Series)}
     scalars = {n: float(d) for n in names if isinstance(d := datasets[n], (int, float))}
     return frames, vectors, scalars
@@ -148,52 +146,53 @@ def compile_formula(
     Mirrors reference ``_perform_evaluation`` (coeff_maker.py:720-798)
     but lazily and in one plan.
     """
-    df, result_cols = compile_formulas_fused({None: expr}, datasets)
+    [(df, result_cols)] = compile_formulas_fused({None: expr}, datasets)
     return Matrix(df, result_cols[None])
 
 
 def compile_formulas_fused(
     exprs: dict[str | None, FormulaExpr],
     datasets: dict[str, Matrix | pd.Series | float],
-) -> tuple[DataFrame, dict[str | None, list[str]]]:
-    """Compile SEVERAL formulas over one shared operand set into ONE
-    plan: a single aligned join of the union of frame operands
-    (``align``), then one projection per (formula × column).
+) -> list[tuple[DataFrame, dict[str | None, list[str]]]]:
+    """Compile SEVERAL formulas into one plan per FRAME-operand set:
+    the formulas that read the same frames share a single aligned join
+    of them (``align``), then one projection per (formula × column).
 
     The reference's batch workload (coeff_maker.py:989-1012) loops N
     formulas over one ``data_dict``; evaluated independently, each
     formula re-scans (and re-pivots/re-aggregates) every shared input
-    N times. Fused, each input is scanned ONCE, with all N formulas'
-    arithmetic landing in one whole-stage-codegen'd ``Project`` on top
-    of the aligned join.
+    N times. Fused, each input is scanned ONCE per group, with all of
+    the group's arithmetic landing in one whole-stage-codegen'd
+    ``Project`` on top of the aligned join.
 
-    Every formula must use the same FRAME-operand set (that is what
-    makes the row universe — the outer-join key space — identical, so
-    per-formula row semantics are exactly the unfused ones). Vector
-    and scalar operands may differ freely; they compile to literals.
-    Raises ``FormulaError`` if the frame sets differ — the caller
-    (``CoefficientCalculator.compute_coefficients_fused``) groups by
-    frame set before calling.
+    The frame-operand set is the group key because it fixes the row
+    universe — the outer-join key space — so per-formula row semantics
+    are exactly the unfused ones. Vector and scalar operands may differ
+    freely within a group; they compile to literals. Groups come in
+    first-seen order; no formulas give no groups.
 
-    Returns ``(df, result_cols)``: ``df`` has ``__row_id__`` plus
-    columns named ``{result}_{col}`` (plain ``{col}`` for a ``None``
-    result name, the single-formula case); ``result_cols`` maps each
-    result name to its column list.
+    Returns one ``(df, result_cols)`` per group: ``df`` has
+    ``__row_id__`` plus columns named ``{result}_{col}`` (plain
+    ``{col}`` for a ``None`` result name, the single-formula case);
+    ``result_cols`` maps each result name to its column list.
     """
-    if not exprs:
-        raise FormulaError("compile_formulas_fused: no formulas given")
-    joined, out_cols, bindings = align(exprs, datasets)
-    projections = [ROW_ID]
-    result_cols: dict[str | None, list[str]] = {}
+    groups: dict[frozenset, dict[str | None, FormulaExpr]] = {}
     for rname, expr in exprs.items():
-        cols = [out_c if rname is None else f"{rname}_{out_c}" for out_c in out_cols]
-        for alias, (columns, values) in zip(cols, bindings[rname]):
-            sql = evaluate(
-                expr, lambda v: or_nan(columns[v]) if v in columns else num(values[v]), SQL_OPS
-            )
-            projections.append(f"{sql} AS {ident(alias)}")
-        result_cols[rname] = cols
-    return joined.selectExpr(*projections), result_cols
+        groups.setdefault(frozenset(_operands(expr, datasets)[0]), {})[rname] = expr
+    plans = []
+    for group in groups.values():
+        joined, out_cols, bindings = align(group, datasets)
+        result_cols = {rname: [out_c if rname is None else f"{rname}_{out_c}" for out_c in out_cols]
+                       for rname in group}
+        projections = [ROW_ID]
+        for rname, expr in group.items():
+            for alias, (columns, values) in zip(result_cols[rname], bindings[rname]):
+                sql = evaluate(
+                    expr, lambda v: or_nan(columns[v]) if v in columns else num(values[v]), SQL_OPS
+                )
+                projections.append(f"{sql} AS {ident(alias)}")
+        plans.append((joined.selectExpr(*projections), result_cols))
+    return plans
 
 
 def _operand_col(i: int, pos: int) -> str:

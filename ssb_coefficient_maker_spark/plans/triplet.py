@@ -365,7 +365,7 @@ def compile_formula_triplet(
                 "broadcasts a Series by column label, so each label must be unique"
             )
     expr, rewritten = _rewrite_matrix_ops(expr, operands)
-    joined, _, bindings = align({None: expr}, {**operands, **rewritten}, (TripletMatrix,), COL_ID)
+    joined, _, bindings = align({None: expr}, {**operands, **rewritten}, COL_ID)
     [(columns, values)] = bindings[None]
 
     def resolve(var: str) -> str:

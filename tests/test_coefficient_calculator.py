@@ -280,16 +280,53 @@ def test_fused_to_parquet_one_write_per_group(spark, tmp_path):
     assert np.allclose(back[manifest["prod"]["columns"]].to_numpy(), (a * b).to_numpy())
 
 
-def test_fused_rejects_adp_mode(spark):
-    a = pd.DataFrame({"x": [1.0, 2.0]})
-    cmap = pd.DataFrame({"name": ["r"], "formula": ["a * 2"]})
+def test_fused_adp_rows_keep_their_own_plans(spark, tmp_path):
+    """Under ADP no row fuses: ``compute_coefficients_fused`` returns no
+    groups and every row's result as ``compute_coefficients`` gives it,
+    and the fused parquet sink writes each matrix row at ``extra=`` as
+    decimal strings, at full precision."""
+    a = pd.DataFrame({"x": [1.0, 2.0, 3.0]}, index=["r1", "r2", "r3"])
+    b = pd.DataFrame({"x": [3.0, 3.0, 3.0]}, index=["r1", "r2", "r3"])
+    cmap = pd.DataFrame({"name": ["q", "p", "k"], "formula": ["a / b", "a * b", "1 / 3"]})
     cc = CoefficientCalculator(
-        {"a": a}, cmap, "name", "formula", adp_enabled=True, spark=spark
+        {"a": a, "b": b}, cmap, "name", "formula", adp_enabled=True, decimal_precision=40,
+        spark=spark,
     )
-    import pytest
+    groups, extras = cc.compute_coefficients_fused()
+    assert groups == []
+    single = cc.compute_coefficients()
+    assert list(extras) == list(single) == ["q", "p", "k"]
+    assert extras["k"] == single["k"]
+    for name in ("q", "p"):
+        pd.testing.assert_frame_equal(
+            extras[name].toPandas().sort_values("__row_id__", ignore_index=True),
+            single[name].toPandas().sort_values("__row_id__", ignore_index=True),
+        )
+    manifest = cc.compute_coefficients_fused_to_parquet(str(tmp_path / "out"))
+    assert manifest["q"]["path"] == str(tmp_path / "out" / "extra=q")
+    back = spark.read.parquet(manifest["q"]["path"]).toPandas().sort_values("__row_id__")
+    assert list(back["x"]) == ["0." + "3" * 40, "0." + "6" * 39 + "7", "1.0"]
 
-    with pytest.raises(NotImplementedError, match="ADP"):
-        cc.compute_coefficients_fused()
+
+def test_fused_compiler_groups_by_frame_set_in_first_seen_order(spark):
+    """``compile_formulas_fused`` gives one plan per frame-operand set,
+    in the order the sets are first seen; no formulas give no plans."""
+    from ssb_coefficient_maker_spark.catalog import matrix_from_pandas
+    from ssb_coefficient_maker_spark.formula.parser import parse_formula
+    from ssb_coefficient_maker_spark.plans.alignment import compile_formulas_fused
+
+    datasets = {
+        "a": matrix_from_pandas(spark, pd.DataFrame({"x": [1.0, 2.0]})),
+        "b": matrix_from_pandas(spark, pd.DataFrame({"x": [3.0, 4.0]})),
+        "s": pd.Series([2.0]),
+        "k": 3.0,
+    }
+    forms = {"u": "b * k", "v": "a + b", "w": "b + s", "z": "b + a"}
+    plans = compile_formulas_fused({n: parse_formula(f) for n, f in forms.items()}, datasets)
+    assert [list(cols) for _, cols in plans] == [["u", "w"], ["v", "z"]]
+    got = plans[1][0].toPandas().sort_values("__row_id__")
+    assert list(got["v_x"]) == list(got["z_x"]) == [4.0, 6.0]
+    assert compile_formulas_fused({}, datasets) == []
 
 
 def test_fused_falls_back_for_triplet_operands(spark):
