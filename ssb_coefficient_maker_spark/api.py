@@ -508,8 +508,9 @@ class CoefficientCalculator:
         (vector/scalar-only, TripletMatrix-operand and ``.T``/``@``
         formulas). Under ADP every row is an extra, evaluated as
         ``compute_coefficients`` evaluates it, so ``groups`` is empty.
-        Skip rules (empty formula, unknown variable, unparseable) match
-        ``compute_coefficients``.
+        A group whose ``{result}_{col}`` names collide raises
+        ``FormulaError``. Skip rules (empty formula, unknown variable,
+        unparseable) match ``compute_coefficients``.
         """
         groups, extras = self._fused_plans()
         if self.evaluator.fill_invalid:

@@ -38,6 +38,7 @@ is IEEE-754, identical to numpy's elementwise results).
 
 from __future__ import annotations
 
+from collections import Counter
 from functools import reduce
 from typing import Any, Mapping
 
@@ -169,7 +170,9 @@ def compile_formulas_fused(
     universe — the outer-join key space — so per-formula row semantics
     are exactly the unfused ones. Vector and scalar operands may differ
     freely within a group; they compile to literals. Groups come in
-    first-seen order; no formulas give no groups.
+    first-seen order; no formulas give no groups. A group whose result
+    columns collide (``a`` over column ``b_c`` and ``a_b`` over column
+    ``c`` both make ``a_b_c``) is refused with a ``FormulaError``.
 
     Returns one ``(df, result_cols)`` per group: ``df`` has
     ``__row_id__`` plus columns named ``{result}_{col}`` (plain
@@ -184,6 +187,10 @@ def compile_formulas_fused(
         joined, out_cols, bindings = align(group, datasets)
         result_cols = {rname: [out_c if rname is None else f"{rname}_{out_c}" for out_c in out_cols]
                        for rname in group}
+        counts = Counter(c for cols in result_cols.values() for c in cols)
+        if clash := sorted(c for c, k in counts.items() if k > 1):
+            raise FormulaError(f"fused results {list(group)} collide on column name(s) {clash} "
+                               "(<result>_<column>); rename a result")
         projections = [ROW_ID]
         for rname, expr in group.items():
             for alias, (columns, values) in zip(result_cols[rname], bindings[rname]):

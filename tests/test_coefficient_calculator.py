@@ -308,6 +308,23 @@ def test_fused_adp_rows_keep_their_own_plans(spark, tmp_path):
     assert list(back["x"]) == ["0." + "3" * 40, "0." + "6" * 39 + "7", "1.0"]
 
 
+def test_fused_result_column_collision_refused(spark, tmp_path):
+    """Result ``a`` over column ``b_c`` and result ``a_b`` over column
+    ``c`` would both be ``a_b_c``: both fused methods refuse the group
+    on the driver, naming the column (the sink failed in Spark with an
+    ambiguous reference)."""
+    from ssb_coefficient_maker_spark.formula.parser import FormulaError
+
+    x = pd.DataFrame([[1.0, 2.0], [3.0, 4.0]], index=["r1", "r2"], columns=["c", "b_c"])
+    cmap = pd.DataFrame({"name": ["a", "a_b"], "formula": ["x * 1", "x * 2"]})
+    cc = CoefficientCalculator({"x": x}, cmap, "name", "formula", spark=spark)
+    with pytest.raises(FormulaError, match=r"\['a_b_c'\].*rename a result"):
+        cc.compute_coefficients_fused()
+    with pytest.raises(FormulaError, match=r"\['a_b_c'\].*rename a result"):
+        cc.compute_coefficients_fused_to_parquet(str(tmp_path / "out"))
+    assert set(cc.compute_coefficients_to_pandas()) == {"a", "a_b"}  # per row: no clash
+
+
 def test_fused_compiler_groups_by_frame_set_in_first_seen_order(spark):
     """``compile_formulas_fused`` gives one plan per frame-operand set,
     in the order the sets are first seen; no formulas give no plans."""
