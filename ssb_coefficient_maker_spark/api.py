@@ -120,6 +120,8 @@ class FormulaEvaluator:
         self.verbose = verbose
         self.last_invalid_count: int | None = None
         self.datasets: dict[str, Matrix | TripletMatrix | pd.Series | float] = {}
+        # label text -> the pandas label it came from (first registration wins)
+        self._labels: dict[str, Any] = {}
         for name, value in data_dict.items():
             self._register(name, value)
         if self.verbose:
@@ -139,6 +141,8 @@ class FormulaEvaluator:
         codec = adp_mod.decimal_codec(self.decimal_precision) if self.adp_enabled else FLOAT64
         if isinstance(value, pd.DataFrame):
             self.datasets[name] = catalog._matrix_from_pandas(self.spark, value, codec)
+            for label in (*value.index, *value.columns):
+                self._labels.setdefault(str(label), label)
         elif isinstance(value, pd.Series):
             self.datasets[name] = codec.cast(value)
         elif isinstance(value, DataFrame):
@@ -304,14 +308,20 @@ class FormulaEvaluator:
 
     def _collect(self, plan: _Plan, df: DataFrame) -> pd.DataFrame:
         """Collect a plan's result as its pandas matrix: a triplet
-        result pivots on the driver, an ADP result collects as mpf."""
+        result pivots on the driver, an ADP result collects as mpf. A
+        label that a pandas operand registered comes back as that
+        label; any other keeps what ``catalog.as_labels`` reads."""
         if plan.kind == "adp":
-            return adp_mod.adp_to_pandas(df, plan.value_cols, self.decimal_precision)
-        if plan.kind == "triplet":
+            pdf = adp_mod.adp_to_pandas(df, plan.value_cols, self.decimal_precision)
+        elif plan.kind == "triplet":
             wide = df.toPandas().pivot(index=ROW_ID, columns=COL_ID, values=VALUE)
             order, _ = catalog.label_order(wide.columns)
-            return catalog.labelled(wide.reset_index(), list(wide.columns[order]))
-        return matrix_to_pandas(Matrix(df, plan.value_cols))
+            pdf = catalog.labelled(wide.reset_index(), list(wide.columns[order]))
+        else:
+            pdf = matrix_to_pandas(Matrix(df, plan.value_cols))
+        pdf.index, pdf.columns = (axis.map(lambda x: self._labels.get(str(x), x))
+                                  for axis in (pdf.index, pdf.columns))
+        return pdf
 
     def _audited(self, plan: _Plan, path: str | None = None) -> tuple[dict, Any]:
         """``_sink``, then warn or raise like ``evaluate_formula`` on

@@ -35,11 +35,16 @@ def _collected(spark, path: str, a: pd.DataFrame) -> tuple[pd.DataFrame, pd.Data
 
 
 @pytest.mark.parametrize("path", ["wide", "triplet", "adp", "leontief"])
-@pytest.mark.parametrize("labels", [["01", "02"], [1, 2]], ids=["text", "int"])
+@pytest.mark.parametrize(
+    "labels",
+    [["01", "02"], [1, 2], ["1", "2"], pd.DatetimeIndex(["2020-01-01", "2020-02-01"])],
+    ids=["text", "int", "numeric-text", "datetime"],
+)
 def test_labels_come_back_as_given(spark, path, labels):
-    """A collected label turns into a number only when its text is that
-    number's canonical text: ``"01"`` stays ``"01"``, and int labels
-    still come back as ints."""
+    """A pandas operand's labels come back as registered, on every
+    route and through ``compute_coefficients_to_pandas`` (the leontief
+    case): ``"01"`` stays ``"01"``, int labels stay ints, the text
+    ``"1"`` stays text and timestamps stay timestamps."""
     got, exp = _collected(spark, path, _frame(labels, labels))
     pd.testing.assert_frame_equal(got, exp, atol=1e-8)
 
@@ -106,3 +111,54 @@ def test_triplet_refuses_repeated_series_labels(spark, index, repeated):
     fe = FormulaEvaluator({"a": a, "s": s}, spark=spark)
     with pytest.raises(FormulaError, match=rf"Series 's' repeats index labels.*\[{repeated}\]"):
         fe.evaluate_to_pandas("a.T.T + s")
+
+
+def test_int_and_text_label_align_as_one(spark):
+    """README "Label deviations": labels travel as text, so ``1`` in one
+    operand and ``"1"`` in another align as one label, which comes back
+    as the first one registered (pandas keeps two rows)."""
+    a = pd.DataFrame({"x": [1.0]}, index=[1])
+    b = pd.DataFrame({"x": [2.0]}, index=["1"])
+    got = FormulaEvaluator({"a": a, "b": b}, spark=spark).evaluate_to_pandas("a + b")
+    pd.testing.assert_frame_equal(got, pd.DataFrame({"x": [3.0]}, index=[1]))
+
+
+EDGE_SHAPES = {
+    "empty": pd.DataFrame({"x": [], "y": []}, dtype=np.float64),
+    "one-row": pd.DataFrame({"x": [1.5], "y": [-2.0]}, index=["r"]),
+    "all-nan": pd.DataFrame({"x": [np.nan, np.nan], "y": [np.nan, np.nan]}),
+}
+EDGE_ROUTES = {"wide": ("a + 1", False), "triplet": ("a.T.T + 1", False), "adp": ("a + 1", True)}
+
+
+def _edge(spark, shape: str, route: str) -> pd.DataFrame:
+    formula, adp = EDGE_ROUTES[route]
+    fe = FormulaEvaluator({"a": EDGE_SHAPES[shape]}, spark=spark, adp_enabled=adp)
+    return fe.evaluate_to_pandas(formula).astype(np.float64)
+
+
+@pytest.mark.parametrize(
+    "shape, route",
+    [("empty", "wide"), ("empty", "adp"), ("one-row", "wide"), ("one-row", "triplet"),
+     ("one-row", "adp")],
+)
+def test_edge_shapes_match_pandas(spark, shape, route):
+    """An empty or single-row operand gives pandas' answer on every
+    route but one (the empty triplet result, below)."""
+    pd.testing.assert_frame_equal(_edge(spark, shape, route), EDGE_SHAPES[shape] + 1)
+
+
+def test_empty_triplet_result_has_no_columns(spark):
+    """README "Label deviations": an empty triplet result collects with
+    no columns, where pandas keeps the operand's two; the long form has
+    no rows to carry its column labels."""
+    assert (EDGE_SHAPES["empty"] + 1).shape == (0, 2)
+    assert _edge(spark, "empty", "triplet").shape == (0, 0)
+
+
+@pytest.mark.parametrize("route", EDGE_ROUTES)
+def test_all_nan_operand_raises_all_invalid(spark, route):
+    """An all-NaN operand gives an all-NaN result, which every route
+    refuses with the reference's all-invalid ``ValueError``."""
+    with pytest.raises(ValueError, match=r"All values in the result of formula .* are invalid"):
+        _edge(spark, "all-nan", route)
