@@ -161,11 +161,12 @@ def compile_adp_formula(
     )
 
     def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ssb_coefficient_maker_spark.adp import MP_OPS
+        from ssb_coefficient_maker_spark.adp import MP_OPS, _to_mpf
 
         num = MP_OPS["num"]
         with mpmath.workdps(dps):
-            consts = [{n: num(v) for n, v in values.items()} for _, values in operands]
+            # single values convert directly: the ufunc would make numpy warn
+            consts = [{n: _to_mpf(v) for n, v in values.items()} for _, values in operands]
             for pdf in batches:
                 data = {ROW_ID: pdf[ROW_ID]}
                 for out_c, (columns, _), const in zip(out_cols, operands, consts):
