@@ -132,10 +132,11 @@ class Leontief(MatrixOp):
     1e-10), raising if the series does not converge (spectral radius
     >= 1). This finishes the domain story ``neumann(a, k)`` opened —
     the caller no longer picks the depth; the data does. ``tol`` must
-    be a literal positive number: it drives a DRIVER-SIDE loop (one
-    scalar action per term, constant plan depth via per-term lineage
-    cuts), so it cannot be column-valued. Same sparse semantics and
-    ADP/wide refusals as ``neumann``."""
+    be a literal positive number: it drives a DRIVER-SIDE loop (over
+    a small label vocabulary, one collect of the operand and the
+    series in numpy; above it, one scalar action per term with
+    per-term lineage cuts), so it cannot be column-valued. Same
+    sparse semantics and ADP/wide refusals as ``neumann``."""
 
     name: ClassVar[str] = "leontief()"
     operand: FormulaExpr
@@ -219,7 +220,7 @@ _LITERALS: dict[str, tuple[Callable[[Any], bool], type, str]] = {
     "terms": (lambda v: isinstance(v, int) and v >= 0, int,
               "a literal non-negative integer — the depth shapes the plan (k contraction joins)"),
     "tol": (lambda v: v > 0, float, "a literal positive number — it drives the driver-side "
-            "convergence loop (one scalar action per term)"),
+            "convergence loop (the stop rule of the series)"),
 }
 
 

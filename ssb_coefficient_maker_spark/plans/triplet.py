@@ -19,14 +19,13 @@ Trade-offs, by design:
   positional semantics; the triplet path documents this deviation,
   and refuses a Series whose index labels repeat (the map literal
   would keep one value per label).
-- results stay in triplet form; ``triplet_to_wide`` pivots back for
-  moderate widths (it must enumerate columns).
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -181,6 +180,12 @@ def _series_sum(parts: list[DataFrame]) -> TripletMatrix:
     return TripletMatrix(total)
 
 
+# A sector vocabulary is small at any data scale: up to DENSE_LABELS
+# labels (an 8 MB float64 matrix) the Leontief series runs on the driver.
+DENSE_LABELS = 1024
+DENSE_CELLS = DENSE_LABELS * DENSE_LABELS
+
+
 def leontief_total_requirements(
     a: TripletMatrix,
     *,
@@ -196,14 +201,22 @@ def leontief_total_requirements(
     < 1); raises after ``max_terms`` otherwise, naming the last
     term's magnitude.
 
-    Execution contract: each term is materialized once via an eager
-    ``localCheckpoint`` — it feeds both the running union and the
-    next contraction, and checkpointing CUTS THE LINEAGE, without
-    which the k-deep join chain's logical plan grows until the driver
-    chokes on it (a tol of 1e-12 on a 0.55-spectral-radius matrix is
-    ~46 terms). The term's ``max(abs(value))`` is observed on that
-    checkpoint, so each iteration is one action and the driver sees k
-    scalars, never a matrix. Terms shrink geometrically, so the
+    Execution contract: A is collected ONCE (at most ``DENSE_CELLS +
+    1`` rows, one job). A finite A over at most ``DENSE_LABELS``
+    non-NULL labels — a sector vocabulary — runs the same series in
+    numpy on the driver (``_dense_series``) and comes back as one
+    local relation: the sums, the stop rule and the present cells are
+    those of the per-term loop, and so are its refusals, raised before
+    any further job.
+
+    Any other A runs the per-term loop: each term is materialized once
+    via an eager ``localCheckpoint`` — it feeds both the running union
+    and the next contraction, and checkpointing CUTS THE LINEAGE,
+    without which the k-deep join chain's logical plan grows until the
+    driver chokes on it (a tol of 1e-12 on a 0.55-spectral-radius
+    matrix is ~46 terms). The term's ``max(abs(value))`` is observed
+    on that checkpoint, so each iteration is one action and the driver
+    sees k scalars, never a matrix. Terms shrink geometrically, so the
     checkpoint footprint is a small multiple of nnz(A), reclaimed by
     the context cleaner when the result is dropped. (localCheckpoint
     blocks are executor-local and non-replicated; a long-lived
@@ -212,44 +225,101 @@ def leontief_total_requirements(
     """
     if max_terms < 1:
         raise ValueError(f"max_terms must be >= 1, got {max_terms}")
-    parts = [identity_triplet(a).df]
-    term = a
-    for _ in range(max_terms):
+    total = _dense_series(a.df.limit(DENSE_CELLS + 1).toPandas(), tol, max_terms)
+    if total is not None:
+        return TripletMatrix(a.df.sparkSession.createDataFrame(
+            total, schema=f"{ROW_ID} string, {COL_ID} string, {VALUE} double"))
+
+    def checkpoint(term: TripletMatrix) -> tuple[TripletMatrix, float | None]:
         obs = Observation()
-        term_df = term.df.observe(obs, F.expr(f"max(abs({VALUE})) AS peak")).localCheckpoint()
-        peak = obs.get["peak"]
+        df = term.df.observe(obs, F.expr(f"max(abs({VALUE})) AS peak")).localCheckpoint()
+        return TripletMatrix(df), obs.get["peak"]
+
+    terms = _series_terms(*checkpoint(a), lambda t: checkpoint(matmul_triplet(t, a)), tol, max_terms)
+    return _series_sum([identity_triplet(a).df, *(t.df for t in terms)])
+
+
+def _series_terms(term, peak, step, tol: float, max_terms: int):
+    """The stop rule of ``leontief_total_requirements``: yield each
+    term ``A^k`` the series adds, given term 1 with its peak (max
+    |value| over its present cells) and ``step(term)`` giving the next
+    term with its peak. The series stops at a term with no cells or a
+    peak under ``tol``, refuses a NaN peak, and refuses after
+    ``max_terms`` added terms."""
+    for k in range(max_terms):
+        if k:
+            term, peak = step(term)
         if peak is None or peak < tol:
-            break
+            return
         if peak != peak:  # NaN peak: an invalid cell reached this term
             raise ValueError(
                 "leontief_total_requirements: NaN entry encountered — "
                 "fill or drop invalid cells before inverting"
             )
-        parts.append(term_df)
-        term = matmul_triplet(TripletMatrix(term_df), a)
-    else:
-        raise ValueError(
-            f"leontief_total_requirements did not converge within "
-            f"{max_terms} terms (last term max |value| = {peak:.3g}) — "
-            "is the spectral radius < 1 (column sums < 1)?"
-        )
-    return _series_sum(parts)
-
-
-def triplet_to_wide(t: TripletMatrix, columns: list[str] | None = None) -> DataFrame:
-    """Pivot back to wide form (requires enumerable columns)."""
-    if columns is None:
-        columns = sorted(r[0] for r in t.df.select(COL_ID).distinct().collect())
-    return (
-        t.df.groupBy(ROW_ID)
-        .pivot(COL_ID, columns)
-        .agg(F.first(VALUE))
+        yield term
+    raise ValueError(
+        f"leontief_total_requirements did not converge within "
+        f"{max_terms} terms (last term max |value| = {peak:.3g}) — "
+        "is the spectral radius < 1 (column sums < 1)?"
     )
+
+
+class _Overflow(Exception):
+    """A dense term left the finite range: only the per-term loop
+    keeps Spark's cell set once an Inf meets an absent (zero) cell."""
+
+
+def _dense_series(cells: pd.DataFrame, tol: float, max_terms: int) -> pd.DataFrame | None:
+    """The Leontief series over A's collected ``cells``, dense on the
+    driver, as triplet rows — or None when A does not fit: more than
+    ``DENSE_CELLS`` rows or ``DENSE_LABELS`` labels, a NULL label, a
+    ±Inf cell (``Inf·0`` would give NaN where the inner contraction
+    creates no cell), or a term that overflows.
+
+    Same contract as the per-term loop: duplicate cells add up and an
+    absent cell is 0; term 1's peak is taken over A's raw rows, every
+    later term's over its present cells; a cell is present if it is on
+    the diagonal of the label union or in the support of A or of an
+    added term. Supports are carried as 0/1 float matrices, so that
+    BLAS multiplies them."""
+    values = cells[VALUE].to_numpy()
+    if (len(cells) > DENSE_CELLS or cells[[ROW_ID, COL_ID]].isna().to_numpy().any()
+            or np.isinf(values).any()):
+        return None
+    labels, codes = np.unique(np.concatenate([cells[ROW_ID], cells[COL_ID]]), return_inverse=True)
+    if len(labels) > DENSE_LABELS:
+        return None
+    n = len(labels)
+    r, c = codes.reshape(2, -1)
+    a, a_on = np.zeros((n, n)), np.zeros((n, n))
+    np.add.at(a, (r, c), values)
+    a_on[r, c] = 1.0
+
+    def step(term):
+        power, on = term[0] @ a, np.minimum(term[1] @ a_on, 1.0)
+        if not on.any():
+            return (power, on), None
+        peak = float(np.abs(power[on > 0]).max())
+        if not np.isfinite(peak):
+            raise _Overflow
+        return (power, on), peak
+
+    total, present = np.eye(n), np.eye(n)
+    first_peak = float(np.abs(values).max()) if len(values) else None
+    try:
+        with np.errstate(over="ignore", invalid="ignore"):  # an overflow goes to the loop
+            for power, on in _series_terms((a, a_on), first_peak, step, tol, max_terms):
+                total += power
+                present = np.maximum(present, on)
+    except _Overflow:
+        return None
+    r, c = np.nonzero(present)
+    return pd.DataFrame({ROW_ID: labels[r], COL_ID: labels[c], VALUE: total[r, c]})
 
 
 def _rewrite_matrix_ops(
     expr: FormulaExpr,
-    datasets: dict[str, TripletMatrix | Matrix | pd.Series | float],
+    datasets: dict[str, TripletMatrix | pd.Series | float],
 ) -> tuple[FormulaExpr, dict[str, TripletMatrix]]:
     """Replace every matrix-shaped subtree — a ``MatrixOp`` over matrix
     operands — with a synthetic variable bound
@@ -273,24 +343,20 @@ def _rewrite_matrix_ops(
         if node in memo:
             return memo[node]
         if isinstance(node, Var):
-            d = datasets[node.name]  # KeyError parity with unknown variables
-            if isinstance(d, Matrix):
-                t = wide_to_triplet(d)
-            elif isinstance(d, TripletMatrix):
-                t = d
-            else:
+            t = datasets[node.name]  # KeyError parity with unknown variables
+            if not isinstance(t, TripletMatrix):
                 hint = (
                     " — for a matrix-vector product, register the Series "
                     "as a single-COLUMN DataFrame when it is the right "
                     "operand (m @ v) or a single-ROW DataFrame when it is "
                     "the left (v @ m); the contraction joins the left's "
                     "column labels against the right's row labels"
-                    if isinstance(d, pd.Series)
+                    if isinstance(t, pd.Series)
                     else ""
                 )
                 raise FormulaError(
                     f"{ctx} of non-matrix operand {node.name!r} "
-                    f"({type(d).__name__}) is not defined{hint}"
+                    f"({type(t).__name__}) is not defined{hint}"
                 )
         elif isinstance(node, Transpose):
             t = transpose_triplet(as_matrix(node.operand, node.name))
@@ -301,10 +367,11 @@ def _rewrite_matrix_ops(
             t = neumann_series(as_matrix(node.operand, node.name), node.terms)
         elif isinstance(node, Leontief):
             # NOTE: unlike every other matrix op this runs DRIVER-SIDE
-            # actions at compile time (one scalar max per term + a
-            # localCheckpoint lineage cut) — the convergence depth is
-            # data-dependent by definition; see
-            # leontief_total_requirements's execution contract.
+            # actions at compile time — the convergence depth is
+            # data-dependent by definition: one collect of the operand
+            # and, over a small vocabulary, the whole series in numpy
+            # (else one scalar max + a localCheckpoint lineage cut per
+            # term); see leontief_total_requirements's execution contract.
             t = leontief_total_requirements(as_matrix(node.operand, node.name), tol=node.tol)
         else:
             raise FormulaError(

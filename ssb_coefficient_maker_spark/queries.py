@@ -2952,7 +2952,7 @@ FROM u GROUP BY 1, 2 ORDER BY 1, 2
 # make the flow matrix STRICTLY UPPER TRIANGULAR — an acyclic supply
 # graph, so A is nilpotent (A^10 = 0) and the convergence-checked
 # Neumann iteration terminates EXACTLY, independent of tolerance: the
-# loop's per-term max-|value| action sees a genuinely empty term, the
+# series' per-term max-|value| check sees a genuinely empty term, the
 # same signal a productive-economy matrix gives when its terms decay
 # below tol, but deterministic — which is what lets DuckDB replicate
 # the data-dependent iteration with a FIXED 9-power expansion. Cells
@@ -2971,10 +2971,13 @@ def q235_leontief_requirements(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity, no iteration in pd.eval). q220 fixed the depth at the
     call site; here the DATA picks the depth: the evaluator routes
     the formula onto the triplet path, and
-    plans/triplet.leontief_total_requirements iterates contraction
-    joins until the remaining term's max |value| falls under tol —
-    one scalar driver action + a localCheckpoint lineage cut per
-    term, constant plan depth, never a dense inverse.
+    plans/triplet.leontief_total_requirements adds terms until the
+    remaining term's max |value| falls under tol. Over this 10-label
+    vocabulary it collects A once and runs the series in numpy on the
+    driver (a vocabulary above 1,024 labels takes one scalar action
+    + a localCheckpoint lineage cut per term); either way a series,
+    never a dense inverse, so the present cells and the exact
+    integers are the series' own.
 
     A = the nation→nation trade-flow matrix restricted to an ACYCLIC
     slice (src nation < dst nation, nations < 10) with count%7+1
@@ -2983,15 +2986,15 @@ def q235_leontief_requirements(spark: SparkSession, sf_dir: str) -> DataFrame:
     making the data-dependent loop depth deterministic and every cell
     an exact float64 integer, so the DuckDB oracle replays it as a
     fixed 9-power expansion value-for-value. The base matrix is
-    localCheckpoint-ed ONCE before the iteration: each term and the
-    identity reference A, and without the cut each of the ~10 driver
-    actions would re-run the 4-table flow join.
+    localCheckpoint-ed ONCE before the iteration: on the per-term
+    route each term and the identity reference A, and without the cut
+    each of those ~10 actions would re-run the 4-table flow join.
 
     100 TB: the flow build is a standard shuffle aggregate over the
-    fact table; every iterate is |sectors|² triplets (broadcast-sized
-    by construction — sector vocabularies are small at any data
-    scale), and the per-term checkpoint keeps the plan constant-depth
-    no matter how many terms convergence takes.
+    fact table; A is |sectors|² triplets (driver-sized by
+    construction — sector vocabularies are small at any data scale),
+    and on the per-term route the checkpoint keeps the plan
+    constant-depth no matter how many terms convergence takes.
 
     NOTE (bench interpretation): like q77's cluster map and q215's
     index, the converged matrix is a BUILD-ONCE artifact — a

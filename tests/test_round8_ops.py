@@ -386,15 +386,16 @@ class TestReviewFixes:
         import pandas as pd
 
         from ssb_coefficient_maker_spark.api import FormulaEvaluator
-        from ssb_coefficient_maker_spark.catalog import Matrix
         from ssb_coefficient_maker_spark.formula.parser import parse_formula
         from ssb_coefficient_maker_spark.plans.triplet import (
             _rewrite_matrix_ops,
+            wide_to_triplet,
         )
 
         a = pd.DataFrame(np.arange(4, dtype=float).reshape(2, 2))
         fe = FormulaEvaluator({"a": a}, spark=spark)
-        datasets = fe.datasets
+        # unpivoted, as compile_formula_triplet hands its operands over
+        datasets = {"a": wide_to_triplet(fe.datasets["a"])}
         expr = parse_formula("(a @ a) * 2 - a @ a")
         _, extra = _rewrite_matrix_ops(expr, datasets)
         assert len(extra) == 1  # the repeated subtree deduped
@@ -500,7 +501,8 @@ class TestReviewFixes:
         a = pd.DataFrame(np.arange(4, dtype=float).reshape(2, 2))
         fe = FormulaEvaluator({"a": a}, spark=spark)
         expr = parse_formula("(a @ a).T - a @ a")
-        _, extra = T._rewrite_matrix_ops(expr, fe.datasets)
+        datasets = {"a": T.wide_to_triplet(fe.datasets["a"])}
+        _, extra = T._rewrite_matrix_ops(expr, datasets)
         assert len(calls) == 1  # the nested repeat reused the memo
         assert len(extra) == 2  # one '@' binding + one '.T' binding
 

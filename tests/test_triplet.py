@@ -14,7 +14,6 @@ from ssb_coefficient_maker_spark.catalog import matrix_from_pandas
 from ssb_coefficient_maker_spark.plans.triplet import (
     TripletMatrix,
     compile_formula_triplet,
-    triplet_to_wide,
     wide_to_triplet,
 )
 from ssb_coefficient_maker_spark.formula.parser import parse_formula
@@ -33,7 +32,7 @@ def test_roundtrip_wide_triplet_wide(spark, pdfs):
     m = matrix_from_pandas(spark, a)
     t = wide_to_triplet(m)
     assert t.df.count() == 20
-    wide = triplet_to_wide(t).toPandas().sort_values("__row_id__")
+    wide = t.df.toPandas().pivot(index="__row_id__", columns="__col_id__", values="value")
     for c in ["0", "1", "2", "3"]:
         np.testing.assert_allclose(
             wide[c].to_numpy(), a[int(c)].to_numpy()
@@ -58,8 +57,7 @@ def test_triplet_matches_wide(spark, pdfs, formula):
     }
     expr = parse_formula(formula)
     tdf = compile_formula_triplet(expr, datasets_trip)
-    wide_back = triplet_to_wide(TripletMatrix(tdf)).toPandas()
-    wide_back = wide_back.sort_values("__row_id__").set_index("__row_id__")
+    wide_back = tdf.toPandas().pivot(index="__row_id__", columns="__col_id__", values="value")
     got = wide_back[[str(c) for c in expected.columns]].to_numpy()
     exp_filled = expected.to_numpy()
     # triplet path is pre-validation here; apply the same fill manually
