@@ -12242,12 +12242,12 @@ REGISTRY: dict[str, QuerySpec] = {
 # oldest verdict.
 _DRIVER_PRIORITY = (
     "q58_fused_coeffmap",
+    "q235_leontief_requirements",
     "q50_embedding_neardup",
     "q238_neardup_auto",
     "q24_formula_coeffmap",
     "q73_adp_precision",
     "q216_formula_matmul",
-    "q235_leontief_requirements",
     "q114_triplet_wide_formula",
     "q64_bucketed_join",
     "q220_neumann_flow_reach",
