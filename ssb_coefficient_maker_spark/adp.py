@@ -28,11 +28,13 @@ This is explicitly the slow path (SURVEY.md §7 risk 5): opt-in.
 from __future__ import annotations
 
 import operator
+from contextlib import contextmanager
 from typing import Any, Iterable, Iterator
 
 import mpmath
 import numpy as np
 import pandas as pd
+from pyspark.errors import PythonException
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -113,6 +115,20 @@ def _guarded(fn):
         return fn(lhs, rhs)
 
     return op
+
+
+@contextmanager
+def zero_division_refused() -> Iterator[None]:
+    """Re-raise the zero-division guard of a formula evaluated in a
+    Python worker, which reaches the driver as a ``PythonException``
+    with the executor's traceback, as the ``ZeroDivisionError`` the
+    driver-side route raises for the same rule."""
+    try:
+        yield
+    except PythonException as exc:
+        if f"ZeroDivisionError: {ADP_ZERO_DIV_MSG}" not in str(exc):
+            raise
+        raise ZeroDivisionError(ADP_ZERO_DIV_MSG) from None
 
 
 def _ufunc(fn, nin: int = 2):

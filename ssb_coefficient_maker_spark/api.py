@@ -283,9 +283,10 @@ class FormulaEvaluator:
                 return fill_invalid(plan.df, plan.value_cols, plan.carrier)
             return plan.df
         audit = adp_mod.validate_adp if plan.kind == "adp" else _validate
-        df, self.last_invalid_count = audit(plan.df, plan.value_cols, plan.formula,
-                                            fill=self.fill_invalid, mixed_operands=plan.mixed,
-                                            verbose=self.verbose)
+        with adp_mod.zero_division_refused():
+            df, self.last_invalid_count = audit(plan.df, plan.value_cols, plan.formula,
+                                                fill=self.fill_invalid,
+                                                mixed_operands=plan.mixed, verbose=self.verbose)
         return df
 
     def _sink(self, plan: _Plan, path: str | None = None) -> tuple[dict, Any]:
@@ -299,11 +300,12 @@ class FormulaEvaluator:
         out = plan.df.observe(obs, *audit_exprs(plan.value_cols, plan.carrier))
         if self.fill_invalid:
             out = fill_invalid(out, plan.value_cols, plan.carrier)
-        if path is None:
-            pdf = self._collect(plan, out)
-        else:
-            out.write.mode("overwrite").parquet(path)
-            pdf = None
+        with adp_mod.zero_division_refused():
+            if path is None:
+                pdf = self._collect(plan, out)
+            else:
+                out.write.mode("overwrite").parquet(path)
+                pdf = None
         return obs.get, pdf
 
     def _collect(self, plan: _Plan, df: DataFrame) -> pd.DataFrame:

@@ -18,6 +18,14 @@ where ADP only casts every cell to ``mpf`` at registration (reference
 coeff_maker.py:647-671), precision is a cell type, not a second
 ingestion.
 
+A Matrix ingested from pandas also keeps its carried cells on the
+driver (``Matrix.cells``): the frame it was created from, already in
+driver memory. ``plans.alignment`` aligns a formula whose frame
+operands all carry cells, up to ``LOCAL_ALIGN_CELLS`` aligned cells,
+with one pandas ``concat`` there instead of a join chain in Spark. A
+Matrix wrapped from a Spark DataFrame (``matrix_from_spark``) carries
+none.
+
 Scale notes (100 TB): matrices are arbitrarily long (rows are
 distributed and meet at the alignment join on ``__row_id__``); a
 registered Spark frame wider than ``WIDE_MATRIX_THRESHOLD`` columns is
@@ -43,10 +51,16 @@ WIDE_MATRIX_THRESHOLD = 4000
 
 @dataclass
 class Matrix:
-    """A named matrix: Spark DataFrame with ROW_ID + double value columns."""
+    """A named matrix: Spark DataFrame with ROW_ID + value columns
+    (doubles, or ADP's decimal strings). ``cells`` is the pandas frame
+    ``df`` was created from (``ROW_ID`` label text plus the carried
+    value columns) when the matrix was ingested from pandas, else
+    None; the alignment planner reads it instead of joining in
+    Spark."""
 
     df: DataFrame
     value_cols: list[str] = field(default_factory=list)
+    cells: pd.DataFrame | None = field(default=None, repr=False, compare=False)
 
     @property
     def columns(self) -> list[str]:
@@ -105,6 +119,7 @@ def _matrix_from_pandas(spark: SparkSession, pdf: pd.DataFrame, codec: Codec) ->
     return Matrix(
         df=_rightsized(spark.createDataFrame(out, schema=schema), len(out)),
         value_cols=cols,
+        cells=out,
     )
 
 

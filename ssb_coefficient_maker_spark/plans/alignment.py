@@ -12,13 +12,26 @@ reference by execution):
 - x / 0 → ±Inf, 0 / 0 → NaN (numpy), whereas Spark yields NULL —
   every division is wrapped in an IEEE-semantics shim.
 
-Plan shape: all N frame operands of a formula meet in a chain of
-full-outer joins on ``__row_id__`` (``_aligned_join``), and the
-arithmetic lands in one whole-stage-codegen'd ``Project`` on top. A
-full-outer ``USING`` join outputs ``coalesce(l.key, r.key)``, which
-carries no partitioning, so every join after the first re-shuffles the
-joined side built so far: an N-operand formula shuffles its
-intermediate result N-1 times (ROADMAP item 2). The reference instead
+Plan shape: the N frame operands of a formula meet in one aligned
+table (``_aligned_join``), and the arithmetic lands in one
+whole-stage-codegen'd ``Project`` on top. The table is made in one of
+two places:
+
+- **on the driver**, when every frame operand was ingested from pandas
+  (it carries its cells, ``Matrix.cells``) and the table has at most
+  ``LOCAL_ALIGN_CELLS`` cells (row-label union × operand columns): one
+  pandas outer ``concat`` on the label text, shipped to Spark as one
+  local relation. The operands are already in driver memory, as the
+  reference's are, so aligning them there costs no shuffle and no
+  extra job;
+- **in Spark** otherwise (a Spark-DataFrame or triplet operand, or a
+  larger table): a chain of full-outer joins on ``__row_id__``. A
+  full-outer ``USING`` join outputs ``coalesce(l.key, r.key)``, which
+  carries no partitioning, so every join after the first re-shuffles
+  the joined side built so far: an N-operand formula shuffles its
+  intermediate result N-1 times (ROADMAP item 2).
+
+Either way the formula itself runs in Spark. The reference instead
 materializes every intermediate eagerly (pandas); here nothing is
 materialized before the action that consumes the result.
 
@@ -28,7 +41,7 @@ operands, joins the frames and says, for each output column, which
 joined column holds each frame operand's value. The compilers only
 evaluate the formula over that.
 
-NULL handling: after the outer join, absent cells are NULL; each
+NULL handling: after either alignment, absent cells are NULL; each
 column reference in the formula's SQL text reads ``coalesce(col,
 NaN)`` (``functions.math.or_nan``, non-nullable), and an operand
 without the output column reads NaN itself, so downstream
@@ -45,8 +58,9 @@ from typing import Any, Mapping
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
-from ssb_coefficient_maker_spark.catalog import Matrix
+from ssb_coefficient_maker_spark.catalog import Matrix, _rightsized
 from ssb_coefficient_maker_spark.formula.parser import (
     COMPARISONS,
     FormulaError,
@@ -60,6 +74,12 @@ from ssb_coefficient_maker_spark.session import ROW_ID
 
 Bindings = list[tuple[dict[str, str], dict[str, Any]]]
 
+# Largest aligned table (row-label union × operand columns) that
+# ``_aligned_join`` builds on the driver. Above it the join chain wins:
+# a driver-built table is shipped again by every formula, while the
+# join reads the copy each operand made at registration.
+LOCAL_ALIGN_CELLS = 2**17
+
 
 def align(
     exprs: Mapping[Any, FormulaExpr],
@@ -72,10 +92,13 @@ def align(
     scalars (``_operands``). The frames fix the row universe of the
     join, so the caller passes formulas that read the same frames:
     ``compile_formulas_fused`` groups them so, and every other compiler
-    passes one formula. The frames meet in one aligned join
-    (``_aligned_join``) on ``__row_id__``, and on ``col_key`` too when
-    given (the triplet route's column label). The output columns are
-    the union of the frames' value columns, in first-seen order.
+    passes one formula. The frames meet in one aligned table
+    (``_aligned_join``) keyed on ``__row_id__``, and on ``col_key`` too
+    when given (the triplet route's column label): made on the driver
+    when every frame carries its pandas cells and the table is at most
+    ``LOCAL_ALIGN_CELLS`` cells, else by a full-outer join chain in
+    Spark. The output columns are the union of the frames' value
+    columns, in first-seen order.
 
     Returns ``(joined, out_cols, bindings)``: ``bindings[name][pos]``
     is ``(columns, values)`` for formula ``name`` at output column
@@ -213,17 +236,27 @@ def _operand_col(i: int, pos: int) -> str:
 def _aligned_join(
     frames: dict[str, Matrix], out_cols: list[str], col_key: str | None = None
 ) -> DataFrame:
-    """Chained full-outer join of all frame operands on ROW_ID, and on
-    ``col_key`` too when given (the triplet path's column label).
+    """All frame operands aligned on ROW_ID, and on ``col_key`` too
+    when given (the triplet path's column label), with every operand's
+    value columns renamed ``_operand_col(i, pos)`` so the projection
+    can reference them unambiguously. Two plans, one answer:
 
-    Every operand's value columns are renamed ``_operand_col(i, pos)``
-    before joining so the projection can reference them unambiguously.
-    Each operand is shuffled once on the join key, but a full-outer
-    ``USING`` join outputs ``coalesce(l.key, r.key)``, which carries no
-    partitioning: every join after the first re-shuffles the joined
-    side built so far (N-1 shuffles of it for N operands).
+    - **On the driver** (``_local_join``) when there is no ``col_key``,
+      more than one frame operand, every operand carries its ingested
+      pandas cells (``Matrix.cells``), and the aligned table has at
+      most ``LOCAL_ALIGN_CELLS`` cells (row-label union × operand
+      columns): one pandas outer concat, shipped as one local relation.
+    - **Otherwise, in Spark:** a chain of full-outer joins. Each operand
+      is shuffled once on the join key, but a full-outer ``USING`` join
+      outputs ``coalesce(l.key, r.key)``, which carries no
+      partitioning: every join after the first re-shuffles the joined
+      side built so far (N-1 shuffles of it for N operands).
     """
     pos = {c: j for j, c in enumerate(out_cols)}
+    if col_key is None and len(frames) > 1 and all(m.cells is not None for m in frames.values()):
+        rows = reduce(pd.Index.union, (pd.Index(m.cells[ROW_ID]) for m in frames.values()))
+        if len(rows) * sum(len(m.value_cols) for m in frames.values()) <= LOCAL_ALIGN_CELLS:
+            return _local_join(frames, pos)
     keys = [ROW_ID] if col_key is None else [ROW_ID, col_key]
     # operands keep their native row-id type (so a long key can reuse
     # upstream partitioning); only heterogeneous key types force a
@@ -236,6 +269,24 @@ def _aligned_join(
         for i, m in enumerate(frames.values())
     ]
     return reduce(lambda a, b: a.join(b, on=keys, how="full_outer"), prefixed)
+
+
+def _local_join(frames: dict[str, Matrix], pos: dict[str, int]) -> DataFrame:
+    """The aligned join of driver-resident operands, made on the
+    driver: one pandas outer concat keyed on the label text (a cell
+    absent from an operand is missing, which Spark receives as NULL, as
+    from the outer join), sent to Spark as one local relation with each
+    operand column's Spark type."""
+    parts = []
+    fields = [T.StructField(ROW_ID, T.StringType(), False)]
+    for i, m in enumerate(frames.values()):
+        names = [_operand_col(i, pos[c]) for c in m.value_cols]
+        parts.append(m.cells.set_index(ROW_ID)[m.value_cols].set_axis(names, axis=1))
+        schema = m.df.schema
+        fields += [T.StructField(n, schema[c].dataType, True) for n, c in zip(names, m.value_cols)]
+    out = pd.concat(parts, axis=1, join="outer").rename_axis(ROW_ID).reset_index()
+    spark = next(iter(frames.values())).df.sparkSession
+    return _rightsized(spark.createDataFrame(out, T.StructType(fields)), len(out))
 
 
 # ---------------------------------------------------------------- driver-side

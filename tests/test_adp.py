@@ -13,6 +13,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from ssb_coefficient_maker_spark.adp import ADP_ZERO_DIV_MSG
 from ssb_coefficient_maker_spark.api import FormulaEvaluator
 
 DPS = 50
@@ -73,13 +74,18 @@ def test_precise_fraction_division(adp_eval):
                 )
 
 
-def test_adp_zero_division_raises(adp_eval):
-    # reference pt2:470-488 — ADP division by zero must raise
+def test_adp_zero_division_raises(adp_eval, tmp_path):
+    # reference pt2:470-488 — ADP division by zero must raise, on the
+    # driver, as the driver-side route raises it: on the collect, the
+    # parquet write and the eager audit alike
     a = pd.DataFrame(np.ones((2, 2)))
     z = pd.DataFrame(np.zeros((2, 2)))
     fe = adp_eval({"a": a, "z": z})
-    with pytest.raises(Exception, match="(?i)division by zero"):
-        fe.evaluate_to_pandas("a / z")
+    for action in (lambda: fe.evaluate_to_pandas("a / z"),
+                   lambda: fe.evaluate_to_parquet("a / z", str(tmp_path / "out")),
+                   lambda: fe.evaluate_formula("a / z")):
+        with pytest.raises(ZeroDivisionError, match=f"^{ADP_ZERO_DIV_MSG}$"):
+            action()
 
 
 def test_loan_payment_formula(adp_eval):
@@ -186,7 +192,7 @@ def test_adp_floordiv_mod_zero_division_guarded(adp_eval):
     z = pd.DataFrame([[0.0]])
     fe = adp_eval({"a": a, "z": z})
     for op in ("//", "%"):
-        with pytest.raises(Exception, match="ADP division by zero"):
+        with pytest.raises(ZeroDivisionError, match=f"^{ADP_ZERO_DIV_MSG}$"):
             fe.evaluate_to_pandas(f"a {op} z")
 
 
