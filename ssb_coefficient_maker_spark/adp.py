@@ -15,7 +15,7 @@ ADP differs from float mode in three places only:
   lossless carrier for mpf) through the same ingestion as float
   cells (``catalog._matrix_from_pandas``);
 - its op table, ``MP_OPS`` (object arrays of mpf);
-- its executor: after the same aligned join as the float routes
+- its executor: after the same aligned table as the float routes
   (``plans.alignment.align``), the whole formula evaluates inside ONE
   Arrow-batched ``mapInPandas`` per result: strings → mpf at the
   requested precision → formula evaluated over each batch column
@@ -166,7 +166,7 @@ def compile_adp_formula(
     datasets: dict[str, Matrix | pd.Series | float],
     dps: int,
 ) -> tuple[DataFrame, list[str]]:
-    """Compile an ADP formula: the aligned join (``align``) + one
+    """Compile an ADP formula: the aligned table (``align``) + one
     mapInPandas stage. The stage captures plain data only: the joined
     column names and the carried values of each output column."""
     joined, out_cols, bindings = align({None: expr}, datasets)

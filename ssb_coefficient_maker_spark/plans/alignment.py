@@ -281,7 +281,7 @@ def _local_join(frames: dict[str, Matrix], pos: dict[str, int]) -> DataFrame:
     fields = [T.StructField(ROW_ID, T.StringType(), False)]
     for i, m in enumerate(frames.values()):
         names = [_operand_col(i, pos[c]) for c in m.value_cols]
-        parts.append(m.cells.set_index(ROW_ID)[m.value_cols].set_axis(names, axis=1))
+        parts.append(m.cells.set_index(ROW_ID).set_axis(names, axis=1))
         schema = m.df.schema
         fields += [T.StructField(n, schema[c].dataType, True) for n, c in zip(names, m.value_cols)]
     out = pd.concat(parts, axis=1, join="outer").rename_axis(ROW_ID).reset_index()
