@@ -11,10 +11,12 @@ coeff_maker.py`` in the reference repo) as an idiomatic Spark engine:
   ``selectExpr`` per plan step, which Catalyst optimizes and codegens
   (the reference re-parses every formula twice, with sympy and
   pandas-eval; see reference coeff_maker.py:693 and :766).
-- Frame-vs-frame label alignment makes one table on ``__row_id__``
-  for the formula's one plan: one pandas concat on the driver when
-  every frame operand is a small registered pandas frame, else a chain
-  of lazy full-outer joins (not a chain of eager pandas aligns).
+- Frame-vs-frame label alignment makes one table on ``__row_id__``:
+  one pandas concat on the driver when every frame operand is a small
+  registered pandas frame, where a float formula is then evaluated in
+  numpy as the reference's ``pd.eval`` is, with no Spark job; else a
+  chain of lazy full-outer joins for the formula's one plan (not a
+  chain of eager pandas aligns).
 - Validation (NaN/Inf audit) is a single aggregate pass, not the
   reference's 1-3 full re-scans per formula.
 - Beyond the reference surface, the package carries a full relational

@@ -194,7 +194,7 @@ def compile_adp_formula(
                     data[out_c] = [mpmath.nstr(v, dps) for v in out]
                 yield pd.DataFrame(data)
 
-    return joined.mapInPandas(run, schema=out_schema), out_cols
+    return joined.df.mapInPandas(run, schema=out_schema), out_cols
 
 
 def adp_to_pandas(df: DataFrame, value_cols: list[str], dps: int) -> pd.DataFrame:

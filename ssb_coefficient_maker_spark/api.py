@@ -7,6 +7,13 @@ coeff_maker.py:589-597 and :885-896). Differences, by design:
 - Results are **lazy Spark DataFrames** (``__row_id__`` + double
   columns), not eager pandas frames. ``evaluate_to_pandas`` collects
   for tests/small results.
+- Where a formula runs is the router's choice (``_route``; README
+  "Routing"). A float formula over small pandas-registered frames is
+  evaluated, audited and filled on the driver in numpy, as the
+  reference's ``pd.eval`` is; its result becomes a Spark DataFrame
+  only when the caller asks for one (``evaluate_formula``, the parquet
+  sinks), and ``evaluate_to_pandas`` then runs no Spark job. Any other
+  matrix formula runs as one Spark plan.
 - Vector∘vector formulas return a labeled pandas Series instead of
   the reference's accidental raw ndarray (SURVEY.md §1.3 wart).
 - ``adp_enabled`` defaults to False in BOTH classes (the reference's
@@ -17,7 +24,7 @@ coeff_maker.py:589-597 and :885-896). Differences, by design:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, Iterator, Mapping
 
 import mpmath
@@ -57,9 +64,10 @@ from ssb_coefficient_maker_spark.session import ROW_ID, get_spark
 from ssb_coefficient_maker_spark.validation import (
     FLOAT,
     Carrier,
+    audit_cells,
     audit_exprs,
     check,
-    fill_invalid,
+    fill_matrix,
     status_of,
 )
 from ssb_coefficient_maker_spark.validation import validate as _validate
@@ -68,15 +76,20 @@ from ssb_coefficient_maker_spark.validation import validate as _validate
 @dataclass
 class _Plan:
     """One formula's route (``FormulaEvaluator._route``): ``kind`` is
-    scalar | vector | wide | triplet | adp. Matrix kinds carry the lazy
-    ``df`` and its ``value_cols``; driver kinds carry ``value``."""
+    scalar | vector | wide | triplet | adp. Matrix kinds carry their
+    ``result`` Matrix: lazy in Spark, or on the wide route possibly
+    computed on the driver (it carries its cells); a triplet result's
+    ``df`` also holds ``__col_id__``. Driver kinds carry ``value``."""
 
     kind: str
     formula: str
-    df: DataFrame | None = None
-    value_cols: list[str] = field(default_factory=list)
+    result: Matrix | None = None
     value: Any = None
     mixed: bool = False  # Series and DataFrame operands (audit message)
+
+    @property
+    def value_cols(self) -> list[str]:
+        return self.result.value_cols
 
     @property
     def carrier(self) -> Carrier:
@@ -104,7 +117,8 @@ class FormulaEvaluator:
         evaluation immediately audits the result (one aggregate job)
         and warns/raises. ``'defer'`` skips that action: with
         ``fill_invalid`` the fill is fused lazily into the plan and the
-        result computes exactly once at the consumer's action. The
+        result computes exactly once at the consumer's action (a
+        formula on the driver route computes, and fills, at once). The
         materializing calls (``evaluate_to_pandas``,
         ``evaluate_to_parquet``, ``compute_coefficients_to_pandas``)
         audit on their own collect or write in either mode."""
@@ -226,8 +240,8 @@ class FormulaEvaluator:
     def _route(self, expr: FormulaExpr, formula: str, *, fuse: bool = False) -> _Plan:
         """Decide a formula's execution path and build its plan — the
         one place the routing rules (README "Routing") live. With
-        ``fuse``, a wide formula comes back uncompiled (``df`` None):
-        the batch caller compiles it inside a fused group."""
+        ``fuse``, a wide formula comes back uncompiled (``result``
+        None): the batch caller compiles it inside a fused group."""
         names = self.extract_variables(expr)
         missing = [n for n in names if n not in self.datasets]
         if missing:
@@ -262,29 +276,32 @@ class FormulaEvaluator:
             )
         if to_triplet:
             tdf = triplet_plans.compile_formula_triplet(expr, self.datasets)
-            return _Plan("triplet", formula, tdf, [VALUE], mixed=mixed)
+            return _Plan("triplet", formula, Matrix(tdf, [VALUE]), mixed=mixed)
         if self.adp_enabled:
             df, cols = adp_mod.compile_adp_formula(
                 expr, self.datasets, self.decimal_precision
             )
-            return _Plan("adp", formula, df, cols, mixed=mixed)
+            return _Plan("adp", formula, Matrix(df, cols), mixed=mixed)
         if fuse:
             return _Plan("wide", formula)
-        m = compile_formula(expr, self.datasets)
-        return _Plan("wide", formula, m.df, m.value_cols, mixed=mixed)
+        return _Plan("wide", formula, compile_formula(expr, self.datasets), mixed=mixed)
 
     def _result(self, plan: _Plan) -> Any:
         """A plan's ``evaluate_formula`` result: the eager audit (fill,
-        warn, raise), or in defer mode just the lazy fill."""
-        if plan.df is None:
+        warn, raise), or in defer mode just the fill. A result computed
+        on the driver is audited and filled there, and comes back as
+        the DataFrame made from its cells."""
+        m = plan.result
+        if m is None:
             return plan.value
         if self.validation == "defer":
-            if self.fill_invalid:
-                return fill_invalid(plan.df, plan.value_cols, plan.carrier)
-            return plan.df
+            return (fill_matrix(m, plan.carrier) if self.fill_invalid else m).df
+        if m.cells is not None:
+            n_invalid = self._checked(plan, audit_cells(m.cells, m.value_cols))
+            return (fill_matrix(m) if self.fill_invalid and n_invalid else m).df
         audit = adp_mod.validate_adp if plan.kind == "adp" else _validate
         with adp_mod.zero_division_refused():
-            df, self.last_invalid_count = audit(plan.df, plan.value_cols, plan.formula,
+            df, self.last_invalid_count = audit(m.df, m.value_cols, plan.formula,
                                                 fill=self.fill_invalid,
                                                 mixed_operands=plan.mixed, verbose=self.verbose)
         return df
@@ -293,46 +310,57 @@ class FormulaEvaluator:
         """Materialize a plan's result in ONE action — a parquet write
         to ``path``, else a pandas collect (``_collect``). The audit
         metrics ride that action via ``observe`` and count the cells
-        BEFORE any fill, which is fused into the projection. Returns
-        the observed ``validation.audit_exprs`` row and the collected
-        frame (None for a write)."""
-        obs = Observation()
-        out = plan.df.observe(obs, *audit_exprs(plan.value_cols, plan.carrier))
+        BEFORE any fill, which is fused into the projection. A result
+        computed on the driver is counted and filled there in numpy, so
+        its collect runs no job and its write one. Returns the
+        ``validation.audit_exprs`` row and the collected frame (None
+        for a write)."""
+        m, obs = plan.result, None
+        if m.cells is None:
+            obs = Observation()
+            m = Matrix(m.df.observe(obs, *audit_exprs(m.value_cols, plan.carrier)), m.value_cols)
+        else:
+            row = audit_cells(m.cells, m.value_cols)
         if self.fill_invalid:
-            out = fill_invalid(out, plan.value_cols, plan.carrier)
+            m = fill_matrix(m, plan.carrier)
         with adp_mod.zero_division_refused():
             if path is None:
-                pdf = self._collect(plan, out)
+                pdf = self._collect(plan, m)
             else:
-                out.write.mode("overwrite").parquet(path)
+                m.df.write.mode("overwrite").parquet(path)
                 pdf = None
-        return obs.get, pdf
+        return (row if obs is None else obs.get), pdf
 
-    def _collect(self, plan: _Plan, df: DataFrame) -> pd.DataFrame:
+    def _collect(self, plan: _Plan, m: Matrix) -> pd.DataFrame:
         """Collect a plan's result as its pandas matrix: a triplet
         result pivots on the driver, an ADP result collects as mpf. A
         label that a pandas operand registered comes back as that
         label; any other keeps what ``catalog.as_labels`` reads."""
         if plan.kind == "adp":
-            pdf = adp_mod.adp_to_pandas(df, plan.value_cols, self.decimal_precision)
+            pdf = adp_mod.adp_to_pandas(m.df, m.value_cols, self.decimal_precision)
         elif plan.kind == "triplet":
-            wide = df.toPandas().pivot(index=ROW_ID, columns=COL_ID, values=VALUE)
+            wide = m.df.toPandas().pivot(index=ROW_ID, columns=COL_ID, values=VALUE)
             order, _ = catalog.label_order(wide.columns)
             pdf = catalog.labelled(wide.reset_index(), list(wide.columns[order]))
         else:
-            pdf = matrix_to_pandas(Matrix(df, plan.value_cols))
+            pdf = matrix_to_pandas(m)
         pdf.index, pdf.columns = (axis.map(lambda x: self._labels.get(str(x), x))
                                   for axis in (pdf.index, pdf.columns))
         return pdf
 
-    def _audited(self, plan: _Plan, path: str | None = None) -> tuple[dict, Any]:
-        """``_sink``, then warn or raise like ``evaluate_formula`` on
-        the observed counts; sets ``last_invalid_count``."""
-        row, pdf = self._sink(plan, path)
+    def _checked(self, plan: _Plan, row: dict) -> int:
+        """Warn or raise like ``evaluate_formula`` on an audit row; sets
+        and returns ``last_invalid_count``."""
         status = status_of(row, plan.value_cols)
         check(status, plan.formula, fill=self.fill_invalid, mixed_operands=plan.mixed,
               verbose=self.verbose)
         self.last_invalid_count = status.n_invalid
+        return status.n_invalid
+
+    def _audited(self, plan: _Plan, path: str | None = None) -> tuple[dict, Any]:
+        """``_sink``, then warn or raise on its counts (``_checked``)."""
+        row, pdf = self._sink(plan, path)
+        self._checked(plan, row)
         return row, pdf
 
     def evaluate_to_parquet(self, formula: str, path: str) -> dict:
@@ -349,7 +377,7 @@ class FormulaEvaluator:
         validation mode; returns the metrics dict.
         """
         plan = self._plan(formula)
-        if plan.df is None:
+        if plan.result is None:
             raise ValueError("evaluate_to_parquet needs at least one matrix operand")
         row, _ = self._audited(plan, path)
         status = status_of(row, plan.value_cols)
@@ -365,7 +393,7 @@ class FormulaEvaluator:
 
     def _collected(self, plan: _Plan) -> Any:
         """A plan's ``evaluate_to_pandas`` result."""
-        return plan.value if plan.df is None else self._audited(plan)[1]
+        return plan.value if plan.result is None else self._audited(plan)[1]
 
 
 @dataclass
@@ -484,11 +512,12 @@ class CoefficientCalculator:
                 print(f"Successfully computed coefficient: {name}")
         return results
 
-    def _fused_plans(self) -> tuple[list[FusedGroup], dict[str, _Plan]]:
+    def _fused_plans(self) -> tuple[list[tuple[Matrix, dict[str, list[str]]]], dict[str, _Plan]]:
         """Route every map row: the wide rows go to the fused compiler
         (``compile_formulas_fused``), which gives one unfilled group
-        per frame-operand set; every other row keeps its plan. Under
-        ADP no row is wide, so every row keeps its own plan."""
+        result and its result columns per frame-operand set; every
+        other row keeps its plan. Under ADP no row is wide, so every
+        row keeps its own plan."""
         extras: dict[str, _Plan] = {}
         wide: dict[str, FormulaExpr] = {}
         for name, formula, expr in self._rows():
@@ -497,8 +526,7 @@ class CoefficientCalculator:
                 wide[name] = expr
             else:
                 extras[name] = plan
-        groups = compile_formulas_fused(wide, self.evaluator.datasets)
-        return [FusedGroup(*g) for g in groups], extras
+        return compile_formulas_fused(wide, self.evaluator.datasets), extras
 
     def compute_coefficients_fused(
         self,
@@ -525,9 +553,9 @@ class CoefficientCalculator:
         unparseable) match ``compute_coefficients``.
         """
         groups, extras = self._fused_plans()
-        if self.evaluator.fill_invalid:
-            groups = [FusedGroup(fill_invalid(g.df, g.value_cols), g.result_cols) for g in groups]
-        return groups, {name: self.evaluator._result(p) for name, p in extras.items()}
+        fill = self.evaluator.fill_invalid
+        return ([FusedGroup((fill_matrix(m) if fill else m).df, cols) for m, cols in groups],
+                {name: self.evaluator._result(p) for name, p in extras.items()})
 
     def compute_coefficients_fused_to_parquet(self, base_path: str) -> dict[str, Any]:
         """Batch production path: fused evaluation + parquet sink, ONE
@@ -557,12 +585,12 @@ class CoefficientCalculator:
                                    "invalid": invalid}
 
         for name, plan in extras.items():
-            if plan.df is None:
+            if plan.result is None:
                 manifest["extras"][name] = plan.value  # driver-cheap Series/scalar
             else:
                 sink(plan, f"{base_path}/extra={name}", {name: plan.value_cols})
-        for gi, g in enumerate(groups):
-            sink(_Plan("wide", "", g.df, g.value_cols), f"{base_path}/group={gi}", g.result_cols)
+        for gi, (m, cols) in enumerate(groups):
+            sink(_Plan("wide", "", m), f"{base_path}/group={gi}", cols)
         return manifest
 
     def compute_coefficients_to_pandas(self) -> dict[str, Any]:

@@ -18,13 +18,14 @@ where ADP only casts every cell to ``mpf`` at registration (reference
 coeff_maker.py:647-671), precision is a cell type, not a second
 ingestion.
 
-A Matrix ingested from pandas also keeps its carried cells on the
-driver (``Matrix.cells``): the frame it was created from, already in
-driver memory. ``plans.alignment`` aligns a formula whose frame
-operands all carry cells, up to ``LOCAL_ALIGN_CELLS`` aligned cells,
-with one pandas ``concat`` there instead of a join chain in Spark. A
-Matrix wrapped from a Spark DataFrame (``matrix_from_spark``) carries
-none.
+A Matrix ingested from pandas keeps its carried cells on the driver
+(``Matrix.cells``), with their Spark schema, and becomes a Spark frame
+only when a plan first reads ``Matrix.df``: registering a frame costs
+no ``createDataFrame``. ``plans.alignment`` aligns and evaluates a
+float formula whose frame operands all carry cells, up to
+``LOCAL_ALIGN_CELLS`` aligned cells, on the driver, and its result is
+such a Matrix too. A Matrix wrapped from a Spark DataFrame
+(``matrix_from_spark``) carries no cells.
 
 Scale notes (100 TB): matrices are arbitrarily long (rows are
 distributed and meet at the alignment join on ``__row_id__``); a
@@ -35,7 +36,7 @@ plans/triplet.py), where width is a row dimension.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
 
 import numpy as np
@@ -49,18 +50,38 @@ from ssb_coefficient_maker_spark.session import ROW_ID
 WIDE_MATRIX_THRESHOLD = 4000
 
 
-@dataclass
 class Matrix:
-    """A named matrix: Spark DataFrame with ROW_ID + value columns
-    (doubles, or ADP's decimal strings). ``cells`` is the pandas frame
-    ``df`` was created from (``ROW_ID`` label text plus the carried
-    value columns) when the matrix was ingested from pandas, else
-    None; the alignment planner reads it instead of joining in
-    Spark."""
+    """A named matrix: a Spark DataFrame ``df`` with ROW_ID + value
+    columns (doubles, or ADP's decimal strings).
 
-    df: DataFrame
-    value_cols: list[str] = field(default_factory=list)
-    cells: pd.DataFrame | None = field(default=None, repr=False, compare=False)
+    A Matrix made on the driver (``Matrix.from_cells``: a pandas frame
+    ingested, or a result the driver computed) carries its ``cells``,
+    a pandas frame of ``ROW_ID`` label text plus the value columns, and
+    their Spark ``schema``. Its ``df`` is created from them the first
+    time something reads it, and kept. A Matrix wrapped around a Spark
+    DataFrame has ``cells`` None."""
+
+    def __init__(self, df: DataFrame | None, value_cols: list[str]):
+        self._df = df
+        self.value_cols = list(value_cols)
+        self.cells: pd.DataFrame | None = None
+        self.schema: T.StructType | None = None
+        self.spark: SparkSession | None = None
+
+    @classmethod
+    def from_cells(cls, spark: SparkSession, cells: pd.DataFrame, schema: T.StructType) -> Matrix:
+        """A driver-held Matrix: ``cells`` has the columns of
+        ``schema``, ``ROW_ID`` first."""
+        m = cls(None, [f.name for f in schema.fields[1:]])
+        m.cells, m.schema, m.spark = cells, schema, spark
+        return m
+
+    @property
+    def df(self) -> DataFrame:
+        if self._df is None:
+            self._df = _rightsized(self.spark.createDataFrame(self.cells, self.schema),
+                                   len(self.cells))
+        return self._df
 
     @property
     def columns(self) -> list[str]:
@@ -109,18 +130,17 @@ def _matrix_from_pandas(spark: SparkSession, pdf: pd.DataFrame, codec: Codec) ->
     """The one path from a pandas frame to a Matrix: unique string
     labels, and every column carried through ``codec``."""
     rows, cols = unique_labels(pdf.index, "row"), unique_labels(pdf.columns, "column")
-    out = pd.DataFrame({ROW_ID: rows})
+    out = pd.DataFrame({ROW_ID: np.array(rows, dtype=object)})
     for (_, values), dst in zip(pdf.items(), cols):
         out[dst] = codec.cast(values).to_numpy()
-    schema = T.StructType(
-        [T.StructField(ROW_ID, T.StringType(), False)]
-        + [T.StructField(c, codec.spark_type, True) for c in cols]
-    )
-    return Matrix(
-        df=_rightsized(spark.createDataFrame(out, schema=schema), len(out)),
-        value_cols=cols,
-        cells=out,
-    )
+    return Matrix.from_cells(spark, out, cells_schema(cols, codec.spark_type))
+
+
+def cells_schema(value_cols: list[str], value_type: T.DataType) -> T.StructType:
+    """The Spark schema of driver-held cells: ``ROW_ID`` label text,
+    then ``value_cols`` of ``value_type``."""
+    return T.StructType([T.StructField(ROW_ID, T.StringType(), False)]
+                        + [T.StructField(c, value_type, True) for c in value_cols])
 
 
 def _rightsized(df: DataFrame, n_rows: int) -> DataFrame:
@@ -156,7 +176,7 @@ def matrix_from_spark(df: DataFrame) -> Matrix:
     # this matrix); the alignment join only falls back to string when
     # operands disagree on the key type
     cols = [f"CAST({ident(c)} AS DOUBLE) AS {ident(c)}" for c in value_cols]
-    return Matrix(df=df.selectExpr(ROW_ID, *cols), value_cols=value_cols)
+    return Matrix(df.selectExpr(ROW_ID, *cols), value_cols)
 
 
 def as_labels(text: pd.Index) -> pd.Index:
@@ -189,7 +209,7 @@ def labelled(pdf: pd.DataFrame, value_cols: list[str]) -> pd.DataFrame:
 
 
 def matrix_to_pandas(m: Matrix) -> pd.DataFrame:
-    """Collect a Matrix back to pandas, restoring the row index
-    (``labelled``). Collect is for tests and small results only —
-    production results go to parquet sinks."""
-    return labelled(m.df.toPandas(), m.value_cols)
+    """A Matrix as pandas, restoring the row index (``labelled``): its
+    driver-held cells, else a collect of ``df``. Collect is for tests
+    and small results only — production results go to parquet sinks."""
+    return labelled(m.df.toPandas() if m.cells is None else m.cells, m.value_cols)

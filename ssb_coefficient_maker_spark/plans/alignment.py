@@ -13,27 +13,28 @@ reference by execution):
   every division is wrapped in an IEEE-semantics shim.
 
 Plan shape: the N frame operands of a formula meet in one aligned
-table (``_aligned_join``), and the arithmetic lands in one
-whole-stage-codegen'd ``Project`` on top. The table is made in one of
-two places:
+table (``_aligned_join``), made in one of two places:
 
-- **on the driver**, when every frame operand was ingested from pandas
-  (it carries its cells, ``Matrix.cells``) and the table has at most
-  ``LOCAL_ALIGN_CELLS`` cells (row-label union × operand columns): one
-  pandas outer ``concat`` on the label text, shipped to Spark as one
-  local relation. The operands are already in driver memory, as the
-  reference's are, so aligning them there costs no shuffle and no
-  extra job;
+- **on the driver**, when every frame operand carries its pandas
+  cells (``Matrix.cells``: it was registered from pandas) and the
+  table has at most ``LOCAL_ALIGN_CELLS`` cells (row-label union ×
+  operand columns): one pandas outer ``concat`` on the label text. The
+  operands are already in driver memory, as the reference's are. A
+  float formula is then evaluated there too, with ``NUMPY_OPS`` over
+  the table (``compile_formulas_fused``), as the reference's
+  ``pd.eval`` is: no shuffle and no Spark job, and the result is a
+  Matrix that carries its cells. The ADP compiler ships the table to
+  Spark as one local relation;
 - **in Spark** otherwise (a Spark-DataFrame or triplet operand, or a
-  larger table): a chain of full-outer joins on ``__row_id__``. A
-  full-outer ``USING`` join outputs ``coalesce(l.key, r.key)``, which
-  carries no partitioning, so every join after the first re-shuffles
-  the joined side built so far: an N-operand formula shuffles its
-  intermediate result N-1 times (ROADMAP item 2).
-
-Either way the formula itself runs in Spark. The reference instead
-materializes every intermediate eagerly (pandas); here nothing is
-materialized before the action that consumes the result.
+  larger table): a chain of full-outer joins on ``__row_id__``, and
+  the arithmetic lands in one whole-stage-codegen'd ``Project`` on
+  top. A full-outer ``USING`` join outputs ``coalesce(l.key, r.key)``,
+  which carries no partitioning, so every join after the first
+  re-shuffles the joined side built so far: an N-operand formula
+  shuffles its intermediate result N-1 times (ROADMAP item 2). The
+  reference instead materializes every intermediate eagerly (pandas);
+  here nothing is materialized before the action that consumes the
+  result.
 
 ``align`` is the one front end of every compiler — wide, fused,
 triplet (``plans/triplet.py``) and ADP (``adp.py``): it splits the
@@ -41,12 +42,13 @@ operands, joins the frames and says, for each output column, which
 joined column holds each frame operand's value. The compilers only
 evaluate the formula over that.
 
-NULL handling: after either alignment, absent cells are NULL; each
-column reference in the formula's SQL text reads ``coalesce(col,
-NaN)`` (``functions.math.or_nan``, non-nullable), and an operand
-without the output column reads NaN itself, so downstream
-arithmetic propagates NaN exactly like numpy (Java double arithmetic
-is IEEE-754, identical to numpy's elementwise results).
+NULL handling: after either alignment, absent cells are missing (NaN
+on the driver, NULL in Spark); each column reference in the formula's
+SQL text reads ``coalesce(col, NaN)`` (``functions.math.or_nan``,
+non-nullable), and an operand without the output column reads NaN
+itself, so downstream arithmetic propagates NaN exactly like numpy
+(Java double arithmetic is IEEE-754, identical to numpy's elementwise
+results).
 """
 
 from __future__ import annotations
@@ -57,10 +59,9 @@ from typing import Any, Mapping
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ssb_coefficient_maker_spark.catalog import Matrix, _rightsized
+from ssb_coefficient_maker_spark.catalog import Matrix, cells_schema
 from ssb_coefficient_maker_spark.formula.parser import (
     COMPARISONS,
     FormulaError,
@@ -76,8 +77,9 @@ Bindings = list[tuple[dict[str, str], dict[str, Any]]]
 
 # Largest aligned table (row-label union × operand columns) that
 # ``_aligned_join`` builds on the driver. Above it the join chain wins:
-# a driver-built table is shipped again by every formula, while the
-# join reads the copy each operand made at registration.
+# the driver's table and result are shipped to Spark again by every
+# formula that needs them there, while the join reads the copy each
+# operand made when a plan first read it.
 LOCAL_ALIGN_CELLS = 2**17
 
 
@@ -85,7 +87,7 @@ def align(
     exprs: Mapping[Any, FormulaExpr],
     datasets: Mapping[str, Any],
     col_key: str | None = None,
-) -> tuple[DataFrame, list[str], dict[Any, Bindings]]:
+) -> tuple[Matrix, list[str], dict[Any, Bindings]]:
     """Align the operands of formulas that share one frame-operand set.
 
     Each formula's operands split into frames, pandas Series and
@@ -96,9 +98,10 @@ def align(
     (``_aligned_join``) keyed on ``__row_id__``, and on ``col_key`` too
     when given (the triplet route's column label): made on the driver
     when every frame carries its pandas cells and the table is at most
-    ``LOCAL_ALIGN_CELLS`` cells, else by a full-outer join chain in
-    Spark. The output columns are the union of the frames' value
-    columns, in first-seen order.
+    ``LOCAL_ALIGN_CELLS`` cells (a Matrix that carries the table as its
+    cells), else by a full-outer join chain in Spark. The output
+    columns are the union of the frames' value columns, in first-seen
+    order.
 
     Returns ``(joined, out_cols, bindings)``: ``bindings[name][pos]``
     is ``(columns, values)`` for formula ``name`` at output column
@@ -162,25 +165,29 @@ def compile_formula(
     expr: FormulaExpr,
     datasets: dict[str, Matrix | pd.Series | float],
 ) -> Matrix:
-    """Compile a parsed formula with a frame operand into a single lazy
-    Spark DataFrame — the one-formula case of
-    ``compile_formulas_fused``. Scalar- and vector-only formulas
-    evaluate driver-side instead (``eval_driver``).
+    """Compile a parsed formula with a frame operand into one result
+    Matrix — the one-formula case of ``compile_formulas_fused``.
+    Scalar- and vector-only formulas evaluate driver-side instead
+    (``eval_driver``).
 
-    Mirrors reference ``_perform_evaluation`` (coeff_maker.py:720-798)
-    but lazily and in one plan.
+    Mirrors reference ``_perform_evaluation`` (coeff_maker.py:720-798):
+    on the driver for small pandas operands, else lazily and in one
+    plan.
     """
-    [(df, result_cols)] = compile_formulas_fused({None: expr}, datasets)
-    return Matrix(df, result_cols[None])
+    [(result, _)] = compile_formulas_fused({None: expr}, datasets)
+    return result
 
 
 def compile_formulas_fused(
     exprs: dict[str | None, FormulaExpr],
     datasets: dict[str, Matrix | pd.Series | float],
-) -> list[tuple[DataFrame, dict[str | None, list[str]]]]:
+) -> list[tuple[Matrix, dict[str | None, list[str]]]]:
     """Compile SEVERAL formulas into one plan per FRAME-operand set:
     the formulas that read the same frames share a single aligned join
     of them (``align``), then one projection per (formula × column).
+    When that table was made on the driver, each (formula × column) is
+    evaluated there instead (``_evaluate_cells``), and the group's
+    result carries its cells.
 
     The reference's batch workload (coeff_maker.py:989-1012) loops N
     formulas over one ``data_dict``; evaluated independently, each
@@ -197,10 +204,10 @@ def compile_formulas_fused(
     columns collide (``a`` over column ``b_c`` and ``a_b`` over column
     ``c`` both make ``a_b_c``) is refused with a ``FormulaError``.
 
-    Returns one ``(df, result_cols)`` per group: ``df`` has
-    ``__row_id__`` plus columns named ``{result}_{col}`` (plain
-    ``{col}`` for a ``None`` result name, the single-formula case);
-    ``result_cols`` maps each result name to its column list.
+    Returns one ``(result, result_cols)`` per group: the Matrix
+    ``result`` has ``__row_id__`` plus columns named ``{result}_{col}``
+    (plain ``{col}`` for a ``None`` result name, the single-formula
+    case); ``result_cols`` maps each result name to its column list.
     """
     groups: dict[frozenset, dict[str | None, FormulaExpr]] = {}
     for rname, expr in exprs.items():
@@ -214,15 +221,36 @@ def compile_formulas_fused(
         if clash := sorted(c for c, k in counts.items() if k > 1):
             raise FormulaError(f"fused results {list(group)} collide on column name(s) {clash} "
                                "(<result>_<column>); rename a result")
+        # (result column, formula, joined columns, plain values) per output
+        outputs = [(alias, expr, *binding) for rname, expr in group.items()
+                   for alias, binding in zip(result_cols[rname], bindings[rname])]
+        if joined.cells is not None:
+            plans.append((_evaluate_cells(joined, outputs), result_cols))
+            continue
         projections = [ROW_ID]
-        for rname, expr in group.items():
-            for alias, (columns, values) in zip(result_cols[rname], bindings[rname]):
-                sql = evaluate(
-                    expr, lambda v: or_nan(columns[v]) if v in columns else num(values[v]), SQL_OPS
-                )
-                projections.append(f"{sql} AS {ident(alias)}")
-        plans.append((joined.selectExpr(*projections), result_cols))
+        for alias, expr, columns, values in outputs:
+            sql = evaluate(
+                expr, lambda v: or_nan(columns[v]) if v in columns else num(values[v]), SQL_OPS
+            )
+            projections.append(f"{sql} AS {ident(alias)}")
+        result = Matrix(joined.df.selectExpr(*projections), [alias for alias, *_ in outputs])
+        plans.append((result, result_cols))
     return plans
+
+
+def _evaluate_cells(joined: Matrix, outputs: list[tuple]) -> Matrix:
+    """A group's formulas evaluated on the driver over its aligned
+    table (``joined.cells``) with ``NUMPY_OPS``, one output column at a
+    time through ``eval_driver``: a frame operand is its column of the
+    table, every other operand the plain value ``align`` bound. The
+    result Matrix carries its cells; its ``df`` is made when read."""
+    table = joined.cells
+    cells = {ROW_ID: table[ROW_ID].to_numpy()}
+    for alias, expr, columns, values in outputs:
+        operands = {**values, **{n: table[c] for n, c in columns.items()}}
+        cells[alias] = eval_driver(expr, operands, NUMPY_OPS).to_numpy(np.float64)
+    return Matrix.from_cells(joined.spark, pd.DataFrame(cells),
+                             cells_schema(list(cells)[1:], T.DoubleType()))
 
 
 def _operand_col(i: int, pos: int) -> str:
@@ -235,17 +263,18 @@ def _operand_col(i: int, pos: int) -> str:
 
 def _aligned_join(
     frames: dict[str, Matrix], out_cols: list[str], col_key: str | None = None
-) -> DataFrame:
+) -> Matrix:
     """All frame operands aligned on ROW_ID, and on ``col_key`` too
     when given (the triplet path's column label), with every operand's
-    value columns renamed ``_operand_col(i, pos)`` so the projection
-    can reference them unambiguously. Two plans, one answer:
+    value columns renamed ``_operand_col(i, pos)`` so the formula can
+    reference them unambiguously. Two plans, one answer:
 
     - **On the driver** (``_local_join``) when there is no ``col_key``,
-      more than one frame operand, every operand carries its ingested
-      pandas cells (``Matrix.cells``), and the aligned table has at
-      most ``LOCAL_ALIGN_CELLS`` cells (row-label union × operand
-      columns): one pandas outer concat, shipped as one local relation.
+      every operand carries its ingested pandas cells
+      (``Matrix.cells``), and the aligned table has at most
+      ``LOCAL_ALIGN_CELLS`` cells (row-label union × operand columns):
+      one pandas outer concat, whose Matrix carries the table as its
+      cells.
     - **Otherwise, in Spark:** a chain of full-outer joins. Each operand
       is shuffled once on the join key, but a full-outer ``USING`` join
       outputs ``coalesce(l.key, r.key)``, which carries no
@@ -253,7 +282,7 @@ def _aligned_join(
       side built so far (N-1 shuffles of it for N operands).
     """
     pos = {c: j for j, c in enumerate(out_cols)}
-    if col_key is None and len(frames) > 1 and all(m.cells is not None for m in frames.values()):
+    if col_key is None and all(m.cells is not None for m in frames.values()):
         rows = reduce(pd.Index.union, (pd.Index(m.cells[ROW_ID]) for m in frames.values()))
         if len(rows) * sum(len(m.value_cols) for m in frames.values()) <= LOCAL_ALIGN_CELLS:
             return _local_join(frames, pos)
@@ -268,32 +297,33 @@ def _aligned_join(
                                           for c in m.value_cols))
         for i, m in enumerate(frames.values())
     ]
-    return reduce(lambda a, b: a.join(b, on=keys, how="full_outer"), prefixed)
+    joined = reduce(lambda a, b: a.join(b, on=keys, how="full_outer"), prefixed)
+    return Matrix(joined, [_operand_col(i, pos[c]) for i, m in enumerate(frames.values())
+                           for c in m.value_cols])
 
 
-def _local_join(frames: dict[str, Matrix], pos: dict[str, int]) -> DataFrame:
+def _local_join(frames: dict[str, Matrix], pos: dict[str, int]) -> Matrix:
     """The aligned join of driver-resident operands, made on the
     driver: one pandas outer concat keyed on the label text (a cell
-    absent from an operand is missing, which Spark receives as NULL, as
-    from the outer join), sent to Spark as one local relation with each
-    operand column's Spark type."""
+    absent from an operand is NaN, as the outer join's NULL reads),
+    with each operand column's Spark type from its Matrix."""
     parts = []
     fields = [T.StructField(ROW_ID, T.StringType(), False)]
     for i, m in enumerate(frames.values()):
         names = [_operand_col(i, pos[c]) for c in m.value_cols]
         parts.append(m.cells.set_index(ROW_ID).set_axis(names, axis=1))
-        schema = m.df.schema
-        fields += [T.StructField(n, schema[c].dataType, True) for n, c in zip(names, m.value_cols)]
+        fields += [T.StructField(n, m.schema[c].dataType, True) for n, c in zip(names, m.value_cols)]
     out = pd.concat(parts, axis=1, join="outer").rename_axis(ROW_ID).reset_index()
-    spark = next(iter(frames.values())).df.sparkSession
-    return _rightsized(spark.createDataFrame(out, T.StructType(fields)), len(out))
+    return Matrix.from_cells(next(iter(frames.values())).spark, out, T.StructType(fields))
 
 
 # ---------------------------------------------------------------- driver-side
 # Vector∘vector and scalar-only formulas never touch the cluster: the
 # operands are driver-resident by construction (vectors are small).
 # The reference leaks a raw ndarray in this case (SURVEY.md §1.3 wart);
-# we return a Series with the first vector's labels.
+# we return a Series with the first vector's labels. A float formula
+# over a driver-aligned table (``_evaluate_cells``) is evaluated here
+# too, one output column at a time, its frame columns as the Series.
 
 
 def _np_compare(op):
@@ -301,7 +331,8 @@ def _np_compare(op):
 
 
 NUMPY_OPS = {
-    "num": np.float64,
+    # np.float64 would turn a one-element array into a scalar
+    "num": lambda v: np.asarray(v, dtype=np.float64),
     "neg": np.negative,
     "+": np.add,
     "-": np.subtract,
@@ -333,7 +364,8 @@ def eval_driver(
         raise FormulaError(f"vector operands disagree on length: {sizes}")
     values = {n: ops["num"](d.values if isinstance(d, pd.Series) else d)
               for n, d in operands.items()}
-    with np.errstate(divide="ignore", invalid="ignore"):
+    # Spark's double arithmetic does not warn either
+    with np.errstate(all="ignore"):
         out = evaluate(expr, values.__getitem__, ops)
     if not vectors:
         return float(out)

@@ -444,4 +444,4 @@ def compile_formula_triplet(
             return or_nan(f"map({kv})[{COL_ID}]")
         return num(v)
 
-    return joined.selectExpr(ROW_ID, COL_ID, f"{evaluate(expr, resolve, SQL_OPS)} AS {VALUE}")
+    return joined.df.selectExpr(ROW_ID, COL_ID, f"{evaluate(expr, resolve, SQL_OPS)} AS {VALUE}")

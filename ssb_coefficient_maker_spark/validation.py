@@ -23,7 +23,11 @@ are built as SQL text — one parsed expression per aggregate, one
 When a result is materialized — collected to pandas or written to
 parquet — the aggregate is observed on that action (api.py's sink), so
 the audit adds no job. ``validate`` runs it as a job of its own only
-for ``evaluate_formula``, whose result stays lazy.
+for ``evaluate_formula``, whose result stays lazy. A float result the
+driver computed (it carries its cells, ``catalog.Matrix.cells``) is
+audited and filled in numpy there instead (``audit_cells``,
+``fill_matrix``): the same counts, read by the same ``status_of`` and
+``check``, and no job.
 
 One validator serves both value carriers: float64 columns and the
 decimal strings of ADP mode (adp.py). A ``Carrier`` names the carrier's
@@ -39,9 +43,12 @@ import warnings
 from dataclasses import dataclass
 from typing import Callable
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ssb_coefficient_maker_spark.catalog import Matrix
 from ssb_coefficient_maker_spark.functions.math import INF, ident, num
 
 
@@ -109,6 +116,19 @@ def audit_exprs(value_cols: list[str], carrier: Carrier = FLOAT) -> list[Column]
     return [F.expr(a) for a in aggs]
 
 
+def audit_cells(cells: pd.DataFrame, value_cols: list[str]) -> dict:
+    """The ``audit_exprs`` row of a float result held on the driver,
+    counted in numpy: NaN and ±Inf cells are invalid. Over no rows each
+    sum is None, as Spark's is."""
+    values = cells[value_cols].to_numpy(np.float64)
+    invalid, inf = (~np.isfinite(values)).sum(axis=0), np.isinf(values).sum(axis=0)
+    row: dict = {"__rows__": len(cells)}
+    for c, n_invalid, n_inf in zip(value_cols, invalid, inf):
+        row[f"__inv__{c}"] = int(n_invalid) if len(cells) else None
+        row[f"__inf__{c}"] = int(n_inf) if len(cells) else None
+    return row
+
+
 def status_of(row: dict, value_cols: list[str]) -> InvalidStatus:
     """Read an ``audit_exprs`` result (any subset of its columns)."""
     return InvalidStatus(
@@ -140,6 +160,17 @@ def fill_invalid(
         f"CASE WHEN {carrier.invalid(c)} THEN {carrier.fill} ELSE {ident(c)} END AS {ident(c)}"
         for c in value_cols
     ))
+
+
+def fill_matrix(m: Matrix, carrier: Carrier = FLOAT) -> Matrix:
+    """``m`` with its invalid cells filled: in numpy when it carries its
+    (float) cells, else as the lazy ``fill_invalid`` projection."""
+    if m.cells is None:
+        return Matrix(fill_invalid(m.df, m.value_cols, carrier), m.value_cols)
+    cells = m.cells.copy()
+    values = cells[m.value_cols].to_numpy(np.float64)
+    cells[m.value_cols] = np.where(np.isfinite(values), values, 0.0)
+    return Matrix.from_cells(m.spark, cells, m.schema)
 
 
 def _cause_fragment(status: InvalidStatus) -> str:

@@ -341,7 +341,7 @@ def test_fused_compiler_groups_by_frame_set_in_first_seen_order(spark):
     forms = {"u": "b * k", "v": "a + b", "w": "b + s", "z": "b + a"}
     plans = compile_formulas_fused({n: parse_formula(f) for n, f in forms.items()}, datasets)
     assert [list(cols) for _, cols in plans] == [["u", "w"], ["v", "z"]]
-    got = plans[1][0].toPandas().sort_values("__row_id__")
+    got = plans[1][0].df.toPandas().sort_values("__row_id__")
     assert list(got["v_x"]) == list(got["z_x"]) == [4.0, 6.0]
     assert compile_formulas_fused({}, datasets) == []
 

@@ -1,8 +1,9 @@
-"""Driver-side alignment of pandas-registered operands
-(``plans.alignment._aligned_join``): a formula whose frame operands
-all carry their ingested cells is aligned with one pandas concat and
-shipped as one local relation, and gives what the Spark join chain
-gives on every route."""
+"""The driver route of pandas-registered operands
+(``plans.alignment._aligned_join`` and ``_evaluate_cells``): a formula
+whose frame operands all carry their ingested cells is aligned with
+one pandas concat, a float formula is evaluated there in numpy, and
+either gives what the Spark join chain and its SQL projection give on
+every entry point."""
 
 from __future__ import annotations
 
@@ -13,9 +14,11 @@ from collections import Counter
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import SparkSession
 from test_audit_sites import _jobs
 
 from ssb_coefficient_maker_spark.api import CoefficientCalculator, FormulaEvaluator
+from ssb_coefficient_maker_spark.formula.parser import CALLS, OPERATORS, Call
 from ssb_coefficient_maker_spark.plans import alignment
 from ssb_coefficient_maker_spark.session import ROW_ID
 
@@ -60,23 +63,23 @@ FORMULAS = {"p": "a * b - c", "q": "(a + b) * c"}
 
 @pytest.fixture
 def paths(monkeypatch):
-    """Run an action on the driver path, then with the join forced
-    (``LOCAL_ALIGN_CELLS`` 0); returns both outcomes and how many
-    alignments each made on the driver."""
-    local = alignment._local_join
+    """Run an action on the driver route, then with the join forced
+    (``LOCAL_ALIGN_CELLS`` 0); returns both outcomes and how many times
+    each called ``hook``, the driver route's own step: the numpy
+    evaluation of a float formula, or the driver alignment that ADP
+    ships to its executor."""
     made = Counter()
 
-    def counted(bound):
-        def run(*args):
-            made[bound] += 1
-            return local(*args)
-        return run
-
-    def both(action):
+    def both(action, hook="_evaluate_cells"):
+        original = getattr(alignment, hook)
         outcomes = []
         for bound in (alignment.LOCAL_ALIGN_CELLS, 0):
+            def counted(*args, bound=bound):
+                made[bound] += 1
+                return original(*args)
+
             monkeypatch.setattr(alignment, "LOCAL_ALIGN_CELLS", bound)
-            monkeypatch.setattr(alignment, "_local_join", counted(bound))
+            monkeypatch.setattr(alignment, hook, counted)
             outcomes.append(_outcome(action))
         monkeypatch.undo()
         return outcomes, made[alignment.LOCAL_ALIGN_CELLS], made[0]
@@ -110,16 +113,89 @@ def _assert_same(outcomes):
         pd.testing.assert_frame_equal(got, want)
 
 
+def _entry_points(spark, tmp_path, data, formula, fill):
+    """Each single-formula entry point as an action giving ``(result,
+    invalid count or parquet metrics)``; a lazy result is collected."""
+    def evaluator(validation="eager"):
+        return FormulaEvaluator(data, fill_invalid=fill, spark=spark, validation=validation)
+
+    def to_pandas():
+        fe = evaluator()
+        return fe.evaluate_to_pandas(formula), fe.last_invalid_count
+
+    def evaluate(validation):
+        fe = evaluator(validation)
+        return _sorted(fe.evaluate_formula(formula).toPandas()), fe.last_invalid_count
+
+    def to_parquet():
+        path = str(tmp_path / uuid.uuid4().hex)
+        metrics = evaluator().evaluate_to_parquet(formula, path)
+        assert metrics.pop("path") == path
+        return _sorted(spark.read.parquet(path).toPandas()), metrics
+
+    return {"to_pandas": to_pandas, "eager": lambda: evaluate("eager"),
+            "defer": lambda: evaluate("defer"), "to_parquet": to_parquet}
+
+
 @pytest.mark.parametrize("fill", [False, True], ids=["raw", "fill"])
 @pytest.mark.parametrize("case", list(CASES))
-def test_wide_paths_agree(spark, paths, case, fill):
+def test_wide_paths_agree(spark, tmp_path, paths, case, fill):
     a, b, c = CASES[case]
-
-    def action():
-        fe = FormulaEvaluator({"a": a, "b": b, "c": c}, fill_invalid=fill, spark=spark)
-        return fe.evaluate_to_pandas(FORMULAS["p"]), fe.last_invalid_count
-
+    data = {"a": a, "b": b, "c": c}
+    action = _entry_points(spark, tmp_path, data, FORMULAS["p"], fill)["to_pandas"]
     outcomes, local, joined = paths(action)
+    assert (local, joined) == (1, 0)
+    _assert_same(outcomes)
+
+
+@pytest.mark.parametrize("entry", ["eager", "defer", "to_parquet"])
+@pytest.mark.parametrize("fill", [False, True], ids=["raw", "fill"])
+@pytest.mark.parametrize("case", list(CASES))
+def test_entry_points_agree(spark, tmp_path, paths, case, fill, entry):
+    """``evaluate_formula`` (its DataFrame collected) in either
+    validation mode, and ``evaluate_to_parquet`` (read back)."""
+    a, b, c = CASES[case]
+    data = {"a": a, "b": b, "c": c}
+    outcomes, local, joined = paths(_entry_points(spark, tmp_path, data, FORMULAS["p"], fill)[entry])
+    assert (local, joined) == (1, 0)
+    _assert_same(outcomes)
+
+
+@pytest.mark.parametrize("fill", [False, True], ids=["raw", "fill"])
+@pytest.mark.parametrize("case", list(CASES))
+def test_single_frame_paths_agree(spark, tmp_path, paths, case, fill):
+    """One frame operand and a scalar (``a * k``) take the driver route
+    too."""
+    data = {"a": CASES[case][0], "k": -2.5}
+    outcomes, local, joined = paths(_entry_points(spark, tmp_path, data, "a * k", fill)["to_pandas"])
+    assert (local, joined) == (1, 0)
+    _assert_same(outcomes)
+
+
+def _call(name: str) -> str:
+    """An elementwise call of the parser's table over a, b, c."""
+    args = ["a", "b", "c"][:len(CALLS[name].params)]
+    if CALLS[name].method:
+        return f"({args[0]}).{name}({', '.join(args[1:])})"
+    return f"{name}({', '.join(args)})"
+
+
+# a Series broadcast with a scalar, and one formula per operator symbol
+# and per elementwise call of the parser's tables, over NaN and ±Inf
+# cells ("nonfinite")
+OPERAND_FORMULAS = [
+    "a * s + k - b",
+    "-a",
+    *(f"a {sym} b" for sym in sorted(sym for sym, _ in OPERATORS.values())),
+    *(_call(name) for name, sig in sorted(CALLS.items()) if sig.node is Call),
+]
+
+
+@pytest.mark.parametrize("formula", OPERAND_FORMULAS)
+def test_operators_agree(spark, tmp_path, paths, formula):
+    a, b, c = CASES["nonfinite"]
+    data = {"a": a, "b": b, "c": c, "s": pd.Series([np.nan, -INF, 0.5]), "k": 3.0}
+    outcomes, local, joined = paths(_entry_points(spark, tmp_path, data, formula, False)["to_pandas"])
     assert (local, joined) == (1, 0)
     _assert_same(outcomes)
 
@@ -183,7 +259,7 @@ def test_adp_paths_agree(spark, paths, case, fill):
         # mpf NaN is unequal to itself: compare the cells' text
         return fe.evaluate_to_pandas(FORMULAS["p"]).map(str), fe.last_invalid_count
 
-    outcomes, local, joined = paths(action)
+    outcomes, local, joined = paths(action, "_local_join")
     assert (local, joined) == (1, 0)
     _assert_same(outcomes)
 
@@ -191,12 +267,52 @@ def test_adp_paths_agree(spark, paths, case, fill):
 U = _frame(np.arange(1, 10).reshape(3, 3), ["r0", "r1", "r2"], ["x", "y", "z"])
 
 
-def test_three_operand_formula_runs_one_job(spark):
-    """The aligned join of three pandas operands is one local relation:
-    the collect is the only job (the join chain runs three)."""
+def test_three_operand_formula_runs_no_job(spark):
+    """A float formula over three pandas operands is aligned, evaluated,
+    audited and filled on the driver: collecting it, and the eager
+    audit of ``evaluate_formula``, run no Spark job (the join chain
+    runs three)."""
     fe = FormulaEvaluator({"U": U, "M": U - 5, "Z": U.where(U > 4, 0.0)}, fill_invalid=True,
                           spark=spark)
-    assert _jobs(spark, lambda: fe.evaluate_to_pandas("where(U > M, U / Z, 0)")) == 1
+    formula = "where(U > M, U / Z, 0)"
+    assert _jobs(spark, lambda: fe.evaluate_to_pandas(formula)) == 0
+    assert _jobs(spark, lambda: fe.evaluate_formula(formula)) == 0
+    assert fe.last_invalid_count == 4  # U / 0 where U <= 4
+
+
+def test_registration_makes_no_spark_frame(spark, monkeypatch):
+    """A pandas operand becomes a Spark frame only when a plan first
+    reads it, and then once."""
+    made = Counter()
+    create = SparkSession.createDataFrame
+
+    def counted(self, *args, **kwargs):
+        made["frames"] += 1
+        return create(self, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", counted)
+    fe = FormulaEvaluator({n: U * i for i, n in enumerate("abcde")}, spark=spark)
+    assert made["frames"] == 0
+    a = fe.datasets["a"]
+    assert a.df is a.df
+    assert made["frames"] == 1
+
+
+def test_nested_floor_division_matches_numpy(spark):
+    """A legal formula whose SQL text grows geometrically with its
+    nesting (``//``) runs on the driver over pandas operands."""
+    rng = np.random.default_rng(7)
+    frames = {n: pd.DataFrame(rng.integers(-3, 4, (4, 3)).astype(float)) for n in "abcd"}
+    fe = FormulaEvaluator(frames, fill_invalid=True, spark=spark)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        got = fe.evaluate_to_pandas("a // b // c // d")
+    a, b, c, d = (frames[n].to_numpy() for n in "abcd")
+    with np.errstate(all="ignore"):
+        exp = np.floor_divide(np.floor_divide(np.floor_divide(a, b), c), d)
+    pd.testing.assert_frame_equal(
+        got, pd.DataFrame(np.where(np.isfinite(exp), exp, 0.0)), check_index_type=False,
+        check_column_type=False)
 
 
 def _plan_nodes(df) -> Counter:

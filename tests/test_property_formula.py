@@ -139,8 +139,9 @@ def _assert_matches(evaluator, formula: str, exp: np.ndarray) -> None:
 )
 @given(drawn=formulas())
 def test_random_formula_matches_pandas(shared_evaluator, triplet_evaluator, matrices, drawn):
-    """Each drawn formula gives numpy's answer on the wide route and on
-    the triplet route (``TripletMatrix`` copies of the same operands).
+    """Each drawn formula gives numpy's answer on the driver route
+    (pandas operands) and on the triplet route (``TripletMatrix``
+    copies of the same operands).
     Series are left out: the triplet route broadcasts them by label,
     not by position (README "Label deviations")."""
     formula, oracle = drawn
@@ -151,10 +152,12 @@ def test_random_formula_matches_pandas(shared_evaluator, triplet_evaluator, matr
 
 
 # ------------------------------------------------------------------
-# Every binary operator over a grid of special values: the wide,
-# triplet and Series-only paths (and, for / % //, the exported shims)
-# must all give numpy's answer, NaN-aware and signed-zero-aware. ``**`` may differ by one ulp: Java's
-# StrictMath.pow and C's pow round the last bit differently.
+# Every binary operator over a grid of special values: the wide route
+# over pandas frames (driver) and over Spark frames, the triplet and
+# Series-only paths (and, for / % //, the exported shims) must all give
+# numpy's answer, NaN-aware and signed-zero-aware. ``**`` may differ by
+# one ulp: Java's StrictMath.pow and C's pow round the last bit
+# differently.
 
 GRID = [-5.0, -1e-20, -0.0, 0.0, 0.1, 0.7, 1.0, 3.0, np.inf, -np.inf, np.nan]
 GRID_OPS = {
@@ -178,7 +181,9 @@ GRID_OPS = {
 @pytest.fixture(scope="module")
 def grid(spark):
     """``x[i, j] = GRID[i]`` and ``y[i, j] = GRID[j]``: every pair once,
-    as wide frames (x, y), triplet matrices (tx, ty) and Series (u, v)."""
+    as pandas frames (x, y: the driver route), Spark frames with a
+    ``__row_id__`` column (sx, sy: the wide route's join and SQL
+    projection), triplet matrices (tx, ty) and Series (u, v)."""
     from ssb_coefficient_maker_spark.plans.triplet import TripletMatrix
 
     n = len(GRID)
@@ -194,7 +199,11 @@ def grid(spark):
         })
         return TripletMatrix(spark.createDataFrame(long))
 
-    data = {"x": x, "y": y, "tx": triplet(x), "ty": triplet(y),
+    def spark_frame(m: pd.DataFrame):
+        return spark.createDataFrame(m.assign(__row_id__=[str(i) for i in range(n)]))
+
+    data = {"x": x, "y": y, "sx": spark_frame(x), "sy": spark_frame(y),
+            "tx": triplet(x), "ty": triplet(y),
             "u": pd.Series(x.to_numpy().ravel()), "v": pd.Series(y.to_numpy().ravel())}
     return FormulaEvaluator(data, validation="defer", spark=spark), x, y
 
@@ -223,8 +232,8 @@ def test_operator_grid_matches_numpy(spark, grid, formula):
         exp = GRID_OPS[formula](x.to_numpy(), y.to_numpy()).astype(np.float64)
     got = {
         "wide": fe.evaluate_to_pandas(formula).loc[range(n), list(x.columns)],
-        "triplet": fe.evaluate_to_pandas(formula.replace("x", "tx").replace("y", "ty"))
-        .loc[range(n), list(x.columns)],
+        **{path: fe.evaluate_to_pandas(formula.replace("x", f"{p}x").replace("y", f"{p}y"))
+           .loc[range(n), list(x.columns)] for path, p in (("spark", "s"), ("triplet", "t"))},
         "series": fe.evaluate_to_pandas(formula.replace("x", "u").replace("y", "v")),
     }
     if formula in SHIMS:
@@ -262,6 +271,6 @@ def test_literals_match_numpy(grid, formula):
     n = len(GRID)
     with np.errstate(all="ignore"):
         exp = np.asarray(eval(formula, NUMPY_FUNCS, {"x": x.to_numpy()}), dtype=np.float64)
-    for path, name in (("wide", "x"), ("triplet", "tx")):
+    for path, name in (("wide", "x"), ("spark", "sx"), ("triplet", "tx")):
         res = fe.evaluate_to_pandas(formula.replace("x", name)).loc[range(n), list(x.columns)]
         _assert_numpy_exact(path, formula, res, exp)

@@ -9,7 +9,10 @@ import pytest
 
 from ssb_coefficient_maker_spark.catalog import matrix_from_pandas
 from ssb_coefficient_maker_spark.validation import (
+    audit_cells,
+    audit_exprs,
     fill_invalid,
+    fill_matrix,
     invalid_status,
     validate,
 )
@@ -107,3 +110,15 @@ def test_null_counts_as_invalid(spark):
     )
     status = invalid_status(df, ["A"])
     assert status.n_invalid == 1
+
+
+@pytest.mark.parametrize("rows", [slice(None), slice(0)], ids=["mixed", "empty"])
+def test_driver_audit_and_fill_match_spark(spark, rows):
+    """A result held on the driver is counted and filled in numpy: the
+    same ``audit_exprs`` row as Spark's aggregate (None sums over no
+    rows included) and the same filled cells as the lazy fill."""
+    m = matrix_from_pandas(spark, pd.DataFrame({"A": [1.0, NAN, 3.0], "B": [INF, 5.0, -INF]})[rows])
+    spark_row = m.df.agg(*audit_exprs(m.value_cols)).collect()[0].asDict()
+    assert audit_cells(m.cells, m.value_cols) == spark_row
+    filled = fill_invalid(m.df, m.value_cols).toPandas().sort_values("__row_id__", ignore_index=True)
+    pd.testing.assert_frame_equal(fill_matrix(m).cells, filled, check_dtype=False)
