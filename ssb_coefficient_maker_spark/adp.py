@@ -228,6 +228,6 @@ def adp_inf_cond(c: str) -> str:
 ADP = Carrier(adp_invalid_cond, adp_inf_cond, string("0.0"))
 
 
-def validate_adp(df: DataFrame, value_cols: list[str], formula_str: str, **kwargs):
+def validate_adp(m: Matrix, formula_str: str, **kwargs):
     """Audit an ADP (string-carried) result; fill, warn, or raise."""
-    return validate(df, value_cols, formula_str, carrier=ADP, **kwargs)
+    return validate(m, formula_str, carrier=ADP, **kwargs)

@@ -30,7 +30,7 @@ from typing import Any, Iterator, Mapping
 import mpmath
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from ssb_coefficient_maker_spark import adp as adp_mod
 from ssb_coefficient_maker_spark import catalog
@@ -64,8 +64,7 @@ from ssb_coefficient_maker_spark.session import ROW_ID, get_spark
 from ssb_coefficient_maker_spark.validation import (
     FLOAT,
     Carrier,
-    audit_cells,
-    audit_exprs,
+    audited_on_action,
     check,
     fill_matrix,
     status_of,
@@ -289,38 +288,29 @@ class FormulaEvaluator:
     def _result(self, plan: _Plan) -> Any:
         """A plan's ``evaluate_formula`` result: the eager audit (fill,
         warn, raise), or in defer mode just the fill. A result computed
-        on the driver is audited and filled there, and comes back as
-        the DataFrame made from its cells."""
+        on the driver is audited and filled there (``validation``), and
+        comes back as the DataFrame made from its cells."""
         m = plan.result
         if m is None:
             return plan.value
         if self.validation == "defer":
             return (fill_matrix(m, plan.carrier) if self.fill_invalid else m).df
-        if m.cells is not None:
-            n_invalid = self._checked(plan, audit_cells(m.cells, m.value_cols))
-            return (fill_matrix(m) if self.fill_invalid and n_invalid else m).df
         audit = adp_mod.validate_adp if plan.kind == "adp" else _validate
         with adp_mod.zero_division_refused():
-            df, self.last_invalid_count = audit(m.df, m.value_cols, plan.formula,
-                                                fill=self.fill_invalid,
-                                                mixed_operands=plan.mixed, verbose=self.verbose)
-        return df
+            m, self.last_invalid_count = audit(m, plan.formula, fill=self.fill_invalid,
+                                               mixed_operands=plan.mixed, verbose=self.verbose)
+        return m.df
 
     def _sink(self, plan: _Plan, path: str | None = None) -> tuple[dict, Any]:
         """Materialize a plan's result in ONE action — a parquet write
         to ``path``, else a pandas collect (``_collect``). The audit
-        metrics ride that action via ``observe`` and count the cells
-        BEFORE any fill, which is fused into the projection. A result
-        computed on the driver is counted and filled there in numpy, so
-        its collect runs no job and its write one. Returns the
-        ``validation.audit_exprs`` row and the collected frame (None
-        for a write)."""
-        m, obs = plan.result, None
-        if m.cells is None:
-            obs = Observation()
-            m = Matrix(m.df.observe(obs, *audit_exprs(m.value_cols, plan.carrier)), m.value_cols)
-        else:
-            row = audit_cells(m.cells, m.value_cols)
+        metrics ride that action (``validation.audited_on_action``) and
+        count the cells BEFORE any fill, which is fused into the
+        projection. A result computed on the driver is counted and
+        filled there in numpy, so its collect runs no job and its write
+        one. Returns the ``validation.audit_exprs`` row and the
+        collected frame (None for a write)."""
+        m, row = audited_on_action(plan.result, plan.carrier)
         if self.fill_invalid:
             m = fill_matrix(m, plan.carrier)
         with adp_mod.zero_division_refused():
@@ -329,7 +319,7 @@ class FormulaEvaluator:
             else:
                 m.df.write.mode("overwrite").parquet(path)
                 pdf = None
-        return (row if obs is None else obs.get), pdf
+        return row(), pdf
 
     def _collect(self, plan: _Plan, m: Matrix) -> pd.DataFrame:
         """Collect a plan's result as its pandas matrix: a triplet

@@ -58,8 +58,9 @@ class Matrix:
     ingested, or a result the driver computed) carries its ``cells``,
     a pandas frame of ``ROW_ID`` label text plus the value columns, and
     their Spark ``schema``. Its ``df`` is created from them the first
-    time something reads it, and kept. A Matrix wrapped around a Spark
-    DataFrame has ``cells`` None."""
+    time something reads it, and kept, with each NaN cell of a double
+    column as NaN, not NULL. A Matrix wrapped around a Spark DataFrame
+    has ``cells`` None."""
 
     def __init__(self, df: DataFrame | None, value_cols: list[str]):
         self._df = df
@@ -79,8 +80,11 @@ class Matrix:
     @property
     def df(self) -> DataFrame:
         if self._df is None:
-            self._df = _rightsized(self.spark.createDataFrame(self.cells, self.schema),
-                                   len(self.cells))
+            # Arrow's pandas conversion masks every NaN cell to NULL;
+            # ``fillna`` reads a double column's NULL back as NaN and
+            # leaves text columns as they are
+            df = self.spark.createDataFrame(self.cells, self.schema).fillna(float("nan"))
+            self._df = _rightsized(df, len(self.cells))
         return self._df
 
     @property

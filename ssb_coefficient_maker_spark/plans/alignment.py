@@ -76,10 +76,11 @@ from ssb_coefficient_maker_spark.session import ROW_ID
 Bindings = list[tuple[dict[str, str], dict[str, Any]]]
 
 # Largest aligned table (row-label union × operand columns) that
-# ``_aligned_join`` builds on the driver. Above it the join chain wins:
-# the driver's table and result are shipped to Spark again by every
-# formula that needs them there, while the join reads the copy each
-# operand made when a plan first read it.
+# ``_aligned_join`` builds on the driver. It is the crossover measured
+# for the earlier driver alignment, which shipped the aligned table to
+# Spark for every formula and evaluated it there. For the numpy
+# evaluation, which ships nothing to a pandas collect, it is not
+# measured: the crossover may lie higher.
 LOCAL_ALIGN_CELLS = 2**17
 
 

@@ -22,12 +22,13 @@ are built as SQL text — one parsed expression per aggregate, one
 ``selectExpr`` for the fill — not as a py4j ``Column`` tree per column.
 When a result is materialized — collected to pandas or written to
 parquet — the aggregate is observed on that action (api.py's sink), so
-the audit adds no job. ``validate`` runs it as a job of its own only
-for ``evaluate_formula``, whose result stays lazy. A float result the
-driver computed (it carries its cells, ``catalog.Matrix.cells``) is
-audited and filled in numpy there instead (``audit_cells``,
-``fill_matrix``): the same counts, read by the same ``status_of`` and
-``check``, and no job.
+the audit adds no job (``audited_on_action``). ``validate`` runs it as
+a job of its own only for ``evaluate_formula``, whose result stays
+lazy (``audit_row``). A float result the driver computed (it carries
+its cells, ``catalog.Matrix.cells``) is audited and filled in numpy
+there instead (``audit_cells``, ``fill_matrix``): the same counts, read
+by the same ``status_of`` and ``check``, and no job. These three
+functions are the only ones that look where a result's cells live.
 
 One validator serves both value carriers: float64 columns and the
 decimal strings of ADP mode (adp.py). A ``Carrier`` names the carrier's
@@ -45,7 +46,7 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ssb_coefficient_maker_spark.catalog import Matrix
@@ -129,6 +130,26 @@ def audit_cells(cells: pd.DataFrame, value_cols: list[str]) -> dict:
     return row
 
 
+def audit_row(m: Matrix, carrier: Carrier = FLOAT) -> dict:
+    """``m``'s ``audit_exprs`` row: counted in numpy when ``m`` carries
+    its (float) cells (``audit_cells``), else one aggregate job."""
+    if m.cells is not None:
+        return audit_cells(m.cells, m.value_cols)
+    return m.df.agg(*audit_exprs(m.value_cols, carrier)).collect()[0].asDict()
+
+
+def audited_on_action(m: Matrix, carrier: Carrier = FLOAT) -> tuple[Matrix, Callable[[], dict]]:
+    """``m`` set up to count its audit row on the action that
+    materializes it, and a getter for that row once the action ran: an
+    ``observe`` of ``audit_exprs`` in Spark (no job of its own), or at
+    once in numpy when ``m`` carries its cells."""
+    if m.cells is not None:
+        row = audit_cells(m.cells, m.value_cols)
+        return m, lambda: row
+    obs = Observation()
+    return Matrix(m.df.observe(obs, *audit_exprs(m.value_cols, carrier)), m.value_cols), lambda: obs.get
+
+
 def status_of(row: dict, value_cols: list[str]) -> InvalidStatus:
     """Read an ``audit_exprs`` result (any subset of its columns)."""
     return InvalidStatus(
@@ -144,8 +165,7 @@ def invalid_status(
     """One aggregate pass over all value columns."""
     if not value_cols:
         return InvalidStatus(0, 0, 0)
-    row = df.agg(*audit_exprs(value_cols, carrier)).collect()[0].asDict()
-    return status_of(row, value_cols)
+    return status_of(audit_row(Matrix(df, value_cols), carrier), value_cols)
 
 
 def fill_invalid(
@@ -244,22 +264,21 @@ def check(
 
 
 def validate(
-    df: DataFrame,
-    value_cols: list[str],
+    m: Matrix,
     formula_str: str,
     *,
     fill: bool = False,
     mixed_operands: bool = False,
     verbose: bool = False,
     carrier: Carrier = FLOAT,
-) -> tuple[DataFrame, int]:
-    """Audit a compiled result; fill, warn, or raise.
+) -> tuple[Matrix, int]:
+    """Audit a compiled result (``audit_row``); fill, warn, or raise.
 
-    Returns ``(result_df, invalid_count)`` like reference
-    ``validate`` (coeff_maker.py:68-141).
+    Returns ``(result, invalid_count)`` like reference ``validate``
+    (coeff_maker.py:68-141).
     """
-    status = invalid_status(df, value_cols, carrier)
+    status = status_of(audit_row(m, carrier), m.value_cols)
     check(status, formula_str, fill=fill, mixed_operands=mixed_operands, verbose=verbose)
     if fill and status.n_invalid:
-        df = fill_invalid(df, value_cols, carrier)
-    return df, status.n_invalid
+        m = fill_matrix(m, carrier)
+    return m, status.n_invalid

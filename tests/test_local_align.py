@@ -19,6 +19,7 @@ from test_audit_sites import _jobs
 
 from ssb_coefficient_maker_spark.api import CoefficientCalculator, FormulaEvaluator
 from ssb_coefficient_maker_spark.formula.parser import CALLS, OPERATORS, Call
+from ssb_coefficient_maker_spark.functions.math import ident
 from ssb_coefficient_maker_spark.plans import alignment
 from ssb_coefficient_maker_spark.session import ROW_ID
 
@@ -103,6 +104,15 @@ def _sorted(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf.sort_values(ROW_ID, kind="stable").reset_index(drop=True)
 
 
+def _nan_null(df) -> dict:
+    """Spark's own count of NaN and of NULL cells per value column of
+    ``df``: a collect to pandas reads both as NaN."""
+    cols = [c for c in df.columns if c != ROW_ID]
+    row = df.selectExpr(*(f"sum(CAST({test}({ident(c)}) AS INT))" for c in cols
+                          for test in ("isnan", "isnull"))).collect()[0]
+    return {c: (row[2 * i], row[2 * i + 1]) for i, c in enumerate(cols)}
+
+
 def _assert_same(outcomes):
     (got, invalid, messages), (want, want_invalid, want_messages) = outcomes
     assert messages == want_messages
@@ -115,7 +125,9 @@ def _assert_same(outcomes):
 
 def _entry_points(spark, tmp_path, data, formula, fill):
     """Each single-formula entry point as an action giving ``(result,
-    invalid count or parquet metrics)``; a lazy result is collected."""
+    invalid count or parquet metrics)``; a Spark result is collected,
+    and its NaN and NULL cells are also counted in Spark
+    (``_nan_null``)."""
     def evaluator(validation="eager"):
         return FormulaEvaluator(data, fill_invalid=fill, spark=spark, validation=validation)
 
@@ -125,13 +137,15 @@ def _entry_points(spark, tmp_path, data, formula, fill):
 
     def evaluate(validation):
         fe = evaluator(validation)
-        return _sorted(fe.evaluate_formula(formula).toPandas()), fe.last_invalid_count
+        df = fe.evaluate_formula(formula)
+        return _sorted(df.toPandas()), (fe.last_invalid_count, _nan_null(df))
 
     def to_parquet():
         path = str(tmp_path / uuid.uuid4().hex)
         metrics = evaluator().evaluate_to_parquet(formula, path)
         assert metrics.pop("path") == path
-        return _sorted(spark.read.parquet(path).toPandas()), metrics
+        written = spark.read.parquet(path)
+        return _sorted(written.toPandas()), (metrics, _nan_null(written))
 
     return {"to_pandas": to_pandas, "eager": lambda: evaluate("eager"),
             "defer": lambda: evaluate("defer"), "to_parquet": to_parquet}
@@ -229,7 +243,8 @@ def test_fused_sink_paths_agree(spark, tmp_path, paths, case):
         [path] = {entry["path"] for name, entry in manifest.items() if name != "extras"}
         for entry in manifest.values():
             entry.pop("path", None)
-        return _sorted(spark.read.parquet(path).toPandas()), manifest
+        written = spark.read.parquet(path)
+        return _sorted(written.toPandas()), (manifest, _nan_null(written))
 
     outcomes, local, joined = paths(action)
     assert (local, joined) == (1, 0)

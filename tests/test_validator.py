@@ -7,7 +7,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from ssb_coefficient_maker_spark.catalog import matrix_from_pandas
+from ssb_coefficient_maker_spark.catalog import Matrix, matrix_from_pandas
 from ssb_coefficient_maker_spark.validation import (
     audit_cells,
     audit_exprs,
@@ -21,23 +21,30 @@ NAN = float("nan")
 INF = float("inf")
 
 
+def _in_spark(spark, pdf: pd.DataFrame) -> Matrix:
+    """``pdf`` as a Matrix that carries no driver cells, so that it is
+    audited and filled in Spark."""
+    m = matrix_from_pandas(spark, pdf)
+    return Matrix(m.df, m.value_cols)
+
+
 @pytest.fixture(scope="module")
 def mixed(spark):
     # DataFrame({'A':[1.0, nan, 3.0], 'B':[inf, 5.0, -inf]}) — 3 invalid cells
     pdf = pd.DataFrame({"A": [1.0, NAN, 3.0], "B": [INF, 5.0, -INF]})
-    return matrix_from_pandas(spark, pdf)
+    return _in_spark(spark, pdf)
 
 
 @pytest.fixture(scope="module")
 def all_bad(spark):
     pdf = pd.DataFrame({"A": [NAN] * 3, "B": [INF] * 3})
-    return matrix_from_pandas(spark, pdf)
+    return _in_spark(spark, pdf)
 
 
 @pytest.fixture(scope="module")
 def all_good(spark):
     pdf = pd.DataFrame({"A": [1.0, 2.0, 3.0], "B": [4.0, 5.0, 6.0]})
-    return matrix_from_pandas(spark, pdf)
+    return _in_spark(spark, pdf)
 
 
 def test_invalid_count(mixed):
@@ -69,37 +76,37 @@ def test_fill(mixed):
 
 def test_validate_raises_on_all_invalid(all_bad):
     with pytest.raises(ValueError, match="All values"):
-        validate(all_bad.df, all_bad.value_cols, "x / y")
+        validate(all_bad, "x / y")
 
 
 def test_validate_mixture_message(all_bad):
     with pytest.raises(ValueError, match="mixes"):
-        validate(all_bad.df, all_bad.value_cols, "x * v", mixed_operands=True)
+        validate(all_bad, "x * v", mixed_operands=True)
 
 
 def test_validate_warns_on_partial(mixed):
     with pytest.warns(UserWarning, match="50.0%"):
-        _, count = validate(mixed.df, mixed.value_cols, "a + b")
+        _, count = validate(mixed, "a + b")
     assert count == 3
 
 
 def test_validate_fill_path(mixed, recwarn, capsys):
     # fill is the intended mode: NO warning (reference prints only
     # under verbose, coeff_maker.py:104-112)
-    df, count = validate(mixed.df, mixed.value_cols, "a + b", fill=True)
+    filled, count = validate(mixed, "a + b", fill=True)
     assert count == 3
     assert not [w for w in recwarn if issubclass(w.category, UserWarning)]
-    status = invalid_status(df, mixed.value_cols)
+    status = invalid_status(filled.df, mixed.value_cols)
     assert status.n_invalid == 0
     # verbose prints the fill count
-    validate(mixed.df, mixed.value_cols, "a + b", fill=True, verbose=True)
+    validate(mixed, "a + b", fill=True, verbose=True)
     out = capsys.readouterr().out
     assert "Replaced 3 invalid values (NaN/Inf) with zeros" in out
     assert "WARNING: Result contains 3/6 (50.00%) invalid values" in out
 
 
 def test_validate_clean_no_warning(all_good, recwarn):
-    df, count = validate(all_good.df, all_good.value_cols, "a + b")
+    _, count = validate(all_good, "a + b")
     assert count == 0
     assert not [w for w in recwarn if issubclass(w.category, UserWarning)]
 
