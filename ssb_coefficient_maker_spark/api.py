@@ -12,8 +12,10 @@ coeff_maker.py:589-597 and :885-896). Differences, by design:
   evaluated, audited and filled on the driver in numpy, as the
   reference's ``pd.eval`` is; its result becomes a Spark DataFrame
   only when the caller asks for one (``evaluate_formula``, the parquet
-  sinks), and ``evaluate_to_pandas`` then runs no Spark job. Any other
-  matrix formula runs as one Spark plan.
+  sinks), and ``evaluate_to_pandas`` then runs no Spark job. So is a
+  float formula over a small dense ``leontief()`` result, which stays
+  on the driver after its one collect of A. Any other matrix formula
+  runs as one Spark plan.
 - Vector∘vector formulas return a labeled pandas Series instead of
   the reference's accidental raw ndarray (SURVEY.md §1.3 wart).
 - ``adp_enabled`` defaults to False in BOTH classes (the reference's
@@ -76,9 +78,10 @@ from ssb_coefficient_maker_spark.validation import validate as _validate
 class _Plan:
     """One formula's route (``FormulaEvaluator._route``): ``kind`` is
     scalar | vector | wide | triplet | adp. Matrix kinds carry their
-    ``result`` Matrix: lazy in Spark, or on the wide route possibly
-    computed on the driver (it carries its cells); a triplet result's
-    ``df`` also holds ``__col_id__``. Driver kinds carry ``value``."""
+    ``result`` Matrix: lazy in Spark, or on the wide and triplet routes
+    possibly computed on the driver (it carries its cells); a triplet
+    result is keyed on ``__col_id__`` too. Driver kinds carry
+    ``value``."""
 
     kind: str
     formula: str
@@ -274,8 +277,8 @@ class FormulaEvaluator:
                 "operand as a pandas DataFrame."
             )
         if to_triplet:
-            tdf = triplet_plans.compile_formula_triplet(expr, self.datasets)
-            return _Plan("triplet", formula, Matrix(tdf, [VALUE]), mixed=mixed)
+            result = triplet_plans.compile_formula_triplet(expr, self.datasets)
+            return _Plan("triplet", formula, result, mixed=mixed)
         if self.adp_enabled:
             df, cols = adp_mod.compile_adp_formula(
                 expr, self.datasets, self.decimal_precision
@@ -329,7 +332,8 @@ class FormulaEvaluator:
         if plan.kind == "adp":
             pdf = adp_mod.adp_to_pandas(m.df, m.value_cols, self.decimal_precision)
         elif plan.kind == "triplet":
-            wide = m.df.toPandas().pivot(index=ROW_ID, columns=COL_ID, values=VALUE)
+            cells = m.df.toPandas() if m.cells is None else m.cells
+            wide = cells.pivot(index=ROW_ID, columns=COL_ID, values=VALUE)
             order, _ = catalog.label_order(wide.columns)
             pdf = catalog.labelled(wide.reset_index(), list(wide.columns[order]))
         else:

@@ -51,29 +51,34 @@ WIDE_MATRIX_THRESHOLD = 4000
 
 
 class Matrix:
-    """A named matrix: a Spark DataFrame ``df`` with ROW_ID + value
-    columns (doubles, or ADP's decimal strings).
+    """A named matrix: a Spark DataFrame ``df`` with its label ``keys``
+    (``ROW_ID``; ``ROW_ID`` and ``__col_id__`` for a triplet, see
+    plans/triplet.py) plus value columns (doubles, or ADP's decimal
+    strings).
 
     A Matrix made on the driver (``Matrix.from_cells``: a pandas frame
     ingested, or a result the driver computed) carries its ``cells``,
-    a pandas frame of ``ROW_ID`` label text plus the value columns, and
-    their Spark ``schema``. Its ``df`` is created from them the first
-    time something reads it, and kept, with each NaN cell of a double
-    column as NaN, not NULL. A Matrix wrapped around a Spark DataFrame
-    has ``cells`` None."""
+    a pandas frame of the key columns' label text plus the value
+    columns, and their Spark ``schema``. Its ``df`` is created from
+    them the first time something reads it, and kept, with each NaN
+    cell of a double column as NaN, not NULL. A Matrix wrapped around a
+    Spark DataFrame has ``cells`` None."""
 
-    def __init__(self, df: DataFrame | None, value_cols: list[str]):
+    def __init__(self, df: DataFrame | None, value_cols: list[str],
+                 keys: tuple[str, ...] = (ROW_ID,)):
         self._df = df
         self.value_cols = list(value_cols)
+        self.keys = tuple(keys)
         self.cells: pd.DataFrame | None = None
         self.schema: T.StructType | None = None
         self.spark: SparkSession | None = None
 
     @classmethod
-    def from_cells(cls, spark: SparkSession, cells: pd.DataFrame, schema: T.StructType) -> Matrix:
+    def from_cells(cls, spark: SparkSession, cells: pd.DataFrame, schema: T.StructType,
+                   keys: tuple[str, ...] = (ROW_ID,)) -> Matrix:
         """A driver-held Matrix: ``cells`` has the columns of
-        ``schema``, ``ROW_ID`` first."""
-        m = cls(None, [f.name for f in schema.fields[1:]])
+        ``schema``, the ``keys`` first."""
+        m = cls(None, [f.name for f in schema.fields[len(keys):]], keys)
         m.cells, m.schema, m.spark = cells, schema, spark
         return m
 
@@ -140,10 +145,11 @@ def _matrix_from_pandas(spark: SparkSession, pdf: pd.DataFrame, codec: Codec) ->
     return Matrix.from_cells(spark, out, cells_schema(cols, codec.spark_type))
 
 
-def cells_schema(value_cols: list[str], value_type: T.DataType) -> T.StructType:
-    """The Spark schema of driver-held cells: ``ROW_ID`` label text,
+def cells_schema(value_cols: list[str], value_type: T.DataType,
+                 keys: tuple[str, ...] = (ROW_ID,)) -> T.StructType:
+    """The Spark schema of driver-held cells: the ``keys``' label text,
     then ``value_cols`` of ``value_type``."""
-    return T.StructType([T.StructField(ROW_ID, T.StringType(), False)]
+    return T.StructType([T.StructField(k, T.StringType(), False) for k in keys]
                         + [T.StructField(c, value_type, True) for c in value_cols])
 
 

@@ -87,7 +87,6 @@ LOCAL_ALIGN_CELLS = 2**17
 def align(
     exprs: Mapping[Any, FormulaExpr],
     datasets: Mapping[str, Any],
-    col_key: str | None = None,
 ) -> tuple[Matrix, list[str], dict[Any, Bindings]]:
     """Align the operands of formulas that share one frame-operand set.
 
@@ -96,13 +95,13 @@ def align(
     join, so the caller passes formulas that read the same frames:
     ``compile_formulas_fused`` groups them so, and every other compiler
     passes one formula. The frames meet in one aligned table
-    (``_aligned_join``) keyed on ``__row_id__``, and on ``col_key`` too
-    when given (the triplet route's column label): made on the driver
-    when every frame carries its pandas cells and the table is at most
-    ``LOCAL_ALIGN_CELLS`` cells (a Matrix that carries the table as its
-    cells), else by a full-outer join chain in Spark. The output
-    columns are the union of the frames' value columns, in first-seen
-    order.
+    (``_aligned_join``) keyed on the frames' label ``keys``
+    (``__row_id__``, and on the triplet route ``__col_id__`` too): made
+    on the driver when every frame carries its cells and the table is
+    at most ``LOCAL_ALIGN_CELLS`` cells (a Matrix that carries the
+    table as its cells), else by a full-outer join chain in Spark. The
+    output columns are the union of the frames' value columns, in
+    first-seen order.
 
     Returns ``(joined, out_cols, bindings)``: ``bindings[name][pos]``
     is ``(columns, values)`` for formula ``name`` at output column
@@ -110,9 +109,9 @@ def align(
     its joined column; ``values`` maps every other operand to a plain
     value: NaN for a frame without the column (pandas alignment), a
     scalar's float, a Series' value at ``pos`` (positional broadcast,
-    reference coeff_maker.py:757-763), or with ``col_key`` the whole
-    Series (the triplet route broadcasts by label, so its width is not
-    checked).
+    reference coeff_maker.py:757-763), or over triplets the whole
+    Series (the triplet route broadcasts by column label, so its width
+    is not checked).
     """
     split = {name: _operands(expr, datasets) for name, expr in exprs.items()}
     for name, (frames, _, _) in split.items():
@@ -122,6 +121,7 @@ def align(
                 "scalar formulas on the driver (eval_driver)"
             )
     frames = next(iter(split.values()))[0]
+    by_label = len(next(iter(frames.values())).keys) > 1
     out_cols = list(dict.fromkeys(c for m in frames.values() for c in m.value_cols))
     have = {n: set(m.value_cols) for n, m in frames.items()}
     columns = [{n: _operand_col(i, pos) for i, n in enumerate(frames) if out_c in have[n]}
@@ -129,7 +129,7 @@ def align(
     bindings = {}
     for name, (_, vectors, scalars) in split.items():
         for vname, vec in vectors.items():
-            if col_key is None and vec.size != len(out_cols):
+            if not by_label and vec.size != len(out_cols):
                 raise FormulaError(
                     f"vector {vname!r} has length {vec.size} but the frame "
                     f"operands have {len(out_cols)} columns; the reference "
@@ -138,10 +138,10 @@ def align(
                 )
         bindings[name] = [
             (cols, {**dict.fromkeys(frames, np.nan), **scalars,
-                    **{n: v if col_key else v.values[pos] for n, v in vectors.items()}})
+                    **{n: v if by_label else v.values[pos] for n, v in vectors.items()}})
             for pos, cols in enumerate(columns)
         ]
-    return _aligned_join(frames, out_cols, col_key), out_cols, bindings
+    return _aligned_join(frames, out_cols), out_cols, bindings
 
 
 def _operands(
@@ -245,13 +245,13 @@ def _evaluate_cells(joined: Matrix, outputs: list[tuple]) -> Matrix:
     time through ``eval_driver``: a frame operand is its column of the
     table, every other operand the plain value ``align`` bound. The
     result Matrix carries its cells; its ``df`` is made when read."""
-    table = joined.cells
-    cells = {ROW_ID: table[ROW_ID].to_numpy()}
+    table, keys = joined.cells, joined.keys
+    cells = {k: table[k].to_numpy() for k in keys}
     for alias, expr, columns, values in outputs:
         operands = {**values, **{n: table[c] for n, c in columns.items()}}
         cells[alias] = eval_driver(expr, operands, NUMPY_OPS).to_numpy(np.float64)
     return Matrix.from_cells(joined.spark, pd.DataFrame(cells),
-                             cells_schema(list(cells)[1:], T.DoubleType()))
+                             cells_schema(list(cells)[len(keys):], T.DoubleType(), keys), keys)
 
 
 def _operand_col(i: int, pos: int) -> str:
@@ -262,20 +262,18 @@ def _operand_col(i: int, pos: int) -> str:
     return f"__op{i}_{pos}__"
 
 
-def _aligned_join(
-    frames: dict[str, Matrix], out_cols: list[str], col_key: str | None = None
-) -> Matrix:
-    """All frame operands aligned on ROW_ID, and on ``col_key`` too
-    when given (the triplet path's column label), with every operand's
-    value columns renamed ``_operand_col(i, pos)`` so the formula can
+def _aligned_join(frames: dict[str, Matrix], out_cols: list[str]) -> Matrix:
+    """All frame operands aligned on their label ``keys`` (ROW_ID, and
+    on the triplet path ``__col_id__`` too), with every operand's value
+    columns renamed ``_operand_col(i, pos)`` so the formula can
     reference them unambiguously. Two plans, one answer:
 
-    - **On the driver** (``_local_join``) when there is no ``col_key``,
-      every operand carries its ingested pandas cells
-      (``Matrix.cells``), and the aligned table has at most
-      ``LOCAL_ALIGN_CELLS`` cells (row-label union × operand columns):
-      one pandas outer concat, whose Matrix carries the table as its
-      cells.
+    - **On the driver** (``_local_join``) when every operand carries
+      its cells (``Matrix.cells``: ingested from pandas, or a result
+      the driver computed, such as a dense ``leontief()``) and the
+      aligned table has at most ``LOCAL_ALIGN_CELLS`` cells (key union
+      × operand columns): one pandas outer concat, whose Matrix
+      carries the table as its cells.
     - **Otherwise, in Spark:** a chain of full-outer joins. Each operand
       is shuffled once on the join key, but a full-outer ``USING`` join
       outputs ``coalesce(l.key, r.key)``, which carries no
@@ -283,11 +281,12 @@ def _aligned_join(
       side built so far (N-1 shuffles of it for N operands).
     """
     pos = {c: j for j, c in enumerate(out_cols)}
-    if col_key is None and all(m.cells is not None for m in frames.values()):
-        rows = reduce(pd.Index.union, (pd.Index(m.cells[ROW_ID]) for m in frames.values()))
-        if len(rows) * sum(len(m.value_cols) for m in frames.values()) <= LOCAL_ALIGN_CELLS:
-            return _local_join(frames, pos)
-    keys = [ROW_ID] if col_key is None else [ROW_ID, col_key]
+    keys = list(next(iter(frames.values())).keys)
+    if all(m.cells is not None for m in frames.values()):
+        labels = reduce(pd.Index.union, (pd.MultiIndex.from_frame(m.cells[keys])
+                                         for m in frames.values()))
+        if len(labels) * sum(len(m.value_cols) for m in frames.values()) <= LOCAL_ALIGN_CELLS:
+            return _local_join(frames, pos, keys)
     # operands keep their native row-id type (so a long key can reuse
     # upstream partitioning); only heterogeneous key types force a
     # unifying cast to string (triplet keys are already strings)
@@ -300,22 +299,22 @@ def _aligned_join(
     ]
     joined = reduce(lambda a, b: a.join(b, on=keys, how="full_outer"), prefixed)
     return Matrix(joined, [_operand_col(i, pos[c]) for i, m in enumerate(frames.values())
-                           for c in m.value_cols])
+                           for c in m.value_cols], keys)
 
 
-def _local_join(frames: dict[str, Matrix], pos: dict[str, int]) -> Matrix:
+def _local_join(frames: dict[str, Matrix], pos: dict[str, int], keys: list[str]) -> Matrix:
     """The aligned join of driver-resident operands, made on the
-    driver: one pandas outer concat keyed on the label text (a cell
-    absent from an operand is NaN, as the outer join's NULL reads),
-    with each operand column's Spark type from its Matrix."""
+    driver: one pandas outer concat on the key columns' label text (a
+    cell absent from an operand is NaN, as the outer join's NULL
+    reads), with each operand column's Spark type from its Matrix."""
     parts = []
-    fields = [T.StructField(ROW_ID, T.StringType(), False)]
+    fields = [T.StructField(k, T.StringType(), False) for k in keys]
     for i, m in enumerate(frames.values()):
         names = [_operand_col(i, pos[c]) for c in m.value_cols]
-        parts.append(m.cells.set_index(ROW_ID).set_axis(names, axis=1))
+        parts.append(m.cells.set_index(keys).set_axis(names, axis=1))
         fields += [T.StructField(n, m.schema[c].dataType, True) for n, c in zip(names, m.value_cols)]
-    out = pd.concat(parts, axis=1, join="outer").rename_axis(ROW_ID).reset_index()
-    return Matrix.from_cells(next(iter(frames.values())).spark, out, T.StructType(fields))
+    out = pd.concat(parts, axis=1, join="outer").rename_axis(keys).reset_index()
+    return Matrix.from_cells(next(iter(frames.values())).spark, out, T.StructType(fields), keys)
 
 
 # ---------------------------------------------------------------- driver-side

@@ -29,8 +29,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ssb_coefficient_maker_spark.catalog import Matrix
+from ssb_coefficient_maker_spark.catalog import Matrix, cells_schema
 from ssb_coefficient_maker_spark.formula.parser import (
     BinOp,
     Call,
@@ -47,11 +48,12 @@ from ssb_coefficient_maker_spark.formula.parser import (
     extract_variables,
 )
 from ssb_coefficient_maker_spark.functions.math import SQL_OPS, ident, num, or_nan, string
-from ssb_coefficient_maker_spark.plans.alignment import align
+from ssb_coefficient_maker_spark.plans.alignment import _evaluate_cells, align
 from ssb_coefficient_maker_spark.session import ROW_ID
 
 COL_ID = "__col_id__"
 VALUE = "value"
+KEYS = (ROW_ID, COL_ID)
 
 
 class TripletMatrix:
@@ -60,10 +62,16 @@ class TripletMatrix:
     The one place a triplet is normalized: both labels are STRING and
     a NULL value is read as NaN, so every triplet op can take its
     operands as they are — a NULL cell poisons the sums it enters
-    instead of being skipped by SUM. Its one value column makes it a
-    frame operand of the aligned join (``plans.alignment.align``)."""
+    instead of being skipped by SUM. Its key columns and its one value
+    column make it a frame operand of the aligned join
+    (``plans.alignment.align``), like a ``catalog.Matrix``; it carries
+    no driver cells. A triplet the driver computed (a dense
+    ``leontief()``, or a formula evaluated on the driver) is a
+    ``Matrix.from_cells`` keyed on ``KEYS`` instead."""
 
+    keys = KEYS
     value_cols = (VALUE,)
+    cells = None
 
     def __init__(self, df: DataFrame):
         missing = {ROW_ID, COL_ID, VALUE} - set(df.columns)
@@ -187,11 +195,11 @@ DENSE_CELLS = DENSE_LABELS * DENSE_LABELS
 
 
 def leontief_total_requirements(
-    a: TripletMatrix,
+    a: TripletMatrix | Matrix,
     *,
     tol: float = 1e-10,
     max_terms: int = 100,
-) -> TripletMatrix:
+) -> TripletMatrix | Matrix:
     """Leontief total-requirements matrix ``(I - A)^-1`` via the
     convergence-checked Neumann iteration: accumulate ``A^k`` terms
     until the largest remaining entry falls under ``tol`` (the
@@ -201,13 +209,16 @@ def leontief_total_requirements(
     < 1); raises after ``max_terms`` otherwise, naming the last
     term's magnitude.
 
-    Execution contract: A is collected ONCE (at most ``DENSE_CELLS +
-    1`` rows, one job). A finite A over at most ``DENSE_LABELS``
-    non-NULL labels — a sector vocabulary — runs the same series in
-    numpy on the driver (``_dense_series``) and comes back as one
-    local relation: the sums, the stop rule and the present cells are
-    those of the per-term loop, and so are its refusals, raised before
-    any further job.
+    Execution contract: one collect of A (at most ``DENSE_CELLS + 1``
+    rows, one job); the result stays on the driver. A finite A over at
+    most ``DENSE_LABELS`` non-NULL labels — a sector vocabulary — runs
+    the same series in numpy on the driver (``_dense_series``) and
+    comes back as a triplet that carries its cells
+    (``Matrix.from_cells``): a formula over it is aligned and evaluated
+    on the driver too, and its Spark frame is made only if a plan reads
+    it. The sums, the stop rule and the present cells are those of the
+    per-term loop, and so are its refusals, raised before any further
+    job.
 
     Any other A runs the per-term loop: each term is materialized once
     via an eager ``localCheckpoint`` — it feeds both the running union
@@ -227,8 +238,8 @@ def leontief_total_requirements(
         raise ValueError(f"max_terms must be >= 1, got {max_terms}")
     total = _dense_series(a.df.limit(DENSE_CELLS + 1).toPandas(), tol, max_terms)
     if total is not None:
-        return TripletMatrix(a.df.sparkSession.createDataFrame(
-            total, schema=f"{ROW_ID} string, {COL_ID} string, {VALUE} double"))
+        return Matrix.from_cells(a.df.sparkSession, total,
+                                 cells_schema([VALUE], T.DoubleType(), KEYS), KEYS)
 
     def checkpoint(term: TripletMatrix) -> tuple[TripletMatrix, float | None]:
         obs = Observation()
@@ -399,16 +410,22 @@ def _rewrite_matrix_ops(
 def compile_formula_triplet(
     expr: FormulaExpr,
     datasets: dict[str, TripletMatrix | Matrix | pd.Series | float],
-) -> DataFrame:
-    """Compile a formula over triplet matrices into one lazy plan.
+) -> Matrix:
+    """Compile a formula over triplet matrices into one result Matrix
+    keyed on ``KEYS``.
 
     Same construction as the wide path, through the same front end
-    (``plans.alignment.align``): all frame operands meet in a chained
-    full-outer join — here on the composite (row, col) key, with
-    string row labels — and the whole arithmetic lands in one
-    projection over the single value column. Only the vector
-    broadcast differs: it is keyed by column label, not position, so
-    a Series whose index labels repeat (as strings) is refused.
+    (``plans.alignment.align``): all frame operands meet in one aligned
+    table on the composite (row, col) key, with string labels, and the
+    arithmetic is evaluated over its single value column. When every
+    frame operand carries its cells (a dense ``leontief()`` result) and
+    the table is small, the table is made on the driver and the formula
+    is evaluated there with ``NUMPY_OPS`` (``_evaluate_cells``), so the
+    result carries its cells; otherwise the frames meet in a chained
+    full-outer join and the arithmetic lands in one projection. Only
+    the vector broadcast differs from the wide path: it is keyed by
+    column label, not position (an absent label reads NaN), so a Series
+    whose index labels repeat (as strings) is refused.
 
     The formula's own wide operands are unpivoted first, once each,
     and then ``m.T`` and ``a @ b`` are rewritten: each matrix-op
@@ -432,8 +449,14 @@ def compile_formula_triplet(
                 "broadcasts a Series by column label, so each label must be unique"
             )
     expr, rewritten = _rewrite_matrix_ops(expr, operands)
-    joined, _, bindings = align({None: expr}, {**operands, **rewritten}, COL_ID)
+    joined, _, bindings = align({None: expr}, {**operands, **rewritten})
     [(columns, values)] = bindings[None]
+    if joined.cells is not None:
+        col = joined.cells[COL_ID]
+        # label-based broadcast: each cell reads its column label's value
+        values = {n: col.map(v.set_axis(v.index.map(str))) if isinstance(v, pd.Series) else v
+                  for n, v in values.items()}
+        return _evaluate_cells(joined, [(VALUE, expr, columns, values)])
 
     def resolve(var: str) -> str:
         if var in columns:
@@ -444,4 +467,5 @@ def compile_formula_triplet(
             return or_nan(f"map({kv})[{COL_ID}]")
         return num(v)
 
-    return joined.df.selectExpr(ROW_ID, COL_ID, f"{evaluate(expr, resolve, SQL_OPS)} AS {VALUE}")
+    df = joined.df.selectExpr(*KEYS, f"{evaluate(expr, resolve, SQL_OPS)} AS {VALUE}")
+    return Matrix(df, [VALUE], KEYS)

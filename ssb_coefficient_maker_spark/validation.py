@@ -40,6 +40,8 @@ the sink.
 
 from __future__ import annotations
 
+import os
+import sys
 import warnings
 from dataclasses import dataclass
 from typing import Callable
@@ -147,7 +149,8 @@ def audited_on_action(m: Matrix, carrier: Carrier = FLOAT) -> tuple[Matrix, Call
         row = audit_cells(m.cells, m.value_cols)
         return m, lambda: row
     obs = Observation()
-    return Matrix(m.df.observe(obs, *audit_exprs(m.value_cols, carrier)), m.value_cols), lambda: obs.get
+    observed = m.df.observe(obs, *audit_exprs(m.value_cols, carrier))
+    return Matrix(observed, m.value_cols, m.keys), lambda: obs.get
 
 
 def status_of(row: dict, value_cols: list[str]) -> InvalidStatus:
@@ -186,11 +189,11 @@ def fill_matrix(m: Matrix, carrier: Carrier = FLOAT) -> Matrix:
     """``m`` with its invalid cells filled: in numpy when it carries its
     (float) cells, else as the lazy ``fill_invalid`` projection."""
     if m.cells is None:
-        return Matrix(fill_invalid(m.df, m.value_cols, carrier), m.value_cols)
+        return Matrix(fill_invalid(m.df, m.value_cols, carrier), m.value_cols, m.keys)
     cells = m.cells.copy()
     values = cells[m.value_cols].to_numpy(np.float64)
     cells[m.value_cols] = np.where(np.isfinite(values), values, 0.0)
-    return Matrix.from_cells(m.spark, cells, m.schema)
+    return Matrix.from_cells(m.spark, cells, m.schema, m.keys)
 
 
 def _cause_fragment(status: InvalidStatus) -> str:
@@ -259,8 +262,21 @@ def check(
         f"invalid value(s) ({pct:.1f}% of {status.n_cells} cells): "
         f"{_cause_fragment(status)}.",
         UserWarning,
-        stacklevel=3,
+        stacklevel=_caller_level(),
     )
+
+
+_PACKAGE = os.path.dirname(os.path.abspath(__file__)) + os.sep
+
+
+def _caller_level() -> int:
+    """The ``stacklevel`` that makes ``check``'s warning name the first
+    frame outside this package: the user's line, through whichever
+    entry point and however many package frames it came."""
+    frame, level = sys._getframe(1), 1
+    while frame.f_back is not None and frame.f_code.co_filename.startswith(_PACKAGE):
+        frame, level = frame.f_back, level + 1
+    return level
 
 
 def validate(

@@ -11,7 +11,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import DataFrame
 
-from ssb_coefficient_maker_spark.api import FormulaEvaluator
+from ssb_coefficient_maker_spark.api import CoefficientCalculator, FormulaEvaluator
 from ssb_coefficient_maker_spark.plans.triplet import COL_ID, VALUE
 from ssb_coefficient_maker_spark.session import ROW_ID
 
@@ -149,3 +149,29 @@ def test_audit_sites_agree(spark, tmp_path, route, inputs, fill):
     elif inputs == "partly":
         assert first_invalid > 0
         assert bool(first_message) is not fill
+
+
+@pytest.mark.parametrize("route", ["driver", "spark"])
+@pytest.mark.parametrize(
+    "entry", ["evaluate_formula", "evaluate_to_pandas", "evaluate_to_parquet",
+              "compute_coefficients"])
+def test_audit_warning_names_the_callers_line(spark, tmp_path, route, entry):
+    """The audit's ``UserWarning`` points at the caller's file, not at
+    a line inside the package, on every entry point and either route
+    (pandas operands on the driver, a Spark-frame operand in Spark)."""
+    a, z = _square(range(1, 10)), _square([0, 1, 1, 1, 1, 1, 1, 1, 1])  # one a / 0
+    if route == "spark":
+        z = spark.createDataFrame(z.rename_axis(ROW_ID).reset_index())
+    data = {"a": a, "z": z}
+    fe = FormulaEvaluator(data, spark=spark)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        if entry == "evaluate_to_parquet":
+            fe.evaluate_to_parquet("a / z", str(tmp_path / "out"))
+        elif entry == "compute_coefficients":
+            cmap = pd.DataFrame({"name": ["q"], "formula": ["a / z"]})
+            CoefficientCalculator(data, cmap, "name", "formula", spark=spark).compute_coefficients()
+        else:
+            getattr(fe, entry)("a / z")
+    [w] = [w for w in caught if "Result of formula" in str(w.message)]
+    assert w.filename == __file__

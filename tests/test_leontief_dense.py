@@ -8,6 +8,7 @@ import uuid
 
 import numpy as np
 import pytest
+from pyspark.sql import SparkSession
 
 from ssb_coefficient_maker_spark.api import FormulaEvaluator
 from ssb_coefficient_maker_spark.plans import triplet as T
@@ -108,13 +109,20 @@ def test_dense_series_keeps_present_cells_and_refusals(spark):
     assert "did not converge within 12 terms" in _run(spark, *CASES["divergent"])
 
 
-def test_leontief_formula_runs_two_jobs(spark):
-    """One collect of A, then the collect of the result; the per-term
-    loop ran 28 jobs here (one checkpoint and sum per term)."""
+def test_leontief_formula_runs_one_job(spark, monkeypatch):
+    """One collect of A, and nothing else: the result stays on the
+    driver, where it is audited and pivoted, so it never becomes a
+    Spark frame. The per-term loop ran 28 jobs here (one checkpoint and
+    sum per term)."""
     rows, labels, a = _a10()
     fe = FormulaEvaluator({"A": T.TripletMatrix(spark.createDataFrame(rows, SCHEMA))}, spark=spark)
+    made = []
+    create = SparkSession.createDataFrame
+    monkeypatch.setattr(SparkSession, "createDataFrame",
+                        lambda self, *args, **kwargs: made.append(1) or create(self, *args, **kwargs))
     out = {}
-    assert _jobs(spark, lambda: out.update(r=fe.evaluate_to_pandas("leontief(A, 1e-8)"))) <= 2
+    assert _jobs(spark, lambda: out.update(r=fe.evaluate_to_pandas("leontief(A, 1e-8)"))) == 1
+    assert made == []
     got = out["r"].loc[labels, labels].to_numpy()
     assert np.abs(got - np.linalg.inv(np.eye(10) - a)).max() < 1e-7
 

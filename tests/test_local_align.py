@@ -21,6 +21,7 @@ from ssb_coefficient_maker_spark.api import CoefficientCalculator, FormulaEvalua
 from ssb_coefficient_maker_spark.formula.parser import CALLS, OPERATORS, Call
 from ssb_coefficient_maker_spark.functions.math import ident
 from ssb_coefficient_maker_spark.plans import alignment
+from ssb_coefficient_maker_spark.plans.triplet import COL_ID, VALUE
 from ssb_coefficient_maker_spark.session import ROW_ID
 
 INF = np.inf
@@ -99,15 +100,20 @@ def _outcome(action):
     return result, invalid, [str(w.message) for w in caught if w.category is UserWarning]
 
 
+KEYS = (ROW_ID, COL_ID)
+
+
 def _sorted(pdf: pd.DataFrame) -> pd.DataFrame:
-    """A collected Spark frame in label order."""
-    return pdf.sort_values(ROW_ID, kind="stable").reset_index(drop=True)
+    """A collected Spark frame in label order (row, then column label
+    for a triplet)."""
+    keys = [k for k in KEYS if k in pdf.columns]
+    return pdf.sort_values(keys, kind="stable").reset_index(drop=True)
 
 
 def _nan_null(df) -> dict:
     """Spark's own count of NaN and of NULL cells per value column of
     ``df``: a collect to pandas reads both as NaN."""
-    cols = [c for c in df.columns if c != ROW_ID]
+    cols = [c for c in df.columns if c not in KEYS]
     row = df.selectExpr(*(f"sum(CAST({test}({ident(c)}) AS INT))" for c in cols
                           for test in ("isnan", "isnull"))).collect()[0]
     return {c: (row[2 * i], row[2 * i + 1]) for i, c in enumerate(cols)}
@@ -363,3 +369,65 @@ def test_bound_keeps_the_join(spark, monkeypatch):
         monkeypatch.setattr(alignment, "LOCAL_ALIGN_CELLS", bound)
         fe = FormulaEvaluator(data, spark=spark, validation="defer")
         assert _plan_nodes(fe.evaluate_formula("a * b - c"))["SortMergeJoin"] == joins, bound
+
+
+def _cells(rows) -> pd.DataFrame:
+    return pd.DataFrame(rows, columns=[ROW_ID, COL_ID, VALUE])
+
+
+# a productive 4-sector A, plus a column label "z" whose row A lacks:
+# leontief(A)'s (z, z) cell is exactly 1
+_A = [(f"s{i}", f"s{j}", 0.05 * (1 + (i + 2 * j) % 3)) for i in range(4) for j in range(4)]
+LEONTIEF = "leontief(A, 1e-3)"
+TRIPLET_FORMULAS = {
+    "plain": LEONTIEF,
+    "scaled": f"{LEONTIEF} * k - 1",
+    "inf": f"where({LEONTIEF} > 1, {LEONTIEF} / 0, 0)",
+    "all_invalid": f"({LEONTIEF} - 1) / 0",  # NaN on (z, z), else ±Inf
+    "series": f"{LEONTIEF} * s",
+}
+
+
+def _triplet_data(spark) -> dict:
+    return {
+        "A": spark.createDataFrame(_cells(_A + [("s0", "z", 0.1)])),
+        "k": 2.5,
+        # lacks s1, s3 and z (NaN cells there), and has x, which A lacks
+        "s": pd.Series([2.0, -1.0, 0.5], index=["s0", "s2", "x"]),
+    }
+
+
+@pytest.mark.parametrize("entry", ["to_pandas", "eager", "defer", "to_parquet"])
+@pytest.mark.parametrize("fill", [False, True], ids=["raw", "fill"])
+@pytest.mark.parametrize("formula", list(TRIPLET_FORMULAS))
+def test_triplet_paths_agree(spark, tmp_path, paths, formula, fill, entry):
+    """A formula over a dense ``leontief()`` result, which carries its
+    cells, is aligned and evaluated on the driver, and gives what the
+    Spark join and its SQL projection give on every entry point."""
+    action = _entry_points(spark, tmp_path, _triplet_data(spark), TRIPLET_FORMULAS[formula],
+                           fill)[entry]
+    outcomes, local, joined = paths(action, "_local_join")
+    assert (local, joined) == (1, 0)
+    _assert_same(outcomes)
+
+
+@pytest.mark.parametrize("entry", ["to_pandas", "to_parquet"])
+def test_triplet_spark_operand_keeps_the_join(spark, tmp_path, paths, entry):
+    """A Spark ``TripletMatrix`` operand carries no cells: a formula
+    that mixes it with a dense ``leontief()`` result joins in Spark,
+    whatever the bound, and gives the pandas answer."""
+    data = _triplet_data(spark)
+    b_cells = [("s0", "s0", 1.0), ("s1", "s2", -2.0), ("x", "s0", 3.0)]
+    data["B"] = spark.createDataFrame(_cells(b_cells))
+    formula = f"{LEONTIEF} + B"
+    outcomes, local, joined = paths(_entry_points(spark, tmp_path, data, formula, False)[entry],
+                                    "_local_join")
+    assert (local, joined) == (0, 0)
+    _assert_same(outcomes)
+    if entry == "to_pandas":
+        got = outcomes[0][0]
+        lt = FormulaEvaluator({"A": data["A"]}, spark=spark).evaluate_to_pandas(LEONTIEF)
+        b = _cells(b_cells).pivot(index=ROW_ID, columns=COL_ID, values=VALUE)
+        want = lt.add(b)  # pandas alignment: NaN where either side lacks a cell
+        pd.testing.assert_frame_equal(got, want.loc[got.index, got.columns],
+                                      check_names=False)

@@ -56,8 +56,8 @@ def test_triplet_matches_wide(spark, pdfs, formula):
         "c_scalar": 2.0,
     }
     expr = parse_formula(formula)
-    tdf = compile_formula_triplet(expr, datasets_trip)
-    wide_back = tdf.toPandas().pivot(index="__row_id__", columns="__col_id__", values="value")
+    result = compile_formula_triplet(expr, datasets_trip)
+    wide_back = result.df.toPandas().pivot(index="__row_id__", columns="__col_id__", values="value")
     got = wide_back[[str(c) for c in expected.columns]].to_numpy()
     exp_filled = expected.to_numpy()
     # triplet path is pre-validation here; apply the same fill manually

@@ -5,6 +5,9 @@ given sf dir, compares row count, column names/types (loosely), and
 order-insensitive values (sorted rows). Usage:
 
     python tools/check_oracles.py [sf_dir] [only_query ...]
+
+Each ``only_query`` is a full registry name (``q235_leontief_requirements``);
+an unknown name is refused before Spark starts.
 """
 
 from __future__ import annotations
@@ -143,6 +146,13 @@ def main() -> int:
     from ssb_coefficient_maker_spark.queries import REGISTRY
     from ssb_coefficient_maker_spark.session import get_spark
     from ssb_coefficient_maker_spark.sources.loaders import TABLES
+
+    unknown = sorted(only - set(REGISTRY))
+    if unknown:
+        # a name that matches no query would check nothing and pass
+        print(f"unknown query name(s): {' '.join(unknown)} — give full registry names "
+              "(e.g. q235_leontief_requirements)")
+        return 2
 
     spark = get_spark(app_name="check_oracles")
     con = duckdb.connect()
