@@ -22,12 +22,22 @@ ADP differs from float mode in three places only:
   through ``MP_OPS`` → strings out. One Python stage, vectorized per
   batch, distributed over rows; division WORKS (unlike the reference).
 
+A Python stage pays a fixed cost per task besides its batches: Spark
+re-reads, before each task, the directory of every zip archive its
+worker has imported from (``pyspark.zip``, and a Spark jar on the
+worker path), 0.12-0.15 s CPU per task on a 4-vCPU host. Each ADP task
+therefore drops its worker's zip finders once its imports are done
+(``drop_zip_finders``), so the next task re-reads none; an import that
+needs an archive later reads it once, as it is on disk then.
+
 This is explicitly the slow path (SURVEY.md §7 risk 5): opt-in.
 """
 
 from __future__ import annotations
 
 import operator
+import sys
+import zipimport
 from contextlib import contextmanager
 from typing import Any, Iterable, Iterator
 
@@ -161,6 +171,25 @@ MP_OPS = {
 }
 
 
+def drop_zip_finders() -> None:
+    """Forget every zip archive this process has imported from: its
+    finders in ``sys.path_importer_cache`` and its directory in
+    zipimport's cache. An import that needs an archive again builds its
+    finder afresh, reading the archive as it is on disk at that time,
+    so imports see what ``importlib.invalidate_caches()`` would have
+    shown them; dropping the finders alone would not, because a new
+    finder reuses the cached directory."""
+    # pyspark.worker_util.setup_spark_files calls
+    # importlib.invalidate_caches() before every task, and under CPython
+    # 3.11 each cached zipimporter's invalidate_caches() re-reads the
+    # whole directory of its archive (one finder per imported package).
+    directories = getattr(zipimport, "_zip_directory_cache", {})
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
+            directories.pop(finder.archive, None)
+
+
 def compile_adp_formula(
     expr: FormulaExpr,
     datasets: dict[str, Matrix | pd.Series | float],
@@ -168,7 +197,13 @@ def compile_adp_formula(
 ) -> tuple[DataFrame, list[str]]:
     """Compile an ADP formula: the aligned table (``align``) + one
     mapInPandas stage. The stage captures plain data only: the joined
-    column names and the carried values of each output column."""
+    column names and the carried values of each output column.
+
+    Each task of the stage costs its Python worker, besides its
+    batches, the imports of its first run and Spark's per-task cache
+    invalidation. The task calls ``drop_zip_finders`` once, after its
+    own imports, so that the invalidation before the worker's next task
+    has no zip archive to re-read."""
     joined, out_cols, bindings = align({None: expr}, datasets)
     operands = bindings[None]
     out_schema = T.StructType(
@@ -177,8 +212,9 @@ def compile_adp_formula(
     )
 
     def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ssb_coefficient_maker_spark.adp import MP_OPS, _to_mpf
+        from ssb_coefficient_maker_spark.adp import MP_OPS, _to_mpf, drop_zip_finders
 
+        drop_zip_finders()
         num = MP_OPS["num"]
         with mpmath.workdps(dps):
             # single values convert directly: the ufunc would make numpy warn

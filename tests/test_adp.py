@@ -8,12 +8,17 @@ pandas ≥2.x (SURVEY.md §2 Part A warts) but works here.
 
 from __future__ import annotations
 
+import importlib
+import sys
+import zipfile
+import zipimport
+
 import mpmath
 import numpy as np
 import pandas as pd
 import pytest
 
-from ssb_coefficient_maker_spark.adp import ADP_ZERO_DIV_MSG
+from ssb_coefficient_maker_spark.adp import ADP_ZERO_DIV_MSG, drop_zip_finders
 from ssb_coefficient_maker_spark.api import FormulaEvaluator
 
 DPS = 50
@@ -566,3 +571,69 @@ def test_adp_ingestion_carries_cells_exactly(spark):
         assert got[:3] == [digits, mpmath.mpf(7), mpmath.mpf("0.1")]
         assert got[2] != mpmath.mpf(0.1)  # not the float64 artifact
         assert all(isinstance(v, mpmath.mpf) and mpmath.isnan(v) for v in got[3:])
+
+
+# ---------------------------------------------------------- worker imports
+def _zip_finders() -> list:
+    return [f for f in sys.path_importer_cache.values() if isinstance(f, zipimport.zipimporter)]
+
+
+def _add_to_zip(archive, files: dict[str, str]) -> None:
+    with zipfile.ZipFile(archive, "a") as zf:
+        for name, text in files.items():
+            zf.writestr(name, text)
+
+
+def test_drop_zip_finders_rereads_archives_lazily(tmp_path, monkeypatch):
+    """No zip finder is left cached, and a module added in place to an
+    archive already on the path still imports after
+    ``importlib.invalidate_caches()``: the dropped archive is read again
+    when an import needs it, not from a stale directory."""
+    archive = tmp_path / "adp_zip_probe.zip"
+    _add_to_zip(archive, {
+        "adp_zip_probe/__init__.py": "",
+        "adp_zip_probe/sub/__init__.py": "",
+        "adp_zip_probe/sub/old.py": "VALUE = 1\n",
+    })
+    monkeypatch.syspath_prepend(str(archive))
+    try:
+        assert importlib.import_module("adp_zip_probe.sub.old").VALUE == 1
+        assert _zip_finders()
+        drop_zip_finders()
+        assert _zip_finders() == []
+
+        _add_to_zip(archive, {"adp_zip_probe/sub/new.py": "VALUE = 2\n"})
+        importlib.invalidate_caches()
+        assert importlib.import_module("adp_zip_probe.sub.new").VALUE == 2
+    finally:
+        for name in [n for n in sys.modules if n.split(".")[0] == "adp_zip_probe"]:
+            del sys.modules[name]
+        drop_zip_finders()
+
+
+def test_adp_workers_import_after_dropping_zip_finders(adp_eval, spark):
+    """After ADP tasks have dropped their workers' zip finders, a later
+    Python task in the same session, in a worker an ADP task left
+    without zip finders, imports a pyspark module that worker had not
+    loaded. (Later tasks of the job reuse workers that have it.)"""
+    fe = adp_eval({"a": pd.DataFrame(np.arange(6.0).reshape(2, 3)), "b": pd.DataFrame(np.ones((2, 3)))})
+    for formula in ("a + b", "a * b", "a - b"):
+        fe.evaluate_to_pandas(formula)
+
+    def dot(batches):
+        import sys
+        import zipimport
+
+        dropped = not any(isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values())
+        loaded = "pyspark.ml.linalg" in sys.modules
+        from pyspark.ml.linalg import DenseVector
+
+        value = DenseVector([1.0, 2.0]).dot(DenseVector([3.0, 4.0]))
+        for pdf in batches:
+            yield pd.DataFrame({"dot": value, "dropped": dropped, "loaded": loaded}, index=pdf.index)
+
+    out = spark.range(16, numPartitions=16).mapInPandas(
+        dot, "dot double, dropped boolean, loaded boolean").toPandas()
+    assert len(out) == 16 and (out["dot"] == 11.0).all()
+    assert out["dropped"].any()
+    assert not out.loc[out["dropped"], "loaded"].any()
